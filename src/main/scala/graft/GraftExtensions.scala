@@ -67,8 +67,8 @@ object GraftFunctions {
     // pgvector 0.7 halfvec casts: vector → binary16 codes and back
     arity("vec_half_encode", 1)(es => graft.functions.HalfEncodeExpr(es.head)),
     arity("vec_half_decode", 1)(es => graft.functions.HalfDecodeExpr(es.head)),
-    // the packed on-disk tier (2 bytes/dim binary — what writeIndexHalf
-    // stores): pack/unpack exposed so a SQL-only session can inspect or
+    // the packed on-disk tier (2 bytes/dim binary — what a Half-codec
+    // IvfIndex store holds): pack/unpack exposed so a SQL-only session can inspect or
     // build half columns byte-identical to the index writer's
     arity("vec_half_pack", 1)(es => graft.functions.HalfPackExpr(es.head)),
     arity("vec_half_unpack", 1)(es => graft.functions.HalfUnpackExpr(es.head)),

@@ -200,7 +200,7 @@ object Perf {
     {
       val dir = java.nio.file.Files.createTempDirectory("perf_ivf_rw").toString
       val model = IvfIndex.train(bigE200, k = 64, iters = 2, samplePercent = 2)
-      IvfIndex.writeIndexQuantized(bigE200, model, dir, qmn, qmx)
+      IvfIndex.writeIndex(bigE200, model, dir, IvfIndex.Codec.Sq8(qmn, qmx))
       val qv = emb.where(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
       def userQuery = spark.read.parquet(dir)
@@ -276,14 +276,14 @@ object Perf {
       val model = IvfIndex.trainSub(bigE200, subDim = 16, k = 64, iters = 2,
         samplePercent = 2)
       time("matryoshka.build (100k vectors, subDim 16/64, 64 cells)") {
-        IvfIndex.writeIndexSub(bigE200, model, dir, subDim = 16)
+        IvfIndex.writeIndex(bigE200, model, dir, IvfIndex.Codec.Prefix(16))
       }
       val q = emb.where(col("vec_id") < 8).select(col("vec_id").as("qid"), col("embedding"))
       time("matryoshka.search (nprobe 8/64 — prefix coarse + bounded rerank)") {
-        IvfIndex.searchIndexSub(spark, dir, q, k = 10, nprobe = 8).count()
+        IvfIndex.searchIndex(spark, dir, q, k = 10, nprobe = 8, metric = "l2").count()
       }
       time("matryoshka.fullprobe (degeneration: all cells, covering overfetch)") {
-        IvfIndex.searchIndexSub(spark, dir, q, k = 10, nprobe = 64,
+        IvfIndex.searchIndex(spark, dir, q, k = 10, nprobe = 64, metric = "l2",
           overfetch = 200000).count()
       }
       // partial re-clustering: one nudged centroid moves a few boundary
@@ -297,8 +297,8 @@ object Perf {
         println(s"[perf]   -> $rep")
       }
       val dir2 = java.nio.file.Files.createTempDirectory("perf_ivf_sub2").toString
-      time("reassign.fullRebuild (writeIndexSub from scratch, the alternative)") {
-        IvfIndex.writeIndexSub(bigE200, IvfIndex.Model(nudged), dir2, subDim = 16)
+      time("reassign.fullRebuild (prefix writeIndex from scratch, the alternative)") {
+        IvfIndex.writeIndex(bigE200, IvfIndex.Model(nudged), dir2, IvfIndex.Codec.Prefix(16))
       }
     }
     // round-12 additions: halfvec coarse-column byte ratio, upsert
@@ -316,7 +316,7 @@ object Perf {
       val dir = java.nio.file.Files.createTempDirectory("perf_ivf_half").toString
       val model = IvfIndex.train(bigE200, k = 64, iters = 2, samplePercent = 2)
       time("halfvec.build (100k vectors, 64 cells)") {
-        IvfIndex.writeIndexHalf(bigE200, model, dir)
+        IvfIndex.writeIndex(bigE200, model, dir, IvfIndex.Codec.Half)
       }
       // the on-disk byte ratio the (id, hvec) coarse pass reads vs the
       // float column — the IO term that matters on object storage
@@ -331,7 +331,7 @@ object Perf {
         f"(ratio ${dirBytes(coarseDir).toDouble / dirBytes(floatDir)}%.2f)")
       val q = emb.where(col("vec_id") < 8).select(col("vec_id").as("qid"), col("embedding"))
       time("halfvec.search (nprobe 8/64, binary16 coarse + float rerank)") {
-        IvfIndex.searchIndexHalf(spark, dir, q, k = 10, nprobe = 8).count()
+        IvfIndex.searchIndex(spark, dir, q, k = 10, nprobe = 8, metric = "l2").count()
       }
       // upsert surgery: a CELL-LOCAL re-embed batch (ids drawn from two
       // cells — the locality a per-document re-upload actually has)
@@ -346,8 +346,8 @@ object Perf {
           f"(store ${preBytes / 1e6}%.1f MB pre-upsert)")
       }
       val dir2 = java.nio.file.Files.createTempDirectory("perf_ivf_half2").toString
-      time("upsert.fullRebuild (writeIndexHalf from scratch, the alternative)") {
-        IvfIndex.writeIndexHalf(bigE200, model, dir2)
+      time("upsert.fullRebuild (half writeIndex from scratch, the alternative)") {
+        IvfIndex.writeIndex(bigE200, model, dir2, IvfIndex.Codec.Half)
       }
     }
     {

@@ -241,11 +241,11 @@ object QueriesExtra {
           val en = e.withColumn("embedding", VectorFunctions.l2Normalize(col("embedding")))
           val model = graft.operators.IvfIndex.train(en, k = 16, iters = 2)
           val dr = java.nio.file.Files.createTempDirectory("ivf_cos_q").toString
-          graft.operators.IvfIndex.writeIndexCosine(e, model, dr)
+          graft.operators.IvfIndex.writeIndex(e, model, dr, metric = "cosine")
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        graft.operators.IvfIndex.searchIndexCosine(s, dir, q, k = 3, nprobe = 12)
+        graft.operators.IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 12, metric = "cosine")
           .orderBy(col("qid"), col("rn"))
       },
       None),
@@ -264,7 +264,7 @@ object QueriesExtra {
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        graft.operators.IvfIndex.searchIndexIp(s, dir, q, k = 3, nprobe = 12)
+        graft.operators.IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 12, metric = "ip")
           .orderBy(col("qid"), col("rn"))
       },
       None),
@@ -537,11 +537,11 @@ object QueriesExtra {
           val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
           val (mn, mx) = graft.operators.Quantize.scalarRange(e)
           val dr = java.nio.file.Files.createTempDirectory("ivf_sq_q").toString
-          IvfIndex.writeIndexQuantized(e, model, dr, mn, mx)
+          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Sq8(mn, mx))
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexQuantized(s, dir, q, k = 5, nprobe = 16, overfetch = n)
+        IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "l2", overfetch = n)
           .orderBy(col("qid"), col("rn"))
       },
       Some(annExactL2Sql)),
@@ -557,11 +557,11 @@ object QueriesExtra {
         val dir = Fixtures.memo(s"ivf_half_idx:$d") {
           val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
           val dr = java.nio.file.Files.createTempDirectory("ivf_half_q").toString
-          IvfIndex.writeIndexHalf(e, model, dr)
+          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Half)
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexHalf(s, dir, q, k = 3, nprobe = 4, overfetch = 4)
+        IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 4, metric = "l2", overfetch = 4)
           .orderBy(col("qid"), col("rn"))
       },
       None),
@@ -576,11 +576,11 @@ object QueriesExtra {
         val dir = Fixtures.memo(s"ivf_half_idx:$d") {
           val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
           val dr = java.nio.file.Files.createTempDirectory("ivf_half_q").toString
-          IvfIndex.writeIndexHalf(e, model, dr)
+          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Half)
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexHalf(s, dir, q, k = 5, nprobe = 16, overfetch = n)
+        IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "l2", overfetch = n)
           .orderBy(col("qid"), col("rn"))
       },
       Some(annExactL2Sql)),
@@ -599,11 +599,11 @@ object QueriesExtra {
         val dir = Fixtures.memo(s"ivf_sub_idx:$d") {
           val model = IvfIndex.trainSub(e, subDim = 16, k = 16, iters = 3)
           val dr = java.nio.file.Files.createTempDirectory("ivf_sub_q").toString
-          IvfIndex.writeIndexSub(e, model, dr, subDim = 16)
+          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Prefix(16))
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexSub(s, dir, q, k = 3, nprobe = 4, overfetch = 4)
+        IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 4, metric = "l2", overfetch = 4)
           .orderBy(col("qid"), col("rn"))
       },
       None),
@@ -619,11 +619,11 @@ object QueriesExtra {
         val dir = Fixtures.memo(s"ivf_sub_idx:$d") {
           val model = IvfIndex.trainSub(e, subDim = 16, k = 16, iters = 3)
           val dr = java.nio.file.Files.createTempDirectory("ivf_sub_q").toString
-          IvfIndex.writeIndexSub(e, model, dr, subDim = 16)
+          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Prefix(16))
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexSub(s, dir, q, k = 5, nprobe = 16, overfetch = n)
+        IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "l2", overfetch = n)
           .orderBy(col("qid"), col("rn"))
       },
       Some(annExactL2Sql)),
@@ -640,7 +640,7 @@ object QueriesExtra {
         val dir = Fixtures.memo(s"ivf_sub_idx:$d") {
           val model = IvfIndex.trainSub(e, subDim = 16, k = 16, iters = 3)
           val dr = java.nio.file.Files.createTempDirectory("ivf_sub_q").toString
-          IvfIndex.writeIndexSub(e, model, dr, subDim = 16)
+          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Prefix(16))
           dr
         }
         val qv = e.where(col("vec_id") === 7)
@@ -673,11 +673,11 @@ object QueriesExtra {
           val ivf = Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
           val pq = PQ.trainResidual(e, ivf, m = 16, ksub = 16, iters = 10)
           val dr = java.nio.file.Files.createTempDirectory("ivfpq_idx_q").toString
-          IvfIndex.writeIndexPq(e, ivf, pq, dr)
+          IvfIndex.writeIndex(e, ivf, dr, IvfIndex.Codec.Pq(pq))
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexPq(s, dir, q, k = 5, nprobe = 8, overfetch = n)
+        IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 8, metric = "l2", overfetch = n)
           .orderBy(col("qid"), col("rn"))
       },
       Some(annExactL2Sql)),
@@ -752,11 +752,11 @@ object QueriesExtra {
           val en = e.withColumn("embedding", VectorFunctions.l2Normalize(col("embedding")))
           val model = IvfIndex.train(en, k = 16, iters = 2)
           val dr = java.nio.file.Files.createTempDirectory("ivf_cos_q").toString
-          IvfIndex.writeIndexCosine(e, model, dr)
+          IvfIndex.writeIndex(e, model, dr, metric = "cosine")
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexCosine(s, dir, q, k = 5, nprobe = 16)
+        IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "cosine")
           .orderBy(col("qid"), col("rn"))
       },
       Some("""WITH q AS (SELECT vec_id AS qid, embedding FROM embeddings WHERE vec_id < 4),
@@ -782,7 +782,7 @@ object QueriesExtra {
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexIp(s, dir, q, k = 5, nprobe = 16)
+        IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "ip")
           .orderBy(col("qid"), col("rn"))
       },
       Some("""WITH q AS (SELECT vec_id AS qid, embedding FROM embeddings WHERE vec_id < 4),
@@ -809,7 +809,7 @@ object QueriesExtra {
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexL1(s, dir, q, k = 3, nprobe = 12)
+        IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 12, metric = "l1")
           .orderBy(col("qid"), col("rn"))
       },
       None),
@@ -826,7 +826,7 @@ object QueriesExtra {
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexL1(s, dir, q, k = 5, nprobe = 16)
+        IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "l1")
           .orderBy(col("qid"), col("rn"))
       },
       Some("""WITH q AS (SELECT vec_id AS qid, embedding FROM embeddings WHERE vec_id < 4),
@@ -946,7 +946,7 @@ object QueriesExtra {
         val dir = Fixtures.memo(s"ivf_half_filt_idx:$d") {
           val model = IvfIndex.train(e, k = 16, iters = 2)
           val dr = java.nio.file.Files.createTempDirectory("ivf_half_filt").toString
-          IvfIndex.writeIndexHalf(e, model, dr)
+          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Half)
           dr
         }
         val qv = e.where(col("vec_id") === 7)
@@ -1068,11 +1068,11 @@ object QueriesExtra {
           val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
           val (mn, mx) = graft.operators.Quantize.scalarRange(e)
           val dr = java.nio.file.Files.createTempDirectory("ivf_sq_q").toString
-          IvfIndex.writeIndexQuantized(e, model, dr, mn, mx)
+          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Sq8(mn, mx))
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexQuantized(s, dir, q, k = 3, nprobe = 4)
+        IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 4, metric = "l2")
           .orderBy(col("qid"), col("rn"))
       },
       None),
@@ -1151,11 +1151,11 @@ object QueriesExtra {
             (iv, PQ.trainResidual(e, iv, m = 16, ksub = 16, iters = 10))
           }
           val dr = java.nio.file.Files.createTempDirectory("ivfpq_idx_q").toString
-          IvfIndex.writeIndexPq(e, ivf, pq, dr)
+          IvfIndex.writeIndex(e, ivf, dr, IvfIndex.Codec.Pq(pq))
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexPq(s, dir, q, k = 3, nprobe = 4, overfetch = 8)
+        IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 4, metric = "l2", overfetch = 8)
           .orderBy(col("qid"), col("rn"))
       },
       None),
@@ -3053,11 +3053,11 @@ object QueriesExtra {
         val dir = Fixtures.memo(s"ivf_bin_idx_k8:$d") {
           val model = Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
           val dr = java.nio.file.Files.createTempDirectory("ivf_bin_q").toString
-          IvfIndex.writeIndexBinary(e, model, dr)
+          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Binary)
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexBinary(s, dir, q, k = 5, nprobe = 2)
+        IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 2, metric = "l2")
           .orderBy(col("qid"), col("rn"))
       }, None),
 
@@ -3072,11 +3072,11 @@ object QueriesExtra {
         val dir = Fixtures.memo(s"ivf_bin_idx_k16:$d") {
           val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
           val dr = java.nio.file.Files.createTempDirectory("ivf_bin_exact_q").toString
-          IvfIndex.writeIndexBinary(e, model, dr)
+          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Binary)
           dr
         }
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndexBinary(s, dir, q, k = 5, nprobe = 16, overfetch = n)
+        IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "l2", overfetch = n)
           .orderBy(col("qid"), col("rn"))
       },
       Some(annExactL2Sql)),
@@ -3100,7 +3100,7 @@ object QueriesExtra {
             (iv, PQ.trainResidual(e, iv, m = 16, ksub = 16, iters = 10))
           }
           val dr = java.nio.file.Files.createTempDirectory("ivfpq_idx_q").toString
-          IvfIndex.writeIndexPq(e, ivf, pq, dr)
+          IvfIndex.writeIndex(e, ivf, dr, IvfIndex.Codec.Pq(pq))
           dr
         }
         s.read.parquet(dir).agg(

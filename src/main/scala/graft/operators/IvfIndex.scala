@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -8,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
-import graft.functions.VectorFunctions
+import graft.functions.{HalfExpressions, VectorFunctions}
 
 /** IVF (inverted-file) ANN — the second scale path beside [[AnnLsh]]:
   * a coarse k-means quantizer assigns every vector to its nearest
@@ -22,11 +25,27 @@ import graft.functions.VectorFunctions
   * centroid matrix, argmin-L2 single pass). At 100 TB the corpus is
   * scanned once per iteration and once for final assignment; nothing
   * else moves.
+  *
+  * One store layout serves every codec: `(id, embedding, codec column?,
+  * cell)` partitioned by cell, declared by sidecar files — see [[Codec]],
+  * [[Store]] and [[readStore]]. One [[writeIndex]] / [[appendIndex]] /
+  * [[upsertIndex]] / [[searchIndex]] covers them all.
   */
 object IvfIndex {
 
   final case class Model(centroids: Array[Array[Double]]) {
     def k: Int = centroids.length
+
+    /** The `nprobe` nearest cells to `q`, nearest first, ties to the
+      * lower cell id — driver-local math on the (k × dim) matrix, the
+      * ranking [[cellsOf]] computes per row. The planner's fixed-probe
+      * rewrite and its iterative leaf both probe with it. */
+    def nearestCells(q: Array[Double], nprobe: Int): Seq[Int] =
+      centroids.zipWithIndex.map { case (c, i) =>
+        var d = 0.0; var j = 0
+        while (j < q.length) { val x = q(j) - c(j); d += x * x; j += 1 }
+        (d, i)
+      }.sortBy(identity).take(math.max(1, nprobe)).map(_._2).toSeq
   }
 
   /** Nearest-centroid id (argmin L2). Whole-stage-codegen'd (runs once per
@@ -180,6 +199,7 @@ object IvfIndex {
   def cellsOf(emb: Column, model: Model, nprobe: Int): Column =
     ColumnBridge.column(NearestCentroidsExpr(ColumnBridge.expression(emb), model.centroids, nprobe))
 
+
   /** Deterministic Lloyd's over a deterministic SAMPLE of the corpus —
     * the standard IVF recipe: the coarse quantizer only needs the density
     * shape, so training reads `samplePercent`% of rows (md5-bucketed,
@@ -225,34 +245,254 @@ object IvfIndex {
     Model(centroids)
   }
 
+  /** Coarse quantizer for a [[Codec.Prefix]] store: k-means in the prefix space. */
+  def trainSub(corpus: DataFrame, subDim: Int, k: Int, iters: Int = 5,
+               idCol: String = "vec_id", embCol: String = "embedding",
+               samplePercent: Int = 10): Model =
+    train(corpus.select(col(idCol), slice(col(embCol), 1, subDim).as(embCol)),
+      k, iters, idCol, embCol, samplePercent)
+
+  /** How a store encodes its vectors for the coarse pass — the suffix of
+    * a FAISS `index_factory` string (`IVFk,Flat` / `,SQ8` / `,PQm` …).
+    * Every store keeps the full float column for the exact rerank; a
+    * [[Coarse]] codec adds one derived column that the coarse pass scans
+    * instead. The codec is declared by the store's sidecar files and read
+    * back, in one place, by [[readStore]]. */
+  sealed trait Codec {
+    /** The projection of the embedding that cells are assigned and probed on. */
+    def assignOn(emb: Column): Column = emb
+    /** Whether a store of this codec and `store` metric serves the query
+      * `metric` ([[searchIndex]]'s names). The coarse pass only ranks by
+      * the store's own metric; other metrics a store serves are scored
+      * exactly over the probed cells. */
+    def serves(metric: String, store: String): Boolean =
+      metric == store || metric == "cosine_sim" ||
+        (store == "l2" && (metric == "ip" || metric == "l1"))
+  }
+
+  /** A codec with a stored coarse column: the coarse pass scores that
+    * column against each query's code, and the `k·overfetch` best
+    * candidates per query are reranked on the float column. */
+  sealed abstract class Coarse(val column: String, val overfetch: Int) extends Codec {
+    /** The stored column for `emb` (already in the store's metric space),
+      * assigned to `cell` under `model`. */
+    def encode(emb: Column, cell: Column, model: Model): Column
+    /** The sidecar that declares this codec: (file name, content). */
+    def sidecar: (String, String)
+    /** The query's code, computed once per query on the broadcast side —
+      * once per (query, probed cell) when [[perCell]]. */
+    def queryCode(q: Column, cell: Column, model: Model): Column
+    /** Coarse score of a stored code against a query code; lower is nearer. */
+    def score(stored: Column, qcode: Column): Column
+    /** True when codes are relative to the row's cell (residual codecs),
+      * so a query is only scored against its own probed cells. */
+    def perCell: Boolean = false
+  }
+
+  object Codec {
+    /** The float column alone (`IVFk,Flat`). */
+    case object Flat extends Codec
+
+    /** uint8 scalar codes under a global [mn, mx] range (`IVFk,SQ8`),
+      * scored in the integer code domain. */
+    final case class Sq8(mn: Double, mx: Double) extends Coarse("qvec", 4) {
+      def encode(emb: Column, cell: Column, model: Model): Column =
+        Quantize.quantizeExpr(emb, mn, mx)
+      def sidecar: (String, String) = "_quantize.json" -> s"""{"mn":$mn,"mx":$mx}"""
+      def queryCode(q: Column, cell: Column, model: Model): Column =
+        Quantize.quantizeExpr(q, mn, mx)
+      def score(stored: Column, qcode: Column): Column = Quantize.codeL2Sq(stored, qcode)
+    }
+
+    /** pgvector's `halfvec`: IEEE binary16 packed 2 bytes/dim (the
+      * "packed2" layout), scored by L2 with the query rounded to binary16
+      * too. */
+    case object Half extends Coarse("hvec", 4) {
+      def encode(emb: Column, cell: Column, model: Model): Column = HalfExpressions.halfPack(emb)
+      def sidecar: (String, String) = "_half.json" -> """{"bits":16,"format":"packed2"}"""
+      def queryCode(q: Column, cell: Column, model: Model): Column =
+        HalfExpressions.halfDecode(HalfExpressions.halfEncode(q))
+      def score(stored: Column, qcode: Column): Column =
+        VectorFunctions.l2Distance(HalfExpressions.halfUnpack(stored), qcode)
+    }
+
+    /** Matryoshka / pgvector subvector index: the first `subDim` dims,
+      * which are also the space cells live in (train with [[trainSub]]).
+      * Prefix geometry only orders the store's own metric. */
+    final case class Prefix(subDim: Int) extends Coarse("sub", 4) {
+      require(subDim >= 1, s"IvfIndex: subDim must be >= 1, got $subDim")
+      override def assignOn(emb: Column): Column = slice(emb, 1, subDim)
+      override def serves(metric: String, store: String): Boolean = metric == store
+      def encode(emb: Column, cell: Column, model: Model): Column = assignOn(emb)
+      def sidecar: (String, String) = "_matryoshka.json" -> s"""{"subDim":$subDim}"""
+      def queryCode(q: Column, cell: Column, model: Model): Column = assignOn(q)
+      def score(stored: Column, qcode: Column): Column =
+        VectorFunctions.l2DistanceSq(stored, qcode)
+    }
+
+    /** Packed sign bits (pgvector `bit(n)`), scored by Hamming — the
+      * lossiest codec, hence the larger default overfetch. */
+    case object Binary extends Coarse("bvec", 8) {
+      def encode(emb: Column, cell: Column, model: Model): Column = Quantize.binarizeExpr(emb)
+      def sidecar: (String, String) = "_binary.json" -> """{"bits":32}"""
+      def queryCode(q: Column, cell: Column, model: Model): Column = Quantize.binarizeExpr(q)
+      def score(stored: Column, qcode: Column): Column = Quantize.hammingExpr(stored, qcode)
+    }
+
+    /** IVF-PQ (`IVFk,PQm`): product codes of the residual against the
+      * row's cell centroid, scored by ADC against a per-(query, cell)
+      * residual table. Train `pq` with [[ProductQuantizer.trainResidual]]
+      * against the store's own model. */
+    final case class Pq(pq: ProductQuantizer.Model) extends Coarse("pq_codes", 4) {
+      def encode(emb: Column, cell: Column, model: Model): Column =
+        ProductQuantizer.encodeExpr(ProductQuantizer.residualExpr(emb, cell, model), pq)
+      def sidecar: (String, String) = ProductQuantizer.SidecarName -> ProductQuantizer.json(pq)
+      def queryCode(q: Column, cell: Column, model: Model): Column =
+        ProductQuantizer.residualTableExpr(q, cell, model, pq)
+      def score(stored: Column, qcode: Column): Column =
+        ProductQuantizer.adcScoreExpr(stored, qcode, pq.ksub)
+      override def perCell: Boolean = true
+    }
+  }
+
+  /** A persisted store's declaration: coarse quantizer, codec and metric
+    * (`l2`, or `cosine` — vectors L2-normalized on the way in, so L2
+    * cells and coarse scores order cosine exactly: pgvector's
+    * `vector_cosine_ops`). */
+  final case class Store(model: Model, codec: Codec = Codec.Flat, metric: String = "l2") {
+    require(metric == "l2" || metric == "cosine",
+      s"IvfIndex: unknown store metric '$metric' (l2 or cosine)")
+    codec match {
+      case Codec.Prefix(d) => require(model.centroids.headOption.forall(_.length == d),
+        s"IvfIndex: model dimension ${model.centroids.headOption.map(_.length)} != subDim $d " +
+          "— train the coarse quantizer in the prefix space (trainSub)")
+      case _ =>
+    }
+    def serves(query: String): Boolean = codec.serves(query, metric)
+  }
+
+  /** The store at `path`, resolved from the sidecar files alone (no
+    * listing, no schema read): `_centroids.json` always, at most one
+    * codec sidecar, and `_metric.json` on cosine stores. A sidecar that
+    * exists is read, and its read errors propagate — an unreadable
+    * `_metric.json` must not turn a cosine store into an L2 one. Gated
+    * by the pending-swap check of [[readModel]]. */
+  def readStore(spark: SparkSession, path: String): Store = {
+    val model = readModel(spark, path)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(name: String): Boolean = fs.exists(new Path(root, name))
+    def sidecar(name: String): Option[String] =
+      if (exists(name)) Some(readSidecar(spark, path, name)) else None
+    def field(json: String, name: String, file: String): String =
+      s""""$name"\\s*:\\s*"?([-0-9.eEa-zA-Z]+)""".r.findFirstMatchIn(json).map(_.group(1))
+        .getOrElse(throw new IllegalStateException(s"IvfIndex: malformed $file at $path"))
+    val metric = sidecar("_metric.json").fold("l2") { json =>
+      field(json, "metric", "_metric.json") match {
+        case m @ ("l2" | "cosine") => m
+        case m => throw new IllegalStateException(
+          s"IvfIndex: $path/_metric.json names unknown metric '$m' (l2 or cosine)")
+      }
+    }
+    val codecs = Seq(
+      sidecar("_quantize.json").map(j => Codec.Sq8(
+        field(j, "mn", "_quantize.json").toDouble, field(j, "mx", "_quantize.json").toDouble)),
+      sidecar("_half.json").map { j =>
+        // an unversioned _half.json is a pre-packing store (hvec as
+        // array<short>): appending packed rows would poison its parquet
+        // schema, so every path refuses it up front
+        require(""""format"\s*:\s*"packed2"""".r.findFirstIn(j).isDefined,
+          s"IvfIndex: $path is a pre-packed-layout halfvec store (hvec as array<short>) — " +
+            "rebuild it with writeIndex(codec = Codec.Half) to migrate to the packed layout")
+        Codec.Half
+      },
+      sidecar("_matryoshka.json").map(j =>
+        Codec.Prefix(field(j, "subDim", "_matryoshka.json").toInt)),
+      sidecar("_binary.json").map(_ => Codec.Binary),
+      Option.when(exists(ProductQuantizer.SidecarName))(
+        Codec.Pq(ProductQuantizer.readModel(spark, path)))).flatten
+    require(codecs.size <= 1, s"IvfIndex: $path declares more than one codec: $codecs")
+    Store(model, codecs.headOption.getOrElse(Codec.Flat), metric)
+  }
+
+  /** The planner's [[readStore]]: None when `path` carries no IVF store;
+    * cached per path, keyed by the centroid sidecar's length+mtime (a
+    * rebuild rewrites it). Keyed by PATH with the stamp beside the value,
+    * so a rebuild replaces the entry instead of leaking the old models. */
+  private[graft] def plannedStore(spark: SparkSession, path: String): Option[Store] = {
+    val p = new Path(path, "_centroids.json")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return None
+    val stamp = { val s = fs.getFileStatus(p); s"${s.getLen}:${s.getModificationTime}" }
+    storeCache.get(path) match {
+      case Some((st, store)) if st == stamp => Some(store)
+      case _ =>
+        val store = readStore(spark, path)
+        storeCache.put(path, (stamp, store))
+        Some(store)
+    }
+  }
+  private val storeCache = TrieMap.empty[String, (String, Store)]
+
+  private[graft] def writeSidecars(spark: SparkSession, path: String, store: Store): Unit = {
+    writeSidecar(spark, path, "_centroids.json", json(store.model))
+    store.codec match {
+      case c: Coarse =>
+        val (name, content) = c.sidecar
+        writeSidecar(spark, path, name, content)
+      case _ =>
+    }
+    if (store.metric == "cosine") writeSidecar(spark, path, "_metric.json", """{"metric":"cosine"}""")
+  }
+
+  /** The rows `store` holds for `vectors`: `(id, embedding, codec
+    * column?, cell)` — normalized first on a cosine store, cells
+    * assigned on the codec's projection. */
+  private[graft] def encode(vectors: DataFrame, store: Store,
+                            idCol: String, embCol: String): DataFrame = {
+    val v =
+      if (store.metric == "cosine")
+        vectors.withColumn(embCol, VectorFunctions.l2Normalize(col(embCol)))
+      else vectors
+    val assigned = v.select(col(idCol), col(embCol),
+      cellOf(store.codec.assignOn(col(embCol)), store.model).as("cell"))
+    store.codec match {
+      case c: Coarse => assigned.select(col(idCol), col(embCol),
+        c.encode(col(embCol), col("cell"), store.model).as(c.column), col("cell"))
+      case _ => assigned
+    }
+  }
+
   /** Persist an IVF index: corpus assigned to cells, written as parquet
     * partitioned BY CELL — a probed search then reads only the nprobe/k
     * fraction of the data via partition pruning (the on-disk analogue of
-    * an inverted file). Centroids ride along as a tiny JSON sidecar,
-    * written through the Hadoop filesystem layer so hdfs://s3a://abfss
-    * index paths work the same as local ones. */
+    * an inverted file). The `codec` column rides beside the float column,
+    * and the centroids, codec and metric ride along as tiny JSON
+    * sidecars, written through the Hadoop filesystem layer so
+    * hdfs://s3a://abfss index paths work the same as local ones. A
+    * cosine store wants a `model` trained on the normalized corpus. */
   def writeIndex(corpus: DataFrame, model: Model, path: String,
+                 codec: Codec = Codec.Flat, metric: String = "l2",
                  idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    corpus.select(col(idCol), col(embCol), cellOf(col(embCol), model).as("cell"))
+    val store = Store(model, codec, metric)
+    encode(corpus, store, idCol, embCol)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
-    val json = model.centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    writeSidecar(corpus.sparkSession, path, "_centroids.json", json)
+    writeSidecars(corpus.sparkSession, path, store)
   }
 
-  /** Append new vectors to a persisted index: assign each to its cell
-    * under the EXISTING centroids (read from the sidecar) and append the
-    * rows into the matching `cell=` partitions. Append-only — the caller
+  /** Append new vectors to a persisted index: each is encoded in the
+    * store's codec and metric and assigned to its cell under the EXISTING
+    * centroids (both read from the sidecars), and the rows are appended
+    * into the matching `cell=` partitions. Append-only — the caller
     * dedups ids (same contract as [[DedupIndex.appendIndex]]); searches
-    * see the new vectors immediately. Centroids are NOT retrained, so a
-    * drifting distribution slowly unbalances cells — rebuild with
-    * [[writeIndex]] on the usual IVF maintenance cadence. */
-  def appendIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                  vectors: DataFrame,
+    * see the new vectors immediately. Centroids (and SQ8 ranges, PQ
+    * codebooks) are NOT retrained, so a drifting distribution slowly
+    * unbalances cells — rebuild on the usual IVF maintenance cadence. */
+  def appendIndex(spark: SparkSession, path: String, vectors: DataFrame,
                   idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
     recoverPending(spark, path, "appendIndex")
-    val model = readModel(spark, path)
-    vectors.select(col(idCol), col(embCol), cellOf(col(embCol), model).as("cell"))
+    encode(vectors, readStore(spark, path), idCol, embCol)
       .repartition(col("cell"))
       .write.mode("append").partitionBy("cell").parquet(path)
   }
@@ -260,7 +500,7 @@ object IvfIndex {
   /** Cell-occupancy stats of a persisted index: `(cell, n, frac)`. The
     * scan reads only the partition column (row counts from parquet
     * metadata) — cheap enough to run on every maintenance tick. */
-  def cellStats(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+  def cellStats(spark: SparkSession, path: String): DataFrame = {
     val counts = spark.read.parquet(path).groupBy(col("cell")).count()
     val total = counts.agg(sum(col("count")).as("__tot"))
     counts.crossJoin(broadcast(total))
@@ -271,14 +511,12 @@ object IvfIndex {
   /** Per-cell FILE stats of a persisted index: `(cell, files, bytes)`,
     * from one recursive filesystem listing (no data read — same cost
     * class as [[cellStats]], runnable on every maintenance tick). Every
-    * [[appendIndex]]/[[appendIndexQuantized]]/[[appendIndexPq]] batch
-    * adds at least one file per touched cell dir, so after N streaming
-    * batches a cell holds O(N) files — and at 100 TB the file LISTING,
-    * not the bytes, is what kills scheduling. This is the trigger side;
-    * [[compactIndex]] is the fix. */
-  def fileStats(spark: org.apache.spark.sql.SparkSession,
-                path: String): Seq[(Int, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    * [[appendIndex]] batch adds at least one file per touched cell dir,
+    * so after N streaming batches a cell holds O(N) files — and at
+    * 100 TB the file LISTING, not the bytes, is what kills scheduling.
+    * This is the trigger side; [[compactIndex]] is the fix. */
+  def fileStats(spark: SparkSession, path: String): Seq[(Int, Long, Long)] = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val acc = scala.collection.mutable.Map.empty[Int, (Long, Long)]
     val it = fs.listFiles(p, true)
@@ -299,7 +537,7 @@ object IvfIndex {
 
   /** Compaction trigger: true when any cell dir holds more than
     * `maxFilesPerCell` data files. Pure listing, driver sees k rows. */
-  def needsCompaction(spark: org.apache.spark.sql.SparkSession, path: String,
+  def needsCompaction(spark: SparkSession, path: String,
                       maxFilesPerCell: Int = 16): Boolean = {
     require(maxFilesPerCell >= 1,
       s"needsCompaction: maxFilesPerCell must be >= 1, got $maxFilesPerCell")
@@ -308,14 +546,12 @@ object IvfIndex {
 
   /** Rewrite an append-sprayed index store to ~targetBytes files per
     * cell, preserving the cell partitioning (searches keep their static
-    * `cell IN` file pruning) and every sidecar the store carries
-    * (`_centroids.json`, and `_quantize.json` / `_pq.json` /
-    * `_metric.json` where present — works unchanged for flat, SQ8, PQ,
-    * and cosine stores). Search results are byte-identical before and
-    * after (spec-pinned): compaction moves rows between files, never
-    * changes them. Run when [[needsCompaction]] fires — typically after
-    * N streaming [[appendIndex]]-family batches. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+    * `cell IN` file pruning) and every sidecar the store carries — works
+    * unchanged for every codec and metric. Search results are
+    * byte-identical before and after (spec-pinned): compaction moves rows
+    * between files, never changes them. Run when [[needsCompaction]]
+    * fires — typically after N streaming [[appendIndex]] batches. */
+  def compactIndex(spark: SparkSession, path: String,
                    targetBytes: Long = 128L * 1024 * 1024): graft.sources.Compaction.Report = {
     // maintenance-op contract: compacting a mid-swap store would read
     // cells whose staged content is not yet installed AND leave the
@@ -323,7 +559,7 @@ object IvfIndex {
     // compacted layout — roll the swap forward first, like every
     // other op the read gate's error message names
     recoverPending(spark, path, "compactIndex")
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // enumerate the store's actual `_*.json` sidecars instead of a
     // hard-coded name list: the fixed list had already gone stale once
@@ -341,8 +577,7 @@ object IvfIndex {
     * driven by the cells a query lands in, so a skewed quantizer makes
     * nprobe latency bimodal. (Empty cells are fine: they cost nothing.)
     * Driver sees k rows; rebuild with [[train]] + [[writeIndex]]. */
-  def needsRebuild(spark: org.apache.spark.sql.SparkSession, path: String,
-                   maxSkew: Double = 4.0): Boolean = {
+  def needsRebuild(spark: SparkSession, path: String, maxSkew: Double = 4.0): Boolean = {
     require(maxSkew >= 1, s"needsRebuild: maxSkew must be >= 1, got $maxSkew")
     val ns = cellStats(spark, path).select(col("n")).collect().map(_.getLong(0))
     ns.nonEmpty && ns.max.toDouble > maxSkew * (ns.sum.toDouble / ns.length)
@@ -355,13 +590,12 @@ object IvfIndex {
     * installing — the on-disk cell mix may double or drop ids (and a
     * reassign's new centroids may not be live) until the swap rolls
     * forward. Readers refuse loud instead of serving it; every
-    * maintenance op — including the append family — runs the recovery
-    * on entry and clears the manifest. A staging dir WITHOUT a
-    * manifest means the staging write itself crashed: the store was
-    * never touched and stays readable. Gated here in [[readModel]],
-    * the choke point every searchIndex* family passes through. */
-  private def requireNoPendingSwap(spark: org.apache.spark.sql.SparkSession,
-                                   path: String): Unit = {
+    * maintenance op — including append — runs the recovery on entry and
+    * clears the manifest. A staging dir WITHOUT a manifest means the
+    * staging write itself crashed: the store was never touched and stays
+    * readable. Gated here in [[readModel]], the choke point every read
+    * passes through. */
+  private def requireNoPendingSwap(spark: SparkSession, path: String): Unit = {
     // asks the SAME StagedSwap the maintenance ops use (current AND
     // legacy staging names), so gate and recovery can never disagree
     maintSwap(spark, path, "read").pendingPlan.foreach { plan =>
@@ -374,22 +608,21 @@ object IvfIndex {
   }
 
   /** This store family's [[graft.sources.StagedSwap]], from a path. */
-  private def maintSwap(spark: org.apache.spark.sql.SparkSession, path: String,
+  private def maintSwap(spark: SparkSession, path: String,
                         op: String): graft.sources.StagedSwap = {
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     stagedSwap(fs, root, op)
   }
 
   /** Maintenance-op entry contract: roll forward any committed-but-
     * unfinished swap before touching the store (clears the read gate's
-    * manifest). Called by EVERY maintenance op — the append family and
-    * compactIndex as well as the swap-running ops. */
-  private def recoverPending(spark: org.apache.spark.sql.SparkSession,
-                             path: String, op: String): Unit =
+    * manifest). Called by EVERY maintenance op — append and compactIndex
+    * as well as the swap-running ops. */
+  private def recoverPending(spark: SparkSession, path: String, op: String): Unit =
     maintSwap(spark, path, op).recover()
 
-  def readModel(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
+  def readModel(spark: SparkSession, path: String): Model = {
     requireNoPendingSwap(spark, path)
     val json = readSidecar(spark, path, "_centroids.json")
     // minimal parser for [[d,d,...],...] written by writeIndex
@@ -397,6 +630,15 @@ object IvfIndex {
       .map(_.stripPrefix("[").stripSuffix("]"))
       .map(_.split(",").map(_.trim.toDouble))
     Model(rows)
+  }
+
+  /** Per-query top-k by `order` (ties by id): `(qid, id, score, rn)`. */
+  private def topPerQuery(scored: DataFrame, order: Column, k: Int, idCol: String,
+                          queryIdCol: String, scoreCol: String): DataFrame = {
+    val w = Window.partitionBy(col(queryIdCol)).orderBy(order, col(idCol))
+    scored.withColumn("rn", row_number().over(w))
+      .where(col("rn") <= k)
+      .select(col(queryIdCol), col(idCol), col(scoreCol), col("rn").cast("long").as("rn"))
   }
 
   /** Shared probe → score → per-query rerank tail of topK/searchIndex. */
@@ -409,27 +651,136 @@ object IvfIndex {
     val scored = assigned.join(probes, Seq("cell"))
       .select(col(queryIdCol), col(idCol),
         round(VectorFunctions.cosineSimilarity(col(embCol), col("__qemb")), scale).as("cos"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("cos").desc, col(idCol))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("cos"), col("rn").cast("long").as("rn"))
+    topPerQuery(scored, col("cos").desc, k, idCol, queryIdCol, "cos")
   }
+
+  /** The distinct cells the queries probe, as static `cell IN` literals.
+    * (Queries are broadcast-small by contract, so collecting their
+    * ≤ |queries|·nprobe cell ids is driver-trivial.) */
+  private def probedCells(queries: DataFrame, probe: Column, model: Model,
+                          nprobe: Int): Array[Any] =
+    queries.select(explode(cellsOf(probe, model, nprobe)).as("cell"))
+      .distinct().collect().map(_.getInt(0).asInstanceOf[Any])
+
+  /** Rerank distance per query metric — pgvector's operators. */
+  private val distances: Map[String, (Column, Column) => Column] = Map(
+    "l2" -> (VectorFunctions.l2Distance _),         // <->
+    "cosine" -> (VectorFunctions.cosineDistance _), // <=>
+    "ip" -> (VectorFunctions.negInnerProduct _),    // <#>
+    "l1" -> (VectorFunctions.l1Distance _))         // <+>
 
   /** Search a persisted index. The probed cell set is computed up front
     * and applied as a STATIC `cell IN (...)` filter — partition pruning
     * is guaranteed at the file listing, not left to dynamic-pruning
-    * heuristics. (Queries are broadcast-small by contract, so collecting
-    * their ≤ |queries|·nprobe cell ids is driver-trivial.) */
-  def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+    * heuristics. The codec and store metric come from the sidecars
+    * ([[readStore]]); `metric` is the query's opclass:
+    *
+    *  - `cosine_sim` (default): cosine similarity, descending, each query
+    *    scored over its own probed cells — `(qid, id, cos, rn)`;
+    *  - `l2` / `cosine` / `ip` / `l1` — pgvector `<->` / `<=>` / `<#>` /
+    *    `<+>`: distance ascending over the probed cells, ties by id —
+    *    `(qid, id, dist, rn)`. Cells are probed by L2 (on the normalized
+    *    query over a cosine store; on the prefix over a prefix store).
+    *
+    * When `metric` is the store's own metric and the codec is
+    * [[Coarse]], a coarse pass first scans only the codec column of the
+    * probed cells and keeps the `k·overfetch` best candidates per query
+    * (`overfetch` 0 = the codec's default); the exact rerank then reads
+    * the float column for those ids alone — pushed into the scan as a
+    * static `id IN` filter up to `maxPushdownIds`, above that a semi join
+    * against the distributed candidate frame (correct at any
+    * cardinality; the driver never holds more than `maxPushdownIds+1`
+    * ids). Full probe with covering overfetch degenerates to exact KNN.
+    * Metrics a store cannot serve soundly (IP/L1 over normalized bytes,
+    * non-L2 over prefix cells) are refused. */
+  def searchIndex(spark: SparkSession, path: String,
                   queries: DataFrame, k: Int, nprobe: Int,
+                  metric: String = "cosine_sim", overfetch: Int = 0,
                   idCol: String = "vec_id", embCol: String = "embedding",
-                  queryIdCol: String = "qid", scale: Int = 4): DataFrame = {
-    val model = readModel(spark, path)
-    val probedCells = queries
-      .select(explode(cellsOf(col(embCol), model, nprobe)).as("cell"))
-      .distinct().collect().map(_.getInt(0).asInstanceOf[Any])
-    val corpus = spark.read.parquet(path).where(col("cell").isin(probedCells: _*))
-    probeAndRerank(corpus, queries, model, k, nprobe, idCol, embCol, queryIdCol, scale)
+                  queryIdCol: String = "qid", scale: Int = 4,
+                  maxPushdownIds: Int = 100000): DataFrame = {
+    val store = readStore(spark, path)
+    val model = store.model
+    require(metric == "cosine_sim" || distances.contains(metric),
+      s"searchIndex: unknown metric '$metric' (cosine_sim, l2, cosine, ip or l1)")
+    require(store.serves(metric),
+      s"searchIndex: $path is a ${store.metric}-metric " +
+        s"${store.codec.getClass.getSimpleName.stripSuffix("$")} store and cannot " +
+        s"serve metric '$metric'" + (
+          if (store.metric == "cosine") " — its vectors are L2-normalized, where IP ordering " +
+            "equals cosine (use metric = \"cosine\") and L1 answers a different question " +
+            "(build an L2 store)"
+          else ""))
+    if (metric == "cosine_sim") {
+      val corpus = spark.read.parquet(path)
+        .where(col("cell").isin(probedCells(queries, col(embCol), model, nprobe): _*))
+      return probeAndRerank(corpus, queries, model, k, nprobe, idCol, embCol, queryIdCol, scale)
+    }
+    val qs =
+      if (store.metric == "cosine")
+        queries.withColumn(embCol, VectorFunctions.l2Normalize(col(embCol)))
+      else queries
+    val cells = probedCells(qs, store.codec.assignOn(col(embCol)), model, nprobe)
+    val probed = spark.read.parquet(path).where(col("cell").isin(cells: _*))
+    val docs = store.codec match {
+      case c: Coarse if metric == store.metric =>
+        val perQuery = k * (if (overfetch > 0) overfetch else c.overfetch)
+        val w = Window.partitionBy(col(queryIdCol)).orderBy(col("__coarse"), col(idCol))
+        // materialized once (localCheckpoint): the candidate frame feeds
+        // both the bounded driver probe and, on fallback, the semi join —
+        // left lazy, the coarse scan would run twice
+        val cand = coarseScores(probed, store, c, qs, nprobe, idCol, embCol, queryIdCol)
+          .withColumn("__rn", row_number().over(w))
+          .where(col("__rn") <= perQuery)
+          .select(col(idCol)).distinct()
+          .localCheckpoint(true)
+        val ids = cand.limit(maxPushdownIds + 1).collect()
+        if (ids.length <= maxPushdownIds)
+          probed.where(col(idCol).isin(ids.map(_.get(0)).toSeq: _*))
+        else probed.join(cand, Seq(idCol), "left_semi")
+      case _ => probed
+    }
+    val qSide = broadcast(qs.select(col(queryIdCol), col(embCol).as("__qemb")))
+    val scored = docs.select(col(idCol), col(embCol)).crossJoin(qSide)
+      .select(col(queryIdCol), col(idCol),
+        round(distances(metric)(col(embCol), col("__qemb")), scale).as("dist"))
+    topPerQuery(scored, col("dist"), k, idCol, queryIdCol, "dist")
+  }
+
+  /** Coarse scores `(qid, id, __coarse)` of the codec column in `probed`
+    * against every query — or, for a per-cell codec, against the queries
+    * that probe the row's cell. Only (id, [cell,] codec column) is read. */
+  private def coarseScores(probed: DataFrame, store: Store, c: Coarse, queries: DataFrame,
+                           nprobe: Int, idCol: String, embCol: String,
+                           queryIdCol: String): DataFrame = {
+    val q = col(embCol)
+    val scored =
+      if (c.perCell)
+        probed.select(col(idCol), col("cell"), col(c.column)).join(broadcast(
+          queries.select(col(queryIdCol), q,
+              explode(cellsOf(c.assignOn(q), store.model, nprobe)).as("cell"))
+            .select(col(queryIdCol), col("cell"),
+              c.queryCode(q, col("cell"), store.model).as("__qcode"))), Seq("cell"))
+      else
+        probed.select(col(idCol), col(c.column)).crossJoin(broadcast(
+          queries.select(col(queryIdCol), c.queryCode(q, lit(null), store.model).as("__qcode"))))
+    scored.select(col(queryIdCol), col(idCol), c.score(col(c.column), col("__qcode")).as("__coarse"))
+  }
+
+  /** The planner's coarse stage for one literal query `q` (already in the
+    * store's metric space): ids of the `n` best coarse scores over
+    * `cells` — [[searchIndex]]'s coarse pass over a one-row query frame,
+    * so the query code comes from the same codec expression. */
+  private[graft] def coarseCandidates(spark: SparkSession, path: String, store: Store,
+                                      c: Coarse, q: Array[Double], cells: Seq[Int],
+                                      nprobe: Int, n: Int, idCol: String): DataFrame = {
+    import spark.implicits._
+    val probed = spark.read.parquet(path).where(col("cell").isin(cells: _*))
+    coarseScores(probed, store, c, Seq((0L, q.toSeq)).toDF("__qid", "__qemb"), nprobe,
+        idCol, "__qemb", "__qid")
+      .orderBy(col("__coarse"), col(idCol))
+      .limit(n)
+      .select(col(idCol))
   }
 
   /** ITERATIVE FILTERED search — pgvector 0.8's headline "iterative
@@ -451,7 +802,7 @@ object IvfIndex {
     * filter-after-fetch on the driver. Per-round satisfied/deficient
     * bookkeeping collects one (qid, count) row per query — queries are
     * broadcast-small by contract, same as the probe-cell collection. */
-  def searchIndexFiltered(spark: org.apache.spark.sql.SparkSession, path: String,
+  def searchIndexFiltered(spark: SparkSession, path: String,
                           queries: DataFrame, pred: Column, k: Int, nprobe: Int,
                           idCol: String = "vec_id", embCol: String = "embedding",
                           queryIdCol: String = "qid", scale: Int = 4,
@@ -510,15 +861,12 @@ object IvfIndex {
     * spec can assert the predicate reaches `PushedFilters` (the returned
     * frame of the iterative driver is a collected LocalRelation with no
     * scan left to inspect). */
-  private[graft] def filteredProbePlan(spark: org.apache.spark.sql.SparkSession, path: String,
+  private[graft] def filteredProbePlan(spark: SparkSession, path: String,
                                        model: Model, pending: DataFrame, pred: Column,
                                        k: Int, cur: Int, idCol: String, embCol: String,
                                        queryIdCol: String, scale: Int): DataFrame = {
-    val probedCells = pending
-      .select(explode(cellsOf(col(embCol), model, cur)).as("cell"))
-      .distinct().collect().map(_.getInt(0).asInstanceOf[Any])
     val corpus = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
+      .where(col("cell").isin(probedCells(pending, col(embCol), model, cur): _*))
       .where(pred)
     probeAndRerank(corpus, pending, model, k, cur, idCol, embCol, queryIdCol, scale)
   }
@@ -557,337 +905,14 @@ object IvfIndex {
     val scored = probes.join(assigned, Seq("cell"))
       .select(col(leftIdCol), col(rightIdCol),
         round(VectorFunctions.cosineSimilarity(col("__lemb"), col("__remb")), scale).as("cos"))
-    val w = Window.partitionBy(col(leftIdCol)).orderBy(col("cos").desc, col(rightIdCol))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col(leftIdCol), col(rightIdCol), col("cos"), col("rn").cast("long").as("rn"))
-  }
-
-  /** Persist an IVF-SQ index: [[writeIndex]]'s cell-partitioned layout
-    * PLUS a uint8 code column per vector (faiss IVF-SQ8's on-disk shape).
-    * The two pruning levers compose at search time: partition pruning
-    * reads only the probed `nprobe/k` fraction of the files, and within
-    * them the coarse scoring pass reads only the code column — ¼ the
-    * bytes of the float column. The quantization range rides in a
-    * `_quantize.json` sidecar beside `_centroids.json`. */
-  def writeIndexQuantized(corpus: DataFrame, model: Model, path: String,
-                          mn: Double, mx: Double,
-                          idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    corpus.select(col(idCol), col(embCol),
-        Quantize.quantizeExpr(col(embCol), mn, mx).as("qvec"),
-        cellOf(col(embCol), model).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    val json = model.centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    writeSidecar(corpus.sparkSession, path, "_centroids.json", json)
-    writeSidecar(corpus.sparkSession, path, "_quantize.json", s"""{"mn":$mn,"mx":$mx}""")
-  }
-
-  /** (mn, mx) range from the `_quantize.json` sidecar. */
-  def readQuantRange(spark: org.apache.spark.sql.SparkSession, path: String): (Double, Double) = {
-    val json = readSidecar(spark, path, "_quantize.json")
-    val m = """"mn"\s*:\s*([-0-9.eE]+).*"mx"\s*:\s*([-0-9.eE]+)""".r.unanchored
-    json match {
-      case m(mn, mx) => (mn.toDouble, mx.toDouble)
-      case _ => throw new IllegalStateException(s"IvfIndex: malformed _quantize.json at $path")
-    }
-  }
-
-  /** Search a quantized index: static `cell IN` partition pruning, then a
-    * CODE-COLUMN-ONLY coarse pass (integer code-L2 per query, top
-    * `k·overfetch` by window), then a full-precision L2 rerank reading
-    * float vectors for the bounded candidate-id set via static `id IN`
-    * parquet pushdown. Output: `(qid, id, dist, rn)`, L2 ascending —
-    * the pgvector `<->` family, like `Quantize.topKStore`, but with the
-    * nprobe/k scan cut stacked on top of the 4× byte cut.
-    *
-    * The candidate-id set is `|queries|·k·overfetch` — bounded for the
-    * serve contract (small query batches), but unbounded if someone
-    * points this at a corpus-sized query frame. So the driver never
-    * materializes more than `maxPushdownIds+1` ids (a `limit` probe,
-    * the [[DedupIndex.searchIndex]] guard): at or under the cap the ids
-    * push into the rerank read as a static `id IN` parquet filter
-    * (row-group pruning); above it the rerank falls back to a semi join
-    * against the distributed candidate frame — correct at any
-    * cardinality, and AQE still broadcasts it when it turns out small. */
-  def searchIndexQuantized(spark: org.apache.spark.sql.SparkSession, path: String,
-                           queries: DataFrame, k: Int, nprobe: Int, overfetch: Int = 4,
-                           idCol: String = "vec_id", embCol: String = "embedding",
-                           queryIdCol: String = "qid", scale: Int = 4,
-                           maxPushdownIds: Int = 100000): DataFrame = {
-    val model = readModel(spark, path)
-    val (mn, mx) = readQuantRange(spark, path)
-    val probedCells = queries
-      .select(explode(cellsOf(col(embCol), model, nprobe)).as("cell"))
-      .distinct().collect().map(_.getInt(0).asInstanceOf[Any])
-    val qSide = broadcast(queries.select(col(queryIdCol),
-      col(embCol).as("__qemb"),
-      Quantize.quantizeExpr(col(embCol), mn, mx).as("__qcodes")))
-    // coarse: probed cells × queries, scored in the integer code domain;
-    // the scan deserializes (id, qvec) only
-    val coarse = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
-      .select(col(idCol), col("qvec"))
-      .crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        Quantize.codeL2Sq(col("qvec"), col("__qcodes")).as("__qdist"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("__qdist"), col(idCol))
-    // materialized once (localCheckpoint): the candidate frame feeds both
-    // the bounded driver probe and, on fallback, the semi join — left
-    // lazy, the coarse scan would run twice.
-    val candFrame = coarse.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k * overfetch)
-      .select(col(idCol)).distinct()
-      .localCheckpoint(true)
-    // bounded probe BEFORE the cardinality decision — the driver never
-    // holds more than maxPushdownIds+1 ids even for a huge query frame
-    val probe = candFrame.limit(maxPushdownIds + 1).collect()
-    val rerankBase = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
-    val rerankDocs =
-      if (probe.length <= maxPushdownIds)
-        rerankBase.where(col(idCol).isin(probe.map(_.getLong(0)).toSeq: _*))
-      else rerankBase.join(candFrame, Seq(idCol), "left_semi")
-    // rerank: float column for candidate ids only, exact L2 per query
-    val rerank = rerankDocs
-      .select(col(idCol), col(embCol))
-      .crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        round(VectorFunctions.l2Distance(col(embCol), col("__qemb")), scale).as("dist"))
-    val w2 = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col(idCol))
-    rerank.withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("dist"), col("rn").cast("long").as("rn"))
-  }
-
-  /** Persist a HALFVEC index — pgvector 0.7's `halfvec_l2_ops` recipe
-    * (index over `embedding::halfvec(d)`, the memory-halving move real
-    * deployments use) on the cell-partitioned layout: rows carry the
-    * full float column PLUS an IEEE-754 binary16 code column (`hvec`,
-    * round-to-nearest-even — [[graft.functions.HalfExpressions]]), and
-    * a `_half.json` sidecar marks the tier. At search time the coarse
-    * pass reads (id, hvec) only — half the bytes of the float column —
-    * and the float column is deserialized just for the bounded rerank
-    * candidates: [[writeIndexSub]]'s IO pattern with the cut coming
-    * from precision instead of prefix length. */
-  /** The half tier's hvec layout is versioned: "packed2" = 2-byte/dim
-    * binary (the only layout the current scan and append paths speak).
-    * A `_half.json` without the field is a pre-packing store whose hvec
-    * is `array<short>` — appending binary rows to it would write
-    * mixed-physical-type parquet that fails at schema merge AFTER the
-    * store is already poisoned, so every maintenance/read path refuses
-    * it loud up front and points at the rebuild. */
-  /** True iff the `_half.json` sidecar declares the packed2 layout —
-    * THE version check: the rewrite rule and every maintenance/read
-    * path must agree on it, so it lives here once. */
-  private[graft] def isPackedHalf(spark: org.apache.spark.sql.SparkSession,
-                                  path: String): Boolean =
-    """"format"\s*:\s*"packed2"""".r
-      .findFirstIn(readSidecar(spark, path, "_half.json")).isDefined
-
-  private def requirePackedHalf(spark: org.apache.spark.sql.SparkSession,
-                                path: String, op: String): Unit = {
-    // existence first, not a swallowed read: appending/searching a
-    // non-half path must yield the clean family message (a transient IO
-    // fault on the sidecar READ still surfaces as itself below) — ONE
-    // copy of the family gate for every half read/maintenance path
-    val marker = new org.apache.hadoop.fs.Path(path, "_half.json")
-    require(marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker),
-      s"$op: $path carries no _half.json — not a halfvec index")
-    require(isPackedHalf(spark, path),
-      s"$op: $path is a pre-packed-layout halfvec store (hvec as array<short>) — " +
-        "rebuild with writeIndexHalf to migrate to the 2-byte packed binary layout")
-  }
-
-  def writeIndexHalf(corpus: DataFrame, model: Model, path: String,
-                     idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    import graft.functions.HalfExpressions
-    corpus.select(col(idCol), col(embCol),
-        HalfExpressions.halfPack(col(embCol)).as("hvec"),
-        cellOf(col(embCol), model).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    val json = model.centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    writeSidecar(corpus.sparkSession, path, "_centroids.json", json)
-    writeSidecar(corpus.sparkSession, path, "_half.json",
-      """{"bits":16,"format":"packed2"}""")
-  }
-
-  /** Append to a [[writeIndexHalf]] store — the [[appendIndex]] contract
-    * with the half codes recomputed for the new rows. */
-  def appendIndexHalf(spark: org.apache.spark.sql.SparkSession, path: String,
-                      vectors: DataFrame,
-                      idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    import graft.functions.HalfExpressions
-    requirePackedHalf(spark, path, "appendIndexHalf")
-    recoverPending(spark, path, "appendIndexHalf")
-    val model = readModel(spark, path)
-    vectors.select(col(idCol), col(embCol),
-        HalfExpressions.halfPack(col(embCol)).as("hvec"),
-        cellOf(col(embCol), model).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
-  }
-
-  /** Search a [[writeIndexHalf]] store — [[searchIndexQuantized]]'s
-    * exact scan shape with binary16 in place of uint8 codes: static
-    * `cell IN` pruning, an (id, hvec)-only coarse pass scored by L2 in
-    * the HALF domain (both sides rounded to binary16, the pgvector
-    * halfvec semantics), then an exact float-L2 rerank of the bounded
-    * candidate set with the id-pushdown/semi-join fallback. Full probe
-    * + covering overfetch degenerates to exact KNN (oracle-gated as
-    * q_ann_half_exact); recall at production overfetch is spec-gated. */
-  def searchIndexHalf(spark: org.apache.spark.sql.SparkSession, path: String,
-                      queries: DataFrame, k: Int, nprobe: Int, overfetch: Int = 4,
-                      idCol: String = "vec_id", embCol: String = "embedding",
-                      queryIdCol: String = "qid", scale: Int = 4,
-                      maxPushdownIds: Int = 100000): DataFrame = {
-    import graft.functions.HalfExpressions
-    // the family gate runs BEFORE readModel so a non-index path fails
-    // on the family, not on a missing centroid sidecar
-    requirePackedHalf(spark, path, "searchIndexHalf")
-    val model = readModel(spark, path)
-    val probedCells = queries
-      .select(explode(cellsOf(col(embCol), model, nprobe)).as("cell"))
-      .distinct().collect().map(_.getInt(0).asInstanceOf[Any])
-    val qSide = broadcast(queries.select(col(queryIdCol),
-      col(embCol).as("__qemb"),
-      HalfExpressions.halfDecode(
-        HalfExpressions.halfEncode(col(embCol))).as("__qhalf")))
-    val coarse = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
-      .select(col(idCol), col("hvec"))
-      .crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        VectorFunctions.l2Distance(
-          HalfExpressions.halfUnpack(col("hvec")), col("__qhalf")).as("__hdist"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("__hdist"), col(idCol))
-    val candFrame = coarse.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k * overfetch)
-      .select(col(idCol)).distinct()
-      .localCheckpoint(true)
-    val probe = candFrame.limit(maxPushdownIds + 1).collect()
-    val rerankBase = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
-    val rerankDocs =
-      if (probe.length <= maxPushdownIds)
-        rerankBase.where(col(idCol).isin(probe.map(_.getLong(0)).toSeq: _*))
-      else rerankBase.join(candFrame, Seq(idCol), "left_semi")
-    val rerank = rerankDocs
-      .select(col(idCol), col(embCol))
-      .crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        round(VectorFunctions.l2Distance(col(embCol), col("__qemb")), scale).as("dist"))
-    val w2 = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col(idCol))
-    rerank.withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("dist"), col("rn").cast("long").as("rn"))
-  }
-
-  /** Persist a MATRYOSHKA index — the pgvector "subvector index" recipe
-    * (index `subvector(embedding, 1, d')::vector(d')`, rerank by the
-    * full column) re-expressed as a cell-partitioned store: rows carry
-    * the full embedding PLUS its `sub` prefix (first `subDim` dims), and
-    * cells come from centroids trained in the PREFIX space (pass a
-    * `model` of dimension `subDim` — [[trainSub]] builds one). MRL-style
-    * embeddings front-load information, so the d'-dim prefix preserves
-    * neighborhood structure at subDim/dim of the bytes; at 100 TB the
-    * coarse pass reads only (id, sub) via parquet column pruning — a
-    * subDim/dim IO cut on top of the nprobe/k partition cut — and the
-    * full float column is only deserialized for the bounded rerank
-    * candidates. `_matryoshka.json` records subDim. */
-  def writeIndexSub(corpus: DataFrame, model: Model, path: String, subDim: Int,
-                    idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    require(subDim >= 1, s"writeIndexSub: subDim must be >= 1, got $subDim")
-    require(model.centroids.headOption.forall(_.length == subDim),
-      s"writeIndexSub: model dimension ${model.centroids.headOption.map(_.length)} " +
-        s"!= subDim $subDim — train the coarse quantizer in the prefix space (trainSub)")
-    val sub = slice(col(embCol), 1, subDim)
-    corpus.select(col(idCol), col(embCol), sub.as("sub"),
-        cellOf(sub, model).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    val json = model.centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    writeSidecar(corpus.sparkSession, path, "_centroids.json", json)
-    writeSidecar(corpus.sparkSession, path, "_matryoshka.json", s"""{"subDim":$subDim}""")
-  }
-
-  /** Coarse quantizer for [[writeIndexSub]]: k-means in the prefix space. */
-  def trainSub(corpus: DataFrame, subDim: Int, k: Int, iters: Int = 5,
-               idCol: String = "vec_id", embCol: String = "embedding",
-               samplePercent: Int = 10): Model =
-    train(corpus.select(col(idCol), slice(col(embCol), 1, subDim).as(embCol)),
-      k, iters, idCol, embCol, samplePercent)
-
-  /** subDim from the `_matryoshka.json` sidecar. */
-  def readSubDim(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val json = readSidecar(spark, path, "_matryoshka.json")
-    """"subDim"\s*:\s*(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"IvfIndex: malformed _matryoshka.json at $path"))
-  }
-
-  /** Search a Matryoshka index: static `cell IN` partition pruning in
-    * the prefix space, a PREFIX-COLUMN-ONLY coarse pass (L2 over the
-    * first subDim dims, top `k·overfetch` per query), then an exact
-    * full-dimension L2 rerank reading float vectors for the bounded
-    * candidate-id set — [[searchIndexQuantized]]'s scan shape with the
-    * byte cut coming from column pruning instead of integer codes.
-    * Output `(qid, id, dist, rn)`, L2 ascending. Degeneration: nprobe ≥
-    * cells and overfetch covering the corpus ⇒ exact KNN (oracle-gated
-    * as q_ann_matryoshka_exact). */
-  def searchIndexSub(spark: org.apache.spark.sql.SparkSession, path: String,
-                     queries: DataFrame, k: Int, nprobe: Int, overfetch: Int = 4,
-                     idCol: String = "vec_id", embCol: String = "embedding",
-                     queryIdCol: String = "qid", scale: Int = 4,
-                     maxPushdownIds: Int = 100000): DataFrame = {
-    val model = readModel(spark, path)
-    val subDim = readSubDim(spark, path)
-    val qSub = slice(col(embCol), 1, subDim)
-    val probedCells = queries
-      .select(explode(cellsOf(qSub, model, nprobe)).as("cell"))
-      .distinct().collect().map(_.getInt(0).asInstanceOf[Any])
-    val qSide = broadcast(queries.select(col(queryIdCol),
-      col(embCol).as("__qemb"), qSub.as("__qsub")))
-    // coarse: probed cells × queries in the prefix space; the scan
-    // deserializes (id, sub) only — subDim/dim of the vector bytes
-    val coarse = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
-      .select(col(idCol), col("sub"))
-      .crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        VectorFunctions.l2DistanceSq(col("sub"), col("__qsub")).as("__qdist"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("__qdist"), col(idCol))
-    val candFrame = coarse.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k * overfetch)
-      .select(col(idCol)).distinct()
-      .localCheckpoint(true)
-    // bounded driver probe, then id IN pushdown or semi-join fallback —
-    // the searchIndexQuantized guard verbatim
-    val probe = candFrame.limit(maxPushdownIds + 1).collect()
-    val rerankBase = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
-    val rerankDocs =
-      if (probe.length <= maxPushdownIds)
-        rerankBase.where(col(idCol).isin(probe.map(_.getLong(0)).toSeq: _*))
-      else rerankBase.join(candFrame, Seq(idCol), "left_semi")
-    val rerank = rerankDocs
-      .select(col(idCol), col(embCol))
-      .crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        round(VectorFunctions.l2Distance(col(embCol), col("__qemb")), scale).as("dist"))
-    val w2 = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col(idCol))
-    rerank.withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("dist"), col("rn").cast("long").as("rn"))
+    topPerQuery(scored, col("cos").desc, k, rightIdCol, leftIdCol, "cos")
   }
 
   /** The staged-swap machinery ([[graft.sources.StagedSwap]]) bound to
     * this family's layout: `cell=` partition dirs, the `_centroids.json`
     * sidecar riding reassign manifests, and the legacy `__reassign_*`
     * sibling names still rolled forward on recovery. */
-  private def stagedSwap(fs: org.apache.hadoop.fs.FileSystem,
-                         root: org.apache.hadoop.fs.Path, op: String) =
+  private def stagedSwap(fs: org.apache.hadoop.fs.FileSystem, root: Path, op: String) =
     new graft.sources.StagedSwap(fs, root, op, partPrefix = "cell=",
       sidecarName = "_centroids.json", legacySuffixes = Seq("__reassign"))
 
@@ -905,47 +930,43 @@ object IvfIndex {
     * staged partition renamed in → staging then retire dir dropped).
     * The centroid sidecar is rewritten last.
     *
-    * Store families: plain, SQ (qvec is range-coded, cell-independent),
-    * binary (sign-coded), cosine (stored vectors are normalized — train
-    * `newModel` on normalized data), and Matryoshka (assignment runs on
-    * the stored `sub` prefix; `newModel` must be subDim-dimensional).
-    * PQ stores are REFUSED: their codes quantize the residual against
-    * the row's cell centroid, so a moved row's codes go stale — a PQ
-    * re-clustering is a rebuild ([[writeIndexPq]]) by construction.
+    * Codecs: every codec whose stored column is cell-independent — flat,
+    * SQ8 (range-coded), half, binary (sign-coded) and prefix (assignment
+    * runs on the prefix; `newModel` must be subDim-dimensional); on a
+    * cosine store the stored vectors are normalized, so train `newModel`
+    * on normalized data. PQ stores are REFUSED: their codes quantize the
+    * residual against the row's cell centroid, so a moved row's codes go
+    * stale — a PQ re-clustering is a rebuild by construction.
     *
-    * Crash safety (single-writer contract, like the append family): the
-    * staged batch carries a `_plan.json` manifest naming every cell to
-    * rewrite or drain, written only after the parquet staging completed
-    * — it is the commit point. A crash at any later step leaves a state
-    * the next call ROLLS FORWARD deterministically from the manifest
-    * (install what's still staged, drop what drained) before starting
-    * its own work; a crash before the manifest leaves the store
-    * untouched and the partial staging is dropped. In-between states
-    * keep the OLD sidecar against a partially moved layout — searches
-    * stay exact within their probed cells (recall can dip until the
-    * roll-forward completes; no wrong rows). */
-  def reassignIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    newModel: Model,
+    * Crash safety (single-writer contract, like append): the staged
+    * batch carries a `_plan.json` manifest naming every cell to rewrite
+    * or drain, written only after the parquet staging completed — it is
+    * the commit point. A crash at any later step leaves a state the next
+    * call ROLLS FORWARD deterministically from the manifest (install
+    * what's still staged, drop what drained) before starting its own
+    * work; a crash before the manifest leaves the store untouched and the
+    * partial staging is dropped. In-between states keep the OLD sidecar
+    * against a partially moved layout — searches stay exact within their
+    * probed cells (recall can dip until the roll-forward completes; no
+    * wrong rows). */
+  def reassignIndex(spark: SparkSession, path: String, newModel: Model,
                     idCol: String = "vec_id", embCol: String = "embedding"): ReassignReport = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(root, "_pq.json")),
-      "reassignIndex: PQ stores code residuals against their cell centroid — " +
-        "moved rows would carry stale codes; rebuild with writeIndexPq instead")
-    val isSub = fs.exists(new Path(root, "_matryoshka.json"))
-    val assignCol = if (isSub) col("sub") else col(embCol)
-    if (isSub) {
-      val d = readSubDim(spark, path)
-      require(newModel.centroids.headOption.forall(_.length == d),
-        s"reassignIndex: Matryoshka store has subDim $d but the new model is " +
-          s"${newModel.centroids.headOption.map(_.length)}-dimensional (trainSub)")
-    }
     val swap = stagedSwap(fs, root, "reassignIndex")
     swap.recover()
-
+    val codec = readStore(spark, path).codec
+    codec match {
+      case _: Codec.Pq => throw new IllegalArgumentException(
+        "reassignIndex: PQ stores code residuals against their cell centroid — " +
+          "moved rows would carry stale codes; rebuild with writeIndex instead")
+      case Codec.Prefix(d) => require(newModel.centroids.headOption.forall(_.length == d),
+        s"reassignIndex: Matryoshka store has subDim $d but the new model is " +
+          s"${newModel.centroids.headOption.map(_.length)}-dimensional (trainSub)")
+      case _ =>
+    }
     val assigned = spark.read.parquet(path)
-      .withColumn("__new", cellOf(assignCol, newModel))
+      .withColumn("__new", cellOf(codec.assignOn(col(embCol)), newModel))
     // one corpus pass: (old, new) pair counts — ≤ oldK·newK rows — give
     // the row total, the moved count, and the changed-cell set at once
     val pairCounts = assigned.groupBy(col("cell"), col("__new")).count().collect()
@@ -992,19 +1013,18 @@ object IvfIndex {
     * manifest-committed + swapped through the same [[graft.sources.StagedSwap]]
     * machinery as [[reassignIndex]], so a crash at any point rolls
     * forward), and a cell whose rows are all deleted is drained. Works
-    * for every root-level cell-partitioned family — flat, SQ8, PQ
-    * (per-row codes stay valid under deletion), binary, cosine,
-    * Matryoshka. Streaming `batch_id/cell` stores are refused: their
-    * cell dirs are nested under batch partitions, so a root-level swap
-    * would leave the old rows live — compact to a cell-partitioned
-    * store first. `ids` may be any size (the anti join shuffles; AQE
-    * broadcasts it when small) — but if it DERIVES from this same
-    * store, materialize it first (`localCheckpoint`): the swap
-    * invalidates the file listing its lineage captured, so re-using it
-    * after the call would fail on the retired files. */
-  def deleteFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+    * for every root-level cell-partitioned store, whatever its codec
+    * (per-row codes stay valid under deletion). Streaming `batch_id/cell`
+    * stores are refused: their cell dirs are nested under batch
+    * partitions, so a root-level swap would leave the old rows live —
+    * compact to a cell-partitioned store first. `ids` may be any size
+    * (the anti join shuffles; AQE broadcasts it when small) — but if it
+    * DERIVES from this same store, materialize it first
+    * (`localCheckpoint`): the swap invalidates the file listing its
+    * lineage captured, so re-using it after the call would fail on the
+    * retired files. */
+  def deleteFromIndex(spark: SparkSession, path: String,
                       ids: DataFrame, idCol: String = "vec_id"): DeleteReport = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val swap = stagedSwap(fs, root, "deleteFromIndex")
@@ -1047,24 +1067,18 @@ object IvfIndex {
     * a crash at any point rolls FORWARD on the next maintenance call and
     * no intermediate state is ever live.
     *
-    * Family-aware: the batch rows are written in the store's own schema,
-    * detected from its sidecars — flat, cosine (vectors normalized on
-    * the way in), SQ8 (codes under the stored range), binary (packed
-    * sign bits), PQ (residual codes under the stored codebooks),
-    * Matryoshka (prefix slice + prefix-space cells). An id may move
-    * cells when its new embedding lands elsewhere — the old cell is
-    * rewritten without it, the new cell with it, both under the one
-    * manifest; a cell left empty drains.
+    * The batch rows are encoded like [[appendIndex]]'s, in the store's
+    * own codec and metric. An id may move cells when its new embedding
+    * lands elsewhere — the old cell is rewritten without it, the new cell
+    * with it, both under the one manifest; a cell left empty drains.
     *
     * Cost: O(affected cells), like [[deleteFromIndex]]. `vectors` must
     * carry one row per id (ambiguous multi-row upserts fail loud); if it
     * derives from this same store, it is materialized here before the
     * swap invalidates the captured file listing. Idempotent: re-running
     * the same batch converges to the same store. */
-  def upsertIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                  vectors: DataFrame,
+  def upsertIndex(spark: SparkSession, path: String, vectors: DataFrame,
                   idCol: String = "vec_id", embCol: String = "embedding"): UpsertReport = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val swap = stagedSwap(fs, root, "upsertIndex")
@@ -1074,54 +1088,14 @@ object IvfIndex {
       "upsertIndex: streaming batch_id/cell stores nest their cell dirs under " +
         "batch partitions — a root-level swap would leave old rows live; " +
         "compact to a cell-partitioned store first")
-    val model = readModel(spark, path)
-    // family detection by sidecar — the batch must be written in the
-    // store's own schema or every later search breaks on the new rows
-    val isSub = fs.exists(new Path(root, "_matryoshka.json"))
-    val isPq = fs.exists(new Path(root, "_pq.json"))
-    val isBin = fs.exists(new Path(root, "_binary.json"))
-    val isSq = fs.exists(new Path(root, "_quantize.json"))
-    val isHalf = fs.exists(new Path(root, "_half.json"))
-    val isCos = readMetric(spark, path) == "cosine"
-    val batchRows: DataFrame =
-      if (isHalf) {
-        import graft.functions.HalfExpressions
-        requirePackedHalf(spark, path, "upsertIndex")
-        vectors.select(col(idCol), col(embCol),
-          HalfExpressions.halfPack(col(embCol)).as("hvec"),
-          cellOf(col(embCol), model).as("cell"))
-      } else if (isSub) {
-        val subDim = readSubDim(spark, path)
-        val sub = slice(col(embCol), 1, subDim)
-        vectors.select(col(idCol), col(embCol), sub.as("sub"), cellOf(sub, model).as("cell"))
-      } else if (isPq) {
-        val pq = ProductQuantizer.readModel(spark, path)
-        vectors.select(col(idCol), col(embCol), cellOf(col(embCol), model).as("cell"))
-          .select(col(idCol), col(embCol), col("cell"),
-            ProductQuantizer.encodeExpr(
-              ProductQuantizer.residualExpr(col(embCol), col("cell"), model), pq).as("pq_codes"))
-      } else if (isBin) {
-        vectors.select(col(idCol), col(embCol),
-          Quantize.binarizeExpr(col(embCol)).as("bvec"), cellOf(col(embCol), model).as("cell"))
-      } else if (isSq) {
-        val (mn, mx) = readQuantRange(spark, path)
-        vectors.select(col(idCol), col(embCol),
-          Quantize.quantizeExpr(col(embCol), mn, mx).as("qvec"),
-          cellOf(col(embCol), model).as("cell"))
-      } else if (isCos) {
-        val n = graft.functions.VectorFunctions.l2Normalize(col(embCol))
-        vectors.select(col(idCol), n.as(embCol), cellOf(n, model).as("cell"))
-      } else {
-        vectors.select(col(idCol), col(embCol), cellOf(col(embCol), model).as("cell"))
-      }
     // materialized once: feeds the ambiguity check, the hit pass, the
     // changed-cell set and the staging write — and decouples the batch
     // from any lineage over the store about to be swapped. Columns are
     // cast to the STORE's schema first (a float-vector store upserted
     // with double-typed arithmetic would otherwise write mixed-type
     // partitions the merged read chokes on).
-    val batch = batchRows.select(store.schema.fields.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*)
+    val batch = encode(vectors, readStore(spark, path), idCol, embCol)
+      .select(store.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
       .localCheckpoint(true)
     val dup = batch.groupBy(col(idCol)).count().where(col("count") > 1)
       .limit(5).collect().map(_.get(0))
@@ -1151,352 +1125,16 @@ object IvfIndex {
     UpsertReport(updatedIds, batch.count() - updatedIds, rewrite.size, drain.size)
   }
 
-  /** Append vectors to a persisted Matryoshka index: slice the prefix
-    * and assign cells under the EXISTING sidecar model, so appended rows
-    * stay scan-compatible with both the coarse (sub) and rerank
-    * (embedding) passes. Same append-only contract as [[appendIndex]];
-    * compact on the usual cadence. */
-  def appendIndexSub(spark: org.apache.spark.sql.SparkSession, path: String,
-                     vectors: DataFrame,
-                     idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    recoverPending(spark, path, "appendIndexSub")
-    val model = readModel(spark, path)
-    val subDim = readSubDim(spark, path)
-    val sub = slice(col(embCol), 1, subDim)
-    vectors.select(col(idCol), col(embCol), sub.as("sub"),
-        cellOf(sub, model).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
-  }
-
-  /** Persist an IVF-BINARY index: [[writeIndex]]'s cell-partitioned
-    * layout PLUS the packed sign-bit column ([[Quantize.binarizeExpr]])
-    * — the 32× compression point of the quantization ladder inside the
-    * inverted-file layout (pgvector's bit-vector family meeting its
-    * ivfflat layout). At search time three levers compose: `cell IN`
-    * partition pruning (nprobe/k of the files), a coarse pass reading
-    * only (id, bvec) — 1/32 the bytes of the float column — scored by
-    * integer Hamming, and exact-L2 rerank of the bounded candidates.
-    * A `_binary.json` sidecar marks the store. */
-  def writeIndexBinary(corpus: DataFrame, model: Model, path: String,
-                       idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    corpus.select(col(idCol), col(embCol),
-        Quantize.binarizeExpr(col(embCol)).as("bvec"),
-        cellOf(col(embCol), model).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    val json = model.centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    writeSidecar(corpus.sparkSession, path, "_centroids.json", json)
-    writeSidecar(corpus.sparkSession, path, "_binary.json", """{"bits":32}""")
-  }
-
-  /** Search a [[writeIndexBinary]] store — [[searchIndexQuantized]]'s
-    * exact shape with Hamming in place of code-L2: cell partition
-    * pruning, (id, bvec)-only coarse scan, bounded candidate-id rerank
-    * pushdown with the semi-join fallback. Full probe + covering
-    * overfetch degenerates to exact KNN (the binary coarse pass is a
-    * pre-filter; the rerank is exact L2) — oracle-gated. Default
-    * overfetch is higher than SQ8's: one sign bit per dim is the
-    * lossiest codec on the ladder. */
-  def searchIndexBinary(spark: org.apache.spark.sql.SparkSession, path: String,
-                        queries: DataFrame, k: Int, nprobe: Int, overfetch: Int = 8,
-                        idCol: String = "vec_id", embCol: String = "embedding",
-                        queryIdCol: String = "qid", scale: Int = 4,
-                        maxPushdownIds: Int = 100000): DataFrame = {
-    require(
-      try { readSidecar(spark, path, "_binary.json"); true } catch { case _: Exception => false },
-      s"searchIndexBinary: $path carries no _binary.json — not a binary index")
-    val model = readModel(spark, path)
-    val probedCells = queries
-      .select(explode(cellsOf(col(embCol), model, nprobe)).as("cell"))
-      .distinct().collect().map(_.getInt(0).asInstanceOf[Any])
-    val qSide = broadcast(queries.select(col(queryIdCol),
-      col(embCol).as("__qemb"),
-      Quantize.binarizeExpr(col(embCol)).as("__qbits")))
-    val coarse = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
-      .select(col(idCol), col("bvec"))
-      .crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        Quantize.hammingExpr(col("bvec"), col("__qbits")).as("__qdist"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("__qdist"), col(idCol))
-    val candFrame = coarse.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k * overfetch)
-      .select(col(idCol)).distinct()
-      .localCheckpoint(true)
-    val probe = candFrame.limit(maxPushdownIds + 1).collect()
-    val rerankBase = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
-    val rerankDocs =
-      if (probe.length <= maxPushdownIds)
-        rerankBase.where(col(idCol).isin(probe.map(_.getLong(0)).toSeq: _*))
-      else rerankBase.join(candFrame, Seq(idCol), "left_semi")
-    val rerank = rerankDocs
-      .select(col(idCol), col(embCol))
-      .crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        round(VectorFunctions.l2Distance(col(embCol), col("__qemb")), scale).as("dist"))
-    val w2 = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col(idCol))
-    rerank.withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("dist"), col("rn").cast("long").as("rn"))
-  }
-
-  /** Persist a COSINE-metric IVF index — pgvector's `vector_cosine_ops`
-    * analogue: vectors are L2-NORMALIZED at write (cosine is
-    * scale-invariant, so nothing is lost), cells are assigned under a
-    * `model` trained on the NORMALIZED corpus (caller trains with
-    * `train(corpus.withColumn(emb, l2Normalize(emb)))` — enforced only
-    * by contract, like every model/store pairing here), and the
-    * `_metric.json` sidecar records the opclass so searches — and the
-    * `IvfScanRewriteRule` planner path — refuse to mix metrics. On the
-    * unit sphere ‖â−b̂‖² = 2·(1−cos), so L2 cell probing preserves
-    * cosine order exactly. */
-  def writeIndexCosine(corpus: DataFrame, model: Model, path: String,
-                       idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    writeIndex(
-      corpus.withColumn(embCol, VectorFunctions.l2Normalize(col(embCol))),
-      model, path, idCol, embCol)
-    writeSidecar(corpus.sparkSession, path, "_metric.json", """{"metric":"cosine"}""")
-  }
-
-  /** The store's distance opclass: `"cosine"` when `_metric.json` says
-    * so, `"l2"` otherwise (the default for every store written before
-    * the sidecar existed). */
-  def readMetric(spark: org.apache.spark.sql.SparkSession, path: String): String =
-    try {
-      val json = readSidecar(spark, path, "_metric.json")
-      if (json.contains("cosine")) "cosine" else "l2"
-    } catch { case _: Exception => "l2" }
-
-  /** Shared body of the metric-variant searches ([[searchIndexCosine]]/
-    * [[searchIndexIp]]/[[searchIndexL1]]): probe cells by the coarse L2
-    * geometry, static `cell IN` pruning, cross-join against the
-    * broadcast-small query side, round-then-rank by `distFn`. One
-    * definition so a fix to the probe/rank shape cannot drift across
-    * the three opclasses. */
-  private def searchIndexByMetric(spark: org.apache.spark.sql.SparkSession, path: String,
-                                  model: Model, queries: DataFrame, k: Int, nprobe: Int,
-                                  idCol: String, embCol: String, queryIdCol: String,
-                                  scale: Int, distFn: (Column, Column) => Column): DataFrame = {
-    val probedCells = queries
-      .select(explode(cellsOf(col(embCol), model, nprobe)).as("cell"))
-      .distinct().collect().map(_.getInt(0).asInstanceOf[Any])
-    val corpus = spark.read.parquet(path).where(col("cell").isin(probedCells: _*))
-    val qSide = broadcast(queries.select(col(queryIdCol), col(embCol).as("__qemb")))
-    val scored = corpus.crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        round(distFn(col(embCol), col("__qemb")), scale).as("dist"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col(idCol))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("dist"), col("rn").cast("long").as("rn"))
-  }
-
-  /** Search a [[writeIndexCosine]] store: queries are normalized, cells
-    * probed by L2 (order-equivalent on the unit sphere), and the rerank
-    * reports COSINE DISTANCE (pgvector `<=>`), ascending, ties by id —
-    * output `(qid, id, dist, rn)` like [[searchIndex]]. */
-  def searchIndexCosine(spark: org.apache.spark.sql.SparkSession, path: String,
-                        queries: DataFrame, k: Int, nprobe: Int,
-                        idCol: String = "vec_id", embCol: String = "embedding",
-                        queryIdCol: String = "qid", scale: Int = 4): DataFrame = {
-    require(readMetric(spark, path) == "cosine",
-      s"searchIndexCosine: $path is not a cosine-metric index (write with writeIndexCosine)")
-    val model = readModel(spark, path)
-    val qn = queries.withColumn(embCol, VectorFunctions.l2Normalize(col(embCol)))
-    searchIndexByMetric(spark, path, model, qn, k, nprobe, idCol, embCol, queryIdCol,
-      scale, VectorFunctions.cosineDistance)
-  }
-
-  /** INNER-PRODUCT search over an L2-metric index — pgvector's
-    * `vector_ip_ops` analogue (`<#>` = negative inner product,
-    * ascending). Cells are probed by L2 to the query (the faiss
-    * IVF-with-METRIC_INNER_PRODUCT recipe: the coarse quantizer keeps
-    * its L2 geometry); the rerank scores -⟨corpus, q⟩. MIPS recall under
-    * L2 probing is the known weak spot of every IVF-IP index — a
-    * high-IP vector with a large norm can sit in a far cell — so the
-    * recall knob is `nprobe`, and full probe degenerates to the exact
-    * answer (spec-pinned). On a cosine store the vectors are normalized,
-    * where IP ordering equals cosine — use [[searchIndexCosine]]. */
-  def searchIndexIp(spark: org.apache.spark.sql.SparkSession, path: String,
-                    queries: DataFrame, k: Int, nprobe: Int,
-                    idCol: String = "vec_id", embCol: String = "embedding",
-                    queryIdCol: String = "qid", scale: Int = 4): DataFrame = {
-    require(readMetric(spark, path) == "l2",
-      s"searchIndexIp: $path is a cosine-metric (normalized) index — IP ordering " +
-        "equals cosine there; use searchIndexCosine")
-    val model = readModel(spark, path)
-    searchIndexByMetric(spark, path, model, queries, k, nprobe, idCol, embCol, queryIdCol,
-      scale, VectorFunctions.negInnerProduct)
-  }
-
-  /** L1 (Manhattan) search over an L2-metric index — pgvector 0.7's
-    * `vector_l1_ops` / `<+>` analogue. Cells are probed by L2 geometry
-    * (L1 and L2 balls are mutually bounded within √dim, so an L1 query's
-    * true neighbors live in nearby-L2 cells with high probability — the
-    * same probe-metric/rerank-metric split as [[searchIndexIp]]); the
-    * rerank scores exact Σ|xᵢ−qᵢ|. `nprobe` is the recall knob; full
-    * probe degenerates to exact L1 KNN (oracle-gated). A cosine store is
-    * refused: its vectors were L2-normalized at write, so L1 over the
-    * stored bytes would rank the NORMALIZED geometry while the caller
-    * asked about the raw one — silent wrong answers, not approximation. */
-  def searchIndexL1(spark: org.apache.spark.sql.SparkSession, path: String,
-                    queries: DataFrame, k: Int, nprobe: Int,
-                    idCol: String = "vec_id", embCol: String = "embedding",
-                    queryIdCol: String = "qid", scale: Int = 4): DataFrame = {
-    require(readMetric(spark, path) == "l2",
-      s"searchIndexL1: $path is a cosine-metric (normalized) index — L1 over " +
-        "normalized bytes answers a different question; build an L2 store for <+>")
-    val model = readModel(spark, path)
-    searchIndexByMetric(spark, path, model, queries, k, nprobe, idCol, embCol, queryIdCol,
-      scale, VectorFunctions.l1Distance)
-  }
-
-  /** Append new vectors to a quantized index: cells assigned under the
-    * existing centroids AND codes under the existing range — both read
-    * from the sidecars, so appended rows are scan-compatible with the
-    * original write. A value outside the trained [mn, mx] clamps to the
-    * edge code (the SQ8 contract); heavy drift is the same rebuild
-    * trigger as [[needsRebuild]]. Append-only, caller dedups ids — the
-    * [[appendIndex]] contract. */
-  def appendIndexQuantized(spark: org.apache.spark.sql.SparkSession, path: String,
-                           vectors: DataFrame,
-                           idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    recoverPending(spark, path, "appendIndexQuantized")
-    val model = readModel(spark, path)
-    val (mn, mx) = readQuantRange(spark, path)
-    vectors.select(col(idCol), col(embCol),
-        Quantize.quantizeExpr(col(embCol), mn, mx).as("qvec"),
-        cellOf(col(embCol), model).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
-  }
-
-  /** Persist an IVF-PQ index — faiss IVFPQ's on-disk shape: the
-    * cell-partitioned layout of [[writeIndex]] PLUS an m-int product-code
-    * column over per-cell RESIDUALS (`x − centroid(cell(x))`, see
-    * [[ProductQuantizer.residualExpr]]). Two sidecars ride along:
-    * `_centroids.json` (the coarse quantizer) and `_pq.json` (the
-    * codebooks), so a search job — or the `IvfScanRewriteRule` planner
-    * path — reconstructs both models without retraining. Train `pq` with
-    * [[ProductQuantizer.trainResidual]] against the SAME `model`. */
-  def writeIndexPq(corpus: DataFrame, model: Model, pq: ProductQuantizer.Model,
-                   path: String,
-                   idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    corpus
-      .select(col(idCol), col(embCol), cellOf(col(embCol), model).as("cell"))
-      .select(col(idCol), col(embCol), col("cell"),
-        ProductQuantizer.encodeExpr(
-          ProductQuantizer.residualExpr(col(embCol), col("cell"), model), pq).as("pq_codes"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    val json = model.centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    writeSidecar(corpus.sparkSession, path, "_centroids.json", json)
-    ProductQuantizer.writeModel(corpus.sparkSession, path, pq)
-  }
-
-  /** Search a [[writeIndexPq]] store: static `cell IN` partition pruning,
-    * then an ADC coarse pass reading only (id, pq_codes) — each probed
-    * row is scored by `m` table lookups against the per-(query, cell)
-    * RESIDUAL distance table (‖q−(c+recon)‖² = ‖(q−c)−recon‖², so the
-    * ADC decomposition identity carries over; tables are
-    * |queries|·nprobe·m·ksub doubles, driver-built, broadcast) — then a
-    * full-precision L2 rerank of the `k·overfetch` survivors. The
-    * candidate-id read carries the [[DedupIndex.searchIndex]] guard:
-    * static `id IN` pushdown up to `maxPushdownIds`, left-semi join
-    * fallback above it — correct at any query-frame cardinality. Output
-    * `(qid, id, dist, rn)` like [[searchIndexQuantized]]. */
-  def searchIndexPq(spark: org.apache.spark.sql.SparkSession, path: String,
-                    queries: DataFrame, k: Int, nprobe: Int, overfetch: Int = 4,
-                    idCol: String = "vec_id", embCol: String = "embedding",
-                    queryIdCol: String = "qid", scale: Int = 4,
-                    maxPushdownIds: Int = 100000): DataFrame = {
-    import spark.implicits._
-    val model = readModel(spark, path)
-    val pq = ProductQuantizer.readModel(spark, path)
-    // per-(query, cell) residual ADC tables — driver-local math on the
-    // sidecar models over the broadcast-small query batch
-    val qRows = queries
-      .select(col(queryIdCol).cast("long"), col(embCol).cast("array<double>"),
-        cellsOf(col(embCol), model, nprobe))
-      .collect()
-      .flatMap { r =>
-        val qid = r.getLong(0)
-        val q = r.getSeq[Double](1).toArray
-        r.getSeq[Int](2).map { cell =>
-          val ctr = model.centroids(cell)
-          val resid = Array.tabulate(q.length)(i => q(i) - ctr(i))
-          (qid, cell, ProductQuantizer.queryTable(resid, pq).toSeq)
-        }
-      }
-    val probedCells = qRows.map(_._2).distinct.map(_.asInstanceOf[Any])
-    val qTables = broadcast(qRows.toSeq.toDF(queryIdCol, "cell", "__qtab"))
-    // coarse: probed partitions only, (id, pq_codes) deserialized — the
-    // float column is never read here
-    val coarse = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
-      .select(col(idCol), col("cell"), col("pq_codes"))
-      .join(qTables, Seq("cell"))
-      .select(col(queryIdCol), col(idCol),
-        ProductQuantizer.adcScoreExpr(col("pq_codes"), col("__qtab"), pq.ksub).as("__adc"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("__adc"), col(idCol))
-    val candFrame = coarse.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k * overfetch)
-      .select(col(idCol)).distinct()
-      .localCheckpoint(true)
-    val probe = candFrame.limit(maxPushdownIds + 1).collect()
-    val rerankBase = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells: _*))
-    val rerankDocs =
-      if (probe.length <= maxPushdownIds)
-        rerankBase.where(col(idCol).isin(probe.map(_.getLong(0)).toSeq: _*))
-      else rerankBase.join(candFrame, Seq(idCol), "left_semi")
-    val qSide = broadcast(queries.select(col(queryIdCol), col(embCol).as("__qemb")))
-    val rerank = rerankDocs
-      .select(col(idCol), col(embCol))
-      .crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        round(VectorFunctions.l2Distance(col(embCol), col("__qemb")), scale).as("dist"))
-    val w2 = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col(idCol))
-    rerank.withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("dist"), col("rn").cast("long").as("rn"))
-  }
-
-  /** Append new vectors to an IVF-PQ index: cells assigned under the
-    * existing centroids AND residual codes under the existing codebooks —
-    * both read from the sidecars, so appended rows are scan-compatible
-    * with the original write (the [[appendIndexQuantized]] contract:
-    * append-only, caller dedups ids, heavy drift is a [[needsRebuild]]
-    * rebuild trigger — retrain BOTH models, the codebooks quantize
-    * residuals of the centroids they were trained against). */
-  def appendIndexPq(spark: org.apache.spark.sql.SparkSession, path: String,
-                    vectors: DataFrame,
-                    idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    recoverPending(spark, path, "appendIndexPq")
-    val model = readModel(spark, path)
-    val pq = ProductQuantizer.readModel(spark, path)
-    vectors
-      .select(col(idCol), col(embCol), cellOf(col(embCol), model).as("cell"))
-      .select(col(idCol), col(embCol), col("cell"),
-        ProductQuantizer.encodeExpr(
-          ProductQuantizer.residualExpr(col(embCol), col("cell"), model), pq).as("pq_codes"))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
-  }
-
-  private def writeSidecar(spark: org.apache.spark.sql.SparkSession, path: String,
+  private def writeSidecar(spark: SparkSession, path: String,
                            name: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, name)
+    val p = new Path(path, name)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
-  private def readSidecar(spark: org.apache.spark.sql.SparkSession, path: String,
-                          name: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path, name)
+  private def readSidecar(spark: SparkSession, path: String, name: String): String = {
+    val p = new Path(path, name)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
     try new String(in.readAllBytes(), "UTF-8") finally in.close()

@@ -139,16 +139,22 @@ object ProductQuantizer {
     * a search job on another cluster reads the model back without
     * retraining. */
   def writeModel(spark: org.apache.spark.sql.SparkSession, path: String, model: Model): Unit = {
-    val json = model.codebooks.map(_.map(_.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")).mkString("[", ",", "]")
-    val p = new org.apache.hadoop.fs.Path(path, "_pq.json")
+    val p = new org.apache.hadoop.fs.Path(path, SidecarName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    try out.write(json(model).getBytes("UTF-8")) finally out.close()
   }
 
+  /** The codebook sidecar's file name. */
+  val SidecarName = "_pq.json"
+
+  /** The sidecar content: nested m×ksub×dsub arrays. */
+  def json(model: Model): String =
+    model.codebooks.map(_.map(_.mkString("[", ",", "]"))
+      .mkString("[", ",", "]")).mkString("[", ",", "]")
+
   def readModel(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
-    val p = new org.apache.hadoop.fs.Path(path, "_pq.json")
+    val p = new org.apache.hadoop.fs.Path(path, SidecarName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
     val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
@@ -171,6 +177,17 @@ object ProductQuantizer {
     zip_with(emb.cast("array<double>"), element_at(ctrs, cell + 1), (x, c) => x - c)
   }
 
+  /** The per-(query, cell) residual ADC table as a column:
+    * `queryTable(q − centroid(cell))`. Evaluated on the small query side
+    * (once per query and probed cell), never per corpus row. */
+  def residualTableExpr(q: Column, cell: Column, ivf: IvfIndex.Model, pq: Model): Column = {
+    val table = udf { (v: Seq[Double], c: Int) =>
+      val ctr = ivf.centroids(c)
+      queryTable(Array.tabulate(v.length)(i => v(i) - ctr(i)), pq).toSeq
+    }
+    table(q.cast("array<double>"), cell)
+  }
+
   /** Train PQ codebooks on IVF residuals (faiss IVFPQ's training step):
     * assign the sample to cells, subtract centroids, train on what's
     * left. */
@@ -189,7 +206,8 @@ object ProductQuantizer {
     * residual space); rerank the `k·overfetch` survivors at full
     * precision. `codes` carries (idCol, cell, codeCol) — the persisted
     * IVFPQ layout; query-side tables are |queries|·nprobe·m·ksub doubles,
-    * driver-built and broadcast (queries broadcast-small by contract).
+    * built on the query side ([[residualTableExpr]]) and broadcast
+    * (queries broadcast-small by contract).
     * The corpus-side coarse pass is a hash join on the integer cell id +
     * m table lookups per row — no float math, no broadcast of either
     * corpus side. */
@@ -198,23 +216,11 @@ object ProductQuantizer {
               idCol: String = "vec_id", codeCol: String = "pq_codes",
               embCol: String = "embedding", queryIdCol: String = "qid",
               scale: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val qRows = queries
-      .select(col(queryIdCol).cast("long"),
-        col(embCol).cast("array<double>"),
-        IvfIndex.cellsOf(col(embCol), ivf, nprobe))
-      .collect()
-      .flatMap { r =>
-        val qid = r.getLong(0)
-        val q = r.getSeq[Double](1).toArray
-        r.getSeq[Int](2).map { cell =>
-          val ctr = ivf.centroids(cell)
-          val resid = Array.tabulate(q.length)(i => q(i) - ctr(i))
-          (qid, cell, queryTable(resid, pq).toSeq)
-        }
-      }
-    val qTables = broadcast(qRows.toSeq.toDF(queryIdCol, "cell", "__qtab"))
+    val qTables = broadcast(queries
+      .select(col(queryIdCol).cast("long").as(queryIdCol), col(embCol),
+        explode(IvfIndex.cellsOf(col(embCol), ivf, nprobe)).as("cell"))
+      .select(col(queryIdCol), col("cell"),
+        residualTableExpr(col(embCol), col("cell"), ivf, pq).as("__qtab")))
     val scored = codes.select(col(idCol), col("cell"), col(codeCol))
       .join(qTables, Seq("cell"))
       .select(col(queryIdCol), col(idCol),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.operators.{IvfIndex, ProductQuantizer, Quantize, SparseKnn}
+import graft.operators.IvfIndex.Codec
 
 /** The runnable side of [[GraftSqlParser]]'s grammar: each statement
   * lowers onto the EXISTING library maintenance calls — one
@@ -28,7 +29,9 @@ case class GraftIndexCommand(verb: String, sparse: Boolean, kind: String,
     val msg = (verb, sparse) match {
       case ("CREATE", false) => createVector(spark)
       case ("CREATE", true) => createSparse(spark)
-      case ("APPEND", false) => appendVector(spark)
+      case ("APPEND", false) =>
+        IvfIndex.appendIndex(spark, path.get, spark.table(source.get))
+        s"appended into ${path.get}"
       case ("APPEND", true) =>
         SparseKnn.appendIndex(spark, sparseVectors(spark), table.get)
         s"appended into sparse index ${table.get}"
@@ -137,62 +140,35 @@ case class GraftIndexCommand(verb: String, sparse: Boolean, kind: String,
     s"created sparse index ${table.get} at ${path.get}"
   }
 
-  private def appendVector(spark: SparkSession): String = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path.get)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vectors = spark.table(source.get)
-    // family-aware: the append must write the store's own schema
-    if (fs.exists(new Path(root, "_matryoshka.json")))
-      IvfIndex.appendIndexSub(spark, path.get, vectors)
-    else if (fs.exists(new Path(root, "_pq.json")))
-      IvfIndex.appendIndexPq(spark, path.get, vectors)
-    else if (fs.exists(new Path(root, "_quantize.json")))
-      IvfIndex.appendIndexQuantized(spark, path.get, vectors)
-    else if (fs.exists(new Path(root, "_half.json")))
-      IvfIndex.appendIndexHalf(spark, path.get, vectors)
-    else if (fs.exists(new Path(root, "_binary.json")) ||
-        IvfIndex.readMetric(spark, path.get) == "cosine")
-      throw new IllegalArgumentException(
-        s"APPEND GRAFT INDEX: ${path.get} is a binary/cosine store — use UPSERT " +
-          "(family-aware) or rebuild; plain append would write schema-incompatible rows")
-    else { IvfIndex.appendIndex(spark, path.get, vectors); () }
-    s"appended into ${path.get}"
-  }
-
   private def createVector(spark: SparkSession): String = {
     val corpus = spark.table(source.get)
     val k = intOpt("k", 16)
     val iters = intOpt("iters", 2)
-    kind match {
-      case "IVF" =>
-        IvfIndex.writeIndex(corpus, IvfIndex.train(corpus, k, iters), path.get)
+    def trained = IvfIndex.train(corpus, k, iters)
+    val (model, codec, metric) = kind match {
+      case "IVF" => (trained, Codec.Flat, "l2")
       case "IVF_SQ" =>
         val (mn, mx) = (options.get("mn"), options.get("mx")) match {
           case (Some(a), Some(b)) => (a.toDouble, b.toDouble)
           case _ => Quantize.scalarRange(corpus)
         }
-        IvfIndex.writeIndexQuantized(corpus, IvfIndex.train(corpus, k, iters),
-          path.get, mn, mx)
+        (trained, Codec.Sq8(mn, mx), "l2")
       case "IVF_PQ" =>
-        val model = IvfIndex.train(corpus, k, iters)
-        val pq = ProductQuantizer.trainResidual(corpus, model,
-          m = intOpt("m", 8), ksub = intOpt("ksub", 16))
-        IvfIndex.writeIndexPq(corpus, model, pq, path.get)
-      case "IVF_BINARY" =>
-        IvfIndex.writeIndexBinary(corpus, IvfIndex.train(corpus, k, iters), path.get)
+        val model = trained
+        (model, Codec.Pq(ProductQuantizer.trainResidual(corpus, model,
+          m = intOpt("m", 8), ksub = intOpt("ksub", 16))), "l2")
+      case "IVF_BINARY" => (trained, Codec.Binary, "l2")
       case "IVF_COSINE" =>
         val normalized = corpus.withColumn("embedding",
           graft.functions.VectorFunctions.l2Normalize(col("embedding")))
-        IvfIndex.writeIndexCosine(corpus, IvfIndex.train(normalized, k, iters), path.get)
-      case "HALFVEC" =>
-        IvfIndex.writeIndexHalf(corpus, IvfIndex.train(corpus, k, iters), path.get)
+        (IvfIndex.train(normalized, k, iters), Codec.Flat, "cosine")
+      case "HALFVEC" => (trained, Codec.Half, "l2")
       case "MATRYOSHKA" =>
         val subDim = intOpt("subdim", 16)
-        IvfIndex.writeIndexSub(corpus,
-          IvfIndex.trainSub(corpus, subDim, k, iters), path.get, subDim)
+        (IvfIndex.trainSub(corpus, subDim, k, iters), Codec.Prefix(subDim), "l2")
       case other => throw new IllegalArgumentException(s"unknown index kind $other")
     }
+    IvfIndex.writeIndex(corpus, model, path.get, codec, metric)
     s"created $kind index at ${path.get}"
   }
 }

@@ -82,7 +82,7 @@ case class IvfIterativeFilteredScanExec(
       s"IvfIterativeFilteredScanExec: probe dim ${probeVec.length} != centroid dim " +
         s"${model.centroids.headOption.map(_.length)} at $path")
     def probe(cur: Int): DataFrame =
-      IvfIterativeScan.probePlan(spark, path, model.centroids, probeVec, pred, cur)
+      IvfIterativeScan.probePlan(spark, path, model, probeVec, pred, cur)
     var cur = math.max(1, math.min(nprobe, kc))
     var satisfied = false
     while (!satisfied && cur < kc) {
@@ -103,26 +103,11 @@ object IvfIterativeScan {
     * so the spec can assert the predicate reaches `PushedFilters` — the
     * [[graft.operators.IvfIndex.filteredProbePlan]] convention (the
     * executed outer plan only shows the leaf, with no scan to inspect). */
-  private[graft] def probePlan(spark: SparkSession, path: String,
-                               centroids: Array[Array[Double]], q: Array[Double],
-                               pred: Expression, cur: Int): DataFrame = {
-    val cells = nearestCells(centroids, q, cur).map(_.asInstanceOf[Any])
+  private[graft] def probePlan(spark: SparkSession, path: String, model: IvfIndex.Model,
+                               q: Array[Double], pred: Expression, cur: Int): DataFrame =
     spark.read.parquet(path)
-      .where(col("cell").isin(cells: _*))
+      .where(col("cell").isin(model.nearestCells(q, cur): _*))
       .where(PlanRebind.byName(pred))
-  }
-
-  /** The `nprobe` nearest centroid cells to the query — driver-local math
-    * on the sidecar matrix, ties to the lower cell id (the same ranking
-    * [[IvfScanRewriteRule]] and the library search paths use, so the
-    * escalation sequence is deterministic). */
-  private[plans] def nearestCells(centroids: Array[Array[Double]],
-                                  q: Array[Double], nprobe: Int): Seq[Int] =
-    centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0; var j = 0
-      while (j < q.length) { val x = q(j) - c(j); d += x * x; j += 1 }
-      (d, i)
-    }.sortBy(identity).take(math.max(1, nprobe)).map(_._2).toSeq
 }
 
 /** Plans [[IvfIterativeFilteredScan]] — registered by

@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftSemi
@@ -9,11 +7,10 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{col, typedlit}
 import org.apache.spark.sql.types._
 
-import graft.functions.{VecCosine, VecDot, VecL1, VecL2Sq, VectorExpressions}
-import graft.operators.{IvfIndex, ProductQuantizer}
+import graft.functions.{VecCosine, VecDot, VecL1, VecL2Sq}
+import graft.operators.IvfIndex
 
 /** Optimizer rule: `ORDER BY vec_l2(embedding, <literal vector>) LIMIT k`
   * over a persisted IVF store becomes the index plan automatically —
@@ -22,11 +19,13 @@ import graft.operators.{IvfIndex, ProductQuantizer}
   * SQL user gets the coarse+rerank pipeline without calling
   * [[IvfIndex.searchIndex]] by hand.
   *
-  * Matched shape (after analysis): `Limit(k, Sort(vec_l2|vec_l2sq(emb,
-  * lit) ASC [, tiebreaks], relation-subtree))`, where `emb` is a column
-  * of exactly one parquet `LogicalRelation` whose root path carries the
-  * `_centroids.json` sidecar written by [[IvfIndex.writeIndex]] /
-  * `writeIndexQuantized`.
+  * Matched shape (after analysis): `Limit(k, Sort(dist(emb, lit) ASC
+  * [, tiebreaks], relation-subtree))` with `dist` one of pgvector's
+  * opclasses (`vec_l2`/`vec_l2sq`, `vec_cosine_dist`, `vec_ip`,
+  * `vec_l1`), where `emb` is a column of exactly one parquet
+  * `LogicalRelation` whose root path is a store written by
+  * [[IvfIndex.writeIndex]] — its codec and metric come from
+  * [[IvfIndex.readStore]], and the store must serve the sort's metric.
   *
   * Rewrite, in plan space (no jobs run at optimization time — probed
   * cells come from driver-local math on the sidecar centroids):
@@ -34,13 +33,13 @@ import graft.operators.{IvfIndex, ProductQuantizer}
   *  1. `Filter(cell IN probedCells)` planted directly above the store
   *     relation — the physical scan turns it into PartitionFilters
   *     (file-listing pruning, the inverted-file read).
-  *  2. If the store is quantized (`_quantize.json` + `qvec` column): a
-  *     LEFT SEMI join against a coarse top-`k·overfetch` subplan that
-  *     scores probed cells in the INTEGER code domain reading only
-  *     (id, qvec) — the 4×-fewer-bytes coarse pass. The user's own
-  *     Sort/Limit over the surviving candidates IS the full-precision
-  *     rerank, so results keep the user's exact-L2 semantics over the
-  *     probed cells.
+  *  2. If the store's codec has a coarse column and the sort ranks by
+  *     the store's own metric: a LEFT SEMI join against the codec's
+  *     coarse top-`k·overfetch` subplan ([[IvfIndex.coarseCandidates]],
+  *     the library search's coarse pass over the literal query), which
+  *     reads only (id, codec column). The user's own Sort/Limit over the
+  *     surviving candidates IS the full-precision rerank, so results keep
+  *     the user's exact semantics over the probed cells.
   *
   * Approximation contract: identical to pgvector's IVF index — results
   * are exact within the probed cells; recall vs a full scan is governed
@@ -49,31 +48,12 @@ import graft.operators.{IvfIndex, ProductQuantizer}
   * spec-pinned in IvfRewriteSpec.
   *
   * Session confs: `spark.graft.ann.rewrite` (default true),
-  * `spark.graft.ann.nprobe` (8), `spark.graft.ann.overfetch` (4),
-  * `spark.graft.ann.idCol` (vec_id), `spark.graft.ann.maxK` (10000 —
-  * a larger LIMIT is analytics, not a serve lookup; left alone).
+  * `spark.graft.ann.nprobe` (8), `spark.graft.ann.overfetch` (the
+  * codec's default), `spark.graft.ann.idCol` (vec_id),
+  * `spark.graft.ann.maxK` (10000 — a larger LIMIT is analytics, not a
+  * serve lookup; left alone).
   */
 object IvfScanRewriteRule extends Rule[LogicalPlan] with RewriteSupport {
-
-  /** Sidecar bundle of one store path. `quant` = SQ8 range, `pq` = product
-    * codebooks — a store carries at most one of the two in practice, and
-    * the PQ coarse stage wins when both are present (fewer bytes, residual
-    * precision). */
-  private final case class Sidecars(model: IvfIndex.Model,
-                                    quant: Option[(Double, Double)],
-                                    pq: Option[ProductQuantizer.Model],
-                                    metric: String,
-                                    subDim: Option[Int],
-                                    halfPacked: Boolean)
-
-  /** Sidecars per store path — immutable per write; a rebuild writes new
-    * sidecars and should be re-read, so the cache keys on (path,
-    * centroids-file length+mtime fingerprint). */
-  // keyed by PATH with the freshness stamp stored beside the value:
-  // a stamp-keyed map never evicts, so every index rebuild would leak
-  // the previous centroid/PQ models in driver memory for the session
-  private val cache = TrieMap.empty[String, (String, Sidecars)]
-
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf("spark.graft.ann.rewrite", "true") != "true") return plan
@@ -122,26 +102,25 @@ object IvfScanRewriteRule extends Rule[LogicalPlan] with RewriteSupport {
         at.name == "cell" && at.dataType == IntegerType)
       if !alreadyRewritten(child)
       path = fsRelation.location.rootPaths.head.toString
-      Sidecars(model, quantRange, pqModel, storeMetric, subDim, halfPacked) <-
-        loadSidecars(relation, path)
+      store <- IvfIndex.plannedStore(SparkSession.active, path)
       // a cosine sort only prunes soundly on a cosine (normalized) store
-      // and vice versa; an IP sort probes an L2 store's cells (the faiss
-      // IVF-IP recipe — recall governed by nprobe, like pgvector
-      // vector_ip_ops). Other mixes fall through to the exact scan.
-      if storeMetric == metric ||
-        ((metric == "ip" || metric == "l1") && storeMetric == "l2")
+      // and vice versa; an IP/L1 sort probes an L2 store's cells (the
+      // faiss IVF-IP recipe — recall governed by nprobe, like pgvector
+      // vector_ip_ops); prefix cells only order L2. Other mixes fall
+      // through to the exact scan.
+      if store.serves(metric)
       // cosine probing runs on the normalized query (cells live on the
       // unit sphere; cosine itself is scale-invariant so the user's
       // rerank semantics are untouched)
-      qvec = if (metric == "cosine") normalize(rawQvec) else rawQvec
-      // Matryoshka stores (_matryoshka.json) cluster in the PREFIX
-      // space: cells are probed with the query's first subDim dims and
-      // the coarse stage scores the stored `sub` column. Prefix
-      // geometry only orders L2 soundly, so other metrics fall through
-      // to the exact scan.
-      if subDim.forall(_ => metric == "l2")
+      qvec = if (store.metric == "cosine") normalize(rawQvec) else rawQvec
+      // Matryoshka stores cluster in the PREFIX space: cells are probed
+      // with the query's first subDim dims
+      subDim = store.codec match {
+        case IvfIndex.Codec.Prefix(d) => Some(d)
+        case _ => None
+      }
       probeVec = subDim.map(d => qvec.take(d)).getOrElse(qvec)
-      if model.centroids.nonEmpty && model.centroids.head.length == probeVec.length
+      if store.model.centroids.nonEmpty && store.model.centroids.head.length == probeVec.length
     } yield {
       val idCol = conf("spark.graft.ann.idCol", "vec_id")
       val idAttrOpt = relation.output.find(_.name == idCol)
@@ -198,8 +177,8 @@ object IvfScanRewriteRule extends Rule[LogicalPlan] with RewriteSupport {
           // contract exists to close)
           None
         case None =>
-          Some(rewriteFixedProbe(child, relation, cellAttr, distExpr, metric,
-            probeVec, k, path, model, quantRange, pqModel, subDim, halfPacked, projList))
+          Some(rewriteFixedProbe(child, relation, cellAttr, metric, qvec, probeVec, k,
+            path, store, projList))
       }
     }
   }.flatten
@@ -207,119 +186,34 @@ object IvfScanRewriteRule extends Rule[LogicalPlan] with RewriteSupport {
   // (cellAttr typed Attribute: the relation lookup returns the narrower
   // AttributeReference, but only equality and In() construction use it)
 
-  /** The pre-0.8 fixed-probe index plan: static cell pruning + optional
-    * quantized/prefix coarse semi-join (exact within the probed cells).
-    * `qvec` is the PROBE vector — the full query for ordinary stores,
-    * its first-subDim prefix for Matryoshka stores (whose SQ/PQ
-    * sidecars are absent by construction, so the full-dim coarse
-    * stages never see a truncated vector). */
+  /** The pre-0.8 fixed-probe index plan: static cell pruning + the
+    * codec's coarse semi-join when the sort ranks by the store's own
+    * metric (exact within the probed cells). `qvec` is the query in the
+    * store's metric space, `probeVec` its projection cells are probed on
+    * (the first subDim dims on prefix stores). */
   private def rewriteFixedProbe(child: LogicalPlan, relation: LogicalRelation,
-      cellAttr: Attribute, distExpr: Expression, metric: String, qvec: Array[Double],
-      k: Int, path: String, model: IvfIndex.Model,
-      quantRange: Option[(Double, Double)], pqModel: Option[ProductQuantizer.Model],
-      subDim: Option[Int], halfPacked: Boolean, projList: Seq[Attribute]): LogicalPlan = {
-      val nprobe = conf("spark.graft.ann.nprobe", "8").toInt
-      val overfetch = conf("spark.graft.ann.overfetch", "4").toInt
-      val cells = probedCells(model, qvec, nprobe)
-      val idCol = conf("spark.graft.ann.idCol", "vec_id")
-      val idAttrOpt = relation.output.find(_.name == idCol)
-      val pruned = Project(projList,
-        Filter(In(cellAttr, cells.map(Literal(_))), relation))
-      // coarse stages order candidates by (approximate) L2 only — they
-      // would mis-rank cosine/IP candidates, so those metrics get cell
-      // pruning without a coarse semi-join. PQ/ADC beats SQ8 when both
-      // sidecars exist: m table lookups per row over an m-byte column
-      // instead of dim integer subtractions over a dim-byte column.
-      val pqCoarse = for {
-        pqm <- pqModel
-        idAttr <- idAttrOpt
-        if metric == "l2" && pqm.dim == qvec.length &&
-          relation.output.exists(_.name == "pq_codes")
-      } yield {
-        val right = coarsePlanPq(path, qvec, model, pqm, cells, k * overfetch, idCol)
-        Join(pruned, right, LeftSemi,
-          Some(EqualTo(idAttr, right.output.head)), JoinHint.NONE)
-      }
-      val sqCoarse = for {
-        (mn, mx) <- quantRange
-        idAttr <- idAttrOpt
-        if metric == "l2" && relation.output.exists(_.name == "qvec")
-      } yield {
-        val right = coarsePlan(path, qvec, mn, mx, cells, k * overfetch, idCol)
-        Join(pruned, right, LeftSemi,
-          Some(EqualTo(idAttr, right.output.head)), JoinHint.NONE)
-      }
-      // Matryoshka coarse: prefix-space L2 over the stored `sub` column —
-      // the scan reads (id, sub) only (subDim/dim of the vector bytes);
-      // the user's Sort/Limit above reranks survivors at full precision
-      val subCoarse = for {
-        _ <- subDim
-        idAttr <- idAttrOpt
-        if metric == "l2" && relation.output.exists(_.name == "sub")
-      } yield {
-        val right = coarsePlanSub(path, qvec, cells, k * overfetch, idCol)
-        Join(pruned, right, LeftSemi,
-          Some(EqualTo(idAttr, right.output.head)), JoinHint.NONE)
-      }
-      // halfvec coarse: binary16-domain L2 over the packed hvec column —
-      // the scan reads (id, hvec) only, half the float column's bytes
-      val halfCoarse = for {
-        idAttr <- idAttrOpt
-        if halfPacked && metric == "l2" && relation.output.exists(_.name == "hvec")
-      } yield {
-        val right = coarsePlanHalf(path, qvec, cells, k * overfetch, idCol)
-        Join(pruned, right, LeftSemi,
-          Some(EqualTo(idAttr, right.output.head)), JoinHint.NONE)
-      }
-      val sub: LogicalPlan =
-        pqCoarse.orElse(sqCoarse).orElse(halfCoarse).orElse(subCoarse).getOrElse(pruned)
-      child.transformUp { case r: LogicalRelation if r eq relation => sub }
+      cellAttr: Attribute, metric: String, qvec: Array[Double], probeVec: Array[Double],
+      k: Int, path: String, store: IvfIndex.Store, projList: Seq[Attribute]): LogicalPlan = {
+    val nprobe = conf("spark.graft.ann.nprobe", "8").toInt
+    val cells = store.model.nearestCells(probeVec, nprobe)
+    val idCol = conf("spark.graft.ann.idCol", "vec_id")
+    val pruned = Project(projList,
+      Filter(In(cellAttr, cells.map(Literal(_))), relation))
+    // a coarse stage ranks by (an approximation of) the store's metric —
+    // it would mis-rank IP/L1 candidates, so those get cell pruning alone
+    val coarse = for {
+      c <- Some(store.codec).collect { case c: IvfIndex.Coarse => c }
+      idAttr <- relation.output.find(_.name == idCol)
+      if metric == store.metric && relation.output.exists(_.name == c.column)
+    } yield {
+      val overfetch = conf("spark.graft.ann.overfetch", c.overfetch.toString).toInt
+      val right = IvfIndex.coarseCandidates(SparkSession.active, path, store, c, qvec,
+        cells, nprobe, k * overfetch, idCol).queryExecution.optimizedPlan
+      Join(pruned, right, LeftSemi,
+        Some(EqualTo(idAttr, right.output.head)), JoinHint.NONE)
+    }
+    child.transformUp { case r: LogicalRelation if r eq relation => coarse.getOrElse(pruned) }
   }
-
-  /** Binary16-domain coarse candidate subplan for halfvec stores:
-    * probed cells scored by L2 between the unpacked hvec codes and the
-    * query ROUNDED to binary16 (the searchIndexHalf semantics — both
-    * sides half, so coarse order is the true order of the rounded
-    * vectors), reading (id, hvec) only. */
-  private def coarsePlanHalf(path: String, qvec: Array[Double], cells: Seq[Int],
-      n: Int, idCol: String): LogicalPlan = {
-    val spark = SparkSession.active
-    val qhalf = qvec.map(v =>
-      graft.functions.HalfFloat.fromHalf(
-        graft.functions.HalfFloat.toHalf(v.toFloat)).toDouble)
-    val coarse = spark.read.parquet(path)
-      .where(col("cell").isin(cells: _*))
-      .select(col(idCol),
-        VectorExpressions.vecL2Sq(
-          graft.functions.HalfExpressions.halfUnpack(col("hvec")).cast("array<double>"),
-          typedlit(qhalf.toSeq)).as("__qdist"))
-      .orderBy(col("__qdist"), col(idCol))
-      .limit(n)
-      .select(col(idCol))
-    coarse.queryExecution.analyzed
-  }
-
-  /** Prefix-space coarse candidate subplan for Matryoshka stores:
-    * probed cells scored by L2 in the first-subDim dims reading only
-    * (id, sub) — [[coarsePlan]]'s shape with the byte cut from column
-    * pruning instead of integer codes. `qsub` is already truncated. */
-  private def coarsePlanSub(path: String, qsub: Array[Double], cells: Seq[Int],
-      n: Int, idCol: String): LogicalPlan = {
-    val spark = SparkSession.active
-    val store = spark.read.parquet(path)
-    val coarse = store
-      .where(col("cell").isin(cells: _*))
-      .select(col(idCol),
-        VectorExpressions.vecL2Sq(col("sub"), typedlit(qsub.toSeq)).as("__qdist"))
-      .orderBy(col("__qdist"), col(idCol))
-      .limit(n)
-      .select(col(idCol))
-    coarse.queryExecution.analyzed
-  }
-
-  /** Follow an attribute through Project aliases down to the expression
-    * that defines it (the `SELECT vec_l2(...) AS dist ... ORDER BY dist`
-    * shape); non-attributes pass through. */
 
   /** Split vec_l2's arguments into (embedding attribute, literal query
     * vector as doubles); either argument order. */
@@ -341,7 +235,6 @@ object IvfScanRewriteRule extends Rule[LogicalPlan] with RewriteSupport {
     case _ => None
   }
 
-
   /** Idempotence: the subtree already carries a cell-membership filter
     * (ours from a previous fixed-point iteration — or the user's own, in
     * which case rewriting would double-prune). */
@@ -355,104 +248,10 @@ object IvfScanRewriteRule extends Rule[LogicalPlan] with RewriteSupport {
     case _ => false
   }
 
-  private def loadSidecars(relation: LogicalRelation, path: String): Option[Sidecars] = {
-    val spark = SparkSession.active
-    val p = new org.apache.hadoop.fs.Path(path, "_centroids.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val stamp = { val s = fs.getFileStatus(p); s"${s.getLen}:${s.getModificationTime}" }
-    cache.get(path) match {
-      case Some((st, v)) if st == stamp => Some(v)
-      case _ =>
-        val model = IvfIndex.readModel(spark, path)
-        val range =
-          if (fs.exists(new org.apache.hadoop.fs.Path(path, "_quantize.json")))
-            Some(IvfIndex.readQuantRange(spark, path))
-          else None
-        val pq =
-          if (fs.exists(new org.apache.hadoop.fs.Path(path, "_pq.json")))
-            Some(ProductQuantizer.readModel(spark, path))
-          else None
-        val subDim =
-          if (fs.exists(new org.apache.hadoop.fs.Path(path, "_matryoshka.json")))
-            Some(IvfIndex.readSubDim(spark, path))
-          else None
-        // only the packed2 layout is plannable; an unversioned half
-        // store falls through to the flat path (correct, float-column).
-        // ONE version check, shared with the maintenance paths — a
-        // looser duplicate here could plan coarse scans over layouts
-        // the rest of the engine refuses
-        val halfPacked =
-          fs.exists(new org.apache.hadoop.fs.Path(path, "_half.json")) &&
-            IvfIndex.isPackedHalf(spark, path)
-        val v = Sidecars(model, range, pq, IvfIndex.readMetric(spark, path), subDim,
-          halfPacked)
-        cache.put(path, (stamp, v))
-        Some(v)
-    }
-  }
-
   private def normalize(v: Array[Double]): Array[Double] = {
     var s = 0.0; var i = 0
     while (i < v.length) { s += v(i) * v(i); i += 1 }
     val n = math.sqrt(s)
     if (n == 0.0) v else v.map(_ / n)
-  }
-
-  /** nprobe nearest centroid cells to the query — driver-local math on
-    * the (k × dim) sidecar matrix, ties to the lower cell id. */
-  private def probedCells(model: IvfIndex.Model, q: Array[Double], nprobe: Int): Seq[Int] =
-    model.centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0; var j = 0
-      while (j < q.length) { val x = q(j) - c(j); d += x * x; j += 1 }
-      (d, i)
-    }.sortBy(identity).take(math.max(1, nprobe)).map(_._2).toSeq
-
-  /** Coarse candidate subplan: probed cells scored in the integer code
-    * domain, reading only (id, qvec) — built with the DataFrame API over
-    * a FRESH read of the store (fresh exprIds; it is the join's right
-    * side) and spliced in as its analyzed plan. Mirrors
-    * [[graft.operators.Quantize.quantizeExpr]]'s floor-then-clamp codes. */
-  private def coarsePlan(path: String, q: Array[Double], mn: Double, mx: Double,
-      cells: Seq[Int], n: Int, idCol: String): LogicalPlan = {
-    val spark = SparkSession.active
-    val qcodes: Seq[Long] = q.toSeq.map(x =>
-      math.min(255L, math.max(0L, math.floor((x - mn) / (mx - mn) * 256.0).toLong)))
-    val store = spark.read.parquet(path)
-    val coarse = store
-      .where(col("cell").isin(cells: _*))
-      .select(col(idCol),
-        VectorExpressions.vecCodeL2Sq(col("qvec"), typedlit(qcodes)).as("__qdist"))
-      .orderBy(col("__qdist"), col(idCol))
-      .limit(n)
-      .select(col(idCol))
-    coarse.queryExecution.analyzed
-  }
-
-  /** PQ/ADC coarse candidate subplan — the round-7 stage: per probed cell
-    * a RESIDUAL distance table (‖(q − centroid_cell) − recon‖² decomposes
-    * exactly like plain ADC) is computed driver-locally and planted as ONE
-    * map literal keyed by cell id (nprobe·m·ksub doubles — plan-space
-    * tiny); each corpus row is then scored by m `element_at` lookups over
-    * only (id, cell, pq_codes) — the float column is never deserialized
-    * on the coarse side. Mirrors [[IvfIndex.searchIndexPq]]'s scoring. */
-  private def coarsePlanPq(path: String, q: Array[Double], ivf: IvfIndex.Model,
-      pq: ProductQuantizer.Model, cells: Seq[Int], n: Int, idCol: String): LogicalPlan = {
-    val spark = SparkSession.active
-    val tables: Map[Int, Seq[Double]] = cells.map { cell =>
-      val ctr = ivf.centroids(cell)
-      val resid = Array.tabulate(q.length)(i => q(i) - ctr(i))
-      cell -> ProductQuantizer.queryTable(resid, pq).toSeq
-    }.toMap
-    val store = spark.read.parquet(path)
-    val tab = org.apache.spark.sql.functions.element_at(typedlit(tables), col("cell"))
-    val coarse = store
-      .where(col("cell").isin(cells: _*))
-      .select(col(idCol),
-        ProductQuantizer.adcScoreExpr(col("pq_codes"), tab, pq.ksub).as("__qdist"))
-      .orderBy(col("__qdist"), col(idCol))
-      .limit(n)
-      .select(col(idCol))
-    coarse.queryExecution.analyzed
   }
 }

@@ -4,50 +4,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.operators.{IvfIndex, Quantize}
+import graft.operators.IvfIndex
 
-/** Streaming ingest into a quantized IVF vector store — the serving-side
-  * loop that keeps an IVF-SQ index current as new embeddings arrive:
-  * each micro-batch is assigned to cells and encoded UNDER THE SIDECAR
-  * model/range (so appended rows are scan-compatible with the initial
-  * build), and written with dynamic partition overwrite keyed by
-  * `batch_id` — a replayed batch (restart after a crash between write
-  * and checkpoint commit) OVERWRITES its own partitions instead of
-  * duplicating vectors, the same exactly-once recipe as
-  * `DocStream.startIncrementalDedup`.
+/** Streaming ingest into an IVF vector store — the serving-side loop
+  * that keeps an index current as new embeddings arrive: each
+  * micro-batch is encoded in the store's codec and assigned to cells
+  * UNDER THE SIDECAR declaration ([[IvfIndex.readStore]] — centroids,
+  * SQ8 range, prefix length, PQ codebooks…), so appended rows are
+  * scan-compatible with the initial build, and written with dynamic
+  * partition overwrite keyed by `batch_id` — a replayed batch (restart
+  * after a crash between write and checkpoint commit) OVERWRITES its own
+  * partitions instead of duplicating vectors, the same exactly-once
+  * recipe as `DocStream.startIncrementalDedup`.
   *
   * Store layout: `batch_id=N/cell=C/` two-level partitions.
-  * `IvfIndex.searchIndexQuantized` works unchanged — partition discovery
-  * surfaces both columns, the static `cell IN` filter prunes at the cell
-  * level across every batch directory, and the projection drops
-  * `batch_id`. Centroid drift under a shifting distribution is the
-  * usual `needsRebuild` maintenance trigger. */
+  * `IvfIndex.searchIndex` works unchanged — partition discovery surfaces
+  * both columns, the static `cell IN` filter prunes at the cell level
+  * across every batch directory, and the projection drops `batch_id`.
+  * Centroid drift under a shifting distribution is the usual
+  * `needsRebuild` maintenance trigger. */
 object VectorStream {
 
   val inputSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
 
-  /** Create the store: sidecars + the existing corpus as `batch_id=-1`
-    * (same layout as streamed batches, so the directory scheme is
-    * uniform from the first file). `corpus` may be empty (cold start). */
-  def initQuantizedStore(corpus: DataFrame, model: IvfIndex.Model, path: String,
-                         mn: Double, mx: Double): Unit = {
-    writeBatch(corpus, model, path, mn, mx, batchId = -1L, overwriteAll = true)
-    val json = model.centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    writeSidecarVia(corpus.sparkSession, path, "_centroids.json", json)
-    writeSidecarVia(corpus.sparkSession, path, "_quantize.json", s"""{"mn":$mn,"mx":$mx}""")
+  /** Create the store: the existing corpus as `batch_id=-1` (same layout
+    * as streamed batches, so the directory scheme is uniform from the
+    * first file) + the sidecars declaring `codec`. `corpus` may be empty
+    * (cold start). */
+  def initStore(corpus: DataFrame, model: IvfIndex.Model, path: String,
+                codec: IvfIndex.Codec): Unit = {
+    val store = IvfIndex.Store(model, codec)
+    writeBatch(corpus, store, path, batchId = -1L, overwriteAll = true)
+    IvfIndex.writeSidecars(corpus.sparkSession, path, store)
   }
 
-  /** Shared (vec_id, embedding, derived…, cell) batch write — the
-    * batch_id/cell layout and the replay-idempotent dynamic partition
-    * overwrite live here once, for the same reason as
-    * [[startIngestStream]]. */
-  private def writeDerivedBatch(vecs: DataFrame,
-                                derived: Seq[org.apache.spark.sql.Column],
-                                path: String, batchId: Long,
-                                overwriteAll: Boolean): Unit = {
-    val w = vecs.select(Seq(col("vec_id"), col("embedding")) ++ derived: _*)
+  /** The batch_id/cell layout and the replay-idempotent dynamic
+    * partition overwrite, in one place for every ingest body here. */
+  private def writeBatch(vecs: DataFrame, store: IvfIndex.Store, path: String,
+                         batchId: Long, overwriteAll: Boolean = false): Unit = {
+    val w = IvfIndex.encode(vecs, store, "vec_id", "embedding")
       .withColumn("batch_id", lit(batchId))
       .repartition(col("cell"))
       .write.mode("overwrite")
@@ -56,20 +53,9 @@ object VectorStream {
       .parquet(path)
   }
 
-  private def writeBatch(vecs: DataFrame, model: IvfIndex.Model, path: String,
-                         mn: Double, mx: Double, batchId: Long,
-                         overwriteAll: Boolean = false): Unit =
-    writeDerivedBatch(vecs, Seq(
-      Quantize.quantizeExpr(col("embedding"), mn, mx).as("qvec"),
-      IvfIndex.cellOf(col("embedding"), model).as("cell")), path, batchId, overwriteAll)
-
   /** foreachBatch body — public so specs can drive replay directly. */
-  def quantizedIngestBatch(indexPath: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val model = IvfIndex.readModel(spark, indexPath)
-    val (mn, mx) = IvfIndex.readQuantRange(spark, indexPath)
-    writeBatch(batch, model, indexPath, mn, mx, batchId)
-  }
+  def ingestBatch(indexPath: String)(batch: DataFrame, batchId: Long): Unit =
+    writeBatch(batch, IvfIndex.readStore(batch.sparkSession, indexPath), indexPath, batchId)
 
   /** Shared file-source → foreachBatch → checkpointed-trigger scaffold
     * of every ingest stream here — one definition so a fix to the
@@ -82,55 +68,12 @@ object VectorStream {
     IngestScaffold.start(spark, inputDir, inputSchema, body, checkpointDir, availableNow)
 
   /** Start the ingest stream: new embedding files in `inputDir` append
-    * into the quantized store at `indexPath` (created by
-    * [[initQuantizedStore]]). Searches see each batch as soon as its
-    * write commits. */
-  def startQuantizedIngest(spark: SparkSession, inputDir: String, indexPath: String,
-                           checkpointDir: String,
-                           availableNow: Boolean = false): StreamingQuery =
-    startIngestStream(spark, inputDir, quantizedIngestBatch(indexPath) _,
-      checkpointDir, availableNow)
-
-  /** Create a streaming MATRYOSHKA store: the [[initQuantizedStore]]
-    * layout (batch_id=-1 corpus + sidecars) with the prefix `sub`
-    * column instead of integer codes — searches go through
-    * [[graft.operators.IvfIndex.searchIndexSub]] unchanged (cell is the
-    * second-level partition, so `cell IN` pruning survives the
-    * batch_id layer). `model` must be subDim-dimensional (trainSub). */
-  def initSubStore(corpus: DataFrame, model: IvfIndex.Model, path: String,
-                   subDim: Int): Unit = {
-    require(model.centroids.headOption.forall(_.length == subDim),
-      s"initSubStore: model dim ${model.centroids.headOption.map(_.length)} != subDim $subDim")
-    writeBatchSub(corpus, model, path, subDim, batchId = -1L, overwriteAll = true)
-    val json = model.centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    writeSidecarVia(corpus.sparkSession, path, "_centroids.json", json)
-    writeSidecarVia(corpus.sparkSession, path, "_matryoshka.json", s"""{"subDim":$subDim}""")
-  }
-
-  private def writeBatchSub(vecs: DataFrame, model: IvfIndex.Model, path: String,
-                            subDim: Int, batchId: Long,
-                            overwriteAll: Boolean = false): Unit = {
-    val sub = slice(col("embedding"), 1, subDim)
-    writeDerivedBatch(vecs, Seq(sub.as("sub"),
-      IvfIndex.cellOf(sub, model).as("cell")), path, batchId, overwriteAll)
-  }
-
-  /** foreachBatch body for Matryoshka ingest — replay-idempotent via the
-    * dynamic batch_id partition overwrite, like [[quantizedIngestBatch]]. */
-  def subIngestBatch(indexPath: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val model = IvfIndex.readModel(spark, indexPath)
-    val subDim = IvfIndex.readSubDim(spark, indexPath)
-    writeBatchSub(batch, model, indexPath, subDim, batchId)
-  }
-
-  /** Start the Matryoshka ingest stream: new embedding files in
-    * `inputDir` append into the sub store at `indexPath` (created by
-    * [[initSubStore]]). */
-  def startSubIngest(spark: SparkSession, inputDir: String, indexPath: String,
-                     checkpointDir: String,
-                     availableNow: Boolean = false): StreamingQuery =
-    startIngestStream(spark, inputDir, subIngestBatch(indexPath) _,
+    * into the store at `indexPath` (created by [[initStore]]). Searches
+    * see each batch as soon as its write commits. */
+  def startIngest(spark: SparkSession, inputDir: String, indexPath: String,
+                  checkpointDir: String,
+                  availableNow: Boolean = false): StreamingQuery =
+    startIngestStream(spark, inputDir, ingestBatch(indexPath) _,
       checkpointDir, availableNow)
 
   /** foreachBatch body for STREAMING SEMANTIC DEDUP — SemDeDup in the
@@ -157,8 +100,8 @@ object VectorStream {
                         (batch: DataFrame, batchId: Long): Unit = {
     import graft.functions.VectorFunctions
     val spark = batch.sparkSession
-    val model = IvfIndex.readModel(spark, indexPath)
-    val (mn, mx) = IvfIndex.readQuantRange(spark, indexPath)
+    val declared = IvfIndex.readStore(spark, indexPath)
+    val model = declared.model
     val b = graft.operators.Dedup.semanticDedup(batch, model, threshold, maxCell = maxCell)
     val store =
       try Some(spark.read.parquet(indexPath)
@@ -174,11 +117,11 @@ object VectorStream {
         .select(col("vec_id")).distinct()
       b.join(dups, Seq("vec_id"), "left_anti")
     }
-    writeBatch(survivors, model, indexPath, mn, mx, batchId)
+    writeBatch(survivors, declared, indexPath, batchId)
   }
 
   /** Start the semantic-dedup ingest stream over a store created by
-    * [[initQuantizedStore]]: new embedding files in `inputDir` →
+    * [[initStore]]: new embedding files in `inputDir` →
     * within-batch SemDeDup → cell-probed cosine check against the store
     * → novelties appended (searchable immediately, and the dedup corpus
     * for every later batch). */
@@ -187,12 +130,4 @@ object VectorStream {
                          nprobe: Int = 4, availableNow: Boolean = false): StreamingQuery =
     startIngestStream(spark, inputDir,
       semanticDedupBatch(indexPath, threshold, nprobe) _, checkpointDir, availableNow)
-
-  private def writeSidecarVia(spark: SparkSession, path: String, name: String,
-                              content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
 }

@@ -169,6 +169,25 @@ class ApproxOpsSpec extends SparkSpec {
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
     assert(withCodegen == interpreted)
+    // equidistant centroids rank the lower cell id first — in cellsOf
+    // (both paths) and in Model.nearestCells, which the planner's
+    // fixed-probe rewrite and its iterative leaf probe with
+    val ring = graft.operators.IvfIndex.Model(
+      Array(Array(0.0, 1.0), Array(1.0, 0.0), Array(0.0, -1.0), Array(-1.0, 0.0)))
+    val origin = spark.range(1).select(typedlit(Seq(0.0, 0.0)).as("embedding"))
+    def tied(): Seq[Int] = origin
+      .select(graft.operators.IvfIndex.cellsOf(col("embedding"), ring, 3))
+      .head().getSeq[Int](0)
+    val tiedCodegen = tied()
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val tiedInterpreted = try tied() finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+    assert(tiedCodegen == Seq(0, 1, 2) && tiedInterpreted == Seq(0, 1, 2),
+      s"codegen=$tiedCodegen interpreted=$tiedInterpreted")
+    assert(ring.nearestCells(Array(0.0, 0.0), 3) == Seq(0, 1, 2))
   }
 
   test("temperature sampling: alpha=1 is the natural mixture, alpha=0 equalizes, clamp at 1") {

@@ -16,7 +16,7 @@ class IvfHalfSpec extends SparkSpec {
     val path = Files.createTempDirectory("ivf_half").toString
     val e = emb()
     val model = IvfIndex.train(e, k = 8, iters = 2)
-    IvfIndex.writeIndexHalf(e, model, path)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Half)
     val store = spark.read.parquet(path)
     assert(store.columns.toSet == Set("vec_id", "embedding", "hvec", "cell"))
     // hvec is PACKED binary at exactly 2 bytes/dim (an array<short>
@@ -58,7 +58,7 @@ class IvfHalfSpec extends SparkSpec {
       s"coarse scan deserializes the float column: $schemas")
     // the RERANK side of the real search never reads hvec back
     val q = e.where(col("vec_id") < 3).select(col("vec_id").as("qid"), col("embedding"))
-    val rerankPlan = IvfIndex.searchIndexHalf(spark, path, q, k = 3, nprobe = 2)
+    val rerankPlan = IvfIndex.searchIndex(spark, path, q, k = 3, nprobe = 2, metric = "l2")
       .queryExecution.executedPlan.toString
     val rerankScans = "ReadSchema: [^\n]*".r.findAllIn(rerankPlan).toList
       .filter(_.contains("array"))
@@ -70,7 +70,7 @@ class IvfHalfSpec extends SparkSpec {
     val path = Files.createTempDirectory("ivf_half_rec").toString
     val e = emb()
     val model = IvfIndex.train(e, k = 8, iters = 2)
-    IvfIndex.writeIndexHalf(e, model, path)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Half)
     // binary16 round-trip: relative error <= 2^-11 holds only in fp16's
     // NORMAL range (|x| >= 2^-14); below it the format is subnormal with
     // FIXED spacing 2^-24, so tiny components get an absolute bound
@@ -95,7 +95,7 @@ class IvfHalfSpec extends SparkSpec {
     // recall@5 vs exact KNN at the default overfetch, full probe (so the
     // measured loss is the HALF CODES' doing, not cell pruning)
     val q = e.where(col("vec_id") < 20).select(col("vec_id").as("qid"), col("embedding"))
-    val got = IvfIndex.searchIndexHalf(spark, path, q, k = 5, nprobe = 8)
+    val got = IvfIndex.searchIndex(spark, path, q, k = 5, nprobe = 8, metric = "l2")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val want = Knn.topKBatch(e, q, Knn.L2, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -108,7 +108,7 @@ class IvfHalfSpec extends SparkSpec {
     val path = Files.createTempDirectory("ivf_half_rw").toString
     val e = emb()
     val model = IvfIndex.train(e, k = 8, iters = 2)
-    IvfIndex.writeIndexHalf(e, model, path)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Half)
     val qv = e.where(col("vec_id") === 7)
       .select(col("embedding")).head().getSeq[Double](0)
     spark.experimental.extraOptimizations =
@@ -149,7 +149,7 @@ class IvfHalfSpec extends SparkSpec {
     val path = Files.createTempDirectory("ivf_half_legacy").toString
     val e = emb()
     val model = IvfIndex.train(e, k = 4, iters = 1)
-    IvfIndex.writeIndexHalf(e, model, path)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Half)
     // fabricate the pre-packing sidecar (no format field): appending
     // binary hvec rows to an array<short> store would poison the parquet
     // schema AFTER the write — the guard must fire before any bytes move
@@ -158,39 +158,26 @@ class IvfHalfSpec extends SparkSpec {
     val out = fs.create(p, true); out.write("""{"bits":16}""".getBytes("UTF-8")); out.close()
     val q = e.where(col("vec_id") < 2).select(col("vec_id").as("qid"), col("embedding"))
     val e1 = intercept[IllegalArgumentException](
-      IvfIndex.appendIndexHalf(spark, path, e.limit(1)))
+      IvfIndex.appendIndex(spark, path, e.limit(1)))
     assert(e1.getMessage.contains("rebuild"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException](
-      IvfIndex.searchIndexHalf(spark, path, q, k = 1, nprobe = 1))
+      IvfIndex.searchIndex(spark, path, q, k = 1, nprobe = 1, metric = "l2"))
     assert(e2.getMessage.contains("rebuild"), e2.getMessage)
     val e3 = intercept[IllegalArgumentException](
       IvfIndex.upsertIndex(spark, path, e.limit(1)))
     assert(e3.getMessage.contains("rebuild"), e3.getMessage)
   }
 
-  test("appending to a NON-half store yields the clean family message, not a raw IO error") {
-    val path = Files.createTempDirectory("ivf_half_family").toString
-    val e = emb()
-    IvfIndex.writeIndex(e, IvfIndex.train(e, k = 4, iters = 1), path)
-    // a flat store has no _half.json: appendIndexHalf must refuse with
-    // the same family message searchIndexHalf produces (the existence
-    // check runs BEFORE the layout-version read that would otherwise
-    // surface a FileNotFoundException)
-    val err = intercept[IllegalArgumentException](
-      IvfIndex.appendIndexHalf(spark, path, e.limit(1)))
-    assert(err.getMessage.contains("not a halfvec index"), err.getMessage)
-  }
-
   test("exact degeneration, append, and upsert on the half store") {
     val path = Files.createTempDirectory("ivf_half_maint").toString
     val e = emb()
     val model = IvfIndex.train(e, k = 8, iters = 2)
-    IvfIndex.writeIndexHalf(e.where(col("vec_id") >= 10), model, path)
-    IvfIndex.appendIndexHalf(spark, path, e.where(col("vec_id") < 10))
+    IvfIndex.writeIndex(e.where(col("vec_id") >= 10), model, path, IvfIndex.Codec.Half)
+    IvfIndex.appendIndex(spark, path, e.where(col("vec_id") < 10))
     val n = e.count().toInt
     val q = e.where(col("vec_id") < 3).select(col("vec_id").as("qid"), col("embedding"))
     // full probe + covering overfetch == exact KNN, appended rows included
-    val got = IvfIndex.searchIndexHalf(spark, path, q, k = 5, nprobe = 8, overfetch = n)
+    val got = IvfIndex.searchIndex(spark, path, q, k = 5, nprobe = 8, metric = "l2", overfetch = n)
       .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(1))).toSet
     val want = Knn.topKBatch(e, q, Knn.L2, 5)
       .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(1))).toSet
@@ -200,9 +187,9 @@ class IvfHalfSpec extends SparkSpec {
       .select((col("vec_id") - 100L).as("vec_id"), col("embedding"))
     IvfIndex.upsertIndex(spark, path, donor)
     val post = e.where(!col("vec_id").isin(0L, 1L, 2L)).unionByName(donor)
-    val got2 = IvfIndex.searchIndexHalf(spark, path,
+    val got2 = IvfIndex.searchIndex(spark, path,
         donor.select(col("vec_id").as("qid"), col("embedding")),
-        k = 1, nprobe = 8, overfetch = n)
+        k = 1, nprobe = 8, metric = "l2", overfetch = n)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // ties with the donor row resolve to the smaller (upserted) id
     assert((0L until 3L).forall(i => got2(i) == i), s"upserted half rows: $got2")

@@ -133,7 +133,7 @@ class IvfIterativeScanSpec extends SparkSpec {
         }.getOrElse(fail("iterative leaf not planted"))
         val model = IvfIndex.readModel(spark, store)
         val plan = graft.plans.IvfIterativeScan
-          .probePlan(spark, leaf.path, model.centroids, leaf.qvec.toArray, leaf.pred, 2)
+          .probePlan(spark, leaf.path, model, leaf.qvec.toArray, leaf.pred, 2)
           .queryExecution.executedPlan.toString
         // the user predicate reaches the parquet scan, not filter-after-fetch
         assert("PushedFilters: \\[[^\\]]*vec_id".r.findFirstIn(plan).nonEmpty, plan.take(2000))
@@ -233,7 +233,7 @@ class IvfIterativeScanSpec extends SparkSpec {
 
   test("HALF store: riding filter lowers to the escalation leaf, starved filter exact") {
     val path = Files.createTempDirectory("ivf_iter_half").toString
-    IvfIndex.writeIndexHalf(e, model, path)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Half)
     withRule {
       conf("spark.graft.ann.nprobe" -> "1") {
         val pred = "vec_id % 97 = 0 AND vec_id < 400" // 5 survivors < k = 10
@@ -251,7 +251,7 @@ class IvfIterativeScanSpec extends SparkSpec {
 
   test("BINARY store: riding filter lowers to the escalation leaf, starved filter exact") {
     val path = Files.createTempDirectory("ivf_iter_bin").toString
-    IvfIndex.writeIndexBinary(e, model, path)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Binary)
     withRule {
       conf("spark.graft.ann.nprobe" -> "1") {
         val pred = "vec_id % 97 = 0 AND vec_id < 400"
@@ -267,7 +267,7 @@ class IvfIterativeScanSpec extends SparkSpec {
 
   test("HALF store, satisfied filter: leaf plants and returns k at the initial probe") {
     val path = Files.createTempDirectory("ivf_iter_half2").toString
-    IvfIndex.writeIndexHalf(e, model, path)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Half)
     withRule {
       conf("spark.graft.ann.nprobe" -> "2") {
         val q = sqlQueryOver(path, "vec_id >= 0", 5)

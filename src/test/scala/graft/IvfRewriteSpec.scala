@@ -35,7 +35,7 @@ class IvfRewriteSpec extends SparkSpec {
   private lazy val quantStore: String = {
     val path = Files.createTempDirectory("ivf_rw_q").toString
     val (mn, mx) = Quantize.scalarRange(e)
-    IvfIndex.writeIndexQuantized(e, model, path, mn, mx)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Sq8(mn, mx))
     path
   }
   private lazy val plainStore: String = {
@@ -75,14 +75,14 @@ class IvfRewriteSpec extends SparkSpec {
   private lazy val pqStore: String = {
     val path = Files.createTempDirectory("ivf_rw_pq").toString
     val pq = graft.operators.ProductQuantizer.trainResidual(e, model, m = 16, ksub = 16)
-    IvfIndex.writeIndexPq(e, model, pq, path)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Pq(pq))
     path
   }
 
   private lazy val subStore: String = {
     val path = Files.createTempDirectory("ivf_rw_sub").toString
     val m = IvfIndex.trainSub(e, subDim = 16, k = 8, iters = 2)
-    IvfIndex.writeIndexSub(e, m, path, subDim = 16)
+    IvfIndex.writeIndex(e, m, path, IvfIndex.Codec.Prefix(16))
     path
   }
 
@@ -250,7 +250,7 @@ class IvfRewriteSpec extends SparkSpec {
     val cosStore = Files.createTempDirectory("ivf_rw_cos").toString
     val en = e.withColumn("embedding", VectorFunctions.l2Normalize(col("embedding")))
     val cosModel = graft.operators.IvfIndex.train(en, k = 8, iters = 2)
-    graft.operators.IvfIndex.writeIndexCosine(e, cosModel, cosStore)
+    graft.operators.IvfIndex.writeIndex(e, cosModel, cosStore, metric = "cosine")
 
     def cosQuery(store: String) = spark.read.parquet(store)
       .select(col("vec_id"),

@@ -93,17 +93,17 @@ class IvfStoreSpec extends SparkSpec {
     val model = IvfIndex.train(e, k = 8, iters = 2)
     val (mn, mx) = Quantize.scalarRange(e)
     // quantized store: TWO sidecars must survive the rewrite
-    IvfIndex.writeIndexQuantized(e.where(col("vec_id") % 4 === 0), model, path, mn, mx)
+    IvfIndex.writeIndex(e.where(col("vec_id") % 4 === 0), model, path, IvfIndex.Codec.Sq8(mn, mx))
     // spray files: one append batch per residue class, several files each
     for (r <- 1 to 3)
-      IvfIndex.appendIndexQuantized(spark, path,
+      IvfIndex.appendIndex(spark, path,
         e.where(col("vec_id") % 4 === r).repartition(4))
     val statsBefore = IvfIndex.fileStats(spark, path)
     assert(statsBefore.map(_._2).sum > 8, s"expected a sprayed store: $statsBefore")
     assert(IvfIndex.needsCompaction(spark, path, maxFilesPerCell = 3))
 
     val q = e.where(col("vec_id") < 5).select(col("vec_id").as("qid"), col("embedding"))
-    val before = IvfIndex.searchIndexQuantized(spark, path, q, k = 5, nprobe = 4)
+    val before = IvfIndex.searchIndex(spark, path, q, k = 5, nprobe = 4, metric = "l2")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
 
     val report = IvfIndex.compactIndex(spark, path)
@@ -114,13 +114,13 @@ class IvfStoreSpec extends SparkSpec {
     assert(!IvfIndex.needsCompaction(spark, path, maxFilesPerCell = 3))
     // corpus, results, and BOTH sidecars are intact
     assert(spark.read.parquet(path).count() == e.count())
-    val after = IvfIndex.searchIndexQuantized(spark, path, q, k = 5, nprobe = 4)
+    val after = IvfIndex.searchIndex(spark, path, q, k = 5, nprobe = 4, metric = "l2")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     assert(after == before)
     assert(IvfIndex.readModel(spark, path).centroids.length == model.centroids.length)
-    assert(IvfIndex.readQuantRange(spark, path) == ((mn, mx)))
+    assert(IvfIndex.readStore(spark, path).codec == IvfIndex.Codec.Sq8(mn, mx))
     // partition pruning still static after the rewrite
-    val plan = IvfIndex.searchIndexQuantized(spark, path, q.limit(1), k = 1, nprobe = 2)
+    val plan = IvfIndex.searchIndex(spark, path, q.limit(1), k = 1, nprobe = 2, metric = "l2")
       .queryExecution.executedPlan.toString
     val pf = "PartitionFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan).map(_.group(1)).toSeq
     assert(pf.exists(_.contains("cell")), plan.take(2000))
@@ -132,11 +132,10 @@ class IvfStoreSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sfDir)
     val model = IvfIndex.train(e, k = 16, iters = 3)
     val (mn, mx) = Quantize.scalarRange(e)
-    IvfIndex.writeIndexQuantized(e, model, path, mn, mx)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Sq8(mn, mx))
 
     // range sidecar round-trips
-    val (rmn, rmx) = IvfIndex.readQuantRange(spark, path)
-    assert(rmn == mn && rmx == mx)
+    assert(IvfIndex.readStore(spark, path).codec == IvfIndex.Codec.Sq8(mn, mx))
 
     // recall vs exact L2 KNN with generous probing
     val k = 10
@@ -145,7 +144,7 @@ class IvfStoreSpec extends SparkSpec {
         .select("vec_id").collect().map(_.getLong(0)).toSet
       val q1 = e.where(col("vec_id") === qid)
         .select(col("vec_id").as("qid"), col("embedding"))
-      val approx = IvfIndex.searchIndexQuantized(spark, path, q1, k, nprobe = 12,
+      val approx = IvfIndex.searchIndex(spark, path, q1, k, nprobe = 12, metric = "l2",
           overfetch = 8)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       (exact intersect approx).size.toDouble / k
@@ -156,7 +155,7 @@ class IvfStoreSpec extends SparkSpec {
     // full probe (nprobe = all cells, overfetch covering the corpus)
     // degenerates to EXACT KNN — the index adds pruning, not error
     val q0 = e.where(col("vec_id") === 0).select(col("vec_id").as("qid"), col("embedding"))
-    val full = IvfIndex.searchIndexQuantized(spark, path, q0, k = 5, nprobe = 16,
+    val full = IvfIndex.searchIndex(spark, path, q0, k = 5, nprobe = 16, metric = "l2",
         overfetch = 1000)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     val exact5 = Knn.topK(e, e.where(col("vec_id") === 0), Knn.L2, 5)
@@ -185,7 +184,7 @@ class IvfStoreSpec extends SparkSpec {
     val path = Files.createTempDirectory("ivf_bin").toString
     val e = Tables.embeddings(spark, sfDir)
     val model = IvfIndex.train(e, k = 16, iters = 3)
-    IvfIndex.writeIndexBinary(e, model, path)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Binary)
 
     // recall vs exact L2 with generous probing — the lossiest codec on
     // the ladder, so generous overfetch is part of its contract
@@ -195,7 +194,7 @@ class IvfStoreSpec extends SparkSpec {
         .select("vec_id").collect().map(_.getLong(0)).toSet
       val q1 = e.where(col("vec_id") === qid)
         .select(col("vec_id").as("qid"), col("embedding"))
-      val approx = IvfIndex.searchIndexBinary(spark, path, q1, k, nprobe = 12,
+      val approx = IvfIndex.searchIndex(spark, path, q1, k, nprobe = 12, metric = "l2",
           overfetch = 16)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       (exact intersect approx).size.toDouble / k
@@ -205,7 +204,7 @@ class IvfStoreSpec extends SparkSpec {
 
     // full probe + covering overfetch degenerates to exact KNN
     val q0 = e.where(col("vec_id") === 0).select(col("vec_id").as("qid"), col("embedding"))
-    val full = IvfIndex.searchIndexBinary(spark, path, q0, k = 5, nprobe = 16,
+    val full = IvfIndex.searchIndex(spark, path, q0, k = 5, nprobe = 16, metric = "l2",
         overfetch = e.count().toInt)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     val exact5 = Knn.topK(e, e.where(col("vec_id") === 0), Knn.L2, 5)
@@ -227,11 +226,12 @@ class IvfStoreSpec extends SparkSpec {
     assert(schemas.nonEmpty && schemas.forall(!_.contains("embedding")),
       s"coarse scan deserializes the float column: $schemas")
 
-    // a store without the _binary.json sidecar is refused
+    // the codec comes from the sidecars, so a plain store is searched
+    // as flat; what it still refuses is a metric its sidecars don't declare
     val plainPath = Files.createTempDirectory("ivf_bin_plain").toString
     IvfIndex.writeIndex(e, model, plainPath)
     intercept[IllegalArgumentException] {
-      IvfIndex.searchIndexBinary(spark, plainPath, q0, k = 5, nprobe = 4)
+      IvfIndex.searchIndex(spark, plainPath, q0, k = 5, nprobe = 4, metric = "cosine")
     }
   }
 
@@ -240,10 +240,10 @@ class IvfStoreSpec extends SparkSpec {
     val path = Files.createTempDirectory("ivf_sub").toString
     val e = Tables.embeddings(spark, sfDir)
     val model = IvfIndex.trainSub(e, subDim = 16, k = 16, iters = 3)
-    IvfIndex.writeIndexSub(e, model, path, subDim = 16)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Prefix(16))
 
     // sidecar round-trips
-    assert(IvfIndex.readSubDim(spark, path) == 16)
+    assert(IvfIndex.readStore(spark, path).codec == IvfIndex.Codec.Prefix(16))
 
     // recall vs exact L2 KNN with generous probing: the 16-of-64 prefix
     // carries enough neighborhood structure on this corpus to recover
@@ -254,7 +254,7 @@ class IvfStoreSpec extends SparkSpec {
         .select("vec_id").collect().map(_.getLong(0)).toSet
       val q1 = e.where(col("vec_id") === qid)
         .select(col("vec_id").as("qid"), col("embedding"))
-      val approx = IvfIndex.searchIndexSub(spark, path, q1, k, nprobe = 12, overfetch = 8)
+      val approx = IvfIndex.searchIndex(spark, path, q1, k, nprobe = 12, metric = "l2", overfetch = 8)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       (exact intersect approx).size.toDouble / k
     }
@@ -263,7 +263,7 @@ class IvfStoreSpec extends SparkSpec {
 
     // full probe + corpus-covering overfetch degenerates to EXACT KNN
     val q0 = e.where(col("vec_id") === 0).select(col("vec_id").as("qid"), col("embedding"))
-    val full = IvfIndex.searchIndexSub(spark, path, q0, k = 5, nprobe = 16,
+    val full = IvfIndex.searchIndex(spark, path, q0, k = 5, nprobe = 16, metric = "l2",
         overfetch = 100000)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     val exact5 = Knn.topK(e, e.where(col("vec_id") === 0), Knn.L2, 5)
@@ -292,7 +292,7 @@ class IvfStoreSpec extends SparkSpec {
     // silently assigned on a prefix/dim mismatch
     val fullModel = IvfIndex.train(e, k = 4, iters = 1)
     val e2 = intercept[IllegalArgumentException](
-      IvfIndex.writeIndexSub(e, fullModel, path + "_bad", subDim = 16))
+      IvfIndex.writeIndex(e, fullModel, path + "_bad", IvfIndex.Codec.Prefix(16)))
     assert(e2.getMessage.contains("subDim"), e2.getMessage)
   }
 
@@ -301,12 +301,12 @@ class IvfStoreSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sfDir)
     val base = e.where(col("vec_id") >= 10)
     val model = IvfIndex.trainSub(base, subDim = 16, k = 8, iters = 2)
-    IvfIndex.writeIndexSub(base, model, path, subDim = 16)
+    IvfIndex.writeIndex(base, model, path, IvfIndex.Codec.Prefix(16))
     // append the held-out rows: sliced + assigned under the sidecar
     // model, so searches see them immediately
-    IvfIndex.appendIndexSub(spark, path, e.where(col("vec_id") < 10))
+    IvfIndex.appendIndex(spark, path, e.where(col("vec_id") < 10))
     val q0 = e.where(col("vec_id") === 0).select(col("vec_id").as("qid"), col("embedding"))
-    val full = IvfIndex.searchIndexSub(spark, path, q0, k = 5, nprobe = 8,
+    val full = IvfIndex.searchIndex(spark, path, q0, k = 5, nprobe = 8, metric = "l2",
       overfetch = 100000).collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     import graft.operators.Knn
     val exact5 = Knn.topK(e, e.where(col("vec_id") === 0), Knn.L2, 5)
@@ -315,8 +315,8 @@ class IvfStoreSpec extends SparkSpec {
     // compaction preserves the DYNAMIC sidecar set (_matryoshka.json is
     // not in any hard-coded list) and search results are unchanged
     IvfIndex.compactIndex(spark, path)
-    assert(IvfIndex.readSubDim(spark, path) == 16)
-    val after = IvfIndex.searchIndexSub(spark, path, q0, k = 5, nprobe = 8,
+    assert(IvfIndex.readStore(spark, path).codec == IvfIndex.Codec.Prefix(16))
+    val after = IvfIndex.searchIndex(spark, path, q0, k = 5, nprobe = 8, metric = "l2",
       overfetch = 100000).collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     assert(after == full)
   }
@@ -325,9 +325,9 @@ class IvfStoreSpec extends SparkSpec {
     val path = Files.createTempDirectory("ivf_bin_compact").toString
     val e = Tables.embeddings(spark, sfDir)
     val model = IvfIndex.train(e, k = 8, iters = 2)
-    IvfIndex.writeIndexBinary(e, model, path)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Binary)
     val q0 = e.where(col("vec_id") === 0).select(col("vec_id").as("qid"), col("embedding"))
-    val before = IvfIndex.searchIndexBinary(spark, path, q0, k = 5, nprobe = 8,
+    val before = IvfIndex.searchIndex(spark, path, q0, k = 5, nprobe = 8, metric = "l2",
       overfetch = 100000).collect().map(_.getLong(1)).toList
     IvfIndex.compactIndex(spark, path)
     // the hard-coded sidecar list lacked _binary.json: compaction used
@@ -335,7 +335,7 @@ class IvfStoreSpec extends SparkSpec {
     val p = new org.apache.hadoop.fs.Path(path, "_binary.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(p), "_binary.json dropped by compaction")
-    val after = IvfIndex.searchIndexBinary(spark, path, q0, k = 5, nprobe = 8,
+    val after = IvfIndex.searchIndex(spark, path, q0, k = 5, nprobe = 8, metric = "l2",
       overfetch = 100000).collect().map(_.getLong(1)).toList
     assert(after == before)
   }
@@ -395,7 +395,7 @@ class IvfStoreSpec extends SparkSpec {
     // PQ stores are refused (stale residual codes)
     val pqPath = Files.createTempDirectory("ivf_reassign_pq").toString
     val pq = graft.operators.ProductQuantizer.trainResidual(e, model, m = 16, ksub = 16)
-    IvfIndex.writeIndexPq(e, model, pq, pqPath)
+    IvfIndex.writeIndex(e, model, pqPath, IvfIndex.Codec.Pq(pq))
     val err = intercept[IllegalArgumentException](
       IvfIndex.reassignIndex(spark, pqPath, model))
     assert(err.getMessage.contains("residual"), err.getMessage)
@@ -531,8 +531,8 @@ class IvfStoreSpec extends SparkSpec {
     assert(rep2 == IvfIndex.DeleteReport(0L, 0, 0), rep2)
     // streaming batch_id stores are refused
     val spath = Files.createTempDirectory("ivf_delete_stream").toString
-    graft.streaming.VectorStream.initSubStore(
-      e, IvfIndex.trainSub(e, subDim = 16, k = 4, iters = 1), spath, subDim = 16)
+    graft.streaming.VectorStream.initStore(
+      e, IvfIndex.trainSub(e, subDim = 16, k = 4, iters = 1), spath, IvfIndex.Codec.Prefix(16))
     val err = intercept[IllegalArgumentException](
       IvfIndex.deleteFromIndex(spark, spath, extraIds))
     assert(err.getMessage.contains("batch_id"), err.getMessage)
@@ -544,13 +544,13 @@ class IvfStoreSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sfDir)
     val model = IvfIndex.train(e, k = 8, iters = 2)
     val (mn, mx) = Quantize.scalarRange(e)
-    IvfIndex.writeIndexQuantized(e, model, path, mn, mx)
+    IvfIndex.writeIndex(e, model, path, IvfIndex.Codec.Sq8(mn, mx))
     val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
     val key = (df: org.apache.spark.sql.DataFrame) => df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val pushdown = IvfIndex.searchIndexQuantized(spark, path, q, k = 3, nprobe = 8)
+    val pushdown = IvfIndex.searchIndex(spark, path, q, k = 3, nprobe = 8, metric = "l2")
     // cap of 1 forces the fallback (4 queries × k·overfetch candidates ≫ 1)
-    val fallback = IvfIndex.searchIndexQuantized(spark, path, q, k = 3, nprobe = 8,
+    val fallback = IvfIndex.searchIndex(spark, path, q, k = 3, nprobe = 8, metric = "l2",
       maxPushdownIds = 1)
     assert(key(pushdown) == key(fallback))
     // the fallback path reranks through a semi JOIN (the driver never
@@ -567,12 +567,12 @@ class IvfStoreSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sfDir)
     val model = IvfIndex.train(e, k = 8, iters = 2)
     val (mn, mx) = Quantize.scalarRange(e)
-    IvfIndex.writeIndexQuantized(e.where(col("vec_id") >= 10), model, path, mn, mx)
+    IvfIndex.writeIndex(e.where(col("vec_id") >= 10), model, path, IvfIndex.Codec.Sq8(mn, mx))
     val held = e.where(col("vec_id") < 10)
-    IvfIndex.appendIndexQuantized(spark, path, held)
+    IvfIndex.appendIndex(spark, path, held)
     // self-search: every appended vector is its own nearest at dist 0
     val q = held.select(col("vec_id").as("qid"), col("embedding"))
-    val hits = IvfIndex.searchIndexQuantized(spark, path, q, k = 1, nprobe = 8)
+    val hits = IvfIndex.searchIndex(spark, path, q, k = 1, nprobe = 8, metric = "l2")
       .where(col("vec_id") === col("qid")).collect()
     assert(hits.length == held.count() && hits.forall(_.getDouble(2) == 0.0))
     // appended codes equal a fresh quantization under the sidecar range
@@ -588,12 +588,12 @@ class IvfStoreSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sfDir)
     val en = e.withColumn("embedding", VectorFunctions.l2Normalize(col("embedding")))
     val model = IvfIndex.train(en, k = 16, iters = 3)
-    IvfIndex.writeIndexCosine(e, model, path)
-    assert(IvfIndex.readMetric(spark, path) == "cosine")
+    IvfIndex.writeIndex(e, model, path, metric = "cosine")
+    assert(IvfIndex.readStore(spark, path).metric == "cosine")
 
     // full probe = exact cosine KNN (same ids, same rounded distances)
     val q = e.where(col("vec_id") === 7).select(col("vec_id").as("qid"), col("embedding"))
-    val full = IvfIndex.searchIndexCosine(spark, path, q, k = 10, nprobe = 16)
+    val full = IvfIndex.searchIndex(spark, path, q, k = 10, nprobe = 16, metric = "cosine")
       .orderBy(col("rn")).collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     val exact = Knn.topK(e, e.where(col("vec_id") === 7), Knn.Cosine, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
@@ -605,7 +605,7 @@ class IvfStoreSpec extends SparkSpec {
       val ex = Knn.topK(e, e.where(col("vec_id") === qid), Knn.Cosine, k)
         .collect().map(_.getLong(0)).toSet
       val q1 = e.where(col("vec_id") === qid).select(col("vec_id").as("qid"), col("embedding"))
-      val ap = IvfIndex.searchIndexCosine(spark, path, q1, k, nprobe = 12)
+      val ap = IvfIndex.searchIndex(spark, path, q1, k, nprobe = 12, metric = "cosine")
         .select("vec_id").collect().map(_.getLong(0)).toSet
       (ex intersect ap).size.toDouble / k
     }
@@ -615,7 +615,7 @@ class IvfStoreSpec extends SparkSpec {
     val l2path = Files.createTempDirectory("ivf_l2m").toString
     IvfIndex.writeIndex(e, model, l2path)
     val err = intercept[IllegalArgumentException] {
-      IvfIndex.searchIndexCosine(spark, l2path, q, k = 3, nprobe = 4)
+      IvfIndex.searchIndex(spark, l2path, q, k = 3, nprobe = 4, metric = "cosine")
     }
     assert(err.getMessage.contains("cosine"))
   }
@@ -629,7 +629,7 @@ class IvfStoreSpec extends SparkSpec {
     IvfIndex.writeIndex(e, model, path)
 
     val q = e.where(col("vec_id") === 7).select(col("vec_id").as("qid"), col("embedding"))
-    val full = IvfIndex.searchIndexIp(spark, path, q, k = 10, nprobe = 16)
+    val full = IvfIndex.searchIndex(spark, path, q, k = 10, nprobe = 16, metric = "ip")
       .orderBy(col("rn")).collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     val exact = Knn.topK(e, e.where(col("vec_id") === 7), Knn.InnerProduct, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
@@ -639,11 +639,11 @@ class IvfStoreSpec extends SparkSpec {
     // IS cosine; the error message must say so
     val cosPath = Files.createTempDirectory("ivf_ip_cos").toString
     val en = e.withColumn("embedding", VectorFunctions.l2Normalize(col("embedding")))
-    IvfIndex.writeIndexCosine(e, IvfIndex.train(en, k = 8, iters = 1), cosPath)
+    IvfIndex.writeIndex(e, IvfIndex.train(en, k = 8, iters = 1), cosPath, metric = "cosine")
     val err = intercept[IllegalArgumentException] {
-      IvfIndex.searchIndexIp(spark, cosPath, q, k = 3, nprobe = 4)
+      IvfIndex.searchIndex(spark, cosPath, q, k = 3, nprobe = 4, metric = "ip")
     }
-    assert(err.getMessage.contains("searchIndexCosine"))
+    assert(err.getMessage.contains("metric = \"cosine\""))
   }
 
   test("knnJoin: large-x-large blocked join keeps recall vs the exact join; no broadcast of either side") {
@@ -699,22 +699,22 @@ class IvfStoreSpec extends SparkSpec {
     val model = IvfIndex.train(e, k = 16, iters = 3)
     IvfIndex.writeIndex(e, model, path)
     val q = e.where(col("vec_id") === 7).select(col("vec_id").as("qid"), col("embedding"))
-    val full = IvfIndex.searchIndexL1(spark, path, q, k = 10, nprobe = 16)
+    val full = IvfIndex.searchIndex(spark, path, q, k = 10, nprobe = 16, metric = "l1")
       .orderBy(col("rn")).collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     val exact = Knn.topK(e, e.where(col("vec_id") === 7), Knn.L1, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
     assert(full == exact, s"full=$full exact=$exact")
     // partial probe keeps decent recall on this corpus
-    val part = IvfIndex.searchIndexL1(spark, path, q, k = 10, nprobe = 4)
+    val part = IvfIndex.searchIndex(spark, path, q, k = 10, nprobe = 4, metric = "l1")
       .collect().map(_.getLong(1)).toSet
     assert(part.intersect(exact.map(_._1).toSet).size >= 7, part.toString)
     // cosine (normalized) store refused: L1 over normalized bytes is a
     // different question than the caller asked
     val cosPath = Files.createTempDirectory("ivf_l1_cos").toString
     val en = e.withColumn("embedding", VectorFunctions.l2Normalize(col("embedding")))
-    IvfIndex.writeIndexCosine(e, IvfIndex.train(en, k = 8, iters = 1), cosPath)
+    IvfIndex.writeIndex(e, IvfIndex.train(en, k = 8, iters = 1), cosPath, metric = "cosine")
     val err = intercept[IllegalArgumentException] {
-      IvfIndex.searchIndexL1(spark, cosPath, q, k = 3, nprobe = 4)
+      IvfIndex.searchIndex(spark, cosPath, q, k = 3, nprobe = 4, metric = "l1")
     }
     assert(err.getMessage.contains("L2 store"))
   }
@@ -806,9 +806,8 @@ class IvfStoreSpec extends SparkSpec {
       val ex = intercept[IllegalArgumentException](body)
       assert(ex.getMessage.contains("unfinished maintenance swap"), ex.getMessage)
     }
-    // (the metric/family-marker guards of searchIndexCosine/Ip/Half/…
-    // fire before the model read on a plain L2 store — their documented
-    // precedence; every family funnels through readModel, gated below)
+    // (every codec and metric funnels through readStore → readModel,
+    // gated below)
     pending(IvfIndex.searchIndex(spark, path, q, k = 3, nprobe = 4))
     pending(IvfIndex.searchIndexFiltered(spark, path, q, col("vec_id") >= 0,
       k = 3, nprobe = 2))

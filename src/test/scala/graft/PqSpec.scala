@@ -100,7 +100,7 @@ class PqSpec extends SparkSpec {
     val ivf = IvfIndex.train(vecs, k = 8, iters = 2)
     val pq = PQ.trainResidual(vecs, ivf, m = 16, ksub = 16, iters = 10)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_store").toString
-    IvfIndex.writeIndexPq(vecs, ivf, pq, dir)
+    IvfIndex.writeIndex(vecs, ivf, dir, IvfIndex.Codec.Pq(pq))
 
     // sidecars round-trip: both models reconstruct from the store path
     assert(IvfIndex.readModel(spark, dir).centroids.flatten.toSeq ==
@@ -111,7 +111,7 @@ class PqSpec extends SparkSpec {
     val k = 10
     val queries = vecs.where(col("vec_id") < 6)
       .select(col("vec_id").as("qid"), col("embedding"))
-    val approx = IvfIndex.searchIndexPq(spark, dir, queries, k, nprobe = 6, overfetch = 8)
+    val approx = IvfIndex.searchIndex(spark, dir, queries, k, nprobe = 6, metric = "l2", overfetch = 8)
       .select("qid", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1).view.mapValues(_.map(_._2).toSet)
     val recalls = (0L until 6L).map { qid =>
@@ -124,7 +124,7 @@ class PqSpec extends SparkSpec {
 
     // full probe + corpus-covering overfetch degenerates to exact KNN
     val q0 = vecs.where(col("vec_id") === 0).select(col("vec_id").as("qid"), col("embedding"))
-    val full = IvfIndex.searchIndexPq(spark, dir, q0, k = 5, nprobe = 8, overfetch = 1000)
+    val full = IvfIndex.searchIndex(spark, dir, q0, k = 5, nprobe = 8, metric = "l2", overfetch = 1000)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     val exact5 = Knn.topK(vecs, vecs.where(col("vec_id") === 0), Knn.L2, 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
@@ -132,9 +132,9 @@ class PqSpec extends SparkSpec {
 
     // the DedupIndex guard: forcing the semi-join fallback (cap = 1)
     // returns exactly what the static id-IN pushdown path returns
-    val pushed = IvfIndex.searchIndexPq(spark, dir, queries, k, nprobe = 6, overfetch = 8)
+    val pushed = IvfIndex.searchIndex(spark, dir, queries, k, nprobe = 6, metric = "l2", overfetch = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList
-    val fellBack = IvfIndex.searchIndexPq(spark, dir, queries, k, nprobe = 6, overfetch = 8,
+    val fellBack = IvfIndex.searchIndex(spark, dir, queries, k, nprobe = 6, metric = "l2", overfetch = 8,
         maxPushdownIds = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList
     assert(fellBack == pushed)
@@ -143,12 +143,12 @@ class PqSpec extends SparkSpec {
     // models, are immediately searchable, and their stored codes match a
     // fresh encode against the original models
     val shifted = vecs.select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
-    IvfIndex.appendIndexPq(spark, dir, shifted)
+    IvfIndex.appendIndex(spark, dir, shifted)
     val q0b = vecs.where(col("vec_id") === 0)
       .select((col("vec_id") + 100000).as("qid"), col("embedding"))
     // the appended copy ties its original at dist 0; ids break the tie,
     // so the top-2 is exactly {0, 100000} both at 0.0
-    val hits = IvfIndex.searchIndexPq(spark, dir, q0b, k = 2, nprobe = 8, overfetch = 8)
+    val hits = IvfIndex.searchIndex(spark, dir, q0b, k = 2, nprobe = 8, metric = "l2", overfetch = 8)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     assert(hits == List((0L, 0.0), (100000L, 0.0)), s"appended self-hit: $hits")
     val cellCol2 = IvfIndex.cellOf(col("embedding"), ivf)

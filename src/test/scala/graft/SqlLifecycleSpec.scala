@@ -78,6 +78,34 @@ class SqlLifecycleSpec extends SparkSpec {
     assert(s.read.parquet(path).count() == before)
   }
 
+  test("APPEND GRAFT INDEX into binary and cosine stores writes the store's own encoding") {
+    val all = Tables.embeddings(s, sfDir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    all.where(col("vec_id") >= 3).createOrReplaceTempView("app_base_v")
+    all.where(col("vec_id") < 3).createOrReplaceTempView("app_new_v")
+    for (kind <- Seq("IVF_BINARY", "IVF_COSINE")) {
+      val path = Files.createTempDirectory(s"sql_app_$kind").toString + "/idx"
+      s.sql(s"CREATE GRAFT INDEX $kind AT '$path' FROM app_base_v OPTIONS (k = 4, iters = 2)")
+        .collect()
+      val msg = s.sql(s"APPEND GRAFT INDEX AT '$path' FROM app_new_v").head().getString(0)
+      assert(msg.contains("appended"), msg)
+      // the appended rows are exactly what a full write of the union
+      // stores (bvec codes; normalized vectors and their cells)
+      val store = graft.operators.IvfIndex.readStore(s, path)
+      val fresh = graft.operators.IvfIndex.encode(all, store, "vec_id", "embedding")
+      val stored = s.read.parquet(path)
+      assert(stored.where(col("vec_id") < 3).count() == 3, kind)
+      assert(stored.select(fresh.columns.map(col): _*).exceptAll(fresh).isEmpty, kind)
+      // and served: each appended vector is its own nearest neighbor
+      val q = all.where(col("vec_id") < 3).select(col("vec_id").as("qid"), col("embedding"))
+      val metric = if (kind == "IVF_COSINE") "cosine" else "l2"
+      val hits = graft.operators.IvfIndex.searchIndex(s, path, q, k = 1, nprobe = 1,
+          metric = metric)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(hits.toSet == Set((0L, 0L), (1L, 1L), (2L, 2L)), s"$kind: ${hits.toSeq}")
+    }
+  }
+
   test("sparse postings lifecycle end-to-end in SQL") {
     val tmp = Files.createTempDirectory("sql_sparse").toString
     Tables.documents(s, sfDir).select(col("doc_id"), col("text"))

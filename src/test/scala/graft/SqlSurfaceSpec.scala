@@ -114,7 +114,7 @@ class SqlSurfaceSpec extends SparkSpec {
       .head()
     assert(r.getSeq[Float](0) == r.getSeq[Float](1))
     assert(r.getInt(2) == 8, "pack must be exactly 2 bytes per dim")
-    // byte parity with writeIndexHalf's column: what SQL packs is what
+    // byte parity with the Half-codec index column: what SQL packs is what
     // the index stores
     val spark2 = spark
     import spark2.implicits._

@@ -90,13 +90,13 @@ class UpsertSpec extends SparkSpec {
 
     // SQ8: codes recomputed under the STORED range
     val sq = Files.createTempDirectory("ups_sq").toString
-    IvfIndex.writeIndexQuantized(e, model, sq, -3.0, 3.0)
+    IvfIndex.writeIndex(e, model, sq, IvfIndex.Codec.Sq8(-3.0, 3.0))
     IvfIndex.upsertIndex(spark, sq, batch)
     val sqStore = spark.read.parquet(sq)
     assert(sqStore.count() == wantCount)
     assert(sqStore.columns.contains("qvec"))
     // exact degeneration: full probe + covering overfetch == brute KNN
-    val sqK = IvfIndex.searchIndexQuantized(spark, sq, q, k = 5, nprobe = 4,
+    val sqK = IvfIndex.searchIndex(spark, sq, q, k = 5, nprobe = 4, metric = "l2",
         overfetch = wantCount.toInt)
       .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(1))).toSet
     val wantK = Knn.topKBatch(post, q, Knn.L2, 5)
@@ -105,7 +105,7 @@ class UpsertSpec extends SparkSpec {
 
     // binary: bvec recomputed
     val bin = Files.createTempDirectory("ups_bin").toString
-    IvfIndex.writeIndexBinary(e, model, bin)
+    IvfIndex.writeIndex(e, model, bin, IvfIndex.Codec.Binary)
     IvfIndex.upsertIndex(spark, bin, batch)
     val binStore = spark.read.parquet(bin)
     assert(binStore.count() == wantCount && binStore.columns.contains("bvec"))
@@ -115,7 +115,7 @@ class UpsertSpec extends SparkSpec {
     val en = e.withColumn("embedding",
       graft.functions.VectorFunctions.l2Normalize(col("embedding")))
     val mc = IvfIndex.train(en, k = 4, iters = 2)
-    IvfIndex.writeIndexCosine(e, mc, cos)
+    IvfIndex.writeIndex(e, mc, cos, metric = "cosine")
     IvfIndex.upsertIndex(spark, cos, batch)
     val norms = spark.read.parquet(cos)
       .select(expr("aggregate(embedding, 0.0D, (a, x) -> a + x * x)").as("n2"))
@@ -126,7 +126,7 @@ class UpsertSpec extends SparkSpec {
     // Matryoshka: sub prefix recomputed, prefix-space cells
     val sub = Files.createTempDirectory("ups_sub").toString
     val ms = IvfIndex.trainSub(e, subDim = 8, k = 4, iters = 2)
-    IvfIndex.writeIndexSub(e, ms, sub, subDim = 8)
+    IvfIndex.writeIndex(e, ms, sub, IvfIndex.Codec.Prefix(8))
     IvfIndex.upsertIndex(spark, sub, batch)
     val subStore = spark.read.parquet(sub)
     assert(subStore.count() == wantCount)
@@ -136,7 +136,7 @@ class UpsertSpec extends SparkSpec {
     // PQ: residual codes recomputed under the stored codebooks
     val pqp = Files.createTempDirectory("ups_pq").toString
     val pq = graft.operators.ProductQuantizer.trainResidual(e, model, m = 8, ksub = 8)
-    IvfIndex.writeIndexPq(e, model, pq, pqp)
+    IvfIndex.writeIndex(e, model, pqp, IvfIndex.Codec.Pq(pq))
     IvfIndex.upsertIndex(spark, pqp, batch)
     val pqStore = spark.read.parquet(pqp)
     assert(pqStore.count() == wantCount && pqStore.columns.contains("pq_codes"))

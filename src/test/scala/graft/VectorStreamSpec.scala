@@ -16,15 +16,15 @@ class VectorStreamSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("vstream_ckpt").toString
 
     // init with the first 400 vectors; stream the held-out 100 in
-    VectorStream.initQuantizedStore(e.where(col("vec_id") >= 100), model, store, mn, mx)
+    VectorStream.initStore(e.where(col("vec_id") >= 100), model, store, IvfIndex.Codec.Sq8(mn, mx))
     e.where(col("vec_id") < 100).write.mode("append").parquet(in)
-    val q = VectorStream.startQuantizedIngest(spark, in, store, ckpt, availableNow = true)
+    val q = VectorStream.startIngest(spark, in, store, ckpt, availableNow = true)
     try q.awaitTermination() finally q.stop()
 
     // streamed vectors are searchable at dist 0 via the standard reader
     val probe = e.where(col("vec_id") < 100)
       .select(col("vec_id").as("qid"), col("embedding"))
-    val hits = IvfIndex.searchIndexQuantized(spark, store, probe, k = 1, nprobe = 8)
+    val hits = IvfIndex.searchIndex(spark, store, probe, k = 1, nprobe = 8, metric = "l2")
       .where(col("vec_id") === col("qid")).collect()
     assert(hits.length == 100 && hits.forall(_.getDouble(2) == 0.0))
     // codes in the store equal a fresh quantization under the sidecar range
@@ -36,9 +36,9 @@ class VectorStreamSpec extends SparkSpec {
     // instead of duplicating rows
     val before = spark.read.parquet(store).count()
     val replay = e.where(col("vec_id") < 50).select(col("vec_id"), col("embedding"))
-    VectorStream.quantizedIngestBatch(store)(replay, 99L)
+    VectorStream.ingestBatch(store)(replay, 99L)
     val afterOnce = spark.read.parquet(store).count()
-    VectorStream.quantizedIngestBatch(store)(replay, 99L)
+    VectorStream.ingestBatch(store)(replay, 99L)
     val afterTwice = spark.read.parquet(store).count()
     assert(afterOnce == before + 50)
     assert(afterTwice == afterOnce, "replayed batch must overwrite, not append")
@@ -51,16 +51,16 @@ class VectorStreamSpec extends SparkSpec {
     val in = Files.createTempDirectory("vsub_in").toString
     val ckpt = Files.createTempDirectory("vsub_ckpt").toString
 
-    VectorStream.initSubStore(e.where(col("vec_id") >= 100), model, store, subDim = 16)
+    VectorStream.initStore(e.where(col("vec_id") >= 100), model, store, IvfIndex.Codec.Prefix(16))
     e.where(col("vec_id") < 100).write.mode("append").parquet(in)
-    val q = VectorStream.startSubIngest(spark, in, store, ckpt, availableNow = true)
+    val q = VectorStream.startIngest(spark, in, store, ckpt, availableNow = true)
     try q.awaitTermination() finally q.stop()
 
     // streamed vectors searchable at dist 0 through the standard sub
     // reader (cell pruning rides the second partition level)
     val probe = e.where(col("vec_id") < 100)
       .select(col("vec_id").as("qid"), col("embedding"))
-    val hits = IvfIndex.searchIndexSub(spark, store, probe, k = 1, nprobe = 8)
+    val hits = IvfIndex.searchIndex(spark, store, probe, k = 1, nprobe = 8, metric = "l2")
       .where(col("vec_id") === col("qid")).collect()
     assert(hits.length == 100 && hits.forall(_.getDouble(2) == 0.0))
     // stored prefixes equal a fresh slice
@@ -71,9 +71,9 @@ class VectorStreamSpec extends SparkSpec {
     // crash replay overwrites its own batch partition
     val before = spark.read.parquet(store).count()
     val replay = e.where(col("vec_id") < 50).select(col("vec_id"), col("embedding"))
-    VectorStream.subIngestBatch(store)(replay, 99L)
+    VectorStream.ingestBatch(store)(replay, 99L)
     val afterOnce = spark.read.parquet(store).count()
-    VectorStream.subIngestBatch(store)(replay, 99L)
+    VectorStream.ingestBatch(store)(replay, 99L)
     assert(afterOnce == before + 50)
     assert(spark.read.parquet(store).count() == afterOnce,
       "replayed batch must overwrite, not append")
@@ -86,7 +86,7 @@ class VectorStreamSpec extends SparkSpec {
     val store = Files.createTempDirectory("vsem_store").toString
 
     // corpus = vectors 100+; held-out 0..99 are the novelties
-    VectorStream.initQuantizedStore(e.where(col("vec_id") >= 100), model, store, mn, mx)
+    VectorStream.initStore(e.where(col("vec_id") >= 100), model, store, IvfIndex.Codec.Sq8(mn, mx))
     val base = spark.read.parquet(store).count()
 
     // batch 0: 10 EXACT COPIES of corpus vectors under fresh ids (+10000)
