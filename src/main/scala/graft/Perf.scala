@@ -351,8 +351,9 @@ object Perf {
       }
     }
     {
+      import graft.fixtures.MediaFixtures
       import graft.multimodal.BinaryPipeline
-      val media = BinaryPipeline.synthesizeImages(docs).localCheckpoint(true)
+      val media = MediaFixtures.synthesizeImages(docs).localCheckpoint(true)
       val totalBytes = media.agg(sum(expr("octet_length(content)"))).head().getLong(0)
       time(f"png.decode+stats (${totalBytes / 1e6}%.1f MB of real PNGs)") {
         BinaryPipeline.decodeImages(media).count()
@@ -368,9 +369,10 @@ object Perf {
       // round-14 JPEG codec probes: baseline vs progressive decode over
       // the same pixel content — progressive pays the multi-scan walk,
       // the question is how much
+      import graft.fixtures.MediaFixtures
       import graft.multimodal.BinaryPipeline
-      val jb = BinaryPipeline.synthesizeJpegs(docs).localCheckpoint(true)
-      val jp = BinaryPipeline.synthesizeJpegs(docs, progressive = true).localCheckpoint(true)
+      val jb = MediaFixtures.synthesizeJpegs(docs).localCheckpoint(true)
+      val jp = MediaFixtures.synthesizeJpegs(docs, progressive = true).localCheckpoint(true)
       val n = jb.count()
       val bBytes = jb.agg(sum(expr("octet_length(content)"))).head().getLong(0)
       val pBytes = jp.agg(sum(expr("octet_length(content)"))).head().getLong(0)
@@ -389,85 +391,86 @@ object Perf {
       // (PCM windows), µ-law, CMYK JPEG — same narrow-mapPartitions
       // contract as the PNG/JPEG probes, throughput scales with
       // executors × files
+      import graft.fixtures.MediaFixtures
       import graft.multimodal.BinaryPipeline
-      val g = BinaryPipeline.synthesizeGifs(docs).localCheckpoint(true)
+      val g = MediaFixtures.synthesizeGifs(docs).localCheckpoint(true)
       time("gif.decode (500 files, LZW + palette)") {
         BinaryPipeline.decodeGifs(g).count()
       }
-      val t = BinaryPipeline.synthesizeTiffs(docs).localCheckpoint(true)
+      val t = MediaFixtures.synthesizeTiffs(docs).localCheckpoint(true)
       time("tiff.decode (500 files, PackBits + strips + byte orders)") {
         BinaryPipeline.decodeTiffs(t).count()
       }
-      val wv = BinaryPipeline.synthesizeWavs(docs).localCheckpoint(true)
+      val wv = MediaFixtures.synthesizeWavs(docs).localCheckpoint(true)
       time("wav.decode+windows (500 files, PCM 8/16-bit)") {
         BinaryPipeline.decodeWavSegments(wv).count()
       }
-      val mu = BinaryPipeline.synthesizeMulawWavs(docs).localCheckpoint(true)
+      val mu = MediaFixtures.synthesizeMulawWavs(docs).localCheckpoint(true)
       time("mulaw.decode+windows (500 files, G.711 expansion)") {
         BinaryPipeline.decodeWavSegments(mu).count()
       }
-      val ck = BinaryPipeline.synthesizeCmykJpegs(docs).localCheckpoint(true)
+      val ck = MediaFixtures.synthesizeCmykJpegs(docs).localCheckpoint(true)
       time("jpeg.decode CMYK/YCCK (500 files, APP14 transforms)") {
         BinaryPipeline.decodeCmykJpegs(ck).count()
       }
-      val mj = BinaryPipeline.synthesizeMjpegs(docs).localCheckpoint(true)
+      val mj = MediaFixtures.synthesizeMjpegs(docs).localCheckpoint(true)
       time("mjpeg.frameTiles (500 streams, marker-walk + stride-2 decode)") {
         BinaryPipeline.decodeFrameTiles(mj, stride = 2).count()
       }
       // round-16 codec probes: the six new decode legs
-      val mp4 = BinaryPipeline.synthesizeMp4s(docs).localCheckpoint(true)
+      val mp4 = MediaFixtures.synthesizeMp4s(docs).localCheckpoint(true)
       time("mp4.frameTiles (500 files, box walk + sample tables + stride-2)") {
         BinaryPipeline.decodeFrameTiles(mp4, stride = 2).count()
       }
-      val agif = BinaryPipeline.synthesizeAnimGifs(docs).localCheckpoint(true)
+      val agif = MediaFixtures.synthesizeAnimGifs(docs).localCheckpoint(true)
       time("gif.animFrames (500 files, disposal compositing, stride 1)") {
         BinaryPipeline.decodeFrameTiles(agif, stride = 1).count()
       }
-      val pgif = BinaryPipeline.synthesizePatchGifs(docs).localCheckpoint(true)
+      val pgif = MediaFixtures.synthesizePatchGifs(docs).localCheckpoint(true)
       time("gif.patchFrames (500 files, sub-rect compositing)") {
         BinaryPipeline.decodeFrameTiles(pgif, stride = 1).count()
       }
-      val ima = BinaryPipeline.synthesizeAdpcmWavs(docs).localCheckpoint(true)
+      val ima = MediaFixtures.synthesizeAdpcmWavs(docs).localCheckpoint(true)
       time("adpcm.ima decode+windows (500 files, nibble recursion)") {
         BinaryPipeline.decodeWavSegments(ima).count()
       }
-      val msa = BinaryPipeline.synthesizeMsAdpcmWavs(docs).localCheckpoint(true)
+      val msa = MediaFixtures.synthesizeMsAdpcmWavs(docs).localCheckpoint(true)
       time("adpcm.ms decode+windows (500 files, two-tap recursion)") {
         BinaryPipeline.decodeWavSegments(msa).count()
       }
-      val mtif = BinaryPipeline.synthesizeMultiTiffs(docs).localCheckpoint(true)
+      val mtif = MediaFixtures.synthesizeMultiTiffs(docs).localCheckpoint(true)
       time("tiff.pages (500 files, 2-4 page IFD chains)") {
         BinaryPipeline.decodeTiffPages(mtif).count()
       }
 
       // round-17 codec probes: the new decode legs must hold the same
       // zero-shuffle narrow-pass throughput class
-      val dtif = BinaryPipeline.synthesizeDeflateTiffs(docs).localCheckpoint(true)
+      val dtif = MediaFixtures.synthesizeDeflateTiffs(docs).localCheckpoint(true)
       time("tiff.deflate (500 files, zlib strips + predictor)") {
         BinaryPipeline.decodeTiffs(dtif).count()
       }
-      val ttif = BinaryPipeline.synthesizeTiledTiffs(docs).localCheckpoint(true)
+      val ttif = MediaFixtures.synthesizeTiledTiffs(docs).localCheckpoint(true)
       time("tiff.tiled (500 files, 16x16 grid + edge crop)") {
         BinaryPipeline.decodeTiffs(ttif).count()
       }
-      val btif = BinaryPipeline.synthesizeBilevelTiffs(docs).localCheckpoint(true)
+      val btif = MediaFixtures.synthesizeBilevelTiffs(docs).localCheckpoint(true)
       time("tiff.bilevel (500 files, 1-bit strips/tiles)") {
         BinaryPipeline.decodeTiffs(btif).count()
       }
-      val fmp4 = BinaryPipeline.synthesizeMp4s(docs, fragmented = true)
+      val fmp4 = MediaFixtures.synthesizeMp4s(docs, fragmented = true)
         .localCheckpoint(true)
       time("mp4.fragmented (500 files, moof/trun walk + stride-2 decode)") {
         BinaryPipeline.decodeFrameTiles(fmp4).count()
       }
-      val bmp4 = BinaryPipeline.synthesizeBmp4s(docs).localCheckpoint(true)
+      val bmp4 = MediaFixtures.synthesizeBmp4s(docs).localCheckpoint(true)
       time("bmp.rle4 (500 files, nibble runs)") {
         BinaryPipeline.decodeBmps(bmp4).count()
       }
-      val ldp = BinaryPipeline.synthesizeLowDepthPngs(docs).localCheckpoint(true)
+      val ldp = MediaFixtures.synthesizeLowDepthPngs(docs).localCheckpoint(true)
       time("png.lowDepth (500 files, 1/2/4-bit packed rows)") {
         BinaryPipeline.decodeImages(ldp).count()
       }
-      val w24 = BinaryPipeline.synthesize24BitWavs(docs).localCheckpoint(true)
+      val w24 = MediaFixtures.synthesize24BitWavs(docs).localCheckpoint(true)
       time("wav.extensible24 (500 files, GUID parse + 3-byte samples)") {
         BinaryPipeline.decodeWavSegments(w24).count()
       }

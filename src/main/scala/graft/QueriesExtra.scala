@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.Queries.QueryDef
 import graft.functions.{TextFunctions, WinnowExpressions}
+import graft.fixtures.MediaFixtures
 import graft.multimodal.BinaryPipeline
 import graft.operators.{AnnLsh, IvfIndex, SimHash}
 
@@ -1279,7 +1280,7 @@ object QueriesExtra {
     // the hash gate. q_audio_segments (the byte-window shape) stays.
     "q_audio_wav" -> QueryDef(
       (s, d) => BinaryPipeline.decodeWavSegments(
-          BinaryPipeline.synthesizeWavs(Tables.documents(s, d)),
+          MediaFixtures.synthesizeWavs(Tables.documents(s, d)),
           winFrames = 160, hopFrames = 80)
         .orderBy(col("doc_id"), col("seg_idx")),
       Some("""WITH p AS (SELECT doc_id,
@@ -1316,7 +1317,7 @@ object QueriesExtra {
     // Layer III audio decode stays out of scope and rejects by name.
     "q_audio_mp3_meta" -> QueryDef(
       (s, d) => BinaryPipeline.decodeMp3Meta(
-          BinaryPipeline.synthesizeMp3s(Tables.documents(s, d)))
+          MediaFixtures.synthesizeMp3s(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id,
              |    CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
@@ -1351,7 +1352,7 @@ object QueriesExtra {
     // audio decode stays out of scope and rejects by name.
     "q_audio_ogg_meta" -> QueryDef(
       (s, d) => BinaryPipeline.decodeOggMeta(
-          BinaryPipeline.synthesizeOggs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeOggs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""SELECT doc_id,
              |  CASE doc_id % 3 WHEN 0 THEN 'vorbis' WHEN 1 THEN 'opus'
@@ -1379,7 +1380,7 @@ object QueriesExtra {
     // bit-identical to the PCM ones or the hash breaks.
     "q_audio_flac" -> QueryDef(
       (s, d) => BinaryPipeline.decodeWavSegments(
-          BinaryPipeline.synthesizeFlacs(Tables.documents(s, d)),
+          MediaFixtures.synthesizeFlacs(Tables.documents(s, d)),
           winFrames = 160, hopFrames = 80)
         .orderBy(col("doc_id"), col("seg_idx")),
       Some("""WITH p AS (SELECT doc_id,
@@ -1416,7 +1417,7 @@ object QueriesExtra {
     // the hash.
     "q_audio_mulaw" -> QueryDef(
       (s, d) => BinaryPipeline.decodeWavSegments(
-          BinaryPipeline.synthesizeMulawWavs(Tables.documents(s, d)),
+          MediaFixtures.synthesizeMulawWavs(Tables.documents(s, d)),
           winFrames = 160, hopFrames = 80)
         .orderBy(col("doc_id"), col("seg_idx")),
       Some("""WITH p AS (SELECT doc_id, 300 + doc_id % 257 AS nf FROM documents),
@@ -1449,7 +1450,7 @@ object QueriesExtra {
     // byte-blind; a sign, XOR or segment bug breaks the hash.
     "q_audio_alaw" -> QueryDef(
       (s, d) => BinaryPipeline.decodeWavSegments(
-          BinaryPipeline.synthesizeAlawWavs(Tables.documents(s, d)),
+          MediaFixtures.synthesizeAlawWavs(Tables.documents(s, d)),
           winFrames = 160, hopFrames = 80)
         .orderBy(col("doc_id"), col("seg_idx")),
       Some("""WITH p AS (SELECT doc_id, 300 + doc_id % 257 AS nf FROM documents),
@@ -1494,7 +1495,7 @@ object QueriesExtra {
     // the hash on real decoded samples, not summaries of them.
     "q_audio_adpcm" -> QueryDef(
       (s, d) => BinaryPipeline.decodeWavSegments(
-          BinaryPipeline.synthesizeAdpcmWavs(Tables.documents(s, d)),
+          MediaFixtures.synthesizeAdpcmWavs(Tables.documents(s, d)),
           winFrames = 160, hopFrames = 80)
         .orderBy(col("doc_id"), col("seg_idx")),
       Some("""WITH RECURSIVE
@@ -1557,7 +1558,7 @@ object QueriesExtra {
     // predictors).
     "q_audio_msadpcm" -> QueryDef(
       (s, d) => BinaryPipeline.decodeWavSegments(
-          BinaryPipeline.synthesizeMsAdpcmWavs(Tables.documents(s, d)),
+          MediaFixtures.synthesizeMsAdpcmWavs(Tables.documents(s, d)),
           winFrames = 160, hopFrames = 80)
         .orderBy(col("doc_id"), col("seg_idx")),
       Some("""WITH RECURSIVE
@@ -1631,7 +1632,7 @@ object QueriesExtra {
     // palette, channel order) breaks the hash gate.
     "q_image_decode" -> QueryDef(
       (s, d) => BinaryPipeline.decodeImages(
-          BinaryPipeline.synthesizeImages(Tables.documents(s, d)))
+          MediaFixtures.synthesizeImages(Tables.documents(s, d)))
         .select(col("doc_id"), col("width"), col("height"), col("bit_depth"),
           col("color_type"), col("channels"), col("r_sum"), col("g_sum"),
           col("b_sum"), col("a_sum"))
@@ -1660,7 +1661,7 @@ object QueriesExtra {
     // or byte-order bug breaks the hash.
     "q_image_interlaced" -> QueryDef(
       (s, d) => BinaryPipeline.decodeImages(
-          BinaryPipeline.synthesizeImages(Tables.documents(s, d), variantLayout = true))
+          MediaFixtures.synthesizeImages(Tables.documents(s, d), variantLayout = true))
         .select(col("doc_id"), col("width"), col("height"), col("bit_depth"),
           col("color_type"), col("channels"), col("r_sum"), col("g_sum"),
           col("b_sum"), col("a_sum"))
@@ -1691,7 +1692,7 @@ object QueriesExtra {
     // or a padding-bit leak breaks the sums.
     "q_image_png_lowdepth" -> QueryDef(
       (s, d) => BinaryPipeline.decodeImages(
-          BinaryPipeline.synthesizeLowDepthPngs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeLowDepthPngs(Tables.documents(s, d)))
         .select(col("doc_id"), col("width"), col("height"), col("bit_depth"),
           col("color_type"), col("channels"), col("r_sum"), col("g_sum"),
           col("b_sum"), col("a_sum"))
@@ -1727,7 +1728,7 @@ object QueriesExtra {
     "q_image_resize" -> QueryDef(
       (s, d) => BinaryPipeline.decodeImages(
           BinaryPipeline.resizeImages(
-            BinaryPipeline.synthesizeImages(Tables.documents(s, d)), outW = 5, outH = 4))
+            MediaFixtures.synthesizeImages(Tables.documents(s, d)), outW = 5, outH = 4))
         .select(col("doc_id"), col("width"), col("height"), col("color_type"),
           col("channels"), col("r_sum"), col("g_sum"), col("b_sum"), col("a_sum"))
         .orderBy(col("doc_id")),
@@ -1754,7 +1755,7 @@ object QueriesExtra {
     // them bit-for-bit before the shared 6-dp rounding.
     "q_image_tiles" -> QueryDef(
       (s, d) => BinaryPipeline.imageTileFeatures(
-          BinaryPipeline.synthesizeImages(Tables.documents(s, d)), gx = 2, gy = 2)
+          MediaFixtures.synthesizeImages(Tables.documents(s, d)), gx = 2, gy = 2)
         .select(col("doc_id"), posexplode(col("features")).as(Seq("dim", "v")))
         .select(col("doc_id"), col("dim").cast("long").as("dim"),
           round(col("v"), 6).as("val"))
@@ -1778,7 +1779,7 @@ object QueriesExtra {
     "q_knn_image" -> QueryDef(
       (s, d) => {
         val feats = BinaryPipeline.imageTileFeatures(
-            BinaryPipeline.synthesizeImages(Tables.documents(s, d)), gx = 2, gy = 2)
+            MediaFixtures.synthesizeImages(Tables.documents(s, d)), gx = 2, gy = 2)
           // the feature DIM varies with each image's channel count — KNN
           // compares within a modality, so rank within the RGB group
           .where(col("channels") === 3)
@@ -1818,7 +1819,7 @@ object QueriesExtra {
     // DC-prediction / restart / subsampling / IDCT bug breaks the hash.
     "q_image_jpeg" -> QueryDef(
       (s, d) => BinaryPipeline.decodeJpegs(
-          BinaryPipeline.synthesizeJpegs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeJpegs(Tables.documents(s, d)))
         .select(col("doc_id"), col("width"), col("height"), col("components"),
           col("r_sum"), col("g_sum"), col("b_sum"))
         .orderBy(col("doc_id")),
@@ -1846,7 +1847,7 @@ object QueriesExtra {
     // byte-blind.
     "q_image_gif" -> QueryDef(
       (s, d) => BinaryPipeline.decodeGifs(
-          BinaryPipeline.synthesizeGifs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeGifs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 10 + doc_id % 13 AS w, 8 + doc_id % 11 AS h,
              |    CASE WHEN doc_id % 5 = 2 THEN 4 ELSE 3 END AS ch FROM documents),
@@ -1879,7 +1880,7 @@ object QueriesExtra {
     // reordering that plain sums can't.
     "q_image_tiff" -> QueryDef(
       (s, d) => BinaryPipeline.decodeTiffs(
-          BinaryPipeline.synthesizeTiffs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeTiffs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 9 + doc_id % 13 AS w, 7 + doc_id % 11 AS h,
              |    CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS ch FROM documents),
@@ -1918,8 +1919,8 @@ object QueriesExtra {
         // cross IVF cells; 250 colors give PNG-like entropy so the
         // exact-dup-only threshold contract holds.
         val docs = Tables.documents(s, d)
-        val png = BinaryPipeline.synthesizeImages(docs.where(col("doc_id") % 2 === 0))
-        val gif = BinaryPipeline.synthesizeGifs(docs.where(col("doc_id") % 2 === 1),
+        val png = MediaFixtures.synthesizeImages(docs.where(col("doc_id") % 2 === 0))
+        val gif = MediaFixtures.synthesizeGifs(docs.where(col("doc_id") % 2 === 1),
             nColors = 250)
           .select((col("doc_id") + 400000).as("doc_id"), col("content"), col("meta"))
         val media = png.unionAll(gif)
@@ -1980,7 +1981,7 @@ object QueriesExtra {
     // the synthesis formulas alone.
     "q_image_tiles_jpeg" -> QueryDef(
       (s, d) => BinaryPipeline.imageTileFeatures(
-          BinaryPipeline.synthesizeJpegs(Tables.documents(s, d)), gx = 2, gy = 2)
+          MediaFixtures.synthesizeJpegs(Tables.documents(s, d)), gx = 2, gy = 2)
         .select(col("doc_id"), posexplode(col("features")).as(Seq("dim", "v")))
         .select(col("doc_id"), col("dim").cast("long").as("dim"),
           round(col("v"), 6).as("v"))
@@ -2006,7 +2007,7 @@ object QueriesExtra {
     // windows) keeps its gate, this one decodes.
     "q_frame_decode" -> QueryDef(
       (s, d) => BinaryPipeline.decodeFrameTiles(
-          BinaryPipeline.synthesizeMjpegs(Tables.documents(s, d)), stride = 2)
+          MediaFixtures.synthesizeMjpegs(Tables.documents(s, d)), stride = 2)
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
           col("components"), posexplode(col("features")).as(Seq("dim", "v")))
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
@@ -2038,7 +2039,7 @@ object QueriesExtra {
     // breaks the hash while a correct walk is invisible.
     "q_frame_avi" -> QueryDef(
       (s, d) => BinaryPipeline.decodeFrameTiles(
-          BinaryPipeline.synthesizeAvis(Tables.documents(s, d)), stride = 2)
+          MediaFixtures.synthesizeAvis(Tables.documents(s, d)), stride = 2)
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
           col("components"), posexplode(col("features")).as(Seq("dim", "v")))
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
@@ -2073,7 +2074,7 @@ object QueriesExtra {
     // overwhelmingly arrive in; fragmented files (moof/mvex) fail loud.
     "q_frame_mp4" -> QueryDef(
       (s, d) => BinaryPipeline.decodeFrameTiles(
-          BinaryPipeline.synthesizeMp4s(Tables.documents(s, d)), stride = 2)
+          MediaFixtures.synthesizeMp4s(Tables.documents(s, d)), stride = 2)
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
           col("components"), posexplode(col("features")).as(Seq("dim", "v")))
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
@@ -2106,7 +2107,7 @@ object QueriesExtra {
     // pick or a block-header slip breaks every tile-feature hash.
     "q_frame_mkv" -> QueryDef(
       (s, d) => BinaryPipeline.decodeFrameTiles(
-          BinaryPipeline.synthesizeMkvs(Tables.documents(s, d)), stride = 2)
+          MediaFixtures.synthesizeMkvs(Tables.documents(s, d)), stride = 2)
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
           col("components"), posexplode(col("features")).as(Seq("dim", "v")))
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
@@ -2138,7 +2139,7 @@ object QueriesExtra {
     // progressive MP4 before it.
     "q_frame_mp4_frag" -> QueryDef(
       (s, d) => BinaryPipeline.decodeFrameTiles(
-          BinaryPipeline.synthesizeMp4s(Tables.documents(s, d), fragmented = true),
+          MediaFixtures.synthesizeMp4s(Tables.documents(s, d), fragmented = true),
           stride = 2)
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
           col("components"), posexplode(col("features")).as(Seq("dim", "v")))
@@ -2173,7 +2174,7 @@ object QueriesExtra {
     // dropped frames hash-mismatches the tile features.
     "q_frame_gif" -> QueryDef(
       (s, d) => BinaryPipeline.decodeFrameTiles(
-          BinaryPipeline.synthesizeAnimGifs(Tables.documents(s, d)), stride = 1)
+          MediaFixtures.synthesizeAnimGifs(Tables.documents(s, d)), stride = 1)
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
           col("components"), posexplode(col("features")).as(Seq("dim", "v")))
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
@@ -2213,7 +2214,7 @@ object QueriesExtra {
     // position-weighted checksum.
     "q_image_tiff_lzw" -> QueryDef(
       (s, d) => BinaryPipeline.decodeTiffs(
-          BinaryPipeline.synthesizeLzwTiffs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeLzwTiffs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 9 + doc_id % 13 AS w, 7 + doc_id % 11 AS h,
              |    CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS ch FROM documents),
@@ -2236,7 +2237,7 @@ object QueriesExtra {
     // against the same byte-blind formula.
     "q_image_tiff_deflate" -> QueryDef(
       (s, d) => BinaryPipeline.decodeTiffs(
-          BinaryPipeline.synthesizeDeflateTiffs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeDeflateTiffs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 9 + doc_id % 13 AS w, 7 + doc_id % 11 AS h,
              |    CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS ch FROM documents),
@@ -2259,7 +2260,7 @@ object QueriesExtra {
     // results-invisible (the layout-invariance convention).
     "q_image_tiff_tiled" -> QueryDef(
       (s, d) => BinaryPipeline.decodeTiffs(
-          BinaryPipeline.synthesizeTiledTiffs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeTiledTiffs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 9 + doc_id % 13 AS w, 7 + doc_id % 11 AS h,
              |    CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS ch FROM documents),
@@ -2284,7 +2285,7 @@ object QueriesExtra {
     // position-weighted hash.
     "q_image_tiff_bilevel" -> QueryDef(
       (s, d) => BinaryPipeline.decodeTiffs(
-          BinaryPipeline.synthesizeBilevelTiffs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeBilevelTiffs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 17 + doc_id % 16 AS w, 13 + doc_id % 12 AS h
              |  FROM documents),
@@ -2311,7 +2312,7 @@ object QueriesExtra {
     // position-weighted hash.
     "q_image_tiff_g4" -> QueryDef(
       (s, d) => BinaryPipeline.decodeTiffs(
-          BinaryPipeline.synthesizeCcittTiffs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeCcittTiffs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 17 + doc_id % 16 AS w, 13 + doc_id % 12 AS h
              |  FROM documents),
@@ -2334,7 +2335,7 @@ object QueriesExtra {
     // results-invisible like compression and layout before it.
     "q_image_tiff_16bit" -> QueryDef(
       (s, d) => BinaryPipeline.decodeTiffs(
-          BinaryPipeline.synthesize16BitTiffs(Tables.documents(s, d)))
+          MediaFixtures.synthesize16BitTiffs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 9 + doc_id % 13 AS w, 7 + doc_id % 11 AS h,
              |    CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS ch FROM documents),
@@ -2357,7 +2358,7 @@ object QueriesExtra {
     // tiled layouts, none/LZW/Deflate rotation.
     "q_image_tiff_gray4" -> QueryDef(
       (s, d) => BinaryPipeline.decodeTiffs(
-          BinaryPipeline.synthesizeGrayTiffs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeGrayTiffs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id,
              |    CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 4 END AS d,
@@ -2381,7 +2382,7 @@ object QueriesExtra {
     // misread each break the hash.
     "q_image_bmp" -> QueryDef(
       (s, d) => BinaryPipeline.decodeBmps(
-          BinaryPipeline.synthesizeBmps(Tables.documents(s, d)))
+          MediaFixtures.synthesizeBmps(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 11 + doc_id % 13 AS w, 9 + doc_id % 11 AS h,
              |    doc_id % 3 AS mode FROM documents),
@@ -2408,7 +2409,7 @@ object QueriesExtra {
     // misplacement breaks the position-weighted hash.
     "q_image_bmp4" -> QueryDef(
       (s, d) => BinaryPipeline.decodeBmps(
-          BinaryPipeline.synthesizeBmp4s(Tables.documents(s, d)))
+          MediaFixtures.synthesizeBmp4s(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 11 + doc_id % 13 AS w, 9 + doc_id % 11 AS h
              |  FROM documents),
@@ -2434,7 +2435,7 @@ object QueriesExtra {
     // float bits breaks the hash.
     "q_audio_float" -> QueryDef(
       (s, d) => BinaryPipeline.decodeWavSegments(
-          BinaryPipeline.synthesizeFloatWavs(Tables.documents(s, d)),
+          MediaFixtures.synthesizeFloatWavs(Tables.documents(s, d)),
           winFrames = 160, hopFrames = 80)
         .orderBy(col("doc_id"), col("seg_idx")),
       Some("""WITH p AS (SELECT doc_id, 1 + doc_id % 2 AS ch,
@@ -2466,7 +2467,7 @@ object QueriesExtra {
     // one third 16-bit under the same wrapper (wrapper invisibility).
     "q_audio_24bit" -> QueryDef(
       (s, d) => BinaryPipeline.decodeWavSegments(
-          BinaryPipeline.synthesize24BitWavs(Tables.documents(s, d)),
+          MediaFixtures.synthesize24BitWavs(Tables.documents(s, d)),
           winFrames = 160, hopFrames = 80)
         .orderBy(col("doc_id"), col("seg_idx")),
       Some("""WITH p AS (SELECT doc_id, 1 + doc_id % 2 AS ch,
@@ -2502,7 +2503,7 @@ object QueriesExtra {
     // mis-followed a next-IFD pointer breaks rows or hashes.
     "q_tiff_pages" -> QueryDef(
       (s, d) => BinaryPipeline.decodeTiffPages(
-          BinaryPipeline.synthesizeMultiTiffs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeMultiTiffs(Tables.documents(s, d)))
         .orderBy(col("doc_id"), col("page_no")),
       Some("""WITH p AS (SELECT doc_id, pg,
              |    9 + (doc_id + pg) % 13 AS w, 7 + (doc_id + pg) % 11 AS h,
@@ -2534,7 +2535,7 @@ object QueriesExtra {
     // hash-mismatches the tile features.
     "q_frame_gif_patch" -> QueryDef(
       (s, d) => BinaryPipeline.decodeFrameTiles(
-          BinaryPipeline.synthesizePatchGifs(Tables.documents(s, d)), stride = 1)
+          MediaFixtures.synthesizePatchGifs(Tables.documents(s, d)), stride = 1)
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
           col("components"), posexplode(col("features")).as(Seq("dim", "v")))
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
@@ -2579,7 +2580,7 @@ object QueriesExtra {
     // blend bit or mis-walked ANMF subchunks hash-mismatches.
     "q_frame_webp" -> QueryDef(
       (s, d) => BinaryPipeline.decodeFrameTiles(
-          BinaryPipeline.synthesizeAnimWebps(Tables.documents(s, d)), stride = 1)
+          MediaFixtures.synthesizeAnimWebps(Tables.documents(s, d)), stride = 1)
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
           col("components"), posexplode(col("features")).as(Seq("dim", "v")))
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
@@ -2623,7 +2624,7 @@ object QueriesExtra {
     // the YCCK inverse breaks the hash.
     "q_image_jpeg_cmyk" -> QueryDef(
       (s, d) => BinaryPipeline.decodeCmykJpegs(
-          BinaryPipeline.synthesizeCmykJpegs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeCmykJpegs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 24 + doc_id % 13 AS w, 16 + doc_id % 11 AS h,
              |    CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 2 END AS tr FROM documents),
@@ -2650,7 +2651,7 @@ object QueriesExtra {
     // accounting or correction-bit ordering breaks the hash.
     "q_image_jpeg_prog" -> QueryDef(
       (s, d) => BinaryPipeline.decodeJpegs(
-          BinaryPipeline.synthesizeJpegs(Tables.documents(s, d), progressive = true))
+          MediaFixtures.synthesizeJpegs(Tables.documents(s, d), progressive = true))
         .select(col("doc_id"), col("width"), col("height"), col("components"),
           col("r_sum"), col("g_sum"), col("b_sum"))
         .orderBy(col("doc_id")),
@@ -2682,18 +2683,18 @@ object QueriesExtra {
         // rows into the channel gate: PNG id%3==1, JPEG/TIFF odd ids,
         // GIF everything but the id%5==2 transparent (RGBA) slice
         val docs = Tables.documents(s, d)
-        val png = BinaryPipeline.synthesizeImages(docs.where(col("doc_id") % 3 === 1))
-        val jpg = BinaryPipeline.synthesizeJpegs(docs.where(col("doc_id") % 2 === 1))
+        val png = MediaFixtures.synthesizeImages(docs.where(col("doc_id") % 3 === 1))
+        val jpg = MediaFixtures.synthesizeJpegs(docs.where(col("doc_id") % 2 === 1))
           .select((col("doc_id") + 200000).as("doc_id"), col("content"), col("meta"))
-        val gif = BinaryPipeline.synthesizeGifs(docs.where(col("doc_id") % 5 =!= 2))
+        val gif = MediaFixtures.synthesizeGifs(docs.where(col("doc_id") % 5 =!= 2))
           .select((col("doc_id") + 400000).as("doc_id"), col("content"), col("meta"))
-        val tif = BinaryPipeline.synthesizeTiffs(docs.where(col("doc_id") % 2 === 1))
+        val tif = MediaFixtures.synthesizeTiffs(docs.where(col("doc_id") % 2 === 1))
           .select((col("doc_id") + 600000).as("doc_id"), col("content"), col("meta"))
         // BMP decodes to RGB regardless of mode (round 16): no filter
-        val bmp = BinaryPipeline.synthesizeBmps(docs)
+        val bmp = MediaFixtures.synthesizeBmps(docs)
           .select((col("doc_id") + 800000).as("doc_id"), col("content"), col("meta"))
         // WebP is always RGB here (round 18 — the SIXTH format leg)
-        val webp = BinaryPipeline.synthesizeWebps(docs)
+        val webp = MediaFixtures.synthesizeWebps(docs)
           .select((col("doc_id") + 1000000).as("doc_id"), col("content"), col("meta"))
         val feats = BinaryPipeline.imageTileFeatures(
             png.unionAll(jpg).unionAll(gif).unionAll(tif).unionAll(bmp)
@@ -2784,7 +2785,7 @@ object QueriesExtra {
     // position-weighted hash.
     "q_image_webp" -> QueryDef(
       (s, d) => BinaryPipeline.decodeWebps(
-          BinaryPipeline.synthesizeWebps(Tables.documents(s, d)))
+          MediaFixtures.synthesizeWebps(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""WITH p AS (SELECT doc_id, 10 + doc_id % 11 AS w, 8 + doc_id % 9 AS h
              |  FROM documents),
@@ -2814,7 +2815,7 @@ object QueriesExtra {
     // The oracle replays every field from the id formulas byte-blind.
     "q_image_exif" -> QueryDef(
       (s, d) => BinaryPipeline.decodeExif(
-          BinaryPipeline.synthesizeExifJpegs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeExifJpegs(Tables.documents(s, d)))
         .orderBy(col("doc_id")),
       Some("""SELECT doc_id,
              |  CAST(24 + doc_id % 13 AS BIGINT) AS width,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.Queries.QueryDef
 import graft.functions.{LangFunctions, PromptFunctions, TextFunctions, VectorFunctions}
 import graft.operators.{Dedup, Knn}
+import graft.fixtures.MediaFixtures
 import graft.multimodal.BinaryPipeline
 import graft.pipeline.{ArchivePipeline, Embedder, PdfPipeline, Summarizer, WarcPipeline}
 
@@ -232,7 +233,7 @@ object QueriesPipeline {
     "q_knn_pdf_image" -> QueryDef(
       (s, d) => {
         val feats = BinaryPipeline.pdfImageTileFeatures(
-            BinaryPipeline.synthesizeImagePdfs(Tables.documents(s, d)),
+            MediaFixtures.synthesizeImagePdfs(Tables.documents(s, d)),
             gx = 2, gy = 2)
           .where((col("doc_id") + col("page")) % 6 === 3 ||
                  (col("doc_id") + col("page")) % 6 === 1)
@@ -386,7 +387,7 @@ object QueriesPipeline {
     // the hash.
     "q_pdf_images" -> QueryDef(
       (s, d) => BinaryPipeline.decodePdfImages(
-          BinaryPipeline.synthesizeImagePdfs(Tables.documents(s, d)))
+          MediaFixtures.synthesizeImagePdfs(Tables.documents(s, d)))
         .orderBy(col("doc_id"), col("page")),
       Some("""WITH pg AS (
              |  SELECT doc_id, CAST(t.p AS BIGINT) AS p, doc_id + t.p AS k

@@ -3,10 +3,11 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.multimodal.BinaryPipeline
 
 /** Archive ingest stages (round 19): synthesize per-document ZIP/TAR
   * corpus dumps from the documents table and extract them back through
-  * ArchiveCodec (CRC-32 / header-checksum verified) — batched narrow
+  * ArchiveCodec (CRC-32 / header-checksum verified) — narrow
   * mapPartitions, the codec contract. */
 object ArchivePipeline {
 
@@ -70,33 +71,25 @@ object ArchivePipeline {
 
   /** Extract every member: (id, entry_idx, name, size, content md5) —
     * integrity fields verified inside the codec. */
-  def extractArchives(archives: DataFrame, idCol: String = "doc_id",
-                      batchSize: Int = 16): DataFrame = {
+  def extractArchives(archives: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val schema = StructType(Seq(
       StructField(idCol, LongType, nullable = false),
       StructField("entry_idx", LongType, nullable = false),
       StructField("name", StringType, nullable = false),
       StructField("size", LongType, nullable = false),
       StructField("content_md5", StringType, nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    archives.select(col(idCol), col("content")).mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val content = r.getAs[Array[Byte]](1)
-          // sniff: zip / tar / gzip-wrapped tar (.tar.gz) — the gunzip
-          // is WarcCodec's strict member walk (CRC/ISIZE verified)
-          val entries =
-            if (ArchiveCodec.isZip(content)) ArchiveCodec.zipEntries(content)
-            else if (WarcCodec.isGzip(content))
-              ArchiveCodec.tarEntries(WarcCodec.gunzipAll(content))
-            else ArchiveCodec.tarEntries(content)
-          entries.zipWithIndex.map { case (e, k) =>
-            Row(id, k.toLong, e.name, e.size,
-              org.apache.commons.codec.digest.DigestUtils.md5Hex(e.data))
-          }
-        }
+    BinaryPipeline.mapMedia(archives, idCol, schema) { (id, content) =>
+      // sniff: zip / tar / gzip-wrapped tar (.tar.gz) — the gunzip
+      // is WarcCodec's strict member walk (CRC/ISIZE verified)
+      val entries =
+        if (ArchiveCodec.isZip(content)) ArchiveCodec.zipEntries(content)
+        else if (WarcCodec.isGzip(content))
+          ArchiveCodec.tarEntries(WarcCodec.gunzipAll(content))
+        else ArchiveCodec.tarEntries(content)
+      entries.iterator.zipWithIndex.map { case (e, k) =>
+        Row(id, k.toLong, e.name, e.size,
+          org.apache.commons.codec.digest.DigestUtils.md5Hex(e.data))
       }
-    }(enc)
+    }
   }
 }

@@ -12,7 +12,7 @@ import graft.functions.TextFunctions
   * (extractPDFtoTextByPage :90-132, splitText :214-245, status flow
   * :140-175). PDFBox itself is not in this container, so the page decode
   * is a clearly-marked deterministic stub — the Spark plumbing (binary
-  * column in, batched mapPartitions, page rows out) is real and is the
+  * column in, narrow mapPartitions, page rows out) is real and is the
   * part that matters at 100 TB.
   */
 object PdfPipeline {
@@ -27,21 +27,18 @@ object PdfPipeline {
     if (text.isEmpty) Seq.empty else text.grouped(pageSize).toSeq
   }
 
-  /** Binary documents → page rows. Narrow (mapPartitions, no shuffle);
-    * rows are processed in batches of `batchSize` to mirror the shape a
-    * real decoder/extractor service call wants. */
-  def extractPages(docs: DataFrame, pageSize: Int = 200, batchSize: Int = 16,
+  /** Binary documents → page rows, one document at a time. Narrow
+    * (mapPartitions, no shuffle). */
+  def extractPages(docs: DataFrame, pageSize: Int = 200,
                    idCol: String = "doc_id", contentCol: String = "content"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col(idCol).cast("long"), col(contentCol))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.flatMap { case (id, bytes) =>
-            decodePages(bytes, pageSize).iterator.zipWithIndex.map {
-              case (p, i) => PageRow(id, i + 1L, p)
-            }
+        it.flatMap { case (id, bytes) =>
+          decodePages(bytes, pageSize).iterator.zipWithIndex.map {
+            case (p, i) => PageRow(id, i + 1L, p)
           }
         }
       }
@@ -55,18 +52,16 @@ object PdfPipeline {
     * mapPartitions shape as [[extractPages]]: per-row bounded work, no
     * shuffle, no driver involvement — the property that matters when the
     * binary column is 100 TB of blobs. */
-  def extractPagesPdf(docs: DataFrame, batchSize: Int = 16,
+  def extractPagesPdf(docs: DataFrame,
                       idCol: String = "doc_id", contentCol: String = "content"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col(idCol).cast("long"), col(contentCol))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.flatMap { case (id, bytes) =>
-            PdfCodec.extractText(bytes).iterator.zipWithIndex.map {
-              case (p, i) => PageRow(id, i + 1L, p)
-            }
+        it.flatMap { case (id, bytes) =>
+          PdfCodec.extractText(bytes).iterator.zipWithIndex.map {
+            case (p, i) => PageRow(id, i + 1L, p)
           }
         }
       }

@@ -3,13 +3,14 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.multimodal.BinaryPipeline
 
 /** WARC ingest stages (round 19; hardened round 20 per VERDICT r19 #1):
   * synthesize structurally-real `.warc(.gz)` crawl files from the
   * documents table and extract them back through the full WarcCodec +
   * HtmlText path — record walk, gzip members, HTTP split, payload-
   * digest verification, TRANSFER/CONTENT decoding, CHARSET resolution,
-  * CONTENT-TYPE gating, HTML→text — as batched narrow mapPartitions
+  * CONTENT-TYPE gating, HTML→text — as narrow mapPartitions
   * (the codec contract: row-local, zero-shuffle, scales with
   * partitions). */
 object WarcPipeline {
@@ -197,8 +198,7 @@ object WarcPipeline {
     * extraction. Text rows report text metrics (code-point length,
     * md5); binary rows report byte metrics; each row carries its
     * resolved charset label and kind. */
-  def extractWarcs(warcs: DataFrame, idCol: String = "doc_id",
-                   batchSize: Int = 16): DataFrame = {
+  def extractWarcs(warcs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val schema = StructType(Seq(
       StructField(idCol, LongType, nullable = false),
       StructField("rec_idx", LongType, nullable = false),
@@ -214,59 +214,53 @@ object WarcPipeline {
       StructField("byte_len", LongType, nullable = false),
       StructField("byte_sum", LongType, nullable = false),
       StructField("payload_digest", StringType, nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    warcs.select(col(idCol), col("content")).mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val recs = WarcCodec.records(r.getAs[Array[Byte]](1))
-          recs.filter(r => r.warcType == "response" ||
-              r.warcType == "revisit").zipWithIndex.map {
-            case (rec, idx) =>
-              val mime = rec.httpContentType
-                .map(_.takeWhile(_ != ';').trim
-                  .toLowerCase(java.util.Locale.ROOT))
-              val url = rec.targetUri.getOrElse("")
-              val status = rec.httpStatus.getOrElse(-1).toLong
-              val digest = rec.payloadDigest.getOrElse("")
-              if (rec.warcType == "revisit")
-                // crawl-dedup wire form: no body — the digest NAMES the
-                // original payload; resolution happens downstream
-                // (q_e2e_crawl joins it back to the referred response)
-                Row(id, idx.toLong, recs.length.toLong, status, url,
-                  rec.digestVerified, "revisit", "", "", 0L, "", 0L, 0L,
-                  digest)
-              else mime match {
-                case Some("text/html") | Some("application/xhtml+xml") =>
-                  val (decoded, charset) = WarcCodec.HttpCharset
-                    .decodeText(rec.payload, rec.httpContentType)
-                  val (text, title) = HtmlText.extractWithTitle(decoded)
-                  Row(id, idx.toLong, recs.length.toLong, status, url,
-                    rec.digestVerified, "html", charset, title,
-                    // CODE-POINT length (SQL length() semantics)
-                    text.codePointCount(0, text.length).toLong,
-                    org.apache.commons.codec.digest.DigestUtils.md5Hex(
-                      text.getBytes(UTF_8)), 0L, 0L, digest)
-                case Some("text/plain") =>
-                  val (decoded, charset) = WarcCodec.HttpCharset
-                    .decodeText(rec.payload, rec.httpContentType)
-                  val text = collapseWs(decoded)
-                  Row(id, idx.toLong, recs.length.toLong, status, url,
-                    rec.digestVerified, "plain", charset, "",
-                    text.codePointCount(0, text.length).toLong,
-                    org.apache.commons.codec.digest.DigestUtils.md5Hex(
-                      text.getBytes(UTF_8)), 0L, 0L, digest)
-                case _ =>
-                  var sum = 0L
-                  rec.payload.foreach(b => sum += (b & 0xff))
-                  Row(id, idx.toLong, recs.length.toLong, status, url,
-                    rec.digestVerified, "binary", "", "", 0L, "",
-                    rec.payload.length.toLong, sum, digest)
-              }
+    BinaryPipeline.mapMedia(warcs, idCol, schema) { (id, content) =>
+      val recs = WarcCodec.records(content)
+      recs.iterator.filter(r => r.warcType == "response" ||
+          r.warcType == "revisit").zipWithIndex.map {
+        case (rec, idx) =>
+          val mime = rec.httpContentType
+            .map(_.takeWhile(_ != ';').trim
+              .toLowerCase(java.util.Locale.ROOT))
+          val url = rec.targetUri.getOrElse("")
+          val status = rec.httpStatus.getOrElse(-1).toLong
+          val digest = rec.payloadDigest.getOrElse("")
+          if (rec.warcType == "revisit")
+            // crawl-dedup wire form: no body — the digest NAMES the
+            // original payload; resolution happens downstream
+            // (q_e2e_crawl joins it back to the referred response)
+            Row(id, idx.toLong, recs.length.toLong, status, url,
+              rec.digestVerified, "revisit", "", "", 0L, "", 0L, 0L,
+              digest)
+          else mime match {
+            case Some("text/html") | Some("application/xhtml+xml") =>
+              val (decoded, charset) = WarcCodec.HttpCharset
+                .decodeText(rec.payload, rec.httpContentType)
+              val (text, title) = HtmlText.extractWithTitle(decoded)
+              Row(id, idx.toLong, recs.length.toLong, status, url,
+                rec.digestVerified, "html", charset, title,
+                // CODE-POINT length (SQL length() semantics)
+                text.codePointCount(0, text.length).toLong,
+                org.apache.commons.codec.digest.DigestUtils.md5Hex(
+                  text.getBytes(UTF_8)), 0L, 0L, digest)
+            case Some("text/plain") =>
+              val (decoded, charset) = WarcCodec.HttpCharset
+                .decodeText(rec.payload, rec.httpContentType)
+              val text = collapseWs(decoded)
+              Row(id, idx.toLong, recs.length.toLong, status, url,
+                rec.digestVerified, "plain", charset, "",
+                text.codePointCount(0, text.length).toLong,
+                org.apache.commons.codec.digest.DigestUtils.md5Hex(
+                  text.getBytes(UTF_8)), 0L, 0L, digest)
+            case _ =>
+              var sum = 0L
+              rec.payload.foreach(b => sum += (b & 0xff))
+              Row(id, idx.toLong, recs.length.toLong, status, url,
+                rec.digestVerified, "binary", "", "", 0L, "",
+                rec.payload.length.toLong, sum, digest)
           }
-        }
       }
-    }(enc)
+    }
   }
 
   /** PDF payloads out of the crawl (round 20): every
@@ -274,36 +268,29 @@ object WarcPipeline {
     * OWN PdfCodec text extraction — the reference ingests PDFs from
     * blob storage (Function.java:90-132); a crawl-scale corpus ingests
     * the same documents out of WARC responses. One row per PDF page:
-    * (doc_id, page_no, page_len code points, page_md5). Batched narrow
+    * (doc_id, page_no, page_len code points, page_md5). Narrow
     * mapPartitions, the codec contract. */
-  def extractPdfPayloads(warcs: DataFrame, idCol: String = "doc_id",
-                         batchSize: Int = 16): DataFrame = {
+  def extractPdfPayloads(warcs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val schema = StructType(Seq(
       StructField(idCol, LongType, nullable = false),
       StructField("page_no", LongType, nullable = false),
       StructField("page_len", LongType, nullable = false),
       StructField("page_md5", StringType, nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    warcs.select(col(idCol), col("content")).mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          WarcCodec.records(r.getAs[Array[Byte]](1))
-            .filter(rec => rec.warcType == "response" &&
-              rec.httpContentType.exists(_.toLowerCase(java.util.Locale.ROOT)
-                .startsWith("application/pdf")))
-            .flatMap { rec =>
-              PdfCodec.extractText(rec.payload).zipWithIndex.map {
-                case (page, k) =>
-                  Row(id, (k + 1).toLong,
-                    page.codePointCount(0, page.length).toLong,
-                    org.apache.commons.codec.digest.DigestUtils.md5Hex(
-                      page.getBytes(UTF_8)))
-              }
-            }
+    BinaryPipeline.mapMedia(warcs, idCol, schema) { (id, content) =>
+      WarcCodec.records(content).iterator
+        .filter(rec => rec.warcType == "response" &&
+          rec.httpContentType.exists(_.toLowerCase(java.util.Locale.ROOT)
+            .startsWith("application/pdf")))
+        .flatMap { rec =>
+          PdfCodec.extractText(rec.payload).zipWithIndex.map {
+            case (page, k) =>
+              Row(id, (k + 1).toLong,
+                page.codePointCount(0, page.length).toLong,
+                org.apache.commons.codec.digest.DigestUtils.md5Hex(
+                  page.getBytes(UTF_8)))
+          }
         }
-      }
-    }(enc)
+    }
   }
 
   /** REVISIT RESOLUTION — the digest-keyed join every crawl-dedup

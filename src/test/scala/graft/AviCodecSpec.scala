@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{AviCodec, BinaryPipeline, JpegCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -124,8 +125,8 @@ class AviCodecSpec extends AnyFunSuite with SparkSpec {
       BinaryPipeline.decodeFrameTiles(df, stride = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           r.getSeq[Double](5).toList)).toSet
-    assert(rows(BinaryPipeline.synthesizeAvis(docs)) ==
-      rows(BinaryPipeline.synthesizeMjpegs(docs)),
+    assert(rows(MediaFixtures.synthesizeAvis(docs)) ==
+      rows(MediaFixtures.synthesizeMjpegs(docs)),
       "AVI-wrapped frames diverged from the bare concatenated-JPEG stream")
   }
 }

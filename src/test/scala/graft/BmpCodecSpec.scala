@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, BmpCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -264,7 +265,7 @@ class BmpCodecSpec extends AnyFunSuite with SparkSpec {
   test("synthesizeBmps → decodeBmps matches an independent recompute (all three modes)") {
     import spark.implicits._
     val ids = Seq(0L, 1L, 2L, 7L).toDF("doc_id") // covers modes 0/1/2
-    val got = BinaryPipeline.decodeBmps(BinaryPipeline.synthesizeBmps(ids))
+    val got = BinaryPipeline.decodeBmps(MediaFixtures.synthesizeBmps(ids))
       .orderBy("doc_id")
       .as[(Long, Long, Long, Long, Long, Long, Long)].collect()
     val want = Seq(0L, 1L, 2L, 7L).map { id =>

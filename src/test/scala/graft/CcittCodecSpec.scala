@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, CcittCodec, TiffCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -253,9 +254,9 @@ class CcittCodecSpec extends AnyFunSuite with SparkSpec {
     // must produce the exact same decoded feature rows as the
     // none/PackBits/Deflate bilevel corpus
     val docs = spark.range(0, 24).toDF("doc_id")
-    val a = BinaryPipeline.decodeTiffs(BinaryPipeline.synthesizeCcittTiffs(docs))
+    val a = BinaryPipeline.decodeTiffs(MediaFixtures.synthesizeCcittTiffs(docs))
       .orderBy(col("doc_id")).collect().toSeq
-    val b = BinaryPipeline.decodeTiffs(BinaryPipeline.synthesizeBilevelTiffs(docs))
+    val b = BinaryPipeline.decodeTiffs(MediaFixtures.synthesizeBilevelTiffs(docs))
       .orderBy(col("doc_id")).collect().toSeq
     assert(a == b)
   }

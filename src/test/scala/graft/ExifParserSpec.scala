@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, ExifParser, JpegCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -136,7 +137,7 @@ class ExifParserSpec extends AnyFunSuite with SparkSpec {
 
   test("synthesizeExifJpegs → decodeExif matches the formula recompute") {
     val docs = spark.range(0, 24).toDF("doc_id")
-    val got = BinaryPipeline.decodeExif(BinaryPipeline.synthesizeExifJpegs(docs))
+    val got = BinaryPipeline.decodeExif(MediaFixtures.synthesizeExifJpegs(docs))
       .orderBy(col("doc_id")).collect()
     got.foreach { r =>
       val id = r.getLong(0)

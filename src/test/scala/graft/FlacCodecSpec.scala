@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, FlacCodec, WavCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -121,10 +122,10 @@ class FlacCodecSpec extends AnyFunSuite with SparkSpec {
     // lossless invariance is the oracle's premise: the FLAC corpus must
     // produce the exact same window-feature rows as the PCM WAV corpus
     val docs = spark.range(0, 24).toDF("doc_id")
-    val a = BinaryPipeline.decodeWavSegments(BinaryPipeline.synthesizeFlacs(docs),
+    val a = BinaryPipeline.decodeWavSegments(MediaFixtures.synthesizeFlacs(docs),
         winFrames = 160, hopFrames = 80)
       .orderBy(col("doc_id"), col("seg_idx")).collect().toSeq
-    val b = BinaryPipeline.decodeWavSegments(BinaryPipeline.synthesizeWavs(docs),
+    val b = BinaryPipeline.decodeWavSegments(MediaFixtures.synthesizeWavs(docs),
         winFrames = 160, hopFrames = 80)
       .orderBy(col("doc_id"), col("seg_idx")).collect().toSeq
     assert(a == b)

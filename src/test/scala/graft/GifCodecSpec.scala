@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, GifCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -260,7 +261,7 @@ class GifCodecSpec extends AnyFunSuite with SparkSpec {
   test("synthesizeGifs → decodeGifs matches an independent recompute incl. weighted checksum") {
     import spark.implicits._
     val docs = (0L until 20L).toDF("doc_id")
-    val out = BinaryPipeline.decodeGifs(BinaryPipeline.synthesizeGifs(docs))
+    val out = BinaryPipeline.decodeGifs(MediaFixtures.synthesizeGifs(docs))
       .orderBy("doc_id").collect()
     assert(out.length == 20)
     out.foreach { r =>

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import graft.fixtures.MediaFixtures
 import graft.multimodal.BinaryPipeline
 import graft.streaming.ImageStream
 
@@ -12,7 +13,7 @@ class ImageStreamSpec extends SparkSpec {
 
   test("streamed images decode to features; replay converges; KNN serves the store") {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id")).where(col("doc_id") < 60)
-    val media = BinaryPipeline.synthesizeImages(docs)
+    val media = MediaFixtures.synthesizeImages(docs)
       .select(col("doc_id"), col("content")).localCheckpoint(true)
     val in = Files.createTempDirectory("istream_in").toString
     val store = Files.createTempDirectory("istream_store").toString + "/feat"
@@ -72,11 +73,11 @@ class ImageStreamSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id")).where(col("doc_id") < 10)
     def slim(df: org.apache.spark.sql.DataFrame, offset: Long) =
       df.select((col("doc_id") + offset).as("doc_id"), col("content"))
-    val mixed = slim(BinaryPipeline.synthesizeImages(docs), 0)
-      .unionAll(slim(BinaryPipeline.synthesizeJpegs(docs), 1000))
-      .unionAll(slim(BinaryPipeline.synthesizeGifs(docs), 2000))
-      .unionAll(slim(BinaryPipeline.synthesizeTiffs(docs), 3000))
-      .unionAll(slim(BinaryPipeline.synthesizeBmps(docs), 4000))
+    val mixed = slim(MediaFixtures.synthesizeImages(docs), 0)
+      .unionAll(slim(MediaFixtures.synthesizeJpegs(docs), 1000))
+      .unionAll(slim(MediaFixtures.synthesizeGifs(docs), 2000))
+      .unionAll(slim(MediaFixtures.synthesizeTiffs(docs), 3000))
+      .unionAll(slim(MediaFixtures.synthesizeBmps(docs), 4000))
       .localCheckpoint(true)
     val store = Files.createTempDirectory("istream_mix").toString + "/feat"
     ImageStream.featuresBatch(store, gx = 2, gy = 2)(mixed, 0L)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, MkvCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -107,7 +108,7 @@ class MkvCodecSpec extends AnyFunSuite with SparkSpec {
   test("synthesizeMkvs → decodeFrameTiles matches the JPEG formula recompute") {
     val docs = spark.range(0, 12).toDF("doc_id")
     val got = BinaryPipeline.decodeFrameTiles(
-        BinaryPipeline.synthesizeMkvs(docs), stride = 2)
+        MediaFixtures.synthesizeMkvs(docs), stride = 2)
       .orderBy(col("doc_id"), col("frame_idx")).collect()
     var n = 0
     (0L until 12L).foreach { id =>

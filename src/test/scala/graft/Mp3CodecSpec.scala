@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, Mp3Codec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -160,7 +161,7 @@ class Mp3CodecSpec extends AnyFunSuite with SparkSpec {
 
   test("synthesizeMp3s → decodeMp3Meta matches the formula recompute") {
     val docs = spark.range(0, 24).toDF("doc_id")
-    val got = BinaryPipeline.decodeMp3Meta(BinaryPipeline.synthesizeMp3s(docs))
+    val got = BinaryPipeline.decodeMp3Meta(MediaFixtures.synthesizeMp3s(docs))
       .orderBy(col("doc_id")).collect()
     got.foreach { r =>
       val id = r.getLong(0)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, JpegCodec, Mp4Codec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -206,12 +207,12 @@ class Mp4CodecSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val ids = Seq(3L, 4L, 9L).toDF("doc_id")
     val viaMp4 = BinaryPipeline.decodeFrameTiles(
-        BinaryPipeline.synthesizeMp4s(ids), stride = 2)
+        MediaFixtures.synthesizeMp4s(ids), stride = 2)
       .orderBy("doc_id", "frame_idx")
       .select("doc_id", "frame_idx", "width", "height", "components", "features")
       .collect()
     val viaMjpeg = BinaryPipeline.decodeFrameTiles(
-        BinaryPipeline.synthesizeMjpegs(ids), stride = 2)
+        MediaFixtures.synthesizeMjpegs(ids), stride = 2)
       .orderBy("doc_id", "frame_idx")
       .select("doc_id", "frame_idx", "width", "height", "components", "features")
       .collect()

@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, OggCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -148,7 +149,7 @@ class OggCodecSpec extends AnyFunSuite with SparkSpec {
 
   test("synthesizeOggs → decodeOggMeta matches the formula recompute") {
     val docs = spark.range(0, 24).toDF("doc_id")
-    val got = BinaryPipeline.decodeOggMeta(BinaryPipeline.synthesizeOggs(docs))
+    val got = BinaryPipeline.decodeOggMeta(MediaFixtures.synthesizeOggs(docs))
       .orderBy(col("doc_id")).collect()
     got.foreach { r =>
       val id = r.getLong(0)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.BinaryPipeline
 import graft.pipeline.PdfCodec
 import org.apache.spark.sql.functions._
@@ -246,7 +247,7 @@ class PdfImageSpec extends AnyFunSuite with SparkSpec {
 
   test("synthesizeImagePdfs → decodePdfImages matches the formula recompute") {
     val docs = spark.range(0, 18).toDF("doc_id")
-    val got = BinaryPipeline.decodePdfImages(BinaryPipeline.synthesizeImagePdfs(docs))
+    val got = BinaryPipeline.decodePdfImages(MediaFixtures.synthesizeImagePdfs(docs))
       .orderBy(col("doc_id"), col("page")).collect()
     var n = 0
     (0L until 18L).foreach { id =>

@@ -1,7 +1,11 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, PngCodec}
+import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** PngCodec: real decode against HAND-AUTHORED committed fixtures (built
@@ -346,7 +350,7 @@ class PngCodecSpec extends AnyFunSuite with SparkSpec {
   test("decodeImages over synthesized corpus: sums match an independent recompute") {
     import spark.implicits._
     val docs = (0L until 12L).toDF("doc_id")
-    val out = BinaryPipeline.decodeImages(BinaryPipeline.synthesizeImages(docs))
+    val out = BinaryPipeline.decodeImages(MediaFixtures.synthesizeImages(docs))
       .orderBy("doc_id").collect()
     assert(out.length == 12)
     out.foreach { r =>
@@ -364,5 +368,70 @@ class PngCodecSpec extends AnyFunSuite with SparkSpec {
       assert(r.getLong(6) == slotSum(0) && r.getLong(7) == slotSum(1) &&
         r.getLong(8) == slotSum(2) && r.getLong(9) == slotSum(3), s"doc $id sums")
     }
+  }
+
+  /** Every field's name, type and nullability (array elements too), in
+    * order — the parts of a schema a row-mapper helper could silently
+    * reorder or widen. */
+  private def ddl(t: DataType): String = t match {
+    case st: StructType => st.fields.map(f =>
+      s"${f.name} ${ddl(f.dataType)}${if (f.nullable) "" else " NOT NULL"}").mkString("STRUCT<", ", ", ">")
+    case a: ArrayType => s"ARRAY<${ddl(a.elementType)}${if (a.containsNull) "" else " NOT NULL"}>"
+    case o => o.sql
+  }
+
+  test("every public BinaryPipeline op keeps its output schema (names, types, nullability, order)") {
+    import spark.implicits._
+    val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val media = BinaryPipeline.asMedia(docs)
+    // the schemas the DuckDB oracles and downstream callers are written against
+    val pins: Seq[(String, DataFrame, String)] = Seq(
+      ("asMedia", BinaryPipeline.asMedia(docs), "STRUCT<doc_id BIGINT NOT NULL, content BINARY, meta STRUCT<media_type STRING NOT NULL, declared_bytes BIGINT> NOT NULL>"),
+      ("frameSample", BinaryPipeline.frameSample(media), "STRUCT<doc_id BIGINT NOT NULL, frame_idx BIGINT NOT NULL, byte_offset BIGINT NOT NULL, frame_md5 STRING NOT NULL>"),
+      ("segmentAudio", BinaryPipeline.segmentAudio(media), "STRUCT<doc_id BIGINT NOT NULL, seg_idx BIGINT NOT NULL, byte_offset BIGINT NOT NULL, seg_len BIGINT NOT NULL, energy BIGINT NOT NULL, seg_md5 STRING NOT NULL>"),
+      ("decodeOggMeta", BinaryPipeline.decodeOggMeta(media), "STRUCT<doc_id BIGINT NOT NULL, codec STRING NOT NULL, sample_rate BIGINT NOT NULL, channels BIGINT NOT NULL, duration_ms BIGINT NOT NULL, page_count BIGINT NOT NULL, title STRING NOT NULL, artist STRING NOT NULL, album STRING NOT NULL>"),
+      ("decodeMp3Meta", BinaryPipeline.decodeMp3Meta(media), "STRUCT<doc_id BIGINT NOT NULL, sample_rate BIGINT NOT NULL, channels BIGINT NOT NULL, frame_count BIGINT NOT NULL, audio_bytes BIGINT NOT NULL, duration_ms BIGINT NOT NULL, title STRING NOT NULL, artist STRING NOT NULL, album STRING NOT NULL>"),
+      ("decodeWavSegments", BinaryPipeline.decodeWavSegments(media), "STRUCT<doc_id BIGINT NOT NULL, seg_idx BIGINT NOT NULL, sample_rate BIGINT NOT NULL, channels BIGINT NOT NULL, bits BIGINT NOT NULL, n_frames BIGINT NOT NULL, sq_sum BIGINT NOT NULL, zero_crossings BIGINT NOT NULL>"),
+      ("decodeImages", BinaryPipeline.decodeImages(media), "STRUCT<doc_id BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, bit_depth BIGINT NOT NULL, color_type BIGINT NOT NULL, channels BIGINT NOT NULL, r_sum BIGINT NOT NULL, g_sum BIGINT NOT NULL, b_sum BIGINT NOT NULL, a_sum BIGINT NOT NULL, pixel_md5 STRING NOT NULL>"),
+      ("decodeExif", BinaryPipeline.decodeExif(media), "STRUCT<doc_id BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, orientation BIGINT NOT NULL, oriented_width BIGINT NOT NULL, oriented_height BIGINT NOT NULL, make STRING NOT NULL, model STRING NOT NULL, date_time STRING NOT NULL>"),
+      ("decodePdfImages", BinaryPipeline.decodePdfImages(media), "STRUCT<doc_id BIGINT NOT NULL, page BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, channels BIGINT NOT NULL, r_sum BIGINT NOT NULL, g_sum BIGINT NOT NULL, b_sum BIGINT NOT NULL>"),
+      ("decodeTiffs", BinaryPipeline.decodeTiffs(media), "STRUCT<doc_id BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, channels BIGINT NOT NULL, r_sum BIGINT NOT NULL, g_sum BIGINT NOT NULL, b_sum BIGINT NOT NULL, weighted_sum BIGINT NOT NULL>"),
+      ("decodeBmps", BinaryPipeline.decodeBmps(media), "STRUCT<doc_id BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, r_sum BIGINT NOT NULL, g_sum BIGINT NOT NULL, b_sum BIGINT NOT NULL, weighted_sum BIGINT NOT NULL>"),
+      ("decodeWebps", BinaryPipeline.decodeWebps(media), "STRUCT<doc_id BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, channels BIGINT NOT NULL, r_sum BIGINT NOT NULL, g_sum BIGINT NOT NULL, b_sum BIGINT NOT NULL, weighted_sum BIGINT NOT NULL>"),
+      ("decodeTiffPages", BinaryPipeline.decodeTiffPages(media), "STRUCT<doc_id BIGINT NOT NULL, page_no BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, channels BIGINT NOT NULL, r_sum BIGINT NOT NULL, g_sum BIGINT NOT NULL, b_sum BIGINT NOT NULL, weighted_sum BIGINT NOT NULL>"),
+      ("decodeFrameTiles", BinaryPipeline.decodeFrameTiles(media), "STRUCT<doc_id BIGINT NOT NULL, frame_idx BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, components BIGINT NOT NULL, features ARRAY<DOUBLE NOT NULL> NOT NULL>"),
+      ("decodeCmykJpegs", BinaryPipeline.decodeCmykJpegs(media), "STRUCT<doc_id BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, components BIGINT NOT NULL, c_sum BIGINT NOT NULL, m_sum BIGINT NOT NULL, y_sum BIGINT NOT NULL, k_sum BIGINT NOT NULL>"),
+      ("decodeJpegs", BinaryPipeline.decodeJpegs(media), "STRUCT<doc_id BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, components BIGINT NOT NULL, r_sum BIGINT NOT NULL, g_sum BIGINT NOT NULL, b_sum BIGINT NOT NULL, pixel_md5 STRING NOT NULL>"),
+      ("resizeImages", BinaryPipeline.resizeImages(media, 4, 4), "STRUCT<doc_id BIGINT NOT NULL, content BINARY NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL>"),
+      ("decodeGifs", BinaryPipeline.decodeGifs(media), "STRUCT<doc_id BIGINT NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, channels BIGINT NOT NULL, r_sum BIGINT NOT NULL, g_sum BIGINT NOT NULL, b_sum BIGINT NOT NULL, a_sum BIGINT NOT NULL, weighted_sum BIGINT NOT NULL>"),
+      ("imageTileFeatures", BinaryPipeline.imageTileFeatures(media), "STRUCT<doc_id BIGINT NOT NULL, features ARRAY<DOUBLE NOT NULL> NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, channels BIGINT NOT NULL>"),
+      ("pdfImageTileFeatures", BinaryPipeline.pdfImageTileFeatures(media), "STRUCT<doc_id BIGINT NOT NULL, page BIGINT NOT NULL, features ARRAY<DOUBLE NOT NULL> NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, channels BIGINT NOT NULL>"),
+      ("extractFeatures", BinaryPipeline.extractFeatures(media), "STRUCT<doc_id BIGINT NOT NULL, byte_len BIGINT NOT NULL, content_md5 STRING NOT NULL, width BIGINT NOT NULL, height BIGINT NOT NULL, media_type STRING>"))
+    // a new public op must join the table (mapMedia is the shared helper)
+    val publicOps = BinaryPipeline.getClass.getMethods
+      .filter(_.getReturnType == classOf[DataFrame]).map(_.getName).toSet - "mapMedia"
+    assert(publicOps == pins.map(_._1).toSet, "ops without a schema pin")
+    pins.foreach { case (op, df, want) => assert(ddl(df.schema) == want, op) }
+  }
+
+  test("the media codec library holds no fixture generators and no no-op decode batching") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root (no ${root.getAbsolutePath})")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    def scalaFiles(d: java.io.File) = files(d).filter(_.getName.endsWith(".scala"))
+    def text(f: java.io.File) = new String(Files.readAllBytes(f.toPath), "UTF-8")
+    val synthesizers = scalaFiles(new java.io.File(root, "graft/multimodal"))
+      .filter(f => text(f).contains("def synthesize"))
+    assert(synthesizers.isEmpty,
+      s"fixture generators in the codec library: ${synthesizers.mkString(", ")} — " +
+        "they belong in graft.fixtures.MediaFixtures")
+    // only the model-call stages batch for real: one request per batch
+    val batching = scalaFiles(root).filter(f => text(f).contains("grouped(batchSize)"))
+      .map(_.getName).toSet
+    val modelCalls = Set("Embedder.scala", "Summarizer.scala", "SparseKnn.scala")
+    assert(batching.subsetOf(modelCalls),
+      s"no-op grouped(batchSize) in ${(batching -- modelCalls).mkString(", ")} — " +
+        "decode shells run one row at a time through BinaryPipeline.mapMedia")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, TiffCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -447,7 +448,7 @@ class TiffCodecSpec extends AnyFunSuite with SparkSpec {
   test("synthesizeTiffs → decodeTiffs matches an independent recompute") {
     import spark.implicits._
     val docs = (0L until 20L).toDF("doc_id")
-    val out = BinaryPipeline.decodeTiffs(BinaryPipeline.synthesizeTiffs(docs))
+    val out = BinaryPipeline.decodeTiffs(MediaFixtures.synthesizeTiffs(docs))
       .orderBy("doc_id").collect()
     assert(out.length == 20)
     out.foreach { r =>

@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, WavCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -214,7 +215,7 @@ class WavCodecSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val ids = Seq(2L, 7L, 11L).toDF("doc_id")
     val got = BinaryPipeline.decodeWavSegments(
-        BinaryPipeline.synthesizeAdpcmWavs(ids), winFrames = 160, hopFrames = 80)
+        MediaFixtures.synthesizeAdpcmWavs(ids), winFrames = 160, hopFrames = 80)
       .orderBy("doc_id", "seg_idx")
       .select("doc_id", "seg_idx", "n_frames", "sq_sum", "zero_crossings")
       .as[(Long, Long, Long, Long, Long)].collect()
@@ -270,7 +271,7 @@ class WavCodecSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val ids = Seq(0L, 5L, 9L).toDF("doc_id")
     val got = BinaryPipeline.decodeWavSegments(
-        BinaryPipeline.synthesizeMsAdpcmWavs(ids), winFrames = 160, hopFrames = 80)
+        MediaFixtures.synthesizeMsAdpcmWavs(ids), winFrames = 160, hopFrames = 80)
       .orderBy("doc_id", "seg_idx")
       .select("doc_id", "seg_idx", "n_frames", "sq_sum", "zero_crossings")
       .as[(Long, Long, Long, Long, Long)].collect()
@@ -454,7 +455,7 @@ class WavCodecSpec extends AnyFunSuite with SparkSpec {
   test("synthesizeWavs → decodeWavSegments matches an independent recompute") {
     import spark.implicits._
     val docs = (0L until 8L).toDF("doc_id")
-    val out = BinaryPipeline.decodeWavSegments(BinaryPipeline.synthesizeWavs(docs))
+    val out = BinaryPipeline.decodeWavSegments(MediaFixtures.synthesizeWavs(docs))
       .orderBy("doc_id", "seg_idx").collect()
     out.groupBy(_.getLong(0)).foreach { case (id, rows) =>
       val ch = (1 + id % 2).toInt

@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.MediaFixtures
 import graft.multimodal.{BinaryPipeline, WebpCodec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -309,7 +310,7 @@ class WebpCodecSpec extends AnyFunSuite with SparkSpec {
 
   test("synthesizeWebps → decodeWebps matches an independent recompute") {
     val docs = spark.range(0, 24).toDF("doc_id")
-    val got = BinaryPipeline.decodeWebps(BinaryPipeline.synthesizeWebps(docs))
+    val got = BinaryPipeline.decodeWebps(MediaFixtures.synthesizeWebps(docs))
       .orderBy(col("doc_id")).collect()
     got.foreach { r =>
       val id = r.getLong(0)
