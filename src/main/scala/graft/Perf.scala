@@ -337,7 +337,7 @@ object Perf {
       // cells — the locality a per-document re-upload actually has)
       // against the 100k store: only those partitions rewrite, vs the
       // full-rebuild alternative touching every byte
-      val twoCells = spark.read.parquet(dir).where(col("cell").isin(0, 1))
+      val twoCells = IvfIndex.probedScan(spark, dir, Seq(0, 1))
         .select(col("vec_id"), col("embedding")).limit(1000).localCheckpoint(true)
       val preBytes = dirBytes(dir)
       time("upsert.partial (1k cell-local batch, affected cells only)") {

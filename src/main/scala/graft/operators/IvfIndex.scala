@@ -3,14 +3,14 @@ package graft.operators
 import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, StructType}
 import graft.functions.{HalfExpressions, VectorFunctions}
 
 /** IVF (inverted-file) ANN — the second scale path beside [[AnnLsh]]:
@@ -40,12 +40,16 @@ object IvfIndex {
       * lower cell id — driver-local math on the (k × dim) matrix, the
       * ranking [[cellsOf]] computes per row. The planner's fixed-probe
       * rewrite and its iterative leaf both probe with it. */
-    def nearestCells(q: Array[Double], nprobe: Int): Seq[Int] =
+    def nearestCells(q: Array[Double], nprobe: Int): Seq[Int] = {
+      val dim = centroids.headOption.map(_.length).getOrElse(0)
+      if (q.length != dim) throw new IllegalArgumentException(
+        s"ivf_cells: vector dimension ${q.length} != centroid dimension $dim")
       centroids.zipWithIndex.map { case (c, i) =>
         var d = 0.0; var j = 0
         while (j < q.length) { val x = q(j) - c(j); d += x * x; j += 1 }
         (d, i)
       }.sortBy(identity).take(math.max(1, nprobe)).map(_._2).toSeq
+    }
   }
 
   /** Nearest-centroid id (argmin L2). Whole-stage-codegen'd (runs once per
@@ -416,23 +420,78 @@ object IvfIndex {
   }
 
   /** The planner's [[readStore]]: None when `path` carries no IVF store;
-    * cached per path, keyed by the centroid sidecar's length+mtime (a
-    * rebuild rewrites it). Keyed by PATH with the stamp beside the value,
-    * so a rebuild replaces the entry instead of leaking the old models. */
-  private[graft] def plannedStore(spark: SparkSession, path: String): Option[Store] = {
+    * cached per path ([[stamped]]). */
+  private[graft] def plannedStore(spark: SparkSession, path: String): Option[Store] =
+    stamped(spark, path, storeCache)(readStore(spark, path))
+  private val storeCache = TrieMap.empty[String, (String, Store)]
+
+  /** The store's read schema — data columns, then its partition columns
+    * — resolved from one cell dir of `dirs` (the store's [[cellDirs]]) and
+    * cached beside [[plannedStore]]'s entry under the same stamp, so a
+    * rebuild is read with its new schema. A store without any cell dir
+    * falls back to Spark's root read (and its "unable to infer" error). */
+  private def storeSchema(spark: SparkSession, path: String, dirs: Seq[(Int, Path)]): StructType =
+    stamped(spark, path, schemaCache) {
+      dirs.headOption.fold(spark.read.parquet(path).schema) { case (_, dir) =>
+        spark.read.option("basePath", path).parquet(dir.toString).schema
+      }
+    }.getOrElse(throw new IllegalArgumentException(s"IvfIndex: $path holds no IVF store"))
+  private val schemaCache = TrieMap.empty[String, (String, StructType)]
+
+  /** `load` cached per path, keyed by the centroid sidecar's length+mtime
+    * (a rebuild rewrites it); None when `path` carries no IVF store. Keyed
+    * by PATH with the stamp beside the value, so a rebuild replaces the
+    * entry instead of leaking the old one. */
+  private def stamped[T](spark: SparkSession, path: String,
+                         cache: TrieMap[String, (String, T)])(load: => T): Option[T] = {
     val p = new Path(path, "_centroids.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return None
     val stamp = { val s = fs.getFileStatus(p); s"${s.getLen}:${s.getModificationTime}" }
-    storeCache.get(path) match {
-      case Some((st, store)) if st == stamp => Some(store)
+    cache.get(path) match {
+      case Some((st, v)) if st == stamp => Some(v)
       case _ =>
-        val store = readStore(spark, path)
-        storeCache.put(path, (stamp, store))
-        Some(store)
+        val v = load
+        cache.put(path, (stamp, v))
+        Some(v)
     }
   }
-  private val storeCache = TrieMap.empty[String, (String, Store)]
+
+  /** Every `cell=C` partition dir of the store with its cell, in cell
+    * order: at the root, or nested under other partition dirs
+    * (`batch_id=N/cell=C`, [[graft.streaming.VectorStream]]). One driver
+    * listing per level; hidden names are skipped, as Spark's own listing
+    * skips them. */
+  private def cellDirs(spark: SparkSession, path: String): Seq[(Int, Path)] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def under(dir: Path): Seq[(Int, Path)] = fs.listStatus(dir).toSeq.flatMap { s =>
+      val name = s.getPath.getName
+      if (!s.isDirectory || name.startsWith(".") || !name.contains("=")) Nil
+      else if (name.startsWith("cell=")) name.stripPrefix("cell=").toIntOption.map(_ -> s.getPath)
+      else under(s.getPath)
+    }
+    under(root).sortBy { case (c, p) => (c, p.toString) }
+  }
+
+  /** The store's rows in the probed `cells`, read from their partition
+    * dirs alone. Spark is handed the existing `cell=C` dirs ([[cellDirs]])
+    * with the store root as `basePath` and the store's schema
+    * ([[storeSchema]]), so a search neither re-discovers the whole store
+    * (a distributed listing job once it holds more cell dirs than Spark's
+    * parallel-discovery threshold) nor infers its schema per request. A
+    * probed cell with no dir contributes no rows. The `cell IN` filter
+    * stays on the scan, which reports its partition pruning as before. */
+  private[graft] def probedScan(spark: SparkSession, path: String, cells: Seq[Int]): DataFrame = {
+    val all = cellDirs(spark, path)
+    val schema = storeSchema(spark, path, all)
+    val want = cells.toSet
+    val dirs = all.collect { case (c, dir) if want(c) => dir.toString }
+    val rows =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.read.schema(schema).option("basePath", path).parquet(dirs: _*)
+    rows.where(col("cell").isin(cells: _*))
+  }
 
   private[graft] def writeSidecars(spark: SparkSession, path: String, store: Store): Unit = {
     writeSidecar(spark, path, "_centroids.json", json(store.model))
@@ -654,13 +713,16 @@ object IvfIndex {
     topPerQuery(scored, col("cos").desc, k, idCol, queryIdCol, "cos")
   }
 
-  /** The distinct cells the queries probe, as static `cell IN` literals.
-    * (Queries are broadcast-small by contract, so collecting their
-    * ≤ |queries|·nprobe cell ids is driver-trivial.) */
+  /** The distinct cells the queries probe. Queries are broadcast-small
+    * by contract, so their `probe` projection is collected in one job and
+    * ranked on the driver by [[Model.nearestCells]] — the ranking
+    * [[cellsOf]] computes per row, ties included. */
   private def probedCells(queries: DataFrame, probe: Column, model: Model,
-                          nprobe: Int): Array[Any] =
-    queries.select(explode(cellsOf(probe, model, nprobe)).as("cell"))
-      .distinct().collect().map(_.getInt(0).asInstanceOf[Any])
+                          nprobe: Int): Seq[Int] =
+    queries.select(probe.cast("array<double>")).collect().toSeq
+      .filterNot(_.isNullAt(0))
+      .flatMap(r => model.nearestCells(r.getSeq[Double](0).toArray, nprobe))
+      .distinct
 
   /** Rerank distance per query metric — pgvector's operators. */
   private val distances: Map[String, (Column, Column) => Column] = Map(
@@ -670,9 +732,10 @@ object IvfIndex {
     "l1" -> (VectorFunctions.l1Distance _))         // <+>
 
   /** Search a persisted index. The probed cell set is computed up front
-    * and applied as a STATIC `cell IN (...)` filter — partition pruning
-    * is guaranteed at the file listing, not left to dynamic-pruning
-    * heuristics. The codec and store metric come from the sidecars
+    * on the driver and only those cells' dirs are listed and read
+    * ([[probedScan]]) — partition pruning is guaranteed at the file
+    * listing, not left to dynamic-pruning heuristics. The codec and
+    * store metric come from the sidecars
     * ([[readStore]]); `metric` is the query's opclass:
     *
     *  - `cosine_sim` (default): cosine similarity, descending, each query
@@ -701,6 +764,7 @@ object IvfIndex {
                   maxPushdownIds: Int = 100000): DataFrame = {
     val store = readStore(spark, path)
     val model = store.model
+    require(nprobe >= 1, s"searchIndex: nprobe must be >= 1, got $nprobe")
     require(metric == "cosine_sim" || distances.contains(metric),
       s"searchIndex: unknown metric '$metric' (cosine_sim, l2, cosine, ip or l1)")
     require(store.serves(metric),
@@ -712,16 +776,15 @@ object IvfIndex {
             "(build an L2 store)"
           else ""))
     if (metric == "cosine_sim") {
-      val corpus = spark.read.parquet(path)
-        .where(col("cell").isin(probedCells(queries, col(embCol), model, nprobe): _*))
+      val corpus = probedScan(spark, path, probedCells(queries, col(embCol), model, nprobe))
       return probeAndRerank(corpus, queries, model, k, nprobe, idCol, embCol, queryIdCol, scale)
     }
     val qs =
       if (store.metric == "cosine")
         queries.withColumn(embCol, VectorFunctions.l2Normalize(col(embCol)))
       else queries
-    val cells = probedCells(qs, store.codec.assignOn(col(embCol)), model, nprobe)
-    val probed = spark.read.parquet(path).where(col("cell").isin(cells: _*))
+    val probed = probedScan(spark, path,
+      probedCells(qs, store.codec.assignOn(col(embCol)), model, nprobe))
     val docs = store.codec match {
       case c: Coarse if metric == store.metric =>
         val perQuery = k * (if (overfetch > 0) overfetch else c.overfetch)
@@ -775,9 +838,8 @@ object IvfIndex {
                                       c: Coarse, q: Array[Double], cells: Seq[Int],
                                       nprobe: Int, n: Int, idCol: String): DataFrame = {
     import spark.implicits._
-    val probed = spark.read.parquet(path).where(col("cell").isin(cells: _*))
-    coarseScores(probed, store, c, Seq((0L, q.toSeq)).toDF("__qid", "__qemb"), nprobe,
-        idCol, "__qemb", "__qid")
+    coarseScores(probedScan(spark, path, cells), store, c,
+        Seq((0L, q.toSeq)).toDF("__qid", "__qemb"), nprobe, idCol, "__qemb", "__qid")
       .orderBy(col("__coarse"), col(idCol))
       .limit(n)
       .select(col(idCol))
@@ -865,8 +927,7 @@ object IvfIndex {
                                        model: Model, pending: DataFrame, pred: Column,
                                        k: Int, cur: Int, idCol: String, embCol: String,
                                        queryIdCol: String, scale: Int): DataFrame = {
-    val corpus = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells(pending, col(embCol), model, cur): _*))
+    val corpus = probedScan(spark, path, probedCells(pending, col(embCol), model, cur))
       .where(pred)
     probeAndRerank(corpus, pending, model, k, cur, idCol, embCol, queryIdCol, scale)
   }

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.functions.VectorFunctions._
 
 /** K-nearest-neighbor search over an embedding column — the Spark-native
@@ -26,10 +28,12 @@ object Knn {
   case object L1 extends Metric { def dist(a: Column, b: Column): Column = l1Distance(a, b) }
 
   /** Top-k rows of `corpus` nearest to the single query vector in
-    * `query` (a 1-row frame holding `embCol`). The query side is
-    * broadcast — no corpus movement. Distances are rounded to `scale`
-    * decimals BEFORE ordering (ties then broken by `idCol`) so results are
-    * reproducible across engines and partitionings.
+    * `query` (a 1-row frame holding `embCol`). The query vector is
+    * collected once and scored as a literal — no corpus movement, and the
+    * query plan (an embed call, say) is not evaluated again. Distances are
+    * rounded to `scale` decimals BEFORE ordering (ties then broken by
+    * `idCol`) so results are reproducible across engines and
+    * partitionings.
     */
   def topK(corpus: DataFrame, query: DataFrame, metric: Metric, k: Int,
            idCol: String = "vec_id", embCol: String = "embedding",
@@ -40,14 +44,16 @@ object Knn {
     // use topKBatch for query batches
     // take(2): one job that stops after 2 rows — limit(2).count() would
     // plan/schedule a full extra job per call on the hottest serve path
-    val probe = query.select(col(embCol)).take(2).length
-    require(probe == 1,
-      s"Knn.topK: query frame has ${if (probe == 0) "no" else "more than one"} row — " +
+    val vec = query.select(col(embCol))
+    val probe = vec.take(2)
+    require(probe.length == 1,
+      s"Knn.topK: query frame has ${if (probe.isEmpty) "no" else "more than one"} row — " +
         "this is the single-query serve shape; use Knn.topKBatch for batches")
-    val q = broadcast(query.select(col(embCol).as("__q_emb")))
+    // typed as the query column, so the kernel reads it exactly as it
+    // read the broadcast column
+    val q = ColumnBridge.column(Literal.create(probe.head.get(0), vec.schema.head.dataType))
     corpus
-      .crossJoin(q)
-      .select(col(idCol), round(metric.dist(col(embCol), col("__q_emb")), scale).as("dist"))
+      .select(col(idCol), round(metric.dist(col(embCol), q), scale).as("dist"))
       .orderBy(col("dist"), col(idCol))
       .limit(k)
   }

@@ -97,16 +97,16 @@ case class IvfIterativeFilteredScanExec(
 }
 
 object IvfIterativeScan {
-  /** ONE round's probe frame: static `cell IN` pruning + the user
-    * predicate re-resolved BY NAME against a fresh store read (the
-    * original exprIds belong to the replaced relation). Package-visible
+  /** ONE round's probe frame: the probed cells' dirs alone
+    * ([[graft.operators.IvfIndex.probedScan]]) + the user predicate
+    * re-resolved BY NAME against that fresh read (the original exprIds
+    * belong to the replaced relation). Package-visible
     * so the spec can assert the predicate reaches `PushedFilters` — the
     * [[graft.operators.IvfIndex.filteredProbePlan]] convention (the
     * executed outer plan only shows the leaf, with no scan to inspect). */
   private[graft] def probePlan(spark: SparkSession, path: String, model: IvfIndex.Model,
                                q: Array[Double], pred: Expression, cur: Int): DataFrame =
-    spark.read.parquet(path)
-      .where(col("cell").isin(model.nearestCells(q, cur): _*))
+    IvfIndex.probedScan(spark, path, model.nearestCells(q, cur))
       .where(PlanRebind.byName(pred))
 }
 

@@ -20,6 +20,9 @@ class StoreStreamSpec extends SparkSpec {
       concat(col("source"), lit("_"), col("doc_id"), lit(".pdf")).as("filename"),
       lit(1L).as("pagenumber"))
     VectorStore.write(rows, out, numBuckets = 8)
+    // the declared schema: opening the store infers nothing
+    val jobs = sparkJobs(VectorStore.read(spark, out).columns)
+    assert(jobs.isEmpty, s"VectorStore.read ran Spark jobs (tasks): $jobs")
     val back = VectorStore.read(spark, out)
     assert(back.count() == 500)
     assert(back.columns.sorted.toSeq == Seq("embedding", "filename", "id", "origntext", "pagenumber"))
@@ -33,6 +36,22 @@ class StoreStreamSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     val pf = "PartitionFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(plan)
     assert(pf.exists(_.group(1).nonEmpty), plan.take(1500))
+  }
+
+  test("vector store: a missing or wrongly typed column fails the write, not the read") {
+    val out = tmp("vstore_typed")
+    val rows = spark.range(4).select(col("id").cast("string").as("id"),
+      expr("array(cast(1 as float), cast(2 as float))").as("embedding"),
+      lit("t").as("origntext"), lit("f.pdf").as("filename"), lit(1L).as("pagenumber"))
+    val doubles = rows.withColumn("embedding", col("embedding").cast("array<double>"))
+    val typed = intercept[IllegalArgumentException](VectorStore.write(doubles, out))
+    assert(typed.getMessage.contains("array<double>"), typed.getMessage)
+    val missing = intercept[IllegalArgumentException](
+      VectorStore.write(rows.drop("pagenumber"), out))
+    assert(missing.getMessage.contains(VectorStore.Schema), missing.getMessage)
+    assert(!new java.io.File(out).list().exists(_.startsWith("bucket=")))
+    VectorStore.write(rows, out, numBuckets = 2)
+    assert(VectorStore.read(spark, out).where(col("pagenumber").isNull).isEmpty)
   }
 
   test("streaming curation gates match their batch execution exactly") {
