@@ -23,6 +23,11 @@ import graft.functions.VectorFunctions
   */
 object Dedup {
 
+  /** Band buckets larger than this are dropped (see [[candidatePairs]]). */
+  private val MaxBucket = 1000
+  /** Decimal places of a reported Jaccard. */
+  private val JaccardScale = 4
+
   /** Exact dedup: group by content fingerprint, keep the smallest id as
     * canonical. Map-side partial aggregation makes this one shuffle of
     * (hash → id) pairs only. */
@@ -55,9 +60,18 @@ object Dedup {
     * explode; each stage is a small column-referencing projection. */
   def banded(docs: DataFrame, idCol: String, textCol: String,
              shingleN: Int, numPerm: Int, bands: Int): DataFrame =
+    bandRows(signed(docs, idCol, textCol, shingleN, numPerm), idCol, numPerm, bands)
+
+  /** (id, `__sh` shingles, `__sig` signature) — the one projection both
+    * banding and exact verification read. */
+  private def signed(docs: DataFrame, idCol: String, textCol: String,
+                     shingleN: Int, numPerm: Int): DataFrame =
     docs
       .select(col(idCol), wordShingles(col(textCol), shingleN).as("__sh"))
-      .select(col(idCol), minhashSignature(col("__sh"), numPerm).as("__sig"))
+      .select(col(idCol), col("__sh"), minhashSignature(col("__sh"), numPerm).as("__sig"))
+
+  private def bandRows(signed: DataFrame, idCol: String, numPerm: Int, bands: Int): DataFrame =
+    signed
       .select(col(idCol), explode(bandKeys(col("__sig"), numPerm, bands)).as("band"))
       .select(col(idCol), col("band.band_id").as("band_id"), col("band.band_key").as("band_key"))
 
@@ -70,34 +84,37 @@ object Dedup {
     * bucket is dropped, not exploded. */
   def candidatePairs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                      shingleN: Int = 3, numPerm: Int = 16, bands: Int = 8,
-                     maxBucket: Int = 1000): DataFrame = {
-    val b = banded(docs, idCol, textCol, shingleN, numPerm, bands)
-    val buckets = b.groupBy(col("band_id"), col("band_key"))
+                     maxBucket: Int = MaxBucket): DataFrame =
+    bucketPairs(banded(docs, idCol, textCol, shingleN, numPerm, bands), idCol, maxBucket)
+
+  private def bucketPairs(banded: DataFrame, idCol: String, maxBucket: Int): DataFrame =
+    banded.groupBy(col("band_id"), col("band_key"))
       .agg(collect_list(col(idCol)).as("__ids"))
       .where(size(col("__ids")).between(2, maxBucket))
       .select(array_sort(col("__ids")).as("__ids"))
-    buckets
       // native streaming i<j generator — the HOF chain this replaces
       // paid interpreted per-element dispatch and O(|bucket|) slice
       // copies per outer index (see PairExpressions); ids are sorted,
       // so emission order i<j IS id1 < id2
       .select(graft.functions.PairExpressions.pairSelf(col("__ids")).as(Seq("id1", "id2")))
       .distinct()
-  }
 
   /** Exact word-shingle Jaccard for given pairs (sets are distinct, so
     * |a∪b| = |a|+|b|−|a∩b| — one array_intersect per pair). */
   def jaccardVerify(pairs: DataFrame, docs: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text",
-                    shingleN: Int = 3, scale: Int = 4): DataFrame = {
-    val sh = docs.select(col(idCol).as("__id"), wordShingles(col(textCol), shingleN).as("__sh"))
+                    shingleN: Int = 3, scale: Int = JaccardScale): DataFrame =
+    verified(pairs,
+      docs.select(col(idCol).as("__id"), wordShingles(col(textCol), shingleN).as("__sh")), scale)
+
+  /** `pairs` (id1, id2) scored against a (`__id`, `__sh`) shingle frame. */
+  private def verified(pairs: DataFrame, sh: DataFrame, scale: Int): DataFrame =
     pairs
       .join(sh.select(col("__id").as("id1"), col("__sh").as("sh1")), Seq("id1"))
       .join(sh.select(col("__id").as("id2"), col("__sh").as("sh2")), Seq("id2"))
       .withColumn("__inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
       .select(col("id1"), col("id2"),
         round(col("__inter") / (size(col("sh1")) + size(col("sh2")) - col("__inter")), scale).as("jaccard"))
-  }
 
   /** EXACT set-similarity self-join at Jaccard ≥ `threshold` via PREFIX
     * FILTERING (Chaudhuri et al. 2006; Bayardo et al. 2007, AllPairs) —
@@ -114,6 +131,8 @@ object Dedup {
     * since inter ≤ min and union ≥ max) prunes length-incompatible
     * pairs before verification.
     *
+    * Each doc is shingled once: the (id, len, shingles) projection is
+    * materialized when this is called (one job, localCheckpoint).
     * Shuffle inventory: one token-frequency agg (token-domain-sized),
     * one doc-partitioned ranking window, one self-join keyed by PREFIX
     * token only, one exact verify join — no all-pairs stage anywhere.
@@ -124,9 +143,14 @@ object Dedup {
                         shingleN: Int = 3, scale: Int = 4): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"prefixJaccardJoin: threshold must be in (0,1], got $threshold")
-    val toks = docs
+    // the (id, len, shingles) projection feeds the df count, the prefix
+    // ranking and the verify join: materialized once (localCheckpoint,
+    // as in minhashLsh), so the corpus is shingled once, not per branch
+    val sh = docs
       .select(col(idCol), wordShingles(col(textCol), shingleN).as("__sh"))
-      .select(col(idCol), size(col("__sh")).as("__len"), explode(col("__sh")).as("__g"))
+      .select(col(idCol), size(col("__sh")).as("__len"), col("__sh"))
+      .localCheckpoint(true)
+    val toks = sh.select(col(idCol), col("__len"), explode(col("__sh")).as("__g"))
     val freq = toks.groupBy(col("__g")).agg(count(lit(1)).as("__df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("__df"), col("__g"))
@@ -160,10 +184,9 @@ object Dedup {
     // exact for thresholds with ≤ 6 decimals (permissive by < 10⁻⁶
     // beyond — same direction as the candidate filters). The rounded
     // jaccard column remains output-only.
-    val sh = docs.select(col(idCol).as("__vid"), wordShingles(col(textCol), shingleN).as("__vsh"))
     cand
-      .join(sh.select(col("__vid").as("id1"), col("__vsh").as("sh1")), Seq("id1"))
-      .join(sh.select(col("__vid").as("id2"), col("__vsh").as("sh2")), Seq("id2"))
+      .join(sh.select(col(idCol).as("id1"), col("__sh").as("sh1")), Seq("id1"))
+      .join(sh.select(col(idCol).as("id2"), col("__sh").as("sh2")), Seq("id2"))
       .withColumn("__i", size(array_intersect(col("sh1"), col("sh2"))).cast("long"))
       .withColumn("__u", (size(col("sh1")) + size(col("sh2"))).cast("long") - col("__i"))
       .where(col("__i") * lit(1000000L) >= lit(tScaled) * col("__u"))
@@ -171,13 +194,24 @@ object Dedup {
         round(col("__i").cast("double") / col("__u"), scale).as("jaccard"))
   }
 
-  /** MinHash-LSH near-dup pairs with exact-Jaccard verification ≥ threshold. */
+  /** MinHash-LSH near-dup pairs with exact-Jaccard verification ≥ threshold:
+    * [[candidatePairs]] scored by [[jaccardVerify]], with each doc's
+    * shingles computed ONCE. The (id, shingles, signature) projection is
+    * materialized when this is called (one job, localCheckpoint — the
+    * convention of [[components]]); banding and verification both read
+    * it, so the corpus is scanned and shingled once per pass instead of
+    * once per branch. Production note: localCheckpoint trades
+    * fault-tolerance for speed; set a reliable checkpoint dir and swap
+    * to .checkpoint() on clusters where executor loss mid-pass matters. */
   def minhashLsh(docs: DataFrame, threshold: Double,
                  idCol: String = "doc_id", textCol: String = "text",
-                 shingleN: Int = 3, numPerm: Int = 16, bands: Int = 8): DataFrame =
-    jaccardVerify(candidatePairs(docs, idCol, textCol, shingleN, numPerm, bands),
-        docs, idCol, textCol, shingleN)
+                 shingleN: Int = 3, numPerm: Int = 16, bands: Int = 8): DataFrame = {
+    bandKeys(col("__sig"), numPerm, bands) // fail on bad parameters before the job
+    val sh = signed(docs, idCol, textCol, shingleN, numPerm).localCheckpoint(true)
+    verified(bucketPairs(bandRows(sh, idCol, numPerm, bands), idCol, MaxBucket),
+        sh.select(col(idCol).as("__id"), col("__sh")), JaccardScale)
       .where(col("jaccard") >= threshold)
+  }
 
   /** Near-dup CLUSTERING: connected components over a pair graph via
     * iterative min-label propagation — pairwise dedup only says "a~b";
@@ -197,23 +231,21 @@ object Dedup {
     * a silently unconverged labeling would split clusters. */
   def components(pairs: DataFrame, maxIters: Int = 50,
                  id1Col: String = "id1", id2Col: String = "id2"): DataFrame = {
-    // Symmetric edges PLUS a self-loop per node, hash-partitioned by dst
-    // ONCE and materialized (localCheckpoint preserves the partitioning
-    // in its LogicalRDD): every round joins this static heavy side on
-    // dst, so it never re-shuffles — only the (≤ node-sized) label
-    // vector moves per round. The self-loops fold the old
+    // Symmetric edges PLUS a self-loop per node, built from ONE read of
+    // `pairs`: each pair row yields (a,b), (b,a), (a,a), (b,b). `pairs`
+    // is typically a whole lazy near-dup plan, and every reference to it
+    // is planned and run again. The edges are hash-partitioned by dst
+    // and materialized once. The checkpointed frame does NOT keep that
+    // partitioning under adaptive execution (it reads back as
+    // UnknownPartitioning), so a round whose label join is shuffled
+    // exchanges the edges on dst again; the checkpoint saves recomputing
+    // the edges, not that exchange. The self-loops fold the old
     // "least(own label, neighborhood min)" left join into the single
     // min() aggregate (a node always sees its own label among its
     // neighbors), and carry the previous label through the round for
-    // the convergence check — per round: ONE label exchange + ONE
-    // groupBy shuffle, down from join+left-join (4 exchanges).
-    // distinct() after repartition(dst) adds no exchange: hash(dst)
-    // already co-locates equal (src, dst) rows.
-    val sym = pairs.select(col(id1Col).as("src"), col(id2Col).as("dst"))
-      .unionAll(pairs.select(col(id2Col).as("src"), col(id1Col).as("dst")))
-    val loops = pairs.select(col(id1Col).as("src"))
-      .unionAll(pairs.select(col(id2Col).as("src")))
-      .select(col("src"), col("src").as("dst"))
+    // the convergence check. distinct() after repartition(dst) adds no
+    // exchange: hash(dst) already co-locates equal (src, dst) rows.
+    //
     // each round is MATERIALIZED with its lineage truncated
     // (localCheckpoint): labels feeds itself, so without truncation the
     // logical plan doubles every round — exponential planning cost long
@@ -221,7 +253,10 @@ object Dedup {
     // fault-tolerance for speed; set a reliable checkpoint dir and swap
     // to .checkpoint() on clusters where executor loss mid-algorithm
     // matters.
-    val edges = sym.unionAll(loops)
+    def edge(src: String, dst: String): Column = struct(col(src).as("src"), col(dst).as("dst"))
+    val edges = pairs
+      .select(inline(array(edge(id1Col, id2Col), edge(id2Col, id1Col),
+        edge(id1Col, id1Col), edge(id2Col, id2Col))))
       .repartition(col("dst"))
       .distinct()
       .localCheckpoint(true)

@@ -45,12 +45,13 @@ object PageRank {
     // edge/node/degree frames feed every iteration — materialize once
     // (localCheckpoint, the same convention as the components loop in
     // Dedup); left lazy, iteration i would re-derive them i times.
-    // Edges are hash-partitioned by src BEFORE the checkpoint (the
-    // LogicalRDD preserves the partitioning), so the per-round
-    // contribution join never re-shuffles the edge list — only the
-    // |V|-sized rank vector moves. distinct() after repartition(src)
-    // adds no exchange (hash(src) co-locates equal (src, dst) rows),
-    // and the out-degree aggregate reuses the same partitioning.
+    // Edges are hash-partitioned by src BEFORE the checkpoint, and
+    // distinct() after repartition(src) adds no exchange (hash(src)
+    // co-locates equal (src, dst) rows). Under adaptive execution the
+    // checkpointed frame reads back as UnknownPartitioning, so the
+    // out-degree aggregate and a shuffled contribution join exchange the
+    // edge list on src again; the checkpoint saves recomputing the
+    // edges, not that exchange.
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
       .repartition(col("src"))
@@ -59,10 +60,9 @@ object PageRank {
     // node set tagged ONCE with has_out AND the out-degree; the rank
     // vector carries both through iterations, so the dangling mass is a
     // plain filtered aggregate and the contribution join needs no
-    // per-iteration outdeg join. The node build's left join emits
-    // hash(node) partitioning, which the checkpoint preserves — each
-    // round's rank vector then arrives at the contribution join already
-    // co-partitioned on its key.
+    // per-iteration outdeg join. (The node build's hash(node)
+    // partitioning is not kept by the checkpoint under adaptive
+    // execution either.)
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
       .join(outdeg.select(col("src").as("node"), col("deg")), Seq("node"), "left")

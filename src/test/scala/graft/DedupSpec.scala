@@ -1,6 +1,16 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.functions.TextFunctions.wordShingles
 import graft.operators.Dedup
 
 class DedupSpec extends SparkSpec {
@@ -104,6 +114,12 @@ class DedupSpec extends SparkSpec {
   test("lsh parameter validation fails fast at plan/analysis time") {
     intercept[IllegalArgumentException] { Dedup.bandKeys(col("sig"), numPerm = 16, bands = 0) }
     intercept[IllegalArgumentException] { Dedup.bandKeys(col("sig"), numPerm = 4, bands = 8) }
+    // minhashLsh materializes its shingle frame at call time: bad
+    // parameters must fail before that job runs
+    val docs = Tables.documents(spark, sfDir)
+    assert(sparkJobs {
+      intercept[IllegalArgumentException] { Dedup.minhashLsh(docs, 0.8, numPerm = 4, bands = 8) }
+    }.isEmpty)
     GraftFunctions.register(spark)
     // negative numPerm through the SQL surface must fail analysis, not
     // throw NegativeArraySizeException on an executor at eval time
@@ -305,4 +321,189 @@ class DedupSpec extends SparkSpec {
     assert(scaledCeil(0.55, 100) == 55 && math.ceil(0.55 * 100).toLong == 56)
   }
 
+  /** File scans under `path` that the queries `body` runs executed:
+    * the final (adaptive) plan of every query is walked, a reused
+    * exchange counts as no scan. Queries arrive through the listener
+    * bus in order, so a marker query run after `body` drains it. */
+  private def fileScans(path: String)(body: => Unit): Int = {
+    val marker = s"__drained_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val drained = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) drained.countDown()
+        else plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(1).as(marker)).collect()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally spark.listenerManager.unregister(listener)
+    def scans(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case _: ReusedExchangeExec => 0
+      case f: FileSourceScanExec =>
+        if (f.relation.location.rootPaths.exists(_.toString.contains(path))) 1 else 0
+      case other => (other.children ++ other.subqueries).map(scans).sum
+    }
+    plans.asScala.toSeq.map(scans).sum
+  }
+
+  test("components reads its pair frame once: one scan of a parquet-backed input") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-comp-pairs").toString
+    Seq((3L, 5L), (3L, 9L), (7L, 8L), (9L, 11L)).toDF("id1", "id2")
+      .write.mode("overwrite").parquet(s"$dir/pairs")
+    var got = Map.empty[Long, Long]
+    val n = fileScans(s"$dir/pairs") {
+      got = Dedup.components(spark.read.parquet(s"$dir/pairs"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(got == Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 11L -> 3L, 7L -> 7L, 8L -> 7L))
+    assert(n == 1, s"pair input scanned $n times")
+  }
+
+  test("minhashLsh and prefixJaccardJoin shingle each doc once: one scan of a parquet-backed corpus") {
+    for ((name, join) <- Seq[(String, DataFrame => DataFrame)](
+        "minhashLsh" -> (Dedup.minhashLsh(_, threshold = 0.8)),
+        "prefixJaccardJoin" -> (Dedup.prefixJaccardJoin(_, threshold = 0.8)))) {
+      var rows = 0
+      val n = fileScans(s"$sfDir/documents.parquet") {
+        rows = join(Tables.documents(spark, sfDir)).collect().length
+      }
+      assert(rows > 0, name)
+      assert(n == 1, s"$name: documents scanned $n times")
+    }
+  }
+
+  // The formulation each near-dup operator had before the shingle frame
+  // was shared and the edge list built from one read of the pairs; the
+  // operators must return exactly its rows.
+  private object Reference {
+    def candidatePairs(docs: DataFrame, numPerm: Int, bands: Int, maxBucket: Int): DataFrame =
+      docs
+        .select(col("doc_id"), wordShingles(col("text"), 3).as("__sh"))
+        .select(col("doc_id"), Dedup.minhashSignature(col("__sh"), numPerm).as("__sig"))
+        .select(col("doc_id"), explode(Dedup.bandKeys(col("__sig"), numPerm, bands)).as("band"))
+        .select(col("doc_id"), col("band.band_id").as("band_id"), col("band.band_key").as("band_key"))
+        .groupBy(col("band_id"), col("band_key"))
+        .agg(collect_list(col("doc_id")).as("__ids"))
+        .where(size(col("__ids")).between(2, maxBucket))
+        .select(array_sort(col("__ids")).as("__ids"))
+        .select(graft.functions.PairExpressions.pairSelf(col("__ids")).as(Seq("id1", "id2")))
+        .distinct()
+
+    def jaccardVerify(pairs: DataFrame, docs: DataFrame): DataFrame = {
+      val sh = docs.select(col("doc_id").as("__id"), wordShingles(col("text"), 3).as("__sh"))
+      pairs
+        .join(sh.select(col("__id").as("id1"), col("__sh").as("sh1")), Seq("id1"))
+        .join(sh.select(col("__id").as("id2"), col("__sh").as("sh2")), Seq("id2"))
+        .withColumn("__inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
+        .select(col("id1"), col("id2"),
+          round(col("__inter") / (size(col("sh1")) + size(col("sh2")) - col("__inter")), 4)
+            .as("jaccard"))
+    }
+
+    def minhashLsh(docs: DataFrame, threshold: Double, numPerm: Int, bands: Int): DataFrame =
+      jaccardVerify(candidatePairs(docs, numPerm, bands, 1000), docs)
+        .where(col("jaccard") >= threshold)
+
+    def components(pairs: DataFrame): DataFrame = {
+      val sym = pairs.select(col("id1").as("src"), col("id2").as("dst"))
+        .unionAll(pairs.select(col("id2").as("src"), col("id1").as("dst")))
+      val loops = pairs.select(col("id1").as("src"))
+        .unionAll(pairs.select(col("id2").as("src")))
+        .select(col("src"), col("src").as("dst"))
+      val edges = sym.unionAll(loops).repartition(col("dst")).distinct().localCheckpoint(true)
+      var labels = edges.where(col("src") === col("dst"))
+        .select(col("src").as("id"), col("src").as("label"))
+      var it = 0
+      var converged = false
+      while (it < 50 && !converged) {
+        val nbrMin = edges
+          .join(labels.select(col("id").as("dst"), col("label")), "dst")
+          .groupBy(col("src"))
+          .agg(min(col("label")).as("label"),
+            max(when(col("dst") === col("src"), col("label"))).as("__self"))
+        val next = (if (it < 2) nbrMin
+          else nbrMin
+            .withColumnRenamed("label", "__m")
+            .join(labels.select(col("id").as("__m"), col("label")), "__m")
+            .select(col("src"), col("label"), col("__self")))
+          .localCheckpoint(true)
+        converged = next.where(col("label") =!= col("__self")).isEmpty
+        labels = next.select(col("src").as("id"), col("label"))
+        it += 1
+      }
+      assert(converged)
+      labels.withColumnRenamed("label", "component")
+    }
+  }
+
+  /** Same schema (names, types, nullability, order) and the same rows
+    * as a multiset. */
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Int = {
+    assert(got.schema == want.schema, s"$what: ${got.schema} vs ${want.schema}")
+    def rows(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toString).sorted
+    val (g, w) = (rows(got), rows(want))
+    assert(g == w, s"$what: missing=${w.diff(g).take(5)} extra=${g.diff(w).take(5)}")
+    g.size
+  }
+
+  test("near-dup operators return exactly the rows of the per-branch formulation") {
+    import spark.implicits._
+    val rng = new scala.util.Random(20261019L)
+    val vocab = Vector.tabulate(300)(i => s"w$i")
+    def words(n: Int): Vector[String] = Vector.fill(n)(vocab(rng.nextInt(vocab.size)))
+    val texts = scala.collection.mutable.ArrayBuffer.empty[String]
+    (0 until 40).foreach { _ =>
+      val base = words(20 + rng.nextInt(20))
+      texts += base.mkString(" ")
+      // a planted group: 0-3 near copies, each with one or two words swapped
+      (0 until rng.nextInt(4)).foreach { _ =>
+        val v = base.toArray
+        (0 until 1 + rng.nextInt(2)).foreach(_ => v(rng.nextInt(v.length)) = vocab(rng.nextInt(vocab.size)))
+        texts += v.mkString(" ")
+      }
+      if (rng.nextInt(5) == 0) texts += base.mkString(" ")
+    }
+    // shorter than shingleN words: one whole-text shingle each, with
+    // identical short docs among them
+    Seq("alpha", "alpha beta", "alpha beta", "gamma", "gamma", "alpha").foreach(texts += _)
+    // string ids whose order is not the numeric one ("d10" < "d9")
+    val docs = rng.shuffle(texts.toSeq).zipWithIndex
+      .map { case (t, i) => (s"d$i", t) }.toDF("doc_id", "text")
+
+    for ((numPerm, bands, maxBucket) <- Seq((16, 8, 1000), (12, 4, 1000), (16, 8, 2))) {
+      val tag = s"numPerm=$numPerm bands=$bands maxBucket=$maxBucket"
+      val cand = Dedup.candidatePairs(docs, numPerm = numPerm, bands = bands, maxBucket = maxBucket)
+      val nCand = assertSameRows(cand,
+        Reference.candidatePairs(docs, numPerm, bands, maxBucket), s"candidates $tag")
+      assert(nCand > 0, tag)
+      assertSameRows(Dedup.jaccardVerify(cand, docs),
+        Reference.jaccardVerify(cand, docs), s"verify $tag")
+    }
+    for (t <- Seq(0.5, 0.8); (numPerm, bands) <- Seq((16, 8), (12, 4))) {
+      val n = assertSameRows(
+        Dedup.minhashLsh(docs, t, numPerm = numPerm, bands = bands),
+        Reference.minhashLsh(docs, t, numPerm, bands),
+        s"minhashLsh t=$t numPerm=$numPerm bands=$bands")
+      assert(n > 0)
+    }
+
+    val lsh = Reference.minhashLsh(docs, 0.5, 16, 8).select("id1", "id2")
+    val found = lsh.collect().map(r => (r.getString(0), r.getString(1)))
+    assert(found.exists { case (a, b) => a.length != b.length }, "no pair across id widths")
+    // duplicate, reversed and self pairs on top of the LSH pairs
+    val extra = (found.take(5) ++ found.take(5).map(_.swap) ++
+      Seq(("d1", "d1"), ("zz", "zz"), ("d2", "d3"), ("d3", "d2"))).toSeq.toDF("id1", "id2")
+    val pairs = lsh.unionAll(extra)
+    assertSameRows(Dedup.components(pairs), Reference.components(pairs), "components strings")
+    val longPairs = Seq((3L, 5L), (5L, 3L), (3L, 9L), (3L, 9L), (7L, 7L), (7L, 8L), (12L, 12L))
+      .toDF("id1", "id2")
+    assertSameRows(Dedup.components(longPairs), Reference.components(longPairs), "components longs")
+  }
 }
