@@ -43,6 +43,17 @@ object Fixtures {
     (if (prev != null) prev else v).asInstanceOf[T]
   }
 
+  /** The scratch dir of fixture `name` over sf dir `d`, under a temp root
+    * of this JVM's own, removed at exit: [[memo]] is per-JVM, so no
+    * process needs another's path, and none writes into another's. */
+  def scratchDir(name: String, d: String): String =
+    scratchRoot.resolve(s"graft_q_${name}_${math.abs(d.hashCode)}").toString
+  private lazy val scratchRoot = {
+    val root = java.nio.file.Files.createTempDirectory("graft_fixtures")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
   /** Force a fresh build (the `*_build` bench entries): always runs
     * `build`, and replaces the cached fixture so subsequent serve
     * queries read the rebuilt index. */

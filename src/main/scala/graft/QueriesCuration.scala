@@ -257,11 +257,10 @@ object QueriesCuration {
           .select((col("doc_id") + 2000000).as("doc_id"),
             concat(md5(col("doc_id").cast("string")), lit(" "),
               md5((col("doc_id") + 1).cast("string"))).as("text"))
-        // stable per-SF path + table name: re-runs OVERWRITE in place
-        // (no temp-dir accretion), and different SFs never race on one
-        // metastore table
+        // per-SF path + table name: re-runs in one process OVERWRITE in
+        // place, and neither other SFs nor other processes share the dir
         val tag = math.abs(d.hashCode).toString
-        val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_didx_$tag"
+        val idxDir = Fixtures.scratchDir("didx", d)
         Fixtures.memo(s"dedup_idx:$d") {
           DedupIndex.writeIndex(docs, s"q_dedup_idx_$tag", idxDir)
           idxDir
@@ -430,8 +429,7 @@ object QueriesCuration {
     "q_compact" -> QueryDef(
       (s, d) => {
         import graft.sources.Compaction
-        val tag = math.abs(d.hashCode).toString
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q_compact_$tag"
+        val dir = Fixtures.scratchDir("compact", d)
         val docs = Tables.documents(s, d).select(col("doc_id"), col("source"), col("n_chars"))
         docs.repartition(32).write.mode("overwrite").parquet(dir)
         Compaction.compact(s, dir, targetBytes = 256L * 1024 * 1024)

@@ -73,7 +73,7 @@ object QueriesSearch {
   private def sparseRwStore(s: org.apache.spark.sql.SparkSession, d: String): String = {
     import graft.operators.SparseKnn
     val tag = math.abs(d.hashCode).toString
-    val storeDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_sprw_$tag"
+    val storeDir = Fixtures.scratchDir("sprw", d)
     Fixtures.memo(s"sparse_rw_store:$d") {
       val sv = SparseKnn.hashingTf(Tables.documents(s, d), dim = 256)
       SparseKnn.writeIndexedStore(s, sv, s"q_sprw_idx_$tag", storeDir)
@@ -99,7 +99,7 @@ object QueriesSearch {
     "q_bm25_index" -> QueryDef(
       (s, d) => {
         val tag = math.abs(d.hashCode).toString
-        val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_bm25idx_$tag"
+        val idxDir = Fixtures.scratchDir("bm25idx", d)
         Fixtures.memo(s"bm25_idx:$d") {
           TextSearch.writeBm25Index(Tables.documents(s, d), s"q_bm25_idx_$tag", idxDir)
           idxDir
@@ -476,7 +476,7 @@ object QueriesSearch {
       (s, d) => {
         import graft.operators.SparseKnn
         val tag = math.abs(d.hashCode).toString
-        val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_spidx_$tag"
+        val idxDir = Fixtures.scratchDir("spidx", d)
         val sv = SparseKnn.hashingTf(Tables.documents(s, d), dim = 1024)
         Fixtures.memo(s"sparse_idx:$d") {
           SparseKnn.writeIndex(sv, s"q_sp_idx_$tag", idxDir)
@@ -515,7 +515,7 @@ object QueriesSearch {
       (s, d) => {
         import graft.operators.SparseKnn
         val tag = math.abs(d.hashCode).toString
-        val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_spdel_$tag"
+        val idxDir = Fixtures.scratchDir("spdel", d)
         val sv = SparseKnn.hashingTf(Tables.documents(s, d), dim = 1024)
         Fixtures.memo(s"sparse_del_idx:$d") {
           SparseKnn.writeIndex(sv, s"q_sp_del_$tag", idxDir)
@@ -558,7 +558,7 @@ object QueriesSearch {
       (s, d) => {
         import graft.operators.SparseKnn
         val tag = math.abs(d.hashCode).toString
-        val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_spups_$tag"
+        val idxDir = Fixtures.scratchDir("spups", d)
         val docs = Tables.documents(s, d)
         val sv = SparseKnn.hashingTf(docs, dim = 1024)
         Fixtures.memo(s"sparse_ups_idx:$d") {
@@ -675,7 +675,7 @@ object QueriesSearch {
       (s, d) => {
         import graft.operators.SparseKnn
         val tag = math.abs(d.hashCode).toString
-        val storeDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_sprwc_$tag"
+        val storeDir = Fixtures.scratchDir("sprwc", d)
         Fixtures.memo(s"sparse_rwc_store:$d") {
           val sv = SparseKnn.hashingTf(Tables.documents(s, d), dim = 256)
           SparseKnn.writeIndexedStore(s, sv, s"q_sprwc_idx_$tag", storeDir)
@@ -745,7 +745,7 @@ object QueriesSearch {
       (s, d) => {
         import graft.operators.SparseKnn
         val tag = math.abs(d.hashCode).toString
-        val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_splidx_$tag"
+        val idxDir = Fixtures.scratchDir("splidx", d)
         Fixtures.memo(s"splade_idx:$d") {
           val sv = SparseKnn.spladeExpand(Tables.documents(s, d), dim = 1024)
           SparseKnn.writeIndex(sv, s"q_splade_idx_$tag", idxDir)
@@ -794,7 +794,7 @@ object QueriesSearch {
       (s, d) => {
         import graft.operators.SparseKnn
         val tag = math.abs(d.hashCode).toString
-        val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_splidx_$tag"
+        val idxDir = Fixtures.scratchDir("splidx", d)
         Fixtures.memo(s"splade_idx:$d") {
           val sv = SparseKnn.spladeExpand(Tables.documents(s, d), dim = 1024)
           SparseKnn.writeIndex(sv, s"q_splade_idx_$tag", idxDir)
@@ -850,7 +850,7 @@ object QueriesSearch {
       (s, d) => {
         import graft.operators.SparseKnn
         val tag = math.abs(d.hashCode).toString
-        val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_spidx_$tag"
+        val idxDir = Fixtures.scratchDir("spidx", d)
         Fixtures.rebuild(s"sparse_idx:$d") {
           val sv = SparseKnn.hashingTf(Tables.documents(s, d), dim = 1024)
           SparseKnn.writeIndex(sv, s"q_sp_idx_$tag", idxDir)
@@ -875,7 +875,7 @@ object QueriesSearch {
     "q_bm25_build" -> QueryDef(
       (s, d) => {
         val tag = math.abs(d.hashCode).toString
-        val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_bm25idx_$tag"
+        val idxDir = Fixtures.scratchDir("bm25idx", d)
         Fixtures.rebuild(s"bm25_idx:$d") {
           TextSearch.writeBm25Index(Tables.documents(s, d), s"q_bm25_idx_$tag", idxDir)
           idxDir
@@ -898,7 +898,7 @@ object QueriesSearch {
       (s, d) => {
         import graft.operators.SparseKnn
         val tag = math.abs(d.hashCode).toString
-        val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_splidx_$tag"
+        val idxDir = Fixtures.scratchDir("splidx", d)
         Fixtures.rebuild(s"splade_idx:$d") {
           val sv = SparseKnn.spladeExpand(Tables.documents(s, d), dim = 1024)
           SparseKnn.writeIndex(sv, s"q_splade_idx_$tag", idxDir)

@@ -135,7 +135,7 @@ case class HalfDecodeExpr(child: Expression) extends UnaryExpression with Codege
 /** PACK a float/double vector straight to binary16 BYTES (2 per
   * element, little-endian binary column) — the on-DISK half tier.
   * `array<short>` does NOT halve parquet bytes (shorts are physical
-  * INT32 in the format, measured ~0.97× of the float column in Perf);
+  * INT32 in the format, measured ~0.97× of the float column);
   * only a packed binary column delivers the 2-byte-per-dim storage the
   * pgvector `halfvec` recipe promises. Fuses encode+pack in one pass. */
 case class HalfPackExpr(child: Expression) extends UnaryExpression with CodegenFallback {

@@ -23,7 +23,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * arbitrary pre-computed DataFrame (dedup survivors, a sampled id list)
   * that the optimizer's creation-side heuristics would not pick up.
   *
-  * WHEN TO USE — measured regime boundaries (Perf, local[8]):
+  * WHEN TO USE — measured regime boundaries (local[8]):
   *  - Broadcastable filter side → use a plain join; Spark broadcasts and
   *    there is no exchange to prune (measured: plain anti 0.37 s vs
   *    bloomed 0.72 s on a 500-row side).

@@ -19,8 +19,8 @@ import graft.functions.TextFunctions._
   *    in [[boilerplateRatio]] safe at any corpus size (raise minDf with
   *    corpus size; it's a count threshold, not a rate).
   *  - Domain caps: rank-within-group ≤ quota compiles to WindowGroupLimit,
-  *    i.e. a bounded per-partition heap BEFORE the shuffle (same plan
-  *    shape PlanAudit asserts for batch KNN) — no domain's full listing is
+  *    i.e. a bounded per-partition heap BEFORE the shuffle (the plan
+  *    shape of batch KNN) — no domain's full listing is
   *    ever materialized on one node.
   *  - Corpus shuffle: a total sort by a salted content-independent hash.
   *    Spark executes it as range-partitioned sort (sampled boundaries), so

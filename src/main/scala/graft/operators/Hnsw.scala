@@ -325,7 +325,7 @@ object Hnsw {
         val qid = r.getLong(qidIdx)
         val q = r.getSeq[Double](embIdx).toArray
         // round distances BEFORE ranking (ties then break on id) — the
-        // codebase-wide convention (Knn.topKBatch, probeAndRerank,
+        // codebase-wide convention (Knn.topKBatch, IvfIndex.searchIndex,
         // searchIndexSharded's window) and what the DuckDB oracle
         // replays; ranking raw and rounding after would flip rank order
         // whenever two distances collide at `scale` decimals

@@ -38,8 +38,9 @@ object IvfIndex {
 
     /** The `nprobe` nearest cells to `q`, nearest first, ties to the
       * lower cell id — driver-local math on the (k × dim) matrix, the
-      * ranking [[cellsOf]] computes per row. The planner's fixed-probe
-      * rewrite and its iterative leaf both probe with it. */
+      * ranking [[cellsOf]] computes per row. Every IVF search probes
+      * with it ([[searchIndex]], the planner's fixed-probe rewrite and
+      * its iterative leaf). */
     def nearestCells(q: Array[Double], nprobe: Int): Seq[Int] = {
       val dim = centroids.headOption.map(_.length).getOrElse(0)
       if (q.length != dim) throw new IllegalArgumentException(
@@ -283,14 +284,11 @@ object IvfIndex {
     def encode(emb: Column, cell: Column, model: Model): Column
     /** The sidecar that declares this codec: (file name, content). */
     def sidecar: (String, String)
-    /** The query's code, computed once per query on the broadcast side —
-      * once per (query, probed cell) when [[perCell]]. */
+    /** The query's code against probed `cell`, computed once per
+      * (query, probed cell) on the broadcast side. */
     def queryCode(q: Column, cell: Column, model: Model): Column
     /** Coarse score of a stored code against a query code; lower is nearer. */
     def score(stored: Column, qcode: Column): Column
-    /** True when codes are relative to the row's cell (residual codecs),
-      * so a query is only scored against its own probed cells. */
-    def perCell: Boolean = false
   }
 
   object Codec {
@@ -355,7 +353,6 @@ object IvfIndex {
         ProductQuantizer.residualTableExpr(q, cell, model, pq)
       def score(stored: Column, qcode: Column): Column =
         ProductQuantizer.adcScoreExpr(stored, qcode, pq.ksub)
-      override def perCell: Boolean = true
     }
   }
 
@@ -700,30 +697,6 @@ object IvfIndex {
       .select(col(queryIdCol), col(idCol), col(scoreCol), col("rn").cast("long").as("rn"))
   }
 
-  /** Shared probe → score → per-query rerank tail of topK/searchIndex. */
-  private def probeAndRerank(assigned: DataFrame, queries: DataFrame, model: Model,
-                             k: Int, nprobe: Int, idCol: String, embCol: String,
-                             queryIdCol: String, scale: Int): DataFrame = {
-    val probes = broadcast(
-      queries.select(col(queryIdCol), col(embCol).as("__qemb"),
-        explode(cellsOf(col(embCol), model, nprobe)).as("cell")))
-    val scored = assigned.join(probes, Seq("cell"))
-      .select(col(queryIdCol), col(idCol),
-        round(VectorFunctions.cosineSimilarity(col(embCol), col("__qemb")), scale).as("cos"))
-    topPerQuery(scored, col("cos").desc, k, idCol, queryIdCol, "cos")
-  }
-
-  /** The distinct cells the queries probe. Queries are broadcast-small
-    * by contract, so their `probe` projection is collected in one job and
-    * ranked on the driver by [[Model.nearestCells]] — the ranking
-    * [[cellsOf]] computes per row, ties included. */
-  private def probedCells(queries: DataFrame, probe: Column, model: Model,
-                          nprobe: Int): Seq[Int] =
-    queries.select(probe.cast("array<double>")).collect().toSeq
-      .filterNot(_.isNullAt(0))
-      .flatMap(r => model.nearestCells(r.getSeq[Double](0).toArray, nprobe))
-      .distinct
-
   /** Rerank distance per query metric — pgvector's operators. */
   private val distances: Map[String, (Column, Column) => Column] = Map(
     "l2" -> (VectorFunctions.l2Distance _),         // <->
@@ -731,31 +704,109 @@ object IvfIndex {
     "ip" -> (VectorFunctions.negInnerProduct _),    // <#>
     "l1" -> (VectorFunctions.l1Distance _))         // <+>
 
-  /** Search a persisted index. The probed cell set is computed up front
-    * on the driver and only those cells' dirs are listed and read
-    * ([[probedScan]]) — partition pruning is guaranteed at the file
-    * listing, not left to dynamic-pruning heuristics. The codec and
-    * store metric come from the sidecars
-    * ([[readStore]]); `metric` is the query's opclass:
+  /** A search's queries on the driver: `(qid, __qemb, probe)` rows, where
+    * `schema` types `(qid, __qemb)` as the query frame does and `probe`
+    * is the vector the query's cells are ranked on (null: no cell). */
+  private final case class Probes(rows: Seq[Row], schema: StructType)
+
+  /** Evaluates `queries` once, in one collect — broadcast-small by
+    * contract: `qemb` is the vector the rerank scores, `probeOn` its
+    * projection cells are ranked on. */
+  private def collectProbes(queries: DataFrame, qemb: Column, probeOn: Column => Column,
+                            queryIdCol: String): Probes = {
+    val side = queries.select(col(queryIdCol), qemb.as("__qemb"))
+    Probes(side.select(col(queryIdCol), col("__qemb"),
+      probeOn(col("__qemb")).cast("array<double>")).collect().toSeq, side.schema)
+  }
+
+  /** Each query's own `nprobe` nearest cells, ranked on the driver by
+    * [[Model.nearestCells]] (the ranking [[cellsOf]] computes per row,
+    * ties included): a local `(qid, __qemb, cell)` frame and its
+    * distinct cells. */
+  private def probePairs(spark: SparkSession, probes: Probes, model: Model,
+                         nprobe: Int): (DataFrame, Seq[Int]) = {
+    val rows = probes.rows.filterNot(_.isNullAt(2)).flatMap(r => model
+      .nearestCells(r.getSeq[Double](2).toArray, nprobe).map(c => Row(r.get(0), r.get(1), c)))
+    (spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
+      probes.schema.add("cell", IntegerType, nullable = false)), rows.map(_.getInt(2)).distinct)
+  }
+
+  /** Each query's `n` best coarse candidates over its own probed cells,
+    * `(qid, id)`: the codec column scored against the query's code for
+    * the row's cell. Only (id, cell, codec column) is read. */
+  private def coarsePass(scanned: DataFrame, pairs: DataFrame, c: Coarse, model: Model, n: Int,
+                         idCol: String, queryIdCol: String): DataFrame = {
+    val codes = pairs.select(col(queryIdCol), col("cell"),
+      c.queryCode(col("__qemb"), col("cell"), model).as("__qcode"))
+    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("__coarse"), col(idCol))
+    scanned.select(col(idCol), col("cell"), col(c.column))
+      .join(broadcast(codes), Seq("cell"))
+      .select(col(queryIdCol), col(idCol), c.score(col(c.column), col("__qcode")).as("__coarse"))
+      .withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= n)
+      .select(col(queryIdCol), col(idCol))
+  }
+
+  /** The one IVF search: probe pairs ([[probePairs]]) → `scan` of their
+    * distinct cells (a predicate, if any, rides in it) → join on `cell`,
+    * so a query only scores its own probed cells → optional coarse pass
+    * → exact rerank by `metric` (`cosine_sim` or a [[distances]] key),
+    * rounded to `scale` → [[topPerQuery]]. With `coarse` = (codec, n,
+    * maxPushdownIds), the scan is narrowed to the union of the queries'
+    * [[coarsePass]] candidates as [[searchIndex]] describes, and a query
+    * reranks a row only if it chose it. */
+  private def search(spark: SparkSession, probes: Probes, model: Model, nprobe: Int,
+                     scan: Seq[Int] => DataFrame, coarse: Option[(Coarse, Int, Int)],
+                     metric: String, k: Int, idCol: String, embCol: String,
+                     queryIdCol: String, scale: Int): DataFrame = {
+    val (pairs, cells) = probePairs(spark, probes, model, nprobe)
+    val scanned = scan(cells)
+    val (docs, chosen) = coarse.fold((scanned, Option.empty[DataFrame])) { case (c, n, maxIds) =>
+      // materialized once: the candidates feed the driver probe, the
+      // per-query filter and, on fallback, the semi join
+      val cand = coarsePass(scanned, pairs, c, model, n, idCol, queryIdCol)
+        .distinct().localCheckpoint(true)
+      val union = cand.select(col(idCol)).distinct()
+      val ids = union.limit(maxIds + 1).collect()
+      (if (ids.length <= maxIds) scanned.where(col(idCol).isin(ids.map(_.get(0)).toSeq: _*))
+       else scanned.join(union, Seq(idCol), "left_semi"), Some(cand))
+    }
+    val joined = docs.select(col(idCol), col(embCol), col("cell")).join(broadcast(pairs), Seq("cell"))
+    val (scoreCol, score) =
+      if (metric == "cosine_sim") ("cos", VectorFunctions.cosineSimilarity _) else ("dist", distances(metric))
+    val scored = chosen.fold(joined)(joined.join(_, Seq(queryIdCol, idCol)))
+      .select(col(queryIdCol), col(idCol),
+        round(score(col(embCol), col("__qemb")), scale).as(scoreCol))
+    topPerQuery(scored, if (metric == "cosine_sim") col(scoreCol).desc else col(scoreCol),
+      k, idCol, queryIdCol, scoreCol)
+  }
+
+  /** Search a persisted index: every metric scores each query over its
+    * own `nprobe` probed cells only, so a query's answer does not depend
+    * on the rest of its batch, and the query frame is evaluated once.
+    * Only the probed cells' dirs are listed and read ([[probedScan]]) —
+    * partition pruning is guaranteed at the file listing, not left to
+    * dynamic-pruning heuristics. The codec and store metric come from the
+    * sidecars ([[readStore]]); `metric` is the query's opclass:
     *
-    *  - `cosine_sim` (default): cosine similarity, descending, each query
-    *    scored over its own probed cells — `(qid, id, cos, rn)`;
+    *  - `cosine_sim` (default): cosine similarity, descending —
+    *    `(qid, id, cos, rn)`;
     *  - `l2` / `cosine` / `ip` / `l1` — pgvector `<->` / `<=>` / `<#>` /
-    *    `<+>`: distance ascending over the probed cells, ties by id —
-    *    `(qid, id, dist, rn)`. Cells are probed by L2 (on the normalized
-    *    query over a cosine store; on the prefix over a prefix store).
+    *    `<+>`: distance ascending, ties by id — `(qid, id, dist, rn)`.
+    *    Cells are probed by L2 (on the normalized query over a cosine
+    *    store; on the prefix over a prefix store).
     *
     * When `metric` is the store's own metric and the codec is
     * [[Coarse]], a coarse pass first scans only the codec column of the
-    * probed cells and keeps the `k·overfetch` best candidates per query
-    * (`overfetch` 0 = the codec's default); the exact rerank then reads
-    * the float column for those ids alone — pushed into the scan as a
-    * static `id IN` filter up to `maxPushdownIds`, above that a semi join
-    * against the distributed candidate frame (correct at any
-    * cardinality; the driver never holds more than `maxPushdownIds+1`
-    * ids). Full probe with covering overfetch degenerates to exact KNN.
-    * Metrics a store cannot serve soundly (IP/L1 over normalized bytes,
-    * non-L2 over prefix cells) are refused. */
+    * probed cells and keeps each query's own `k·overfetch` best
+    * candidates (`overfetch` 0 = the codec's default); the exact rerank
+    * reads the float column for the union of those ids alone — a static
+    * `id IN` in the scan up to `maxPushdownIds`, above that a semi join
+    * against the distributed candidates (the driver never holds more than
+    * `maxPushdownIds+1` ids) — and scores a row for a query only if that
+    * query chose it. Full probe with covering overfetch degenerates to
+    * exact KNN. Metrics a store cannot serve soundly (IP/L1 over
+    * normalized bytes, non-L2 over prefix cells) are refused. */
   def searchIndex(spark: SparkSession, path: String,
                   queries: DataFrame, k: Int, nprobe: Int,
                   metric: String = "cosine_sim", overfetch: Int = 0,
@@ -763,7 +814,6 @@ object IvfIndex {
                   queryIdCol: String = "qid", scale: Int = 4,
                   maxPushdownIds: Int = 100000): DataFrame = {
     val store = readStore(spark, path)
-    val model = store.model
     require(nprobe >= 1, s"searchIndex: nprobe must be >= 1, got $nprobe")
     require(metric == "cosine_sim" || distances.contains(metric),
       s"searchIndex: unknown metric '$metric' (cosine_sim, l2, cosine, ip or l1)")
@@ -775,73 +825,30 @@ object IvfIndex {
             "equals cosine (use metric = \"cosine\") and L1 answers a different question " +
             "(build an L2 store)"
           else ""))
-    if (metric == "cosine_sim") {
-      val corpus = probedScan(spark, path, probedCells(queries, col(embCol), model, nprobe))
-      return probeAndRerank(corpus, queries, model, k, nprobe, idCol, embCol, queryIdCol, scale)
-    }
-    val qs =
-      if (store.metric == "cosine")
-        queries.withColumn(embCol, VectorFunctions.l2Normalize(col(embCol)))
-      else queries
-    val probed = probedScan(spark, path,
-      probedCells(qs, store.codec.assignOn(col(embCol)), model, nprobe))
-    val docs = store.codec match {
+    val probes =
+      if (metric == "cosine_sim") collectProbes(queries, col(embCol), identity, queryIdCol)
+      else collectProbes(queries,
+        if (store.metric == "cosine") VectorFunctions.l2Normalize(col(embCol)) else col(embCol),
+        store.codec.assignOn, queryIdCol)
+    val coarse = store.codec match {
       case c: Coarse if metric == store.metric =>
-        val perQuery = k * (if (overfetch > 0) overfetch else c.overfetch)
-        val w = Window.partitionBy(col(queryIdCol)).orderBy(col("__coarse"), col(idCol))
-        // materialized once (localCheckpoint): the candidate frame feeds
-        // both the bounded driver probe and, on fallback, the semi join —
-        // left lazy, the coarse scan would run twice
-        val cand = coarseScores(probed, store, c, qs, nprobe, idCol, embCol, queryIdCol)
-          .withColumn("__rn", row_number().over(w))
-          .where(col("__rn") <= perQuery)
-          .select(col(idCol)).distinct()
-          .localCheckpoint(true)
-        val ids = cand.limit(maxPushdownIds + 1).collect()
-        if (ids.length <= maxPushdownIds)
-          probed.where(col(idCol).isin(ids.map(_.get(0)).toSeq: _*))
-        else probed.join(cand, Seq(idCol), "left_semi")
-      case _ => probed
+        Some((c, k * (if (overfetch > 0) overfetch else c.overfetch), maxPushdownIds))
+      case _ => None
     }
-    val qSide = broadcast(qs.select(col(queryIdCol), col(embCol).as("__qemb")))
-    val scored = docs.select(col(idCol), col(embCol)).crossJoin(qSide)
-      .select(col(queryIdCol), col(idCol),
-        round(distances(metric)(col(embCol), col("__qemb")), scale).as("dist"))
-    topPerQuery(scored, col("dist"), k, idCol, queryIdCol, "dist")
-  }
-
-  /** Coarse scores `(qid, id, __coarse)` of the codec column in `probed`
-    * against every query — or, for a per-cell codec, against the queries
-    * that probe the row's cell. Only (id, [cell,] codec column) is read. */
-  private def coarseScores(probed: DataFrame, store: Store, c: Coarse, queries: DataFrame,
-                           nprobe: Int, idCol: String, embCol: String,
-                           queryIdCol: String): DataFrame = {
-    val q = col(embCol)
-    val scored =
-      if (c.perCell)
-        probed.select(col(idCol), col("cell"), col(c.column)).join(broadcast(
-          queries.select(col(queryIdCol), q,
-              explode(cellsOf(c.assignOn(q), store.model, nprobe)).as("cell"))
-            .select(col(queryIdCol), col("cell"),
-              c.queryCode(q, col("cell"), store.model).as("__qcode"))), Seq("cell"))
-      else
-        probed.select(col(idCol), col(c.column)).crossJoin(broadcast(
-          queries.select(col(queryIdCol), c.queryCode(q, lit(null), store.model).as("__qcode"))))
-    scored.select(col(queryIdCol), col(idCol), c.score(col(c.column), col("__qcode")).as("__coarse"))
+    search(spark, probes, store.model, nprobe, probedScan(spark, path, _), coarse, metric, k,
+      idCol, embCol, queryIdCol, scale)
   }
 
   /** The planner's coarse stage for one literal query `q` (already in the
-    * store's metric space): ids of the `n` best coarse scores over
-    * `cells` — [[searchIndex]]'s coarse pass over a one-row query frame,
-    * so the query code comes from the same codec expression. */
+    * store's metric space; `probeOn` its projection cells are ranked on):
+    * ids of its `n` best coarse scores over its `nprobe` probed cells —
+    * [[search]]'s probe, scan and coarse steps. */
   private[graft] def coarseCandidates(spark: SparkSession, path: String, store: Store,
-                                      c: Coarse, q: Array[Double], cells: Seq[Int],
+                                      c: Coarse, q: Array[Double], probeOn: Array[Double],
                                       nprobe: Int, n: Int, idCol: String): DataFrame = {
-    import spark.implicits._
-    coarseScores(probedScan(spark, path, cells), store, c,
-        Seq((0L, q.toSeq)).toDF("__qid", "__qemb"), nprobe, idCol, "__qemb", "__qid")
-      .orderBy(col("__coarse"), col(idCol))
-      .limit(n)
+    val (pairs, cells) = probePairs(spark, Probes(Seq(Row(0L, q.toSeq, probeOn.toSeq)),
+      new StructType().add("__qid", "long").add("__qemb", "array<double>")), store.model, nprobe)
+    coarsePass(probedScan(spark, path, cells), pairs, c, store.model, n, idCol, "__qid")
       .select(col(idCol))
   }
 
@@ -861,83 +868,64 @@ object IvfIndex {
     * The predicate is applied IN the scan (`.where(pred)` beside the
     * static `cell IN` pruning), so at 100 TB each round reads only the
     * probed partitions AND pushes the filter to parquet — never
-    * filter-after-fetch on the driver. Per-round satisfied/deficient
-    * bookkeeping collects one (qid, count) row per query — queries are
-    * broadcast-small by contract, same as the probe-cell collection. */
+    * filter-after-fetch on the driver. The query frame is evaluated
+    * once; each round collects its result (≤ |pending|·k rows) once, and
+    * the satisfied/deficient bookkeeping is driver-side. */
   def searchIndexFiltered(spark: SparkSession, path: String,
                           queries: DataFrame, pred: Column, k: Int, nprobe: Int,
                           idCol: String = "vec_id", embCol: String = "embedding",
                           queryIdCol: String = "qid", scale: Int = 4,
                           maxResultRows: Int = 100000): DataFrame = {
     val model = readModel(spark, path)
-    val kc = model.k
-    var cur = math.max(1, math.min(nprobe, kc))
-    var pending = queries
-    // per-round results are ≤ |pending|·k rows (the window caps at k) and
-    // queries are broadcast-small by contract, so each round COLLECTS its
-    // result once — one Spark job per round; counting satisfied queries
-    // and assembling the final frame are driver-side, never a
-    // re-evaluation of the probe/rerank plan
-    val kept = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    var schema: org.apache.spark.sql.types.StructType = null
-    // the qid list is collected ONCE; every later round's pending set is
-    // the previous round's unsatisfied array, already on the driver
-    var pendingQids: Array[Any] =
-      queries.select(col(queryIdCol)).distinct().collect().map(_.get(0))
-    // serve-contract guard (the Hnsw.maxFilterIds convention): the final
-    // frame is assembled driver-side, bounded by |queries|·k rows — an
-    // oversized query batch belongs on the distributed searchIndex path,
-    // not here, and fails fast instead of silently bottlenecking
-    require(pendingQids.length.toLong * k <= maxResultRows,
-      s"IvfIndex.searchIndexFiltered: |queries| (${pendingQids.length}) × k ($k) exceeds " +
+    val probes = collectProbes(queries, col(embCol), identity, queryIdCol)
+    val qids = probes.rows.map(_.get(0)).distinct
+    // serve-contract guard (the Hnsw.maxFilterIds convention): the result
+    // is assembled driver-side, so an oversized batch fails fast
+    require(qids.length.toLong * k <= maxResultRows,
+      s"IvfIndex.searchIndexFiltered: |queries| (${qids.length}) × k ($k) exceeds " +
         s"maxResultRows ($maxResultRows) — the iterative filtered scan assembles its result " +
         "driver-side by contract; split the query batch or raise maxResultRows explicitly")
-    var rounds = 0
-    while (rounds >= 0) {
-      rounds += 1
-      val res = filteredProbePlan(spark, path, model, pending, pred, k, cur,
-        idCol, embCol, queryIdCol, scale)
-      if (schema == null) schema = res.schema
-      val rows = res.collect()
-      if (cur >= kc) { // full probe: nothing more exists — exact by construction
-        kept ++= rows
-        return spark.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(kept.toSeq).asJava, schema)
-      }
+    @scala.annotation.tailrec
+    def rounds(pending: Seq[Any], cur: Int, kept: Seq[Row]): DataFrame = {
+      val todo = pending.toSet
+      val res = search(spark, probes.copy(rows = probes.rows.filter(r => todo(r.get(0)))), model,
+        cur, probedScan(spark, path, _).where(pred), None, "cosine_sim", k, idCol, embCol,
+        queryIdCol, scale)
+      val rows = res.collect().toSeq
       val counts = rows.groupBy(_.get(0)).map { case (q, rs) => q -> rs.length }
-      val (sat, unsat) = pendingQids.partition(q => counts.getOrElse(q, 0) >= k)
-      val satSet = sat.toSet
-      kept ++= rows.filter(r => satSet.contains(r.get(0)))
-      if (unsat.isEmpty) // includes the empty-queries frame
-        return spark.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(kept.toSeq).asJava, schema)
-      pending = pending.where(col(queryIdCol).isin(unsat: _*))
-      pendingQids = unsat
-      cur = math.min(cur * 2, kc)
+      // at full probe nothing more exists: every query is done, exactly
+      val (done, short) = pending.partition(q => cur >= model.k || counts.getOrElse(q, 0) >= k)
+      val doneSet = done.toSet
+      val all = kept ++ rows.filter(r => doneSet(r.get(0)))
+      if (short.isEmpty) // includes the empty-queries frame
+        spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(all).asJava, res.schema)
+      else rounds(short, math.min(cur * 2, model.k), all)
     }
-    throw new IllegalStateException("unreachable")
+    rounds(qids, math.max(1, math.min(nprobe, model.k)), Nil)
   }
 
-  /** ONE round of [[searchIndexFiltered]]: static cell pruning + the
-    * relational predicate IN the scan + rerank. Package-visible so the
-    * spec can assert the predicate reaches `PushedFilters` (the returned
-    * frame of the iterative driver is a collected LocalRelation with no
-    * scan left to inspect). */
+  /** ONE round of [[searchIndexFiltered]] over a query frame: static cell
+    * pruning + the relational predicate IN the scan + rerank.
+    * Package-visible so the spec can assert the predicate reaches
+    * `PushedFilters` (the returned frame of the iterative driver is a
+    * collected LocalRelation with no scan left to inspect). */
   private[graft] def filteredProbePlan(spark: SparkSession, path: String,
                                        model: Model, pending: DataFrame, pred: Column,
                                        k: Int, cur: Int, idCol: String, embCol: String,
-                                       queryIdCol: String, scale: Int): DataFrame = {
-    val corpus = probedScan(spark, path, probedCells(pending, col(embCol), model, cur))
-      .where(pred)
-    probeAndRerank(corpus, pending, model, k, cur, idCol, embCol, queryIdCol, scale)
-  }
+                                       queryIdCol: String, scale: Int): DataFrame =
+    search(spark, collectProbes(pending, col(embCol), identity, queryIdCol), model, cur,
+      probedScan(spark, path, _).where(pred), None, "cosine_sim", k, idCol, embCol, queryIdCol,
+      scale)
 
-  /** Approximate top-k: probe `nprobe` cells per query, exact rerank. */
+  /** Approximate top-k over an unpersisted corpus: cells assigned on the
+    * fly, each query scored over its own `nprobe` cells, exact rerank. */
   def topK(corpus: DataFrame, queries: DataFrame, model: Model, k: Int, nprobe: Int,
            idCol: String = "vec_id", embCol: String = "embedding",
            queryIdCol: String = "qid", scale: Int = 4): DataFrame = {
     val assigned = corpus.select(col(idCol), col(embCol), cellOf(col(embCol), model).as("cell"))
-    probeAndRerank(assigned, queries, model, k, nprobe, idCol, embCol, queryIdCol, scale)
+    search(corpus.sparkSession, collectProbes(queries, col(embCol), identity, queryIdCol), model,
+      nprobe, cells => assigned.where(col("cell").isin(cells: _*)), None, "cosine_sim", k, idCol,
+      embCol, queryIdCol, scale)
   }
 
   /** Large-×-large approximate KNN JOIN: top-k right-side neighbors for

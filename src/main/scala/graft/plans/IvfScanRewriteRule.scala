@@ -208,7 +208,7 @@ object IvfScanRewriteRule extends Rule[LogicalPlan] with RewriteSupport {
     } yield {
       val overfetch = conf("spark.graft.ann.overfetch", c.overfetch.toString).toInt
       val right = IvfIndex.coarseCandidates(SparkSession.active, path, store, c, qvec,
-        cells, nprobe, k * overfetch, idCol).queryExecution.optimizedPlan
+        probeVec, nprobe, k * overfetch, idCol).queryExecution.optimizedPlan
       Join(pruned, right, LeftSemi,
         Some(EqualTo(idAttr, right.output.head)), JoinHint.NONE)
     }

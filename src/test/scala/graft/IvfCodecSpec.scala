@@ -122,12 +122,13 @@ class IvfCodecSpec extends SparkSpec {
     assert((search, append) == ((SearchJobs, AppendJobs)), s"search=$search append=$append")
   }
 
-  /** Spark jobs of the flat serve path (local[4], AQE on): the probed
-    * cells' query projection and the ranked result (the broadcast query
-    * side, the window's shuffle, its result) for search; the shuffled
-    * append write for append. Resolving the codec is sidecar reads only,
-    * and the store's schema is cached after the warm-up search, so
-    * neither adds a job. */
+  /** Spark jobs of the flat serve path (local[4], AQE on): for search,
+    * the one evaluation of the query frame (its collect), then the
+    * ranked result — the broadcast of the local probe pairs (no query
+    * re-evaluation; a task per pair), the window's shuffle, its result;
+    * the shuffled append write for append. Resolving the codec is
+    * sidecar reads only, and the store's schema is cached after the
+    * warm-up search, so neither adds a job. */
   private val SearchJobs = 4
   private val AppendJobs = 2
 

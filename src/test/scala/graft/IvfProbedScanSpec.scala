@@ -61,16 +61,13 @@ class IvfProbedScanSpec extends SparkSpec {
     df.collect().toSeq.map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2), r.getLong(3))))
       .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).sortBy(_._3) }
 
-  /** Per query, the full-root read over the cells it was scored on: its
-    * own probed cells (`cosine_sim`, ranked per cell), or the union of
-    * every query's probed cells (the distance metrics' cross join). */
-  private def expected(path: String, k: Int, score: (Column, Column) => Column, desc: Boolean,
-                       perQuery: Boolean): Map[Long, Seq[(Long, Double, Long)]] = {
-    val union = qvecs.values.flatMap(model.nearestCells(_, NProbe)).toSeq.distinct
+  /** Per query, the full-root read over its own probed cells — the
+    * cells every metric scores it on. */
+  private def expected(path: String, k: Int, score: (Column, Column) => Column,
+                       desc: Boolean): Map[Long, Seq[(Long, Double, Long)]] =
     qvecs.map { case (id, q) =>
-      id -> fullRead(path, q, if (perQuery) model.nearestCells(q, NProbe) else union, k, score, desc)
+      id -> fullRead(path, q, model.nearestCells(q, NProbe), k, score, desc)
     }
-  }
 
   private def withRule[T](body: => T): T = {
     spark.experimental.extraOptimizations =
@@ -92,18 +89,15 @@ class IvfProbedScanSpec extends SparkSpec {
 
   test("flat cosine_sim and l2 return what a full-root read of the probed cells returns") {
     val cos = IvfIndex.searchIndex(spark, flat, queries, k = 5, nprobe = NProbe)
-    assert(searched(cos) == expected(flat, 5, VectorFunctions.cosineSimilarity, desc = true,
-      perQuery = true))
+    assert(searched(cos) == expected(flat, 5, VectorFunctions.cosineSimilarity, desc = true))
     val l2 = IvfIndex.searchIndex(spark, flat, queries, k = 5, nprobe = NProbe, metric = "l2")
-    assert(searched(l2) == expected(flat, 5, VectorFunctions.l2Distance, desc = false,
-      perQuery = false))
+    assert(searched(l2) == expected(flat, 5, VectorFunctions.l2Distance, desc = false))
   }
 
   test("SQ8 coarse pass + rerank with covering overfetch: the full-root read's exact rows") {
     val got = IvfIndex.searchIndex(spark, sq8, queries, k = 5, nprobe = NProbe, metric = "l2",
       overfetch = 1000)
-    assert(searched(got) == expected(sq8, 5, VectorFunctions.l2Distance, desc = false,
-      perQuery = false))
+    assert(searched(got) == expected(sq8, 5, VectorFunctions.l2Distance, desc = false))
   }
 
   test("the probed scan reads only probed cell dirs, and no search job lists the store") {
