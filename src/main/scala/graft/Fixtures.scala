@@ -26,8 +26,8 @@ object Fixtures {
     * `build` and caches its result.
     *
     * NOT computeIfAbsent: fixture builds NEST (an index fixture memoizes
-    * the model fixture it trains from — e.g. ivfpq_idx → ivfpq_models →
-    * ivf_model), and a computeIfAbsent mapping function that re-enters
+    * the model fixture it trains from — e.g. ivfpq_idx → ivf_model,
+    * pq_flat_idx → pq_model), and a computeIfAbsent mapping function that re-enters
     * the same ConcurrentHashMap is a forbidden recursive update — JDK 9+
     * throws IllegalStateException when the inner key lands in the locked
     * bin, which key-string hashCodes make a deterministic-per-machine

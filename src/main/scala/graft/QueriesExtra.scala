@@ -1,11 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Queries.QueryDef
-import graft.functions.{TextFunctions, WinnowExpressions}
+import graft.functions.{TextFunctions, VectorFunctions, WinnowExpressions}
 import graft.fixtures.MediaFixtures
 import graft.multimodal.BinaryPipeline
-import graft.operators.{AnnLsh, IvfIndex, SimHash}
+import graft.operators.{AnnLsh, Hnsw, IvfIndex, ProductQuantizer, Quantize, SimHash}
 
 /** SURVEY.md §2.2 approximate operators (rows-only gates — semantics not
   * portable to ANSI SQL; accuracy is spec-gated against exact ground
@@ -26,6 +27,134 @@ object QueriesExtra {
       |    row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
       |  FROM scored)
       |SELECT qid, vec_id, dist, rn FROM ranked WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+
+  // ── Index fixtures ──────────────────────────────────────────────────
+  // One build per memo key, written under the scratch dir named after the
+  // key: Fixtures.scratchDir is stable per (name, sf dir), so two keys
+  // never share a dir, and the dirs go with the JVM.
+
+  /** The index fixture `key` over sf dir `d`: `write` fills its scratch
+    * dir once per JVM ([[Fixtures.memo]]), or on every call with `fresh`
+    * ([[Fixtures.rebuild]], the `*_build` gates). */
+  private def indexFixture(key: String, d: String, fresh: Boolean = false)
+                          (write: String => Unit): String = {
+    val dir = Fixtures.scratchDir(key, d)
+    def build: String = { write(dir); dir }
+    if (fresh) Fixtures.rebuild(s"$key:$d")(build) else Fixtures.memo(s"$key:$d")(build)
+  }
+
+  private def ivfK8(e: DataFrame, d: String): IvfIndex.Model =
+    Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
+  private def ivfK16(e: DataFrame, d: String): IvfIndex.Model =
+    Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
+
+  private def ivfDeleteIdx(e: DataFrame, d: String): String =
+    indexFixture("ivf_delete_idx", d) { dr => IvfIndex.writeIndex(e, ivfK8(e, d), dr) }
+
+  private def ivfUpsertIdx(e: DataFrame, d: String): String =
+    indexFixture("ivf_upsert_idx", d) { dr =>
+      IvfIndex.writeIndex(e, IvfIndex.train(e, k = 8, iters = 2), dr)
+    }
+
+  /** Cosine store: its model is trained on the normalized corpus. */
+  private def ivfCosIdx(e: DataFrame, d: String): String =
+    indexFixture("ivf_cos_idx", d) { dr =>
+      val en = e.withColumn("embedding", VectorFunctions.l2Normalize(col("embedding")))
+      IvfIndex.writeIndex(e, IvfIndex.train(en, k = 16, iters = 2), dr, metric = "cosine")
+    }
+
+  /** The plain L2 store the IP, L1 and filtered searches share. */
+  private def ivfIpIdx(e: DataFrame, d: String): String =
+    indexFixture("ivf_ip_idx", d) { dr =>
+      IvfIndex.writeIndex(e, IvfIndex.train(e, k = 16, iters = 2), dr)
+    }
+
+  private def ivfSqIdx(e: DataFrame, d: String): String =
+    indexFixture("ivf_sq_idx", d) { dr =>
+      val (mn, mx) = Quantize.scalarRange(e)
+      IvfIndex.writeIndex(e, ivfK16(e, d), dr, IvfIndex.Codec.Sq8(mn, mx))
+    }
+
+  private def ivfHalfIdx(e: DataFrame, d: String): String =
+    indexFixture("ivf_half_idx", d) { dr =>
+      IvfIndex.writeIndex(e, ivfK16(e, d), dr, IvfIndex.Codec.Half)
+    }
+
+  private def ivfHalfFiltIdx(e: DataFrame, d: String): String =
+    indexFixture("ivf_half_filt_idx", d) { dr =>
+      IvfIndex.writeIndex(e, IvfIndex.train(e, k = 16, iters = 2), dr, IvfIndex.Codec.Half)
+    }
+
+  private def ivfSubIdx(e: DataFrame, d: String): String =
+    indexFixture("ivf_sub_idx", d) { dr =>
+      IvfIndex.writeIndex(e, IvfIndex.trainSub(e, subDim = 16, k = 16, iters = 3), dr,
+        IvfIndex.Codec.Prefix(16))
+    }
+
+  private def ivfBinIdxK8(e: DataFrame, d: String): String =
+    indexFixture("ivf_bin_idx_k8", d) { dr =>
+      IvfIndex.writeIndex(e, ivfK8(e, d), dr, IvfIndex.Codec.Binary)
+    }
+
+  private def ivfBinIdxK16(e: DataFrame, d: String): String =
+    indexFixture("ivf_bin_idx_k16", d) { dr =>
+      IvfIndex.writeIndex(e, ivfK16(e, d), dr, IvfIndex.Codec.Binary)
+    }
+
+  /** IVF-PQ store: 8 coarse cells, residual codes m = 16 × ksub = 16.
+    * `fresh` retrains the coarse model too. */
+  private def ivfpqIdx(e: DataFrame, d: String, fresh: Boolean = false): String =
+    indexFixture("ivfpq_idx", d, fresh) { dr =>
+      val ivf = if (fresh) IvfIndex.train(e, k = 8, iters = 2) else ivfK8(e, d)
+      IvfIndex.writeIndex(e, ivf, dr,
+        IvfIndex.Codec.Pq(ProductQuantizer.trainResidual(e, ivf, m = 16, ksub = 16, iters = 10)))
+    }
+
+  private def hnswShardedIdx(e: DataFrame, d: String, fresh: Boolean = false): String =
+    indexFixture("hnsw_sharded_idx", d, fresh) { dr =>
+      Hnsw.writeIndexSharded(e, numShards = 4, dr)
+    }
+
+  private def hnswRoutedIdx(e: DataFrame, d: String): String =
+    indexFixture("hnsw_routed_idx", d) { dr => Hnsw.writeIndexRouted(e, numShards = 4, dr) }
+
+  /** A flat quantized store: `codec` over the one-centroid model at the
+    * origin — one `cell=0` dir, searched at nprobe 1. */
+  private def flatStore(key: String, e: DataFrame, d: String)(codec: => IvfIndex.Codec): String =
+    indexFixture(key, d) { dr =>
+      val dim = e.select(size(col("embedding"))).head().getInt(0)
+      IvfIndex.writeIndex(e, IvfIndex.Model(Array(Array.fill(dim)(0.0))), dr, codec)
+    }
+
+  private def sq8FlatIdx(e: DataFrame, d: String): String =
+    flatStore("sq8_flat_idx", e, d) {
+      val (mn, mx) = Quantize.scalarRange(e)
+      IvfIndex.Codec.Sq8(mn, mx)
+    }
+
+  private def binaryFlatIdx(e: DataFrame, d: String): String =
+    flatStore("binary_flat_idx", e, d)(IvfIndex.Codec.Binary)
+
+  private def halfFlatIdx(e: DataFrame, d: String): String =
+    flatStore("half_flat_idx", e, d)(IvfIndex.Codec.Half)
+
+  /** Plain PQ (m = 16 × ksub = 16, trained on the raw vectors): at the
+    * origin a residual is the vector, so these are plain-PQ codes. */
+  private def pqFlatIdx(e: DataFrame, d: String): String =
+    flatStore("pq_flat_idx", e, d) {
+      IvfIndex.Codec.Pq(Fixtures.memo(s"pq_model:$d") {
+        ProductQuantizer.train(e, m = 16, ksub = 16, iters = 10)
+      })
+    }
+
+  /** The single-query search of the flat quantized stores: query vec_id
+    * 0, `(vec_id, dist)` nearest first. */
+  private def flatKnn(s: SparkSession, dir: String, e: DataFrame, k: Int,
+                      overfetch: Int): DataFrame =
+    IvfIndex.searchIndex(s, dir,
+        e.where(col("vec_id") === 0).select(col("vec_id").as("qid"), col("embedding")),
+        k, nprobe = 1, metric = "l2", overfetch = overfetch)
+      .orderBy(col("rn")).select(col("vec_id"), col("dist"))
 
   val defs: Map[String, QueryDef] = Map(
 
@@ -106,12 +235,7 @@ object QueriesExtra {
     "q_ivf_delete" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_delete_idx:$d") {
-          val model = Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
-          val dr = java.nio.file.Files.createTempDirectory("ivf_del_q").toString
-          IvfIndex.writeIndex(e, model, dr)
-          dr
-        }
+        val dir = ivfDeleteIdx(e, d)
         IvfIndex.deleteFromIndex(s, dir,
           e.where(col("vec_id") % 7 === 0).select(col("vec_id")))
         s.read.parquet(dir).select(col("vec_id")).orderBy(col("vec_id"))
@@ -129,12 +253,7 @@ object QueriesExtra {
       (s, d) => {
         val e = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-        val dir = Fixtures.memo(s"ivf_upsert_idx:$d") {
-          val model = IvfIndex.train(e, k = 8, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_ups_q").toString
-          IvfIndex.writeIndex(e, model, dr)
-          dr
-        }
+        val dir = ivfUpsertIdx(e, d)
         val updated = e.where(col("vec_id") % 7 === 0)
           .select(col("vec_id"),
             transform(col("embedding"), x => x * lit(0.5) + lit(0.25)).as("embedding"))
@@ -236,15 +355,8 @@ object QueriesExtra {
     // and the metric mixing guard are spec-gated (IvfStoreSpec).
     "q_ann_ivf_cos" -> QueryDef(
       (s, d) => {
-        import graft.functions.VectorFunctions
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_cos_idx:$d") {
-          val en = e.withColumn("embedding", VectorFunctions.l2Normalize(col("embedding")))
-          val model = graft.operators.IvfIndex.train(en, k = 16, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_cos_q").toString
-          graft.operators.IvfIndex.writeIndex(e, model, dr, metric = "cosine")
-          dr
-        }
+        val dir = ivfCosIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         graft.operators.IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 12, metric = "cosine")
           .orderBy(col("qid"), col("rn"))
@@ -258,12 +370,7 @@ object QueriesExtra {
     "q_ann_ivf_ip" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_ip_idx:$d") {
-          val model = graft.operators.IvfIndex.train(e, k = 16, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_ip_q").toString
-          graft.operators.IvfIndex.writeIndex(e, model, dr)
-          dr
-        }
+        val dir = ivfIpIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         graft.operators.IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 12, metric = "ip")
           .orderBy(col("qid"), col("rn"))
@@ -343,7 +450,7 @@ object QueriesExtra {
     "q_dbscan" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val model = Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
+        val model = ivfK8(e, d)
         graft.operators.Clustering.dbscan(e, eps = 0.65, minPts = 3, model, nprobe = 8)
           .orderBy(col("vec_id"))
       },
@@ -388,7 +495,7 @@ object QueriesExtra {
       (s, d) => {
         import graft.operators.{Clustering, Curation}
         val e = Tables.embeddings(s, d)
-        val model = Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
+        val model = ivfK8(e, d)
         val labeled = Clustering.dbscan(e, eps = 0.65, minPts = 3, model, nprobe = 8)
           .where(col("role") =!= "noise")
           .withColumn("__sk", Curation.shuffleKey(col("vec_id"), "cluster-sample"))
@@ -436,11 +543,7 @@ object QueriesExtra {
     "q_ann_hnsw_sharded" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"hnsw_sharded_idx:$d") {
-          val dr = java.nio.file.Files.createTempDirectory("hnsw_sh_q").toString
-          graft.operators.Hnsw.writeIndexSharded(e, numShards = 4, dr)
-          dr
-        }
+        val dir = hnswShardedIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         graft.operators.Hnsw.searchIndexSharded(s, dir, q, k = 3)
           .orderBy(col("qid"), col("rn"))
@@ -456,11 +559,7 @@ object QueriesExtra {
     "q_ann_hnsw_routed" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"hnsw_routed_idx:$d") {
-          val dr = java.nio.file.Files.createTempDirectory("hnsw_rt_q").toString
-          graft.operators.Hnsw.writeIndexRouted(e, numShards = 4, dr)
-          dr
-        }
+        val dir = hnswRoutedIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         graft.operators.Hnsw.searchIndexRouted(s, dir, q, k = 3, probeShards = 2)
           .orderBy(col("qid"), col("rn"))
@@ -475,11 +574,7 @@ object QueriesExtra {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val n = e.count().toInt
-        val dir = Fixtures.memo(s"hnsw_routed_idx:$d") {
-          val dr = java.nio.file.Files.createTempDirectory("hnsw_rt_q").toString
-          graft.operators.Hnsw.writeIndexRouted(e, numShards = 4, dr)
-          dr
-        }
+        val dir = hnswRoutedIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         graft.operators.Hnsw.searchIndexRouted(s, dir, q, k = 5, ef = n, probeShards = 4)
           .orderBy(col("qid"), col("rn"))
@@ -495,7 +590,7 @@ object QueriesExtra {
     "q_dbscan_probed" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val model = Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
+        val model = ivfK8(e, d)
         graft.operators.Clustering.dbscan(e, eps = 0.65, minPts = 3, model, nprobe = 2)
           .orderBy(col("vec_id"))
       },
@@ -514,7 +609,7 @@ object QueriesExtra {
     "q_ann_ivf_exact" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
+        val model = ivfK16(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.topK(e, q, model, k = 5, nprobe = 16).orderBy(col("qid"), col("rn"))
       },
@@ -534,13 +629,7 @@ object QueriesExtra {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val n = e.count().toInt
-        val dir = Fixtures.memo(s"ivf_sq_idx:$d") {
-          val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
-          val (mn, mx) = graft.operators.Quantize.scalarRange(e)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_sq_q").toString
-          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Sq8(mn, mx))
-          dr
-        }
+        val dir = ivfSqIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "l2", overfetch = n)
           .orderBy(col("qid"), col("rn"))
@@ -555,12 +644,7 @@ object QueriesExtra {
     "q_ann_half" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_half_idx:$d") {
-          val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
-          val dr = java.nio.file.Files.createTempDirectory("ivf_half_q").toString
-          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Half)
-          dr
-        }
+        val dir = ivfHalfIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 4, metric = "l2", overfetch = 4)
           .orderBy(col("qid"), col("rn"))
@@ -574,12 +658,7 @@ object QueriesExtra {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val n = e.count().toInt
-        val dir = Fixtures.memo(s"ivf_half_idx:$d") {
-          val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
-          val dr = java.nio.file.Files.createTempDirectory("ivf_half_q").toString
-          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Half)
-          dr
-        }
+        val dir = ivfHalfIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "l2", overfetch = n)
           .orderBy(col("qid"), col("rn"))
@@ -597,12 +676,7 @@ object QueriesExtra {
     "q_ann_matryoshka" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_sub_idx:$d") {
-          val model = IvfIndex.trainSub(e, subDim = 16, k = 16, iters = 3)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_sub_q").toString
-          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Prefix(16))
-          dr
-        }
+        val dir = ivfSubIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 4, metric = "l2", overfetch = 4)
           .orderBy(col("qid"), col("rn"))
@@ -617,12 +691,7 @@ object QueriesExtra {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val n = e.count().toInt
-        val dir = Fixtures.memo(s"ivf_sub_idx:$d") {
-          val model = IvfIndex.trainSub(e, subDim = 16, k = 16, iters = 3)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_sub_q").toString
-          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Prefix(16))
-          dr
-        }
+        val dir = ivfSubIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "l2", overfetch = n)
           .orderBy(col("qid"), col("rn"))
@@ -638,12 +707,7 @@ object QueriesExtra {
     "q_knn_matryoshka_sql" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_sub_idx:$d") {
-          val model = IvfIndex.trainSub(e, subDim = 16, k = 16, iters = 3)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_sub_q").toString
-          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Prefix(16))
-          dr
-        }
+        val dir = ivfSubIdx(e, d)
         val qv = e.where(col("vec_id") === 7)
           .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
         val vlit = s"array(${qv.map(x => s"${x}D").mkString(",")})"
@@ -667,16 +731,9 @@ object QueriesExtra {
     // L2 top-k THROUGH the residual ADC coarse scan and rerank pushdown.
     "q_ann_ivfpq_exact" -> QueryDef(
       (s, d) => {
-        import graft.operators.{ProductQuantizer => PQ}
         val e = Tables.embeddings(s, d)
         val n = e.count().toInt
-        val dir = Fixtures.memo(s"ivfpq_idx:$d") {
-          val ivf = Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
-          val pq = PQ.trainResidual(e, ivf, m = 16, ksub = 16, iters = 10)
-          val dr = java.nio.file.Files.createTempDirectory("ivfpq_idx_q").toString
-          IvfIndex.writeIndex(e, ivf, dr, IvfIndex.Codec.Pq(pq))
-          dr
-        }
+        val dir = ivfpqIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 8, metric = "l2", overfetch = n)
           .orderBy(col("qid"), col("rn"))
@@ -689,11 +746,7 @@ object QueriesExtra {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val n = e.count().toInt
-        val dir = Fixtures.memo(s"hnsw_sharded_idx:$d") {
-          val dr = java.nio.file.Files.createTempDirectory("hnsw_sh_q").toString
-          graft.operators.Hnsw.writeIndexSharded(e, numShards = 4, dr)
-          dr
-        }
+        val dir = hnswShardedIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         graft.operators.Hnsw.searchIndexSharded(s, dir, q, k = 5, ef = n)
           .orderBy(col("qid"), col("rn"))
@@ -711,11 +764,7 @@ object QueriesExtra {
     "q_ann_hnsw_sharded_exact" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"hnsw_sharded_idx:$d") {
-          val dr = java.nio.file.Files.createTempDirectory("hnsw_sh_q").toString
-          graft.operators.Hnsw.writeIndexSharded(e, numShards = 4, dr)
-          dr
-        }
+        val dir = hnswShardedIdx(e, d)
         // the shard-covering ef comes off the store itself (4 rows)
         val maxShard = s.read.parquet(dir).agg(max(col("n"))).head().getLong(0).toInt
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
@@ -747,15 +796,8 @@ object QueriesExtra {
     // oracle scores the RAW vectors.
     "q_ann_ivf_cos_exact" -> QueryDef(
       (s, d) => {
-        import graft.functions.VectorFunctions
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_cos_idx:$d") {
-          val en = e.withColumn("embedding", VectorFunctions.l2Normalize(col("embedding")))
-          val model = IvfIndex.train(en, k = 16, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_cos_q").toString
-          IvfIndex.writeIndex(e, model, dr, metric = "cosine")
-          dr
-        }
+        val dir = ivfCosIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "cosine")
           .orderBy(col("qid"), col("rn"))
@@ -776,12 +818,7 @@ object QueriesExtra {
     "q_ann_ivf_ip_exact" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_ip_idx:$d") {
-          val model = IvfIndex.train(e, k = 16, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_ip_q").toString
-          IvfIndex.writeIndex(e, model, dr)
-          dr
-        }
+        val dir = ivfIpIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "ip")
           .orderBy(col("qid"), col("rn"))
@@ -803,12 +840,7 @@ object QueriesExtra {
     "q_ann_ivf_l1" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_ip_idx:$d") {
-          val model = IvfIndex.train(e, k = 16, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_ip_q").toString
-          IvfIndex.writeIndex(e, model, dr)
-          dr
-        }
+        val dir = ivfIpIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 12, metric = "l1")
           .orderBy(col("qid"), col("rn"))
@@ -820,12 +852,7 @@ object QueriesExtra {
     "q_ann_ivf_l1_exact" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_ip_idx:$d") {
-          val model = IvfIndex.train(e, k = 16, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_ip_q").toString
-          IvfIndex.writeIndex(e, model, dr)
-          dr
-        }
+        val dir = ivfIpIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "l1")
           .orderBy(col("qid"), col("rn"))
@@ -850,12 +877,7 @@ object QueriesExtra {
     "q_knn_filtered" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_ip_idx:$d") {
-          val model = IvfIndex.train(e, k = 16, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_ip_q").toString
-          IvfIndex.writeIndex(e, model, dr)
-          dr
-        }
+        val dir = ivfIpIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndexFiltered(s, dir, q, pmod(col("vec_id"), lit(3)) === 0,
             k = 5, nprobe = 2)
@@ -871,12 +893,7 @@ object QueriesExtra {
     "q_knn_filtered_exact" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_ip_idx:$d") {
-          val model = IvfIndex.train(e, k = 16, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_ip_q").toString
-          IvfIndex.writeIndex(e, model, dr)
-          dr
-        }
+        val dir = ivfIpIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndexFiltered(s, dir, q,
             pmod(col("vec_id"), lit(97)) === 0 && col("vec_id") < 400,
@@ -908,12 +925,7 @@ object QueriesExtra {
     "q_knn_filtered_sql" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_ip_idx:$d") {
-          val model = IvfIndex.train(e, k = 16, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_ip_q").toString
-          IvfIndex.writeIndex(e, model, dr)
-          dr
-        }
+        val dir = ivfIpIdx(e, d)
         val qv = e.where(col("vec_id") === 7)
           .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
         // D suffix: bare decimals parse as DECIMAL(19,19), not double
@@ -944,12 +956,7 @@ object QueriesExtra {
     "q_knn_half_filtered_sql" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_half_filt_idx:$d") {
-          val model = IvfIndex.train(e, k = 16, iters = 2)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_half_filt").toString
-          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Half)
-          dr
-        }
+        val dir = ivfHalfFiltIdx(e, d)
         val qv = e.where(col("vec_id") === 7)
           .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
         val vlit = s"array(${qv.map(x => s"${x}D").mkString(",")})"
@@ -1053,7 +1060,7 @@ object QueriesExtra {
     "q_ann_ivf" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
+        val model = ivfK16(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.topK(e, q, model, k = 3, nprobe = 4).orderBy(col("qid"), col("rn"))
       },
@@ -1065,13 +1072,7 @@ object QueriesExtra {
     "q_ann_ivf_sq" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_sq_idx:$d") {
-          val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
-          val (mn, mx) = graft.operators.Quantize.scalarRange(e)
-          val dr = java.nio.file.Files.createTempDirectory("ivf_sq_q").toString
-          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Sq8(mn, mx))
-          dr
-        }
+        val dir = ivfSqIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 4, metric = "l2")
           .orderBy(col("qid"), col("rn"))
@@ -1084,7 +1085,7 @@ object QueriesExtra {
     "q_knn_join" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
+        val model = ivfK16(e, d)
         val left = e.where(col("vec_id") < 8).select(col("vec_id").as("qid"), col("embedding"))
         val right = e.where(col("vec_id") >= 8)
         IvfIndex.knnJoin(left, right, model, k = 3, nprobe = 6)
@@ -1100,7 +1101,7 @@ object QueriesExtra {
     "q_knn_join_exact" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
+        val model = ivfK16(e, d)
         val left = e.where(col("vec_id") < 8).select(col("vec_id").as("qid"), col("embedding"))
         val right = e.where(col("vec_id") >= 8)
         IvfIndex.knnJoin(left, right, model, k = 3, nprobe = 16)
@@ -1118,21 +1119,14 @@ object QueriesExtra {
              |SELECT qid, vec_id, cos, rn FROM ranked WHERE rn <= 3 ORDER BY qid, rn""".stripMargin)),
 
     // IVF-PQ: coarse cells + product codes over residuals, per-(query,
-    // cell) ADC tables, full-precision rerank. Approximate, rows-only;
-    // recall/identity/exact-degeneration are spec-gated (PqSpec).
+    // cell) ADC tables, full-precision rerank, over the persisted IVF-PQ
+    // store. Approximate, rows-only; recall/identity/exact-degeneration
+    // are spec-gated (PqSpec).
     "q_ann_ivfpq" -> QueryDef(
       (s, d) => {
-        import graft.operators.{ProductQuantizer => PQ}
         val e = Tables.embeddings(s, d)
-        val (ivf, pq) = Fixtures.memo(s"ivfpq_models:$d") {
-          val iv = Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
-          (iv, PQ.trainResidual(e, iv, m = 16, ksub = 16, iters = 10))
-        }
-        val cellCol = IvfIndex.cellOf(col("embedding"), ivf)
-        val codes = e.select(col("vec_id"), cellCol.as("cell"),
-          PQ.encodeExpr(PQ.residualExpr(col("embedding"), cellCol, ivf), pq).as("pq_codes"))
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        PQ.topKIvf(codes, e, q, ivf, pq, k = 3, nprobe = 4, overfetch = 8)
+        IvfIndex.searchIndex(s, ivfpqIdx(e, d), q, k = 3, nprobe = 4, metric = "l2", overfetch = 8)
           .orderBy(col("qid"), col("rn"))
       },
       None),
@@ -1144,35 +1138,23 @@ object QueriesExtra {
     // (PqSpec), the planner path in IvfRewriteSpec.
     "q_ann_ivfpq_idx" -> QueryDef(
       (s, d) => {
-        import graft.operators.{ProductQuantizer => PQ}
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivfpq_idx:$d") {
-          val (ivf, pq) = Fixtures.memo(s"ivfpq_models:$d") {
-            val iv = Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
-            (iv, PQ.trainResidual(e, iv, m = 16, ksub = 16, iters = 10))
-          }
-          val dr = java.nio.file.Files.createTempDirectory("ivfpq_idx_q").toString
-          IvfIndex.writeIndex(e, ivf, dr, IvfIndex.Codec.Pq(pq))
-          dr
-        }
+        val dir = ivfpqIdx(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 3, nprobe = 4, metric = "l2", overfetch = 8)
           .orderBy(col("qid"), col("rn"))
       },
       None),
 
-    // Product quantization + ADC batch search — approximate, rows-only;
-    // ADC identity, determinism, and recall are spec-gated (PqSpec).
+    // Product quantization + ADC batch search over the flat (one-cell)
+    // PQ store — approximate, rows-only; ADC identity, determinism, and
+    // recall are spec-gated (PqSpec).
     "q_ann_pq" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val model = Fixtures.memo(s"pq_model:$d") {
-          graft.operators.ProductQuantizer.train(e, m = 16, ksub = 16, iters = 10)
-        }
-        val codes = e.select(col("vec_id"),
-          graft.operators.ProductQuantizer.encodeExpr(col("embedding"), model).as("pq_codes"))
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        graft.operators.ProductQuantizer.topK(codes, e, q, model, k = 3, overfetch = 8)
+        IvfIndex.searchIndex(s, pqFlatIdx(e, d), q, k = 3, nprobe = 1, metric = "l2",
+            overfetch = 8)
           .orderBy(col("qid"), col("rn"))
       },
       None),
@@ -1185,13 +1167,9 @@ object QueriesExtra {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val n = e.count().toInt
-        val model = Fixtures.memo(s"pq_model:$d") {
-          graft.operators.ProductQuantizer.train(e, m = 16, ksub = 16, iters = 10)
-        }
-        val codes = e.select(col("vec_id"),
-          graft.operators.ProductQuantizer.encodeExpr(col("embedding"), model).as("pq_codes"))
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        graft.operators.ProductQuantizer.topK(codes, e, q, model, k = 5, overfetch = n)
+        IvfIndex.searchIndex(s, pqFlatIdx(e, d), q, k = 5, nprobe = 1, metric = "l2",
+            overfetch = n)
           .orderBy(col("qid"), col("rn"))
       },
       Some(annExactL2Sql)),
@@ -2869,8 +2847,9 @@ object QueriesExtra {
              |  md5(array_to_string(qvec, '|')) AS code_hash
              |FROM q ORDER BY vec_id""".stripMargin)),
 
-    // Quantized-scan KNN: coarse top-k·c in the integer code domain, then
-    // full-precision rerank of the candidates. Every stage deterministic
+    // Quantized-scan KNN over the flat (one-cell) SQ8 store: coarse
+    // top-k·c in the integer code domain, then full-precision rerank of
+    // the candidates. Every stage deterministic
     // (integer qdist / rounded exact dist, id tiebreaks), so DuckDB
     // replays the whole pipeline — quantize, code-L2, candidate cut,
     // rerank — hash-exact. Recall vs exact KNN and code-column pruning
@@ -2878,11 +2857,7 @@ object QueriesExtra {
     "q_knn_quantized" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val (mn, mx) = graft.operators.Quantize.scalarRange(e)
-        val codes = graft.operators.Quantize.quantize(e, "embedding", mn, mx)
-          .select(col("vec_id"), col("qvec"))
-        graft.operators.Quantize.topKQuantized(
-          codes, e, e.where(col("vec_id") === 0), mn, mx, k = 5, overfetch = 4)
+        flatKnn(s, sq8FlatIdx(e, d), e, k = 5, overfetch = 4)
       },
       Some("""WITH r AS (
              |  SELECT CAST(min(list_aggregate(embedding, 'min')) AS DOUBLE) AS mn,
@@ -2908,7 +2883,7 @@ object QueriesExtra {
              |FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN q
              |ORDER BY dist, vec_id LIMIT 5""".stripMargin)),
 
-    // halfvec (binary16) store + KNN — pgvector 0.7's 2-byte vector
+    // halfvec (binary16) flat store + KNN — pgvector 0.7's 2-byte vector
     // tier between float32 and SQ8. Rows-only: DuckDB has no binary16
     // codec to replay; idempotence over all 65536 bit patterns,
     // nearest-rounding, the 2^-11 reconstruction bound, store
@@ -2916,14 +2891,8 @@ object QueriesExtra {
     // (QuantizeSpec).
     "q_knn_half" -> QueryDef(
       (s, d) => {
-        import graft.operators.Quantize
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"half_store:$d") {
-          val dr = java.nio.file.Files.createTempDirectory("half_store_q").toString
-          Quantize.writeStoreHalf(e, dr)
-          dr
-        }
-        Quantize.topKHalf(s, dir, e.where(col("vec_id") === 0), k = 5, overfetch = 4)
+        flatKnn(s, halfFlatIdx(e, d), e, k = 5, overfetch = 4)
       },
       None),
 
@@ -3051,12 +3020,7 @@ object QueriesExtra {
     "q_ann_binary_idx" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.memo(s"ivf_bin_idx_k8:$d") {
-          val model = Fixtures.memo(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
-          val dr = java.nio.file.Files.createTempDirectory("ivf_bin_q").toString
-          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Binary)
-          dr
-        }
+        val dir = ivfBinIdxK8(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 2, metric = "l2")
           .orderBy(col("qid"), col("rn"))
@@ -3070,12 +3034,7 @@ object QueriesExtra {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val n = e.count().toInt
-        val dir = Fixtures.memo(s"ivf_bin_idx_k16:$d") {
-          val model = Fixtures.memo(s"ivf_model_k16_i3:$d") { IvfIndex.train(e, k = 16, iters = 3) }
-          val dr = java.nio.file.Files.createTempDirectory("ivf_bin_exact_q").toString
-          IvfIndex.writeIndex(e, model, dr, IvfIndex.Codec.Binary)
-          dr
-        }
+        val dir = ivfBinIdxK16(e, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
         IvfIndex.searchIndex(s, dir, q, k = 5, nprobe = 16, metric = "l2", overfetch = n)
           .orderBy(col("qid"), col("rn"))
@@ -3093,17 +3052,8 @@ object QueriesExtra {
     // row lands in the store exactly once.
     "q_ivfpq_build" -> QueryDef(
       (s, d) => {
-        import graft.operators.{ProductQuantizer => PQ}
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.rebuild(s"ivfpq_idx:$d") {
-          val (ivf, pq) = Fixtures.rebuild(s"ivfpq_models:$d") {
-            val iv = Fixtures.rebuild(s"ivf_model_k8_i2:$d") { IvfIndex.train(e, k = 8, iters = 2) }
-            (iv, PQ.trainResidual(e, iv, m = 16, ksub = 16, iters = 10))
-          }
-          val dr = java.nio.file.Files.createTempDirectory("ivfpq_idx_q").toString
-          IvfIndex.writeIndex(e, ivf, dr, IvfIndex.Codec.Pq(pq))
-          dr
-        }
+        val dir = ivfpqIdx(e, d, fresh = true)
         s.read.parquet(dir).agg(
           count(lit(1)).cast("long").as("n_rows"),
           countDistinct(col("vec_id")).cast("long").as("n_ids"))
@@ -3117,11 +3067,7 @@ object QueriesExtra {
     "q_hnsw_build" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
-        val dir = Fixtures.rebuild(s"hnsw_sharded_idx:$d") {
-          val dr = java.nio.file.Files.createTempDirectory("hnsw_sh_q").toString
-          graft.operators.Hnsw.writeIndexSharded(e, numShards = 4, dr)
-          dr
-        }
+        val dir = hnswShardedIdx(e, d, fresh = true)
         s.read.parquet(dir).agg(
           sum(col("n")).cast("long").as("n_nodes"),
           count(lit(1)).cast("long").as("n_shards"))
@@ -3154,16 +3100,14 @@ object QueriesExtra {
              |      FROM embeddings e CROSS JOIN q)
              |SELECT vec_id, hamming FROM h ORDER BY hamming, vec_id LIMIT 10""".stripMargin)),
 
-    // Binary-coarse KNN with exact rerank: the 32×-compression point of
-    // the quantization ladder, recall recovered by overfetch + rerank —
+    // Binary-coarse KNN with exact rerank over the flat (one-cell) binary
+    // store: the 32×-compression point of the quantization ladder, recall recovered by overfetch + rerank —
     // the q_knn_quantized recipe with Hamming in place of code-L2. Both
     // stages deterministic, oracle replays the full pipeline.
     "q_knn_binary" -> QueryDef(
       (s, d) => {
-        import graft.operators.Quantize
         val e = Tables.embeddings(s, d)
-        val bin = e.select(col("vec_id"), Quantize.binarizeExpr(col("embedding")).as("bvec"))
-        Quantize.topKBinary(bin, e, e.where(col("vec_id") === 0), k = 5, overfetch = 4)
+        flatKnn(s, binaryFlatIdx(e, d), e, k = 5, overfetch = 4)
       },
       Some("""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
              |cand AS (

@@ -576,7 +576,8 @@ object Hnsw {
     val cp = new org.apache.hadoop.fs.Path(path, "_shard_centroids.json")
     val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(cp),
-      s"Hnsw: routed store $path has no _shard_centroids.json")
+      s"Hnsw: $path has no _shard_centroids.json — written by writeIndexSharded (hash " +
+        "shards, no routing tier)? Use searchIndexSharded, or rebuild with writeIndexRouted")
     val in = fs.open(cp)
     val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     json.trim.stripPrefix("[").stripSuffix("]").split("\\],\\s*\\[")
@@ -990,31 +991,20 @@ object Hnsw {
                         scale: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     requireNoPendingSwap(spark, path, "searchIndexRouted")
-    val cp = new org.apache.hadoop.fs.Path(path, "_shard_centroids.json")
-    val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(cp),
-      s"Hnsw.searchIndexRouted: $path has no _shard_centroids.json — written by " +
-        "writeIndexSharded (hash shards, no routing tier)? Use searchIndexSharded, " +
-        "or rebuild with writeIndexRouted")
-    val in = fs.open(cp)
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val centroids = json.trim.stripPrefix("[").stripSuffix("]").split("\\],\\s*\\[")
-      .map(_.stripPrefix("[").stripSuffix("]"))
-      .map(_.split(",").map(_.trim.toDouble))
-    val p = math.min(math.max(1, probeShards), centroids.length)
+    // the placement ranking: shards are routing cells, ranked by
+    // (L2, shard id) as IvfIndex.cellOf placed the vectors
+    val routing = IvfIndex.Model(readShardCentroids(spark, path))
     val qArr = queries
       .select(col(queryIdCol).cast("long"), col(embCol).cast("array<double>"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     // per-shard query assignment, built driver-side (queries are
-    // broadcast-small by the serve contract; |assignment| ≤ |queries|·p)
+    // broadcast-small by the serve contract; |assignment| ≤ |queries|·probeShards)
     val assign = scala.collection.mutable.Map.empty[Int, List[(Long, Array[Double])]]
     qArr.foreach { case (qid, q) =>
-      centroids.zipWithIndex.map { case (c, i) => (l2sq(q, c), i) }
-        .sortBy(identity).take(p)
-        .foreach { case (_, shard) =>
-          assign(shard) = (qid, q) :: assign.getOrElse(shard, Nil)
-        }
+      routing.nearestCells(q, probeShards).foreach { shard =>
+        assign(shard) = (qid, q) :: assign.getOrElse(shard, Nil)
+      }
     }
     val byShard = assign.map { case (s0, qs) => s0 -> qs.reverse.toArray }.toMap
     val probed = assign.keys.toSeq.map(_.asInstanceOf[Any])

@@ -262,7 +262,9 @@ object IvfIndex {
     * Every store keeps the full float column for the exact rerank; a
     * [[Coarse]] codec adds one derived column that the coarse pass scans
     * instead. The codec is declared by the store's sidecar files and read
-    * back, in one place, by [[readStore]]. */
+    * back, in one place, by [[readStore]]. A flat (unclustered) quantized
+    * store is the same store over a one-centroid model at the origin: one
+    * `cell=0` dir, searched at nprobe 1. */
   sealed trait Codec {
     /** The projection of the embedding that cells are assigned and probed on. */
     def assignOn(emb: Column): Column = emb
@@ -344,7 +346,9 @@ object IvfIndex {
     /** IVF-PQ (`IVFk,PQm`): product codes of the residual against the
       * row's cell centroid, scored by ADC against a per-(query, cell)
       * residual table. Train `pq` with [[ProductQuantizer.trainResidual]]
-      * against the store's own model. */
+      * against the store's own model; over the one-centroid origin model a
+      * residual is the vector itself, so plain [[ProductQuantizer.train]]
+      * codebooks serve a plain-PQ store. */
     final case class Pq(pq: ProductQuantizer.Model) extends Coarse("pq_codes", 4) {
       def encode(emb: Column, cell: Column, model: Model): Column =
         ProductQuantizer.encodeExpr(ProductQuantizer.residualExpr(emb, cell, model), pq)

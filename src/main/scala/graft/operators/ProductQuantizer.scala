@@ -1,9 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search") — the high-compression complement to the
@@ -22,12 +20,16 @@ import graft.functions.VectorFunctions
   * sample a few thousand rows; the corpus-sized work never leaves
   * Spark). Encoding is row-local codegen ([[IvfIndex.NearestCentroidExpr]]
   * per subspace over `slice`), ADC scoring is a row-local
-  * transform+aggregate over the broadcast per-query table — the only
-  * shuffle in [[topK]] is the per-query top-k window over pre-projected
-  * (qid, id, score) triples, and the decomposition identity
-  * Σⱼ‖qⱼ−cⱼ‖² = ‖q − concat(cⱼ)‖² (spec-pinned) makes ADC exactly the
-  * L2² to the reconstruction — approximation error comes only from
-  * quantization, never from scoring. */
+  * transform+aggregate over the broadcast per-query table, and the
+  * decomposition identity Σⱼ‖qⱼ−cⱼ‖² = ‖q − concat(cⱼ)‖² (spec-pinned)
+  * makes ADC exactly the L2² to the reconstruction — approximation error
+  * comes only from quantization, never from scoring.
+  *
+  * Codec and training only: `IvfIndex.Codec.Pq` encodes and scores with
+  * these kernels, and every PQ search runs through
+  * `IvfIndex.searchIndex`. Plain PQ is an IVF-PQ store over a
+  * one-centroid model at the origin, where a residual is the vector
+  * itself, so its codes and ADC tables are plain PQ's. */
 object ProductQuantizer {
 
   /** `codebooks(j)(c)` = centroid `c` of subspace `j` (m × ksub × dsub). */
@@ -197,86 +199,5 @@ object ProductQuantizer {
     val resid = corpus.select(col(idCol),
       residualExpr(col(embCol), IvfIndex.cellOf(col(embCol), ivf), ivf).as("__resid"))
     train(resid, m, ksub, iters, idCol, "__resid", sampleSize)
-  }
-
-  /** IVF-PQ top-k: probe `nprobe` cells per query; inside each probed
-    * cell score rows by ADC against a PER-(query, cell) table built from
-    * the RESIDUAL query `q − centroid(cell)` (‖q−(c+recon)‖² =
-    * ‖(q−c)−recon‖², so the decomposition identity carries over to
-    * residual space); rerank the `k·overfetch` survivors at full
-    * precision. `codes` carries (idCol, cell, codeCol) — the persisted
-    * IVFPQ layout; query-side tables are |queries|·nprobe·m·ksub doubles,
-    * built on the query side ([[residualTableExpr]]) and broadcast
-    * (queries broadcast-small by contract).
-    * The corpus-side coarse pass is a hash join on the integer cell id +
-    * m table lookups per row — no float math, no broadcast of either
-    * corpus side. */
-  def topKIvf(codes: DataFrame, corpus: DataFrame, queries: DataFrame,
-              ivf: IvfIndex.Model, pq: Model, k: Int, nprobe: Int, overfetch: Int = 4,
-              idCol: String = "vec_id", codeCol: String = "pq_codes",
-              embCol: String = "embedding", queryIdCol: String = "qid",
-              scale: Int = 4): DataFrame = {
-    val qTables = broadcast(queries
-      .select(col(queryIdCol).cast("long").as(queryIdCol), col(embCol),
-        explode(IvfIndex.cellsOf(col(embCol), ivf, nprobe)).as("cell"))
-      .select(col(queryIdCol), col("cell"),
-        residualTableExpr(col(embCol), col("cell"), ivf, pq).as("__qtab")))
-    val scored = codes.select(col(idCol), col("cell"), col(codeCol))
-      .join(qTables, Seq("cell"))
-      .select(col(queryIdCol), col(idCol),
-        adcScoreExpr(col(codeCol), col("__qtab"), pq.ksub).as("__adc"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("__adc"), col(idCol))
-    val cand = scored.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k * overfetch)
-      .select(col(queryIdCol), col(idCol))
-    val qEmb = broadcast(queries.select(col(queryIdCol).cast("long").as(queryIdCol),
-      col(embCol).as("__qemb")))
-    val rerank = corpus.join(broadcast(cand), Seq(idCol))
-      .join(qEmb, Seq(queryIdCol))
-      .select(col(queryIdCol), col(idCol),
-        round(VectorFunctions.l2Distance(col(embCol), col("__qemb")), scale).as("dist"))
-    val w2 = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col(idCol))
-    rerank.withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("dist"), col("rn").cast("long").as("rn"))
-  }
-
-  /** Batch top-k by ADC over pre-encoded codes, then full-precision L2
-    * rerank of the `k·overfetch` survivors. Queries are driver-collected
-    * by contract (broadcast-small, same as `Knn.topKBatch`); each rides
-    * with its own m·ksub table. The corpus-side coarse pass touches only
-    * (`idCol`, `codeCol`) — at 100 TB that is the whole point: the float
-    * column is read for candidate rows alone. Deterministic: ADC scores
-    * tie-break by id, rerank rounds + tie-breaks like the exact KNNs. */
-  def topK(codes: DataFrame, corpus: DataFrame, queries: DataFrame, model: Model,
-           k: Int, overfetch: Int = 4,
-           idCol: String = "vec_id", codeCol: String = "pq_codes",
-           embCol: String = "embedding", queryIdCol: String = "qid",
-           scale: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val qRows = queries
-      .select(col(queryIdCol).cast("long"), col(embCol).cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), queryTable(r.getSeq[Double](1).toArray, model).toSeq))
-    val qTables = broadcast(qRows.toSeq.toDF(queryIdCol, "__qtab"))
-    val scored = codes.select(col(idCol), col(codeCol))
-      .crossJoin(qTables)
-      .select(col(queryIdCol), col(idCol),
-        adcScoreExpr(col(codeCol), col("__qtab"), model.ksub).as("__adc"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("__adc"), col(idCol))
-    val cand = scored.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k * overfetch)
-      .select(col(queryIdCol), col(idCol))
-    val qEmb = broadcast(queries.select(col(queryIdCol).cast("long").as(queryIdCol),
-      col(embCol).as("__qemb")))
-    val rerank = corpus.join(broadcast(cand), Seq(idCol))
-      .join(qEmb, Seq(queryIdCol))
-      .select(col(queryIdCol), col(idCol),
-        round(VectorFunctions.l2Distance(col(embCol), col("__qemb")), scale).as("dist"))
-    val w2 = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col(idCol))
-    rerank.withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("dist"), col("rn").cast("long").as("rn"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scalar quantization of embedding vectors — the storage/IO scale lever
@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
   * engine-independent, which is what lets the DuckDB oracle replay codes
   * bit-for-bit — the reason for floor-then-clamp rather than round
   * (round's half-case tie-breaking differs across engines).
+  *
+  * Codecs only: the SQ8 and binary kernels here are what the
+  * `IvfIndex.Codec.Sq8` / `Codec.Binary` cases encode and score with.
+  * Every coarse→rerank search runs through `IvfIndex.searchIndex`; a
+  * flat quantized store is an IVF store over a one-centroid model at the
+  * origin (one `cell=0` dir, searched at nprobe 1).
   */
 object Quantize {
 
@@ -57,45 +63,6 @@ object Quantize {
   def codeL2Sq(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.vecCodeL2Sq(a, b)
 
-  /** KNN with a quantized coarse scan and a full-precision rerank — the
-    * consumer that turns the uint8 codec into the 4×-IO lever: the
-    * corpus-wide pass reads only `codeCol` (¼ the bytes of the float
-    * column) and scores in integer arithmetic; only the `k·overfetch`
-    * surviving candidates ever touch the float column again.
-    *
-    * Plan shape: coarse pass = narrow scan → `TakeOrderedAndProject`
-    * (per-partition heap, no corpus shuffle); rerank = broadcast semi
-    * join of the bounded candidate set against the corpus → second
-    * `TakeOrderedAndProject`. Both stages deterministic (integer qdist
-    * and rounded exact dist, each tie-broken by id), so the whole
-    * pipeline replays bit-for-bit in the DuckDB oracle.
-    *
-    * CONTRACT: `query` must hold exactly ONE row (same as [[Knn.topK]]) —
-    * the global orderBy/limit merges candidates across query rows, so a
-    * multi-row frame would return one mixed top-k instead of per-query
-    * results (enforced; for batches use [[Knn.topKBatch]] or
-    * `IvfIndex.knnJoin`, which rank per query id with a window).
-    */
-  def topKQuantized(codes: DataFrame, corpus: DataFrame, query: DataFrame,
-                    mn: Double, mx: Double, k: Int, overfetch: Int = 4,
-                    idCol: String = "vec_id", codeCol: String = "qvec",
-                    embCol: String = "embedding", scale: Int = 4): DataFrame = {
-    requireSingleQuery(query, "topKQuantized")
-    val qc = broadcast(query.select(quantizeExpr(col(embCol), mn, mx).as("__q_codes")))
-    val cand = codes.crossJoin(qc)
-      .select(col(idCol), codeL2Sq(col(codeCol), col("__q_codes")).as("qdist"))
-      .orderBy(col("qdist"), col(idCol))
-      .limit(k * overfetch)
-    val q = broadcast(query.select(col(embCol).as("__q_emb")))
-    corpus.join(broadcast(cand.select(idCol)), Seq(idCol), "left_semi")
-      .crossJoin(q)
-      .select(col(idCol),
-        round(graft.functions.VectorFunctions.l2Distance(col(embCol), col("__q_emb")), scale)
-          .as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
-  }
-
   /** BINARY quantization — the pgvector 0.7 bit-vector family (`bit(n)`
     * with hamming ops): sign bit per dimension, 32× smaller than
     * float32, distance = popcount of XOR. The aggressive end of the
@@ -122,152 +89,4 @@ object Quantize {
     aggregate(
       zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
       lit(0L), (acc, x) => acc + x)
-
-  /** Binary-coarse KNN with full-precision rerank — [[topKQuantized]]'s
-    * shape at the 32× compression point: the corpus-wide pass reads only
-    * the packed bit column and scores by Hamming (integer, deterministic,
-    * ties by id); the `k·overfetch` survivors rerank at exact L2. 1-row
-    * query contract as everywhere. */
-  def topKBinary(bits: DataFrame, corpus: DataFrame, query: DataFrame, k: Int,
-                 overfetch: Int = 4, idCol: String = "vec_id",
-                 bitCol: String = "bvec", embCol: String = "embedding",
-                 scale: Int = 4): DataFrame = {
-    requireSingleQuery(query, "topKBinary")
-    val qb = broadcast(query.select(binarizeExpr(col(embCol)).as("__q_bits")))
-    val cand = bits.crossJoin(qb)
-      .select(col(idCol), hammingExpr(col(bitCol), col("__q_bits")).as("hdist"))
-      .orderBy(col("hdist"), col(idCol))
-      .limit(k * overfetch)
-    val q = broadcast(query.select(col(embCol).as("__q_emb")))
-    corpus.join(broadcast(cand.select(idCol)), Seq(idCol), "left_semi")
-      .crossJoin(q)
-      .select(col(idCol),
-        round(graft.functions.VectorFunctions.l2Distance(col(embCol), col("__q_emb")), scale)
-          .as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
-  }
-
-  /** Persist a quantized vector store: one parquet table holding both the
-    * float vectors and their codes. Readers pick their column — the
-    * coarse scan prunes to (`idCol`, qvec) and never deserializes the
-    * float column (parquet is columnar; the 4× IO saving is real, not
-    * cosmetic), while the rerank fetches floats for candidate ids only. */
-  def writeStore(vecs: DataFrame, path: String, mn: Double, mx: Double,
-                 vecCol: String = "embedding"): Unit =
-    quantize(vecs, vecCol, mn, mx).write.mode("overwrite").parquet(path)
-
-  /** KNN against a persisted store written by [[writeStore]].
-    *
-    * The rerank read carries a **static `id IN (…)` filter** (the
-    * candidate list is `k·overfetch` driver-collected longs — bounded,
-    * like IVF centroids) rather than a semi join, so it reaches parquet
-    * as a pushed filter and prunes row groups: on a 1000-executor store
-    * the second pass touches only the stripes holding candidates
-    * (pattern: DedupIndex candidate-id pushdown, judged scale-correct
-    * r4).
-    *
-    * CONTRACT: `query` must hold exactly ONE row (enforced) — see
-    * [[topKQuantized]]. */
-  def topKStore(spark: SparkSession, path: String, query: DataFrame,
-                mn: Double, mx: Double, k: Int, overfetch: Int = 4,
-                idCol: String = "vec_id", codeCol: String = "qvec",
-                embCol: String = "embedding", scale: Int = 4): DataFrame = {
-    requireSingleQuery(query, "topKStore")
-    val candIds = coarseCandidates(spark.read.parquet(path), query, mn, mx,
-      k * overfetch, idCol, codeCol, embCol)
-      .collect().map(_.getLong(0))
-    rerankRead(spark.read.parquet(path), query, candIds, k, idCol, embCol, scale)
-  }
-
-  // ── halfvec (binary16) tier — pgvector 0.7's 2-byte vector type ────
-
-  /** binary16 codes for a float/double vector column (array<short>) —
-    * the storage point between float32 and SQ8: half the bytes of
-    * float32 at ≤ 2⁻¹¹ relative error, no training and no range sidecar
-    * (unlike SQ8 the codec is value-local), so a halfvec store never
-    * needs a re-quantization rebuild on distribution drift. */
-  def halfEncodeExpr(vec: Column): Column =
-    graft.functions.HalfExpressions.halfEncode(vec)
-
-  /** Exact float32 reconstruction of binary16 codes. */
-  def halfDecodeExpr(codes: Column): Column =
-    graft.functions.HalfExpressions.halfDecode(codes)
-
-  /** Persist a halfvec store: float vectors + their binary16 codes in
-    * one columnar table (the [[writeStore]] layout at the half tier) —
-    * coarse readers prune to (`idCol`, hvec), rerank fetches floats for
-    * candidates only. */
-  def writeStoreHalf(vecs: DataFrame, path: String, vecCol: String = "embedding"): Unit =
-    vecs.withColumn("hvec", halfEncodeExpr(col(vecCol)))
-      .write.mode("overwrite").parquet(path)
-
-  /** KNN against a [[writeStoreHalf]] store: L2 over the DECODED half
-    * vectors as the coarse score (half reconstruction is exact float32
-    * math, so coarse ordering is the true ordering of the rounded
-    * vectors — far tighter than SQ8's lattice), then the standard
-    * bounded full-precision rerank via static id pushdown
-    * ([[rerankRead]]). With overfetch covering the corpus this
-    * degenerates to exact KNN (spec-pinned). CONTRACT: 1-row query. */
-  def topKHalf(spark: SparkSession, path: String, query: DataFrame, k: Int,
-               overfetch: Int = 4, idCol: String = "vec_id",
-               embCol: String = "embedding", scale: Int = 4): DataFrame = {
-    requireSingleQuery(query, "topKHalf")
-    val qh = broadcast(query.select(
-      halfDecodeExpr(halfEncodeExpr(col(embCol))).as("__qh")))
-    val candIds = spark.read.parquet(path)
-      .select(col(idCol), halfDecodeExpr(col("hvec")).as("__h"))
-      .crossJoin(qh)
-      .select(col(idCol),
-        graft.functions.VectorExpressions.vecL2Sq(col("__h"), col("__qh")).as("hdist"))
-      .orderBy(col("hdist"), col(idCol))
-      .limit(k * overfetch)
-      .collect().map(_.getLong(0))
-    rerankRead(spark.read.parquet(path), query, candIds, k, idCol, embCol, scale)
-  }
-
-  /** The 1-row query-frame contract shared by the single-query top-k
-    * entry points: a multi-row frame would silently merge all queries
-    * into one global top-k. The check is a `limit(2)` count — bounded
-    * work regardless of the frame behind it. */
-  private def requireSingleQuery(query: DataFrame, who: String): Unit = {
-    val n = query.limit(2).count()
-    require(n == 1,
-      s"Quantize.$who: query frame must hold exactly 1 row (got ${if (n > 1) ">1" else "0"}); " +
-        "use Knn.topKBatch or IvfIndex.knnJoin for multi-query batches")
-  }
-
-  /** Coarse pass over a quantized store: integer code-L2 scored narrow
-    * scan → `TakeOrderedAndProject`. Projects (`idCol`, `codeCol`) only,
-    * so the parquet read schema excludes the float column entirely
-    * (plan-asserted in QuantizeSpec). CONTRACT (not enforced here —
-    * callers [[topKQuantized]]/[[topKStore]] enforce it): 1-row query
-    * frame. */
-  def coarseCandidates(store: DataFrame, query: DataFrame, mn: Double, mx: Double,
-                       n: Int, idCol: String = "vec_id", codeCol: String = "qvec",
-                       embCol: String = "embedding"): DataFrame = {
-    val qc = broadcast(query.select(quantizeExpr(col(embCol), mn, mx).as("__q_codes")))
-    store.select(col(idCol), col(codeCol))
-      .crossJoin(qc)
-      .select(col(idCol), codeL2Sq(col(codeCol), col("__q_codes")).as("qdist"))
-      .orderBy(col("qdist"), col(idCol))
-      .limit(n)
-  }
-
-  /** Full-precision rerank of a bounded candidate-id list: static
-    * `id IN (…)` reaches parquet as a pushed filter (row-group pruning),
-    * float column read for candidates only. */
-  def rerankRead(store: DataFrame, query: DataFrame, candIds: Array[Long], k: Int,
-                 idCol: String = "vec_id", embCol: String = "embedding",
-                 scale: Int = 4): DataFrame = {
-    val q = broadcast(query.select(col(embCol).as("__q_emb")))
-    store.select(col(idCol), col(embCol))
-      .where(col(idCol).isin(candIds: _*))
-      .crossJoin(q)
-      .select(col(idCol),
-        round(graft.functions.VectorFunctions.l2Distance(col(embCol), col("__q_emb")), scale)
-          .as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
-  }
 }

@@ -301,17 +301,21 @@ object WarcPipeline {
     * apply curation (robots/status) to each crawl row before or after,
     * never to the content store. Non-revisit rows pass through
     * unchanged; unresolvable revisits (no capture with that digest)
-    * DROP — there is no content to train on. Shuffle join keyed on the
-    * digest, both sides corpus-sized: never a cartesian, never a
+    * DROP — there is no content to train on. When several captures
+    * carry one digest, a revisit inherits the least of their inherited
+    * columns (struct order: kind, charset, title, text_len, text_md5),
+    * so the choice does not depend on partitioning. Shuffle join keyed
+    * on the digest, both sides corpus-sized: never a cartesian, never a
     * collect. */
   def resolveRevisits(extracted: DataFrame): DataFrame = {
     val content = extracted.where(col("kind") =!= "revisit")
-      .select(col("payload_digest"),
+      .where(col("payload_digest") =!= "")
+      .groupBy(col("payload_digest"))
+      .agg(min(struct(
         col("kind").as("r_kind"), col("charset").as("r_charset"),
         col("title").as("r_title"), col("text_len").as("r_len"),
-        col("text_md5").as("r_md5"))
-      .where(col("payload_digest") =!= "")
-      .dropDuplicates("payload_digest")
+        col("text_md5").as("r_md5"))).as("r"))
+      .select(col("payload_digest"), col("r.*"))
     val resolved = extracted.where(col("kind") === "revisit")
       .drop("kind", "charset", "title", "text_len", "text_md5")
       .join(content, "payload_digest")

@@ -19,20 +19,36 @@ class FixturesSpec extends AnyFunSuite {
     assert(Files.isDirectory(root) && root.getFileName.toString.startsWith("graft_fixtures"))
   }
 
-  test("no query builds a fixture path under the shared java.io.tmpdir") {
-    val shared = """java\.io\.tmpdir""".r
-    // the old per-site shape is caught
-    assert(shared.findFirstIn(
-      """val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_spidx_$tag"""").nonEmpty)
+  /** The `Queries*.scala` files in which `pattern` occurs. */
+  private def queriesMatching(pattern: scala.util.matching.Regex): Seq[String] = {
     val dir = new java.io.File("src/main/scala/graft")
     assert(dir.isDirectory, s"run from the repository root (no ${dir.getAbsolutePath})")
     val queries = dir.listFiles().toSeq
       .filter(f => f.getName.startsWith("Queries") && f.getName.endsWith(".scala"))
     assert(queries.size >= 2, queries.mkString(", "))
-    val offenders = queries.filter(f =>
-      shared.findFirstIn(new String(Files.readAllBytes(f.toPath), "UTF-8")).nonEmpty)
+    queries.filter(f =>
+      pattern.findFirstIn(new String(Files.readAllBytes(f.toPath), "UTF-8")).nonEmpty)
+      .map(_.getName)
+  }
+
+  test("no query builds a fixture path under the shared java.io.tmpdir") {
+    val shared = """java\.io\.tmpdir""".r
+    // the old per-site shape is caught
+    assert(shared.findFirstIn(
+      """val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_q_spidx_$tag"""").nonEmpty)
+    val offenders = queriesMatching(shared)
     assert(offenders.isEmpty,
-      s"shared tmpdir paths in ${offenders.map(_.getName).mkString(", ")} — use " +
-        "Fixtures.scratchDir")
+      s"shared tmpdir paths in ${offenders.mkString(", ")} — use Fixtures.scratchDir")
+  }
+
+  test("no query makes its own temp dir: fixtures live under the scratch root") {
+    // per-call temp dirs outlive the JVM and pile up in the temp root
+    val ownTemp = """createTempDirectory""".r
+    // the old inline shape is caught
+    assert(ownTemp.findFirstIn(
+      """val dr = java.nio.file.Files.createTempDirectory("ivf_ip_q").toString""").nonEmpty)
+    val offenders = queriesMatching(ownTemp)
+    assert(offenders.isEmpty,
+      s"createTempDirectory in ${offenders.mkString(", ")} — use Fixtures.scratchDir")
   }
 }

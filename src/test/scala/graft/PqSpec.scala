@@ -45,12 +45,13 @@ class PqSpec extends SparkSpec {
     val ivf = IvfIndex.train(vecs, k = 8, iters = 2)
     val pq = PQ.trainResidual(vecs, ivf, m = 16, ksub = 16, iters = 10)
     val cellCol = IvfIndex.cellOf(col("embedding"), ivf)
-    val codes = vecs.select(col("vec_id"), cellCol.as("cell"),
-      PQ.encodeExpr(PQ.residualExpr(col("embedding"), cellCol, ivf), pq).as("pq_codes"))
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_residual").toString
+    IvfIndex.writeIndex(vecs, ivf, dir, IvfIndex.Codec.Pq(pq))
     val k = 10
     val queries = vecs.where(col("vec_id") < 6)
       .select(col("vec_id").as("qid"), col("embedding"))
-    val approx = PQ.topKIvf(codes, vecs, queries, ivf, pq, k, nprobe = 6, overfetch = 8)
+    val approx = IvfIndex.searchIndex(spark, dir, queries, k, nprobe = 6, metric = "l2",
+        overfetch = 8)
       .select("qid", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1).view.mapValues(_.map(_._2).toSet)
     val recalls = (0L until 6L).map { qid =>
@@ -63,8 +64,9 @@ class PqSpec extends SparkSpec {
 
     // probe ALL cells with corpus-covering overfetch: rerank == exact KNN
     val q0 = vecs.where(col("vec_id") === 0).select(col("vec_id").as("qid"), col("embedding"))
-    val full = PQ.topKIvf(codes, vecs, q0, ivf, pq, k = 5, nprobe = 8, overfetch = 1000)
-      .collect().map(r => (r.getLong(1), r.getDouble(2))).toList
+    val full = IvfIndex.searchIndex(spark, dir, q0, k = 5, nprobe = 8, metric = "l2",
+        overfetch = 1000)
+      .orderBy(col("rn")).collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     val exact5 = Knn.topK(vecs, vecs.where(col("vec_id") === 0), Knn.L2, 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
     assert(full == exact5)
@@ -163,11 +165,15 @@ class PqSpec extends SparkSpec {
   }
 
   test("PQ top-k with rerank keeps recall; covering overfetch degenerates to exact KNN") {
-    val codes = vecs.select(col("vec_id"), PQ.encodeExpr(col("embedding"), model).as("pq_codes"))
+    import graft.operators.IvfIndex
+    // plain PQ: the one-cell store over the origin, whose residuals are
+    // the vectors themselves
+    val dir = OneCellStore.write(vecs, IvfIndex.Codec.Pq(model), "pq_plain")
     val k = 10
     val queries = vecs.where(col("vec_id") < 6)
       .select(col("vec_id").as("qid"), col("embedding"))
-    val approx = PQ.topK(codes, vecs, queries, model, k, overfetch = 8)
+    val approx = IvfIndex.searchIndex(spark, dir, queries, k, nprobe = 1, metric = "l2",
+        overfetch = 8)
       .select("qid", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1).view.mapValues(_.map(_._2).toSet)
     val recalls = (0L until 6L).map { qid =>
@@ -180,8 +186,9 @@ class PqSpec extends SparkSpec {
 
     // overfetch covering the whole corpus: rerank IS exact KNN
     val q0 = vecs.where(col("vec_id") === 0).select(col("vec_id").as("qid"), col("embedding"))
-    val full = PQ.topK(codes, vecs, q0, model, k = 5, overfetch = 1000)
-      .collect().map(r => (r.getLong(1), r.getDouble(2))).toList
+    val full = IvfIndex.searchIndex(spark, dir, q0, k = 5, nprobe = 1, metric = "l2",
+        overfetch = 1000)
+      .orderBy(col("rn")).collect().map(r => (r.getLong(1), r.getDouble(2))).toList
     val exact5 = Knn.topK(vecs, vecs.where(col("vec_id") === 0), Knn.L2, 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
     assert(full == exact5)

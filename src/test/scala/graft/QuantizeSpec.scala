@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Knn, Quantize}
+import graft.functions.HalfExpressions
+import graft.operators.{IvfIndex, Knn, Quantize}
 
 class QuantizeSpec extends SparkSpec {
 
@@ -43,18 +44,21 @@ class QuantizeSpec extends SparkSpec {
     assert(mean >= 0.9, s"mean recall $mean over ${queries.size} queries: $recalls")
   }
 
+  /** Each query's ids from a `(qid, vec_id, …)` search. */
+  private def idsByQuery(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+    df.collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
+
   test("quantized-scan KNN with rerank keeps recall >= 0.95 vs exact") {
     val (mn, mx) = Quantize.scalarRange(vecs)
-    val codes = Quantize.quantize(vecs, "embedding", mn, mx)
-      .select(col("vec_id"), col("qvec"))
+    val path = OneCellStore.write(vecs, IvfIndex.Codec.Sq8(mn, mx), "sq8_recall")
     val k = 10
+    val queries = vecs.where(col("vec_id") < 8).select(col("vec_id").as("qid"), col("embedding"))
+    val approx = idsByQuery(IvfIndex.searchIndex(spark, path, queries, k, nprobe = 1,
+      metric = "l2", overfetch = 4))
     val recalls = (0L until 8L).map { qid =>
-      val q = vecs.where(col("vec_id") === qid)
-      val exact = Knn.topK(vecs, q, Knn.L2, k)
+      val exact = Knn.topK(vecs, vecs.where(col("vec_id") === qid), Knn.L2, k)
         .select("vec_id").collect().map(_.getLong(0)).toSet
-      val approx = Quantize.topKQuantized(codes, vecs, q, mn, mx, k, overfetch = 4)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      (exact intersect approx).size.toDouble / k
+      (exact intersect approx(qid)).size.toDouble / k
     }
     val mean = recalls.sum / recalls.size
     assert(mean >= 0.95, s"mean recall $mean: $recalls")
@@ -99,9 +103,11 @@ class QuantizeSpec extends SparkSpec {
 
   test("binary-coarse KNN with rerank keeps recall >= 0.8 vs exact") {
     val query = vecs.where(col("vec_id") === 11)
-    val bin = vecs.select(col("vec_id"), Quantize.binarizeExpr(col("embedding")).as("bvec"))
-    val got = Quantize.topKBinary(bin, vecs, query, k = 10, overfetch = 8)
-      .collect().map(_.getLong(0)).toSet
+    val path = OneCellStore.write(vecs, IvfIndex.Codec.Binary, "binary_recall")
+    val got = IvfIndex.searchIndex(spark, path,
+        query.select(col("vec_id").as("qid"), col("embedding")), k = 10, nprobe = 1,
+        metric = "l2", overfetch = 8)
+      .collect().map(_.getLong(1)).toSet
     val exact = Knn.topK(vecs, query, Knn.L2, k = 10)
       .collect().map(_.getLong(0)).toSet
     val recall = (got & exact).size.toDouble / exact.size
@@ -112,11 +118,14 @@ class QuantizeSpec extends SparkSpec {
 
   test("store coarse scan reads only the code column; rerank pushes id IN filter") {
     val (mn, mx) = Quantize.scalarRange(vecs)
-    val dir = java.nio.file.Files.createTempDirectory("qstore").toString
-    Quantize.writeStore(vecs, dir, mn, mx)
-    val q = vecs.where(col("vec_id") === 0)
+    val codec = IvfIndex.Codec.Sq8(mn, mx)
+    val dir = OneCellStore.write(vecs, codec, "sq8_plan")
+    val q = vecs.where(col("vec_id") === 0).select(col("vec_id").as("qid"), col("embedding"))
+    val qv = q.select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
 
-    val coarse = Quantize.coarseCandidates(spark.read.parquet(dir), q, mn, mx, n = 40)
+    // the search's coarse stage over the one cell
+    val coarse = IvfIndex.coarseCandidates(spark, dir, IvfIndex.readStore(spark, dir), codec,
+      qv, qv, nprobe = 1, n = 40, idCol = "vec_id")
     val coarsePlan = coarse.queryExecution.executedPlan.toString
     // the corpus-wide scan must NOT deserialize the float column — that's
     // the whole 4x-IO point of the codec
@@ -126,19 +135,16 @@ class QuantizeSpec extends SparkSpec {
     assert(corpusScans.forall(!_.contains("embedding")),
       s"coarse scan reads float column: $corpusScans")
 
-    val candIds = coarse.collect().map(_.getLong(0))
-    val rerank = Quantize.rerankRead(spark.read.parquet(dir), q, candIds, k = 5)
+    assert(coarse.collect().length == 40)
+
+    // the rerank reads the float column for the candidate ids alone
+    val rerank = IvfIndex.searchIndex(spark, dir, q, k = 5, nprobe = 1, metric = "l2")
     val rerankPlan = rerank.queryExecution.executedPlan.toString
     assert("PushedFilters: \\[[^\\]]*In\\(vec_id".r.findFirstIn(rerankPlan).nonEmpty,
       rerankPlan.take(3000))
-
-    // store path end-to-end equals the inline quantized pipeline
-    val viaStore = Quantize.topKStore(spark, dir, q, mn, mx, k = 5)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
-    val codes = Quantize.quantize(vecs, "embedding", mn, mx).select(col("vec_id"), col("qvec"))
-    val inline = Quantize.topKQuantized(codes, vecs, q, mn, mx, k = 5)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
-    assert(viaStore == inline)
+    // the store search returns the deleted flat search's rows:
+    // OneCellStoreSpec pins that against its reference
+    assert(rerank.count() == 5)
   }
 
   test("halfvec codec: idempotent over all 65536 bit patterns; NaN collapses to the quiet NaN") {
@@ -190,27 +196,26 @@ class QuantizeSpec extends SparkSpec {
   }
 
   test("halfvec store: round-trip through parquet; covering overfetch degenerates to exact KNN") {
-    import graft.operators.{Knn, Quantize}
     val e = Tables.embeddings(spark, sfDir)
     val n = e.count().toInt
-    val dir = java.nio.file.Files.createTempDirectory("half_store").toString
-    Quantize.writeStoreHalf(e, dir)
-    // codes survive parquet: decode(read(hvec)) == decode(encode(embedding))
+    val dir = OneCellStore.write(e, IvfIndex.Codec.Half, "half_store")
+    // codes survive parquet: unpack(read(hvec)) == decode(encode(embedding))
     val back = spark.read.parquet(dir)
-      .select(col("vec_id"), Quantize.halfDecodeExpr(col("hvec")).as("h1"),
-        Quantize.halfDecodeExpr(Quantize.halfEncodeExpr(col("embedding"))).as("h2"))
+      .select(col("vec_id"), HalfExpressions.halfUnpack(col("hvec")).as("h1"),
+        HalfExpressions.halfDecode(HalfExpressions.halfEncode(col("embedding"))).as("h2"))
       .where(expr("h1 <> h2"))
     assert(back.count() == 0)
     val q = e.where(col("vec_id") === 3)
     val exact = Knn.topK(e, q, Knn.L2, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
-    val viaHalf = Quantize.topKHalf(spark, dir, q, k = 10, overfetch = n)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
-    assert(viaHalf == exact, s"half=$viaHalf exact=$exact")
+    def viaHalf(overfetch: Int) = IvfIndex.searchIndex(spark, dir,
+        q.select(col("vec_id").as("qid"), col("embedding")), k = 10, nprobe = 1, metric = "l2",
+        overfetch = overfetch)
+      .orderBy(col("rn")).collect().map(r => (r.getLong(1), r.getDouble(2))).toList
+    assert(viaHalf(n) == exact, s"half=${viaHalf(n)} exact=$exact")
     // production overfetch keeps recall on this corpus (half error is
     // tiny relative to inter-vector distances)
-    val prod = Quantize.topKHalf(spark, dir, q, k = 10, overfetch = 4)
-      .collect().map(_.getLong(0)).toSet
+    val prod = viaHalf(4).map(_._1).toSet
     assert(prod.intersect(exact.map(_._1).toSet).size >= 9)
   }
 

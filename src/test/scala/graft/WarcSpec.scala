@@ -365,4 +365,31 @@ class WarcSpec extends AnyFunSuite with SparkSpec {
     assert(rows((0L, 0L)).getAs[Long]("n_records") == 5)
     assert(rows.size == 7)
   }
+
+  test("resolveRevisits: captures sharing a digest resolve the same under any partitioning") {
+    import spark.implicits._
+    // two responses carry digest d1 with different titles and text; the
+    // revisit naming d1 must inherit the same one whatever the layout
+    val rows = Seq(
+      (1L, 200L, "https://a/1", "response", "utf-8", "Beta", 40L, "md5-beta", "d1"),
+      (2L, 200L, "https://a/2", "response", "utf-8", "Alpha", 30L, "md5-alpha", "d1"),
+      (3L, 200L, "https://a/3", "response", "utf-8", "Gamma", 50L, "md5-gamma", "d2"),
+      (4L, 200L, "https://a/1", "revisit", "", "", 0L, "", "d1"),
+      (5L, 200L, "https://a/3", "revisit", "", "", 0L, "", "d2"),
+      (6L, 200L, "https://a/9", "revisit", "", "", 0L, "", "d9"))
+      .toDF("doc_id", "status", "url", "kind", "charset", "title", "text_len", "text_md5",
+        "payload_digest")
+    def resolved(layout: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+      WarcPipeline.resolveRevisits(layout).orderBy(col("doc_id")).collect().toSeq
+    val one = resolved(rows.repartition(1))
+    val three = resolved(rows.orderBy(col("doc_id").desc).repartition(3, col("doc_id")))
+    assert(one == three, s"$one vs $three")
+    // the least of the inherited columns wins; the unresolvable d9 drops
+    val byId = one.map(r => r.getAs[Long]("doc_id") -> r).toMap
+    assert(byId.keySet == Set(1L, 2L, 3L, 4L, 5L))
+    assert(byId(4L).getAs[String]("title") == "Alpha" &&
+      byId(4L).getAs[String]("text_md5") == "md5-alpha" &&
+      byId(4L).getAs[String]("kind") == "response")
+    assert(byId(5L).getAs[String]("title") == "Gamma")
+  }
 }
