@@ -1118,15 +1118,16 @@ object QueriesExtra {
              |  FROM scored)
              |SELECT qid, vec_id, cos, rn FROM ranked WHERE rn <= 3 ORDER BY qid, rn""".stripMargin)),
 
-    // IVF-PQ: coarse cells + product codes over residuals, per-(query,
-    // cell) ADC tables, full-precision rerank, over the persisted IVF-PQ
-    // store. Approximate, rows-only; recall/identity/exact-degeneration
-    // are spec-gated (PqSpec).
+    // IVF-PQ at a narrow probe: the q_ann_ivfpq_idx search on the same
+    // 8-cell store, probing 2 cells instead of 4 — coarse cells +
+    // product codes over residuals, per-(query, cell) ADC tables,
+    // full-precision rerank. Approximate, rows-only;
+    // recall/identity/exact-degeneration are spec-gated (PqSpec).
     "q_ann_ivfpq" -> QueryDef(
       (s, d) => {
         val e = Tables.embeddings(s, d)
         val q = e.where(col("vec_id") < 4).select(col("vec_id").as("qid"), col("embedding"))
-        IvfIndex.searchIndex(s, ivfpqIdx(e, d), q, k = 3, nprobe = 4, metric = "l2", overfetch = 8)
+        IvfIndex.searchIndex(s, ivfpqIdx(e, d), q, k = 3, nprobe = 2, metric = "l2", overfetch = 8)
           .orderBy(col("qid"), col("rn"))
       },
       None),

@@ -114,12 +114,12 @@ object QueriesSearch {
     // dense-embedding cosine list — the production shape for "vector
     // search + keyword search" over one corpus.
     "q_hybrid_rrf" -> QueryDef(
-      (s, d) => TextSearch.rrfFuse(
-          TextSearch.bm25(Tables.documents(s, d), Terms), cosineSide(s, d),
-          "doc_id", "score", "cos")
+      (s, d) => TextSearch.rrfFuseN(
+          Seq((TextSearch.bm25(Tables.documents(s, d), Terms), "score"),
+            (cosineSide(s, d), "cos")), "doc_id")
         .orderBy(col("rrf").desc, col("doc_id")).limit(10),
       Some(bm25Cte + cosCte + """,
-             |-- top-1000 truncation mirrors TextSearch.rrfFuse's bounded ranking
+             |-- top-1000 truncation mirrors TextSearch.rrfFuseN's bounded ranking
              |ra0 AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id)::DOUBLE AS r FROM bm),
              |rb0 AS (SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id)::DOUBLE AS r FROM cos),
              |ra AS (SELECT * FROM ra0 WHERE r <= 1000),

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 import graft.functions.VectorFunctions
@@ -144,9 +143,6 @@ object AnnLsh {
     val scored = cand.join(qEmb, queryIdCol)
       .select(col(queryIdCol), col(idCol),
         round(VectorFunctions.cosineSimilarity(col(embCol), col("__qemb")), scale).as("cos"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("cos").desc, col(idCol))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("cos"), col("rn").cast("long").as("rn"))
+    Knn.topPerQuery(scored, col("cos").desc, k, idCol, queryIdCol, "cos")
   }
 }

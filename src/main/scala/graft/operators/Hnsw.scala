@@ -871,7 +871,6 @@ object Hnsw {
                              Map[Int, Array[(Long, Array[Double])]]],
       k: Int, ef: Int, queryIdCol: String, scale: Int,
       excluded: Set[Long] = Set.empty): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val bc = spark.sparkContext.broadcast(queriesByShard)
     val bcExc = spark.sparkContext.broadcast(excluded)
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -910,10 +909,7 @@ object Hnsw {
           }
         }
       }(enc)
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col("vec_id"))
-    perShard.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col("vec_id"), col("dist"), col("rn").cast("long").as("rn"))
+    Knn.topPerQuery(perShard, col("dist"), k, "vec_id", queryIdCol, "dist")
   }
 
   // ── shard-ROUTED tier (round 10, VERDICT r9 #5) ────────────────────

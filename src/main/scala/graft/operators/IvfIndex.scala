@@ -692,15 +692,6 @@ object IvfIndex {
     Model(rows)
   }
 
-  /** Per-query top-k by `order` (ties by id): `(qid, id, score, rn)`. */
-  private def topPerQuery(scored: DataFrame, order: Column, k: Int, idCol: String,
-                          queryIdCol: String, scoreCol: String): DataFrame = {
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(order, col(idCol))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col(scoreCol), col("rn").cast("long").as("rn"))
-  }
-
   /** Rerank distance per query metric — pgvector's operators. */
   private val distances: Map[String, (Column, Column) => Column] = Map(
     "l2" -> (VectorFunctions.l2Distance _),         // <->
@@ -755,7 +746,7 @@ object IvfIndex {
     * distinct cells (a predicate, if any, rides in it) → join on `cell`,
     * so a query only scores its own probed cells → optional coarse pass
     * → exact rerank by `metric` (`cosine_sim` or a [[distances]] key),
-    * rounded to `scale` → [[topPerQuery]]. With `coarse` = (codec, n,
+    * rounded to `scale` → [[Knn.topPerQuery]]. With `coarse` = (codec, n,
     * maxPushdownIds), the scan is narrowed to the union of the queries'
     * [[coarsePass]] candidates as [[searchIndex]] describes, and a query
     * reranks a row only if it chose it. */
@@ -781,7 +772,7 @@ object IvfIndex {
     val scored = chosen.fold(joined)(joined.join(_, Seq(queryIdCol, idCol)))
       .select(col(queryIdCol), col(idCol),
         round(score(col(embCol), col("__qemb")), scale).as(scoreCol))
-    topPerQuery(scored, if (metric == "cosine_sim") col(scoreCol).desc else col(scoreCol),
+    Knn.topPerQuery(scored, if (metric == "cosine_sim") col(scoreCol).desc else col(scoreCol),
       k, idCol, queryIdCol, scoreCol)
   }
 
@@ -958,7 +949,7 @@ object IvfIndex {
     val scored = probes.join(assigned, Seq("cell"))
       .select(col(leftIdCol), col(rightIdCol),
         round(VectorFunctions.cosineSimilarity(col("__lemb"), col("__remb")), scale).as("cos"))
-    topPerQuery(scored, col("cos").desc, k, rightIdCol, leftIdCol, "cos")
+    Knn.topPerQuery(scored, col("cos").desc, k, rightIdCol, leftIdCol, "cos")
   }
 
   /** The staged-swap machinery ([[graft.sources.StagedSwap]]) bound to

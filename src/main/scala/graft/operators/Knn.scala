@@ -66,14 +66,21 @@ object Knn {
   def topKBatch(corpus: DataFrame, queries: DataFrame, metric: Metric, k: Int,
                 idCol: String = "vec_id", embCol: String = "embedding",
                 queryIdCol: String = "qid", scale: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val q = broadcast(queries.select(col(queryIdCol), col(embCol).as("__q_emb")))
     val scored = corpus.crossJoin(q)
       .select(col(queryIdCol), col(idCol),
         round(metric.dist(col(embCol), col("__q_emb")), scale).as("dist"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col(idCol))
+    topPerQuery(scored, col("dist"), k, idCol, queryIdCol, "dist")
+  }
+
+  /** Per-query top-k by `order` (ties by id): `(qid, id, score, rn)`,
+    * `rn` a long. The ranking tail of every batch search. */
+  private[graft] def topPerQuery(scored: DataFrame, order: Column, k: Int, idCol: String,
+                                 queryIdCol: String, scoreCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col(queryIdCol)).orderBy(order, col(idCol))
     scored.withColumn("rn", row_number().over(w))
       .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("dist"), col("rn").cast("long").as("rn"))
+      .select(col(queryIdCol), col(idCol), col(scoreCol), col("rn").cast("long").as("rn"))
   }
 }

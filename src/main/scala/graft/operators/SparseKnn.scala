@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
@@ -37,17 +36,33 @@ object SparseKnn {
     * array<double>)` with value = term frequency of the bucket. */
   def hashingTf(docs: DataFrame, dim: Int = 1024, idCol: String = "doc_id",
                 textCol: String = "text", salt: String = "graft-tf"): DataFrame =
+    pack(hashedTf(docs, dim, idCol, textCol, salt), idCol, "__tf")
+
+  /** Whitespace tokens of the canonical text, empties dropped:
+    * `(idCol, __tok)`. */
+  private def tokens(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
       .select(col(idCol),
         explode(split(TextFunctions.canonicalText(col(textCol)), " ")).as("__tok"))
       .where(col("__tok") =!= "")
+
+  /** The hashing-trick tf stage: `(idCol, __b, __tf)`, one row per
+    * (doc, bucket). */
+  private def hashedTf(docs: DataFrame, dim: Int, idCol: String, textCol: String,
+                       salt: String): DataFrame =
+    tokens(docs, idCol, textCol)
       .select(col(idCol), Sampling.hashBucket(col("__tok"), salt, dim).as("__b"))
       .groupBy(col(idCol), col("__b")).agg(count(lit(1)).cast("double").as("__tf"))
+
+  /** `(idCol, __b, valueCol)` rows packed into the sparsevec pair
+    * `(idCol, indices ASC, values)`. */
+  private def pack(weights: DataFrame, idCol: String, valueCol: String): DataFrame =
+    weights
       .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("__b"), col("__tf")))).as("__sv"))
+      .agg(sort_array(collect_list(struct(col("__b"), col(valueCol)))).as("__sv"))
       .select(col(idCol),
         transform(col("__sv"), s => s.getField("__b")).as("indices"),
-        transform(col("__sv"), s => s.getField("__tf")).as("values"))
+        transform(col("__sv"), s => s.getField(valueCol)).as("values"))
 
   /** TF-IDF-weighted hashed sparse vectors: [[hashingTf]]'s buckets with
     * value = tf · (ln((N+1)/(df+1)) + 1) — sklearn's smooth idf, strictly
@@ -59,25 +74,15 @@ object SparseKnn {
   def hashingTfIdf(docs: DataFrame, dim: Int = 1024, idCol: String = "doc_id",
                    textCol: String = "text", salt: String = "graft-tf",
                    scale: Int = 6): DataFrame = {
-    val tf = docs
-      .select(col(idCol),
-        explode(split(TextFunctions.canonicalText(col(textCol)), " ")).as("__tok"))
-      .where(col("__tok") =!= "")
-      .select(col(idCol), Sampling.hashBucket(col("__tok"), salt, dim).as("__b"))
-      .groupBy(col(idCol), col("__b")).agg(count(lit(1)).cast("double").as("__tf"))
+    val tf = hashedTf(docs, dim, idCol, textCol, salt)
     val dfreq = tf.groupBy(col("__b")).agg(count(lit(1)).cast("double").as("__df"))
     val nRow = tf.select(col(idCol)).distinct()
       .agg(count(lit(1)).cast("double").as("__n"))
-    tf.join(dfreq, Seq("__b"))
+    pack(tf.join(dfreq, Seq("__b"))
       .crossJoin(broadcast(nRow))
       .select(col(idCol), col("__b"),
         round(col("__tf") * (log((col("__n") + 1.0) / (col("__df") + 1.0)) + 1.0), scale)
-          .as("__w"))
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("__b"), col("__w")))).as("__sv"))
-      .select(col(idCol),
-        transform(col("__sv"), s => s.getField("__b")).as("indices"),
-        transform(col("__sv"), s => s.getField("__w")).as("values"))
+          .as("__w")), idCol, "__w")
   }
 
   /** SPLADE-style learned sparse embeddings — deterministic stand-in for
@@ -111,12 +116,9 @@ object SparseKnn {
                    scale: Int = 6): DataFrame = {
     require(expansions >= 0, s"spladeExpand: expansions must be >= 0, got $expansions")
     require(decay > 0.0 && decay <= 1.0, s"spladeExpand: decay must be in (0,1], got $decay")
-    val tf = docs
-      .select(col(idCol),
-        explode(split(TextFunctions.canonicalText(col(textCol)), " ")).as("__tok"))
-      .where(col("__tok") =!= "")
+    val tf = tokens(docs, idCol, textCol)
       .groupBy(col(idCol), col("__tok")).agg(count(lit(1)).cast("double").as("__tf"))
-    tf
+    pack(tf
       .select(col(idCol), col("__tok"), col("__tf"),
         explode(expr(s"sequence(0, $expansions)")).as("__e"))
       .select(col(idCol),
@@ -124,12 +126,7 @@ object SparseKnn {
           col("__tok"))), 1, 8), 16, 10).cast("long"), lit(dim)).as("__b"),
         (pow(lit(decay), col("__e")) * log(col("__tf") + 1.0)).as("__w"))
       .groupBy(col(idCol), col("__b"))
-      .agg(round(max(col("__w")), scale).as("__v"))
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("__b"), col("__v")))).as("__sv"))
-      .select(col(idCol),
-        transform(col("__sv"), s => s.getField("__b")).as("indices"),
-        transform(col("__sv"), s => s.getField("__v")).as("values"))
+      .agg(round(max(col("__w")), scale).as("__v")), idCol, "__v")
   }
 
   /** [[spladeExpand]] through the pluggable featurizer seam
@@ -235,9 +232,7 @@ object SparseKnn {
   def writeIndex(sv: DataFrame, table: String, path: String,
                  idCol: String = "doc_id", numBuckets: Int = 16): Unit = {
     require(numBuckets >= 1, s"SparseKnn.writeIndex: numBuckets must be >= 1, got $numBuckets")
-    sv.select(col(idCol), sparseNorm(col("indices"), col("values")).as("__n"),
-        explode(arrays_zip(col("indices"), col("values"))).as("__p"))
-      .select(col(idCol), col("__n"), col("__p.indices").as("__t"), col("__p.values").as("__v"))
+    postings(sv, idCol)
       .write.mode("overwrite")
       .bucketBy(numBuckets, "__t").sortBy("__t")
       .format("parquet").option("path", s"$path/postings")
@@ -309,9 +304,7 @@ object SparseKnn {
           "so re-appending would double-count terms. Run compactIndex first, or " +
           "use upsertIndex for the delete-then-reinsert workflow.")
     }
-    sv.select(col(idCol), sparseNorm(col("indices"), col("values")).as("__n"),
-        explode(arrays_zip(col("indices"), col("values"))).as("__p"))
-      .select(col(idCol), col("__n"), col("__p.indices").as("__t"), col("__p.values").as("__v"))
+    postings(sv, idCol)
       .write.mode("append")
       .bucketBy(nb, "__t").sortBy("__t")
       .format("parquet").saveAsTable(table)
@@ -476,46 +469,32 @@ object SparseKnn {
     require(dup.isEmpty,
       s"SparseKnn.upsertIndex: ids ${dup.mkString(",")}… appear more than once in " +
         "the batch — an upsert must carry exactly one row per id")
-    // the batch's postings in the table's schema (the appendIndex shape)
-    val newRows = sv.select(col(idCol),
-        sparseNorm(col("indices"), col("values")).as("__n"),
-        explode(arrays_zip(col("indices"), col("values"))).as("__p"))
-      .select(col(idCol), col("__n"), col("__p.indices").as("__t"), col("__p.values").as("__v"))
     val idColName = spark.table(table).columns.filterNot(_.startsWith("__")).head
     require(idColName == idCol,
       s"SparseKnn.upsertIndex: table $table keys on $idColName, batch keys on $idCol")
     val survivors = notTombstoned(spark, table, spark.table(table), idCol)
       .join(sv.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-    swapTableContent(spark, table, "upsertIndex", survivors.unionByName(newRows))
+    swapTableContent(spark, table, "upsertIndex", survivors.unionByName(postings(sv, idCol)))
   }
 
-  /** Recovery prologue shared by the swap rewriters: a stranded retired
-    * dir with the live dir missing (crash between retire and promote) is
-    * restored; a complete retired copy beside a live dir is superseded
-    * and dropped; leftover staging is dropped. Idempotent. Callers run
-    * it FIRST (before their own reads of the table); [[swapTableContent]]
-    * assumes a recovered state. */
+  /** Recovery prologue shared by the swap rewriters —
+    * [[graft.sources.Compaction.recoverSwap]] on the table's data dir.
+    * Callers run it FIRST (before their own reads of the table);
+    * [[swapTableContent]] assumes a recovered state. */
   private def recoverSwapState(spark: org.apache.spark.sql.SparkSession,
                                table: String, op: String): Unit = {
     val meta = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
     val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(loc.toString + "__compact_staging")
-    val retired = new org.apache.hadoop.fs.Path(loc.toString + "__compact_retired")
-    if (fs.exists(retired)) {
-      if (!fs.exists(loc)) {
-        if (!fs.rename(retired, loc)) throw new java.io.IOException(
-          s"$op: found stranded $retired with $loc missing, and could not restore it")
-      } else fs.delete(retired, true)
-    }
-    fs.delete(staging, true)
+    graft.sources.Compaction.recoverSwap(
+      loc.getFileSystem(spark.sparkContext.hadoopConfiguration), loc, op)
   }
 
   /** Shared whole-dir swap for the postings-table rewriters
     * ([[compactIndex]], [[upsertIndex]]): staged bucketed write of
     * `content` under the table's OWN bucket spec, then
-    * retire → promote → cleanup with rollback on a failed promote. The
+    * [[graft.sources.Compaction.promoteStaging]]'s retire → promote →
+    * cleanup with rollback on a failed promote. The
     * promote drops `_tombstones/` with the old files; underscore
     * `_graft_*.json` metadata sidecars (the SQL surface's build-dim
     * record) are carried into the staging dir first so the swap
@@ -528,8 +507,7 @@ object SparseKnn {
       s"SparseKnn.$op: table $table carries no bucket spec — not a postings index"))
     val loc = new org.apache.hadoop.fs.Path(meta.location)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(loc.toString + "__compact_staging")
-    val retired = new org.apache.hadoop.fs.Path(loc.toString + "__compact_retired")
+    val staging = graft.sources.Compaction.stagingDir(loc)
     val stagingTable = table + "__compact_staging"
     spark.sql(s"DROP TABLE IF EXISTS `$stagingTable`")
     content
@@ -544,13 +522,7 @@ object SparseKnn {
         org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new org.apache.hadoop.fs.Path(staging, n),
           false, spark.sparkContext.hadoopConfiguration)
     }
-    if (!fs.rename(loc, retired))
-      throw new java.io.IOException(s"$op: could not retire $loc")
-    if (!fs.rename(staging, loc)) {
-      fs.rename(retired, loc) // roll back
-      throw new java.io.IOException(s"$op: could not promote staging for $loc")
-    }
-    fs.delete(retired, true)
+    graft.sources.Compaction.promoteStaging(fs, loc, op)
     spark.sql(s"DROP TABLE `$stagingTable`")
     spark.catalog.refreshTable(table)
   }
@@ -563,26 +535,11 @@ object SparseKnn {
   def topKFromIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                     queries: DataFrame, k: Int, idCol: String = "doc_id",
                     queryIdCol: String = "qid", scale: Int = 4): DataFrame = {
-    val terms = queries.select(explode(col("indices")).as("__t"))
-      .distinct().collect().map(_.get(0))
-    require(terms.nonEmpty, "topKFromIndex: queries carry no terms")
-    val hits = spark.table(table).where(col("__t").isin(terms: _*))
-    val qPost = broadcast(queries
-      .select(col(queryIdCol), sparseNorm(col("indices"), col("values")).as("__qn"),
-        explode(arrays_zip(col("indices"), col("values"))).as("__q"))
-      .select(col(queryIdCol), col("__qn"),
-        col("__q.indices").as("__t"), col("__q.values").as("__qv")))
-    val scored = hits.join(qPost, Seq("__t"))
-      .groupBy(col(queryIdCol), col(idCol))
-      .agg(round(sum(col("__v") * col("__qv")) / (first(col("__n")) * first(col("__qn"))),
-        scale).as("cos"))
+    val hits = spark.table(table).where(col("__t").isin(queryTerms(queries, "topKFromIndex"): _*))
     // tombstoned docs drop AFTER scoring (the smaller frame) and BEFORE
     // ranking, so deletions never occupy a rank slot
-    val live = notTombstoned(spark, table, scored, idCol)
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("cos").desc, col(idCol))
-    live.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("cos"), col("rn").cast("long").as("rn"))
+    cosineTopK(hits, queries, k, idCol, queryIdCol, scale,
+      notTombstoned(spark, table, _, idCol))
   }
 
   /** Batch sparse-cosine top-k via posting-list intersection. Corpus and
@@ -591,24 +548,77 @@ object SparseKnn {
     * `(queryIdCol, idCol, cos, rn)`, cosine DESC, ties by id. */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int,
            idCol: String = "doc_id", queryIdCol: String = "qid",
-           scale: Int = 4): DataFrame = {
-    val cPost = corpus
-      .select(col(idCol), sparseNorm(col("indices"), col("values")).as("__cn"),
+           scale: Int = 4): DataFrame =
+    cosineTopK(postings(corpus, idCol), queries, k, idCol, queryIdCol, scale)
+
+  /** Sparse vectors exploded into postings `(idCol, __n, __t, __v)`: one
+    * row per nonzero — doc norm, term, value. The shape [[writeIndex]]
+    * persists and every sparse scorer reads. */
+  private[graft] def postings(sv: DataFrame, idCol: String): DataFrame =
+    sv.select(col(idCol), sparseNorm(col("indices"), col("values")).as("__n"),
         explode(arrays_zip(col("indices"), col("values"))).as("__p"))
-      .select(col(idCol), col("__cn"),
-        col("__p.indices").as("__t"), col("__p.values").as("__cv"))
-    val qPost = broadcast(queries
-      .select(col(queryIdCol), sparseNorm(col("indices"), col("values")).as("__qn"),
-        explode(arrays_zip(col("indices"), col("values"))).as("__q"))
-      .select(col(queryIdCol), col("__qn"),
-        col("__q.indices").as("__t"), col("__q.values").as("__qv")))
-    val scored = cPost.join(qPost, Seq("__t"))
+      .select(col(idCol), col("__n"), col("__p.indices").as("__t"), col("__p.values").as("__v"))
+
+  /** The distinct query terms, collected to the driver for the literal
+    * `__t IN` filter that prunes a postings table's buckets. */
+  private[graft] def queryTerms(queries: DataFrame, op: String): Seq[Any] = {
+    val terms = queries.select(explode(col("indices")).as("__t"))
+      .distinct().collect().map(_.get(0)).toSeq
+    require(terms.nonEmpty, s"$op: queries carry no terms")
+    terms
+  }
+
+  /** The sparse-cosine scoring tail: postings `hits` `(idCol, __n, __t,
+    * __v)` meet the broadcast query postings on the term, partial
+    * products sum in ONE groupBy per (query, doc), the cosine rounds to
+    * `scale`, and `live` (the tombstone filter, when there is one) runs
+    * between scoring and the per-query ranking. */
+  private[graft] def cosineTopK(hits: DataFrame, queries: DataFrame, k: Int, idCol: String,
+                                queryIdCol: String, scale: Int,
+                                live: DataFrame => DataFrame = identity): DataFrame = {
+    val qPost = broadcast(postings(queries, queryIdCol)
+      .select(col(queryIdCol), col("__n").as("__qn"), col("__t"), col("__v").as("__qv")))
+    val scored = hits.join(qPost, Seq("__t"))
       .groupBy(col(queryIdCol), col(idCol))
-      .agg(round(sum(col("__cv") * col("__qv")) / (first(col("__cn")) * first(col("__qn"))),
+      .agg(round(sum(col("__v") * col("__qv")) / (first(col("__n")) * first(col("__qn"))),
         scale).as("cos"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("cos").desc, col(idCol))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("cos"), col("rn").cast("long").as("rn"))
+    Knn.topPerQuery(live(scored), col("cos").desc, k, idCol, queryIdCol, "cos")
+  }
+
+  /** The SQL rewrite's candidate leg: the query terms' postings scored by
+    * the EXACT dot (posting value × query weight summed per doc; for
+    * cosine, divided by the stored doc norm — the query norm is a
+    * positive constant, so the order is cosine's), top `n` ids by (score
+    * desc, id). Reads the catalog table when present — `bucketBy(__t)`
+    * bucket pruning on the literal IN — falling back to the postings
+    * parquet (filter pushdown on `__t` only). Query weights arrive as a
+    * broadcast-small local relation JOINED on `__t` rather than a literal
+    * map lookup: with no operator keyed on the bucket column,
+    * `DisableUnnecessaryBucketedScan` would drop the bucketed read and
+    * its pruning. Output: one `idCol` column. */
+  private[graft] def candidateIds(spark: org.apache.spark.sql.SparkSession,
+      postingsTable: String, postingsPath: String, idCol: String,
+      qIdx: Seq[Long], qVal: Seq[Double], byCosine: Boolean, n: Int): DataFrame = {
+    import spark.implicits._
+    val post =
+      if (postingsTable.nonEmpty && spark.catalog.tableExists(postingsTable))
+        spark.table(postingsTable)
+      else spark.read.parquet(postingsPath)
+    // LocalRelation of ≤ maxTerms rows — auto-broadcast by size stats
+    val qdf = qIdx.zip(qVal).toDF("__qt", "__qw")
+    val scored = post
+      .where(col("__t").isin(qIdx: _*))
+      .join(qdf, col("__t") === col("__qt"))
+      .groupBy(col(idCol))
+      .agg(sum(col("__v") * col("__qw")).as("__dot"), first(col("__n")).as("__dn"))
+    // a zero-norm store row (all-zero sparse values) would make the
+    // cosine division throw under ANSI mode where the unrewritten
+    // sparse_cosine query just yields null — so filter it out (a
+    // zero-norm doc can never rank by cosine anyway)
+    val ranked =
+      if (byCosine) scored.where(col("__dn") > 0)
+        .select(col(idCol), (col("__dot") / col("__dn")).as("__r"))
+      else scored.select(col(idCol), col("__dot").as("__r"))
+    ranked.orderBy(col("__r").desc, col(idCol)).limit(n).select(col(idCol))
   }
 }

@@ -37,10 +37,21 @@ object TextSearch {
         explode(split(TextFunctions.canonicalText(col(textCol)), " ")).as("__t"))
       .where(col("__t").isin(terms: _*))          // broadcast literal pruning
       .groupBy(col(idCol), col("__t")).agg(count(lit(1)).cast("double").as("__tf"))
+    bm25Score(hits, stats, idCol, k1, b, scale, Some(lens))
+  }
+
+  /** The BM25 tail over query-term hits `(idCol, __t, __tf, __len)` and
+    * the 1-row corpus stats `(__n, __avgdl)`: df per term over the hits,
+    * then Σ idf · saturated tf per doc, rounded to `scale`. Corpus-pass
+    * hits carry no `__len`: `lens` joins it on AFTER the df join, so df
+    * counts the bare hits and the per-doc length is computed once per doc
+    * (a length computed beside the token explode runs once per hit). */
+  private def bm25Score(hits: DataFrame, stats: DataFrame, idCol: String,
+                        k1: Double, b: Double, scale: Int,
+                        lens: Option[DataFrame] = None): DataFrame = {
     val df = hits.groupBy(col("__t")).agg(count(lit(1)).cast("double").as("__df"))
-    hits
-      .join(broadcast(df), "__t")
-      .join(lens, idCol)
+    val withDf = hits.join(broadcast(df), "__t")
+    lens.fold(withDf)(withDf.join(_, idCol))
       .crossJoin(broadcast(stats))
       .select(col(idCol),
         (log(lit(1.0) + (col("__n") - col("__df") + 0.5) / (col("__df") + 0.5)) *
@@ -87,23 +98,15 @@ object TextSearch {
                     idCol: String = "doc_id",
                     k1: Double = 1.2, b: Double = 0.75, scale: Int = 4): DataFrame = {
     require(terms.nonEmpty, "bm25FromIndex: need at least one query term")
-    val hits = spark.table(table).where(col("__t").isin(terms: _*))
-    val df = hits.groupBy(col("__t")).agg(count(lit(1)).cast("double").as("__df"))
-    val stats = spark.read.parquet(s"$path/stats")
-    hits
-      .join(broadcast(df), "__t")
-      .crossJoin(broadcast(stats))
-      .select(col(idCol),
-        (log(lit(1.0) + (col("__n") - col("__df") + 0.5) / (col("__df") + 0.5)) *
-          (col("__tf") * (k1 + 1)) /
-          (col("__tf") + (lit(1 - b) + col("__len") * b / col("__avgdl")) * k1)).as("__s"))
-      .groupBy(col(idCol)).agg(round(sum(col("__s")), scale).as("score"))
+    bm25Score(spark.table(table).where(col("__t").isin(terms: _*)),
+      spark.read.parquet(s"$path/stats"), idCol, k1, b, scale)
   }
 
-  /** Reciprocal-rank fusion of two ranked result lists:
-    * rrf(d) = Σ 1/(k + rank_i(d)), documents appearing in either list
-    * (standard k = 60). Inputs are (idCol, scoreCol) frames; ranks are
-    * dense by (score desc, id) so the fusion is deterministic.
+  /** Reciprocal-rank fusion of N ranked result lists (BM25 + dense, or
+    * the three-retriever BM25 + dense + learned-sparse stack):
+    * rrf(d) = Σᵢ 1/(k + rankᵢ(d)) over every list containing d (standard
+    * k = 60). Inputs are (idCol, scoreCol) frames; ranks are dense by
+    * (score desc, id) so the fusion is deterministic.
     *
     * Each list is truncated to its top `topN` BEFORE ranking — the
     * truncation plans as `TakeOrderedAndProject` (per-partition heaps)
@@ -113,10 +116,12 @@ object TextSearch {
     * ordering keeps the prefix); a doc outside a list's top-N simply
     * contributes nothing from that list, which is the standard top-k
     * fusion contract — consumers read at most the fused top-(topN/6),
-    * below which a beyond-topN rank cannot alter the order. */
-  def rrfFuse(a: DataFrame, b: DataFrame, idCol: String,
-              scoreColA: String, scoreColB: String,
-              k: Int = 60, topN: Int = 1000, scale: Int = 6): DataFrame = {
+    * below which a beyond-topN rank cannot alter the order. Lists fold
+    * through full-outer joins on the id — N is retriever count, a small
+    * constant, so the join chain is N−1 joins of ≤ topN-row frames. */
+  def rrfFuseN(lists: Seq[(DataFrame, String)], idCol: String,
+               k: Int = 60, topN: Int = 1000, scale: Int = 6): DataFrame = {
+    require(lists.size >= 2, s"rrfFuseN: need >= 2 lists, got ${lists.size}")
     def ranked(df: DataFrame, scoreCol: String, out: String): DataFrame =
       df.select(col(idCol), col(scoreCol))
         .orderBy(col(scoreCol).desc, col(idCol)).limit(topN)
@@ -124,32 +129,6 @@ object TextSearch {
         // to-one-partition warning on every run — EXPECTED and bounded:
         // its input is the ≤ topN rows the limit above already reduced,
         // not the corpus
-        .withColumn(out, row_number().over(
-          Window.orderBy(col(scoreCol).desc, col(idCol))).cast("double"))
-        .select(col(idCol), col(out))
-    val ra = ranked(a, scoreColA, "__ra")
-    val rb = ranked(b, scoreColB, "__rb")
-    ra.join(rb, Seq(idCol), "full_outer")
-      .select(col(idCol),
-        round(coalesce(lit(1.0) / (lit(k) + col("__ra")), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(k) + col("__rb")), lit(0.0)), scale).as("rrf"))
-  }
-
-  /** N-list reciprocal-rank fusion — [[rrfFuse]] generalized to the
-    * modern three-retriever stack (BM25 + dense + learned-sparse) and
-    * beyond: rrf(d) = Σᵢ 1/(k + rankᵢ(d)) over every list containing d.
-    * Same per-list truncate-then-rank shape (each list's total order
-    * runs over ≤ topN rows, never the corpus), lists fold through
-    * full-outer joins on the id — N is retriever count, a small
-    * constant, so the join chain is N−1 broadcast-sized joins of
-    * ≤ topN-row frames. */
-  def rrfFuseN(lists: Seq[(DataFrame, String)], idCol: String,
-               k: Int = 60, topN: Int = 1000, scale: Int = 6): DataFrame = {
-    require(lists.size >= 2, s"rrfFuseN: need >= 2 lists, got ${lists.size}")
-    def ranked(df: DataFrame, scoreCol: String, out: String): DataFrame =
-      df.select(col(idCol), col(scoreCol))
-        .orderBy(col(scoreCol).desc, col(idCol)).limit(topN)
-        // bounded global window — see the rrfFuse note above
         .withColumn(out, row_number().over(
           Window.orderBy(col(scoreCol).desc, col(idCol))).cast("double"))
         .select(col(idCol), col(out))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.functions.{broadcast, col, first, sum, typedlit}
+import org.apache.spark.sql.functions.{broadcast, col, typedlit}
 
 import graft.operators.SparseKnn
 
@@ -97,7 +97,7 @@ case class SparseIterativeFilteredScanExec(
 
 object SparseIterativeScan {
   /** The bounded phase: store rows semi-joined to the top-n overlapping
-    * candidates (exact posting-intersection scores, the fixed rewrite's
+    * candidates ([[SparseKnn.candidateIds]], the fixed rewrite's
     * candidate leg) under the user predicate. The candidate id frame is
     * materialized once (`localCheckpoint`) so the caller's probe and
     * output plans share it. Package-visible so specs can assert the plan
@@ -106,23 +106,8 @@ object SparseIterativeScan {
       postingsTable: String, postingsPath: String, idCol: String,
       qIdx: Seq[Long], qVal: Seq[Double], byCosine: Boolean,
       pred: Expression, n: Int): DataFrame = {
-    import spark.implicits._
-    val postings =
-      if (postingsTable.nonEmpty && spark.catalog.tableExists(postingsTable))
-        spark.table(postingsTable)
-      else spark.read.parquet(postingsPath)
-    val qdf = qIdx.zip(qVal).toDF("__qt", "__qw")
-    val scored = postings
-      .where(col("__t").isin(qIdx: _*))
-      .join(qdf, col("__t") === col("__qt"))
-      .groupBy(col(idCol))
-      .agg(sum(col("__v") * col("__qw")).as("__dot"), first(col("__n")).as("__dn"))
-    val ranked =
-      if (byCosine) scored.where(col("__dn") > 0)
-        .select(col(idCol), (col("__dot") / col("__dn")).as("__r"))
-      else scored.select(col(idCol), col("__dot").as("__r"))
-    val cand = ranked.orderBy(col("__r").desc, col(idCol)).limit(n)
-      .select(col(idCol))
+    val cand = SparseKnn.candidateIds(spark, postingsTable, postingsPath, idCol,
+        qIdx, qVal, byCosine, n)
       .localCheckpoint(true) // ≤ n ids: rank ONCE, reuse in probe + output
     spark.read.parquet(storePath)
       .join(broadcast(cand), Seq(idCol), "left_semi")

@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.types._
 
 import graft.functions.SparseDotExpr
@@ -301,45 +300,13 @@ object SparseScanRewriteRule extends Rule[LogicalPlan] with RewriteSupport {
     cache.put(path, (stamp, v)); v
   }
 
-  /** Candidate subplan: the query terms' postings scored by the exact
-    * dot (posting value × query weight summed per doc), top n ids kept.
-    * Reads via the catalog table when present — `bucketBy(__t)` bucket
-    * pruning on the literal IN — falling back to the postings parquet
-    * (filter pushdown on `__t` only). Query weights arrive as a
-    * broadcast-small local relation JOINED on `__t` (the
-    * [[graft.operators.SparseKnn.topKFromIndex]] shape) rather than a
-    * literal map lookup: with no operator keyed on the bucket column,
-    * `DisableUnnecessaryBucketedScan` would drop the bucketed read and
-    * its pruning. Built with the DataFrame API over a fresh read (fresh
-    * exprIds; it is the join's right side) and spliced in as its
-    * analyzed plan. */
+  /** Candidate subplan: [[graft.operators.SparseKnn.candidateIds]] over
+    * a fresh read (fresh exprIds; it is the join's right side), spliced
+    * in as its analyzed plan. */
   private def candidatePlan(meta: IndexMeta, qIdx: Array[Long], qVal: Array[Double],
       n: Int, byCosine: Boolean): LogicalPlan = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    val postings =
-      if (spark.catalog.tableExists(meta.table)) spark.table(meta.table)
-      else spark.read.parquet(meta.postings)
-    // LocalRelation of ≤ maxTerms rows — auto-broadcast by size stats
-    val qdf = qIdx.zip(qVal).toSeq.toDF("__qt", "__qw")
-    val scored = postings
-      .where(col("__t").isin(qIdx.toSeq: _*))
-      .join(qdf, col("__t") === col("__qt"))
-      .groupBy(col(meta.idCol))
-      .agg(sum(col("__v") * col("__qw")).as("__dot"),
-        org.apache.spark.sql.functions.first(col("__n")).as("__dn"))
-    // cosine candidates rank by dot / doc-norm; the query-norm factor is
-    // constant and dropped. A zero-norm store row (all-zero sparse
-    // values) would make the division throw under ANSI mode where the
-    // unrewritten sparse_cosine query just yields null — so filter it
-    // out (a zero-norm doc can never rank by cosine anyway)
-    val ranked = if (byCosine) scored.where(col("__dn") > 0).select(col(meta.idCol),
-        (col("__dot") / col("__dn")).as("__r"))
-      else scored.select(col(meta.idCol), col("__dot").as("__r"))
-    val candidates = ranked
-      .orderBy(col("__r").desc, col(meta.idCol))
-      .limit(n)
-      .select(col(meta.idCol))
+    val candidates = graft.operators.SparseKnn.candidateIds(SparkSession.active,
+      meta.table, meta.postings, meta.idCol, qIdx.toSeq, qVal.toSeq, byCosine, n)
     // strip SubqueryAlias from the catalog-table read: this rule runs
     // after EliminateSubqueryAliases' batch, and the planner asserts on
     // aliases it never expects to see post-optimization

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -70,22 +70,8 @@ object Compaction {
     require(targetBytes >= 1, s"compact: targetBytes must be >= 1, got $targetBytes")
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // siblings of the NORMALIZED path: raw `dir + suffix` concatenation
-    // would, for a trailing-slash dir, create the staging INSIDE the
-    // directory being compacted — and the retire rename (a dir into its
-    // own subtree) then fails on every filesystem
-    val staging = new Path(p.getParent, p.getName + "__compact_staging")
-    val retired = new Path(p.getParent, p.getName + "__compact_retired")
-    // recover from a previous crashed swap BEFORE touching anything:
-    // retired + no dir = the data's only copy is the retired dir
-    if (fs.exists(retired)) {
-      if (!fs.exists(p)) {
-        if (!fs.rename(retired, p))
-          throw new java.io.IOException(
-            s"compact: found stranded $retired with $dir missing, and could not restore it")
-      } else fs.delete(retired, true) // dir exists: retired copy is superseded
-    }
-    fs.delete(staging, true)
+    recoverSwap(fs, p, "compact")
+    val staging = stagingDir(p)
 
     val (filesBefore, bytesBefore) = stats(spark, dir)
     val base = spark.read.parquet(dir)
@@ -128,18 +114,49 @@ object Compaction {
       try out.write(content) finally out.close()
     }
 
-    // swap: dir -> retired, staging -> dir, drop retired. The read above
-    // is fully materialized by the staging write, so retiring the source
-    // afterwards is safe.
-    if (!fs.rename(p, retired))
-      throw new java.io.IOException(s"compact: could not retire $dir")
-    if (!fs.rename(staging, p)) {
-      fs.rename(retired, p) // roll back
-      throw new java.io.IOException(s"compact: could not promote staging for $dir")
-    }
-    fs.delete(retired, true)
+    // the read above is fully materialized by the staging write, so
+    // retiring the source afterwards is safe
+    promoteStaging(fs, p, "compact")
 
     val (filesAfter, _) = stats(spark, dir)
     Report(filesBefore, bytesBefore, filesAfter)
+  }
+
+  // siblings of the NORMALIZED path: raw `dir + suffix` concatenation
+  // would, for a trailing-slash dir, create the staging INSIDE the
+  // directory being swapped — and the retire rename (a dir into its own
+  // subtree) then fails on every filesystem
+  private[graft] def stagingDir(p: Path): Path =
+    new Path(p.getParent, p.getName + "__compact_staging")
+  private def retiredDir(p: Path): Path =
+    new Path(p.getParent, p.getName + "__compact_retired")
+
+  /** Heal a crashed swap of `p` BEFORE touching anything: a retired dir
+    * with `p` missing holds the data's only copy and is restored; beside
+    * a live `p` it is superseded and dropped. Leftover staging is
+    * dropped. Idempotent. */
+  private[graft] def recoverSwap(fs: FileSystem, p: Path, op: String): Unit = {
+    val retired = retiredDir(p)
+    if (fs.exists(retired)) {
+      if (!fs.exists(p)) {
+        if (!fs.rename(retired, p))
+          throw new java.io.IOException(
+            s"$op: found stranded $retired with $p missing, and could not restore it")
+      } else fs.delete(retired, true)
+    }
+    fs.delete(stagingDir(p), true)
+  }
+
+  /** The swap: `p` → retired, staging → `p` (rolled back if the promote
+    * fails), then the retired copy is dropped. */
+  private[graft] def promoteStaging(fs: FileSystem, p: Path, op: String): Unit = {
+    val retired = retiredDir(p)
+    if (!fs.rename(p, retired))
+      throw new java.io.IOException(s"$op: could not retire $p")
+    if (!fs.rename(stagingDir(p), p)) {
+      fs.rename(retired, p) // roll back
+      throw new java.io.IOException(s"$op: could not promote staging for $p")
+    }
+    fs.delete(retired, true)
   }
 }

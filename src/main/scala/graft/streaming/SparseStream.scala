@@ -36,14 +36,6 @@ object SparseStream {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
-  /** Explode row-local sparse vectors into the posting shape
-    * [[SparseKnn.writeIndex]] persists: (id, doc-norm, term, value). */
-  private def postings(sv: DataFrame, idCol: String): DataFrame =
-    sv.select(col(idCol),
-        SparseKnn.sparseNorm(col("indices"), col("values")).as("__n"),
-        explode(arrays_zip(col("indices"), col("values"))).as("__p"))
-      .select(col(idCol), col("__n"), col("__p.indices").as("__t"), col("__p.values").as("__v"))
-
   /** foreachBatch body — public so specs can drive replay directly.
     * `featurize` maps raw (doc_id, text) rows to sparse vectors and must
     * be row-local. */
@@ -51,7 +43,7 @@ object SparseStream {
                           featurize: DataFrame => DataFrame,
                           idCol: String = "doc_id")
                          (batch: DataFrame, batchId: Long): Unit = {
-    postings(featurize(batch), idCol)
+    SparseKnn.postings(featurize(batch), idCol)
       .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -67,10 +59,7 @@ object SparseStream {
   def topKWithTail(spark: SparkSession, table: String, tailPath: String,
                    queries: DataFrame, k: Int, idCol: String = "doc_id",
                    queryIdCol: String = "qid", scale: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val terms = queries.select(explode(col("indices")).as("__t"))
-      .distinct().collect().map(_.get(0))
-    require(terms.nonEmpty, "topKWithTail: queries carry no terms")
+    val terms = SparseKnn.queryTerms(queries, "topKWithTail")
     val base = spark.table(table).where(col("__t").isin(terms: _*))
       .select(col(idCol), col("__n"), col("__t"), col("__v"))
     val tail =
@@ -78,20 +67,8 @@ object SparseStream {
         .where(col("__t").isin(terms: _*))
         .select(col(idCol), col("__n"), col("__t"), col("__v")))
       catch { case _: org.apache.spark.sql.AnalysisException => None } // cold tail
-    val hits = tail.fold(base)(base.unionByName(_))
-    val qPost = broadcast(queries
-      .select(col(queryIdCol), SparseKnn.sparseNorm(col("indices"), col("values")).as("__qn"),
-        explode(arrays_zip(col("indices"), col("values"))).as("__q"))
-      .select(col(queryIdCol), col("__qn"),
-        col("__q.indices").as("__t"), col("__q.values").as("__qv")))
-    val scored = hits.join(qPost, Seq("__t"))
-      .groupBy(col(queryIdCol), col(idCol))
-      .agg(round(sum(col("__v") * col("__qv")) / (first(col("__n")) * first(col("__qn"))),
-        scale).as("cos"))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("cos").desc, col(idCol))
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col(queryIdCol), col(idCol), col("cos"), col("rn").cast("long").as("rn"))
+    SparseKnn.cosineTopK(tail.fold(base)(base.unionByName(_)), queries, k, idCol,
+      queryIdCol, scale)
   }
 
   /** Start the ingest stream: new document files in `inputDir` are

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.operators.SparseKnn
+import graft.streaming.SparseStream
 
 /** Sparse-vector surface (pgvector sparsevec parity): row-local kernels
   * pinned against their dense equivalents on densified vectors, the
@@ -182,6 +183,10 @@ class SparseKnnSpec extends SparkSpec {
       val direct = SparseKnn.topK(sv, q, k = 5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
       assert(fromIndex == direct)
+      // the streaming search over a tail never written is the base search
+      val withTail = SparseStream.topKWithTail(spark, "t_sp_idx", s"$tmp/no_tail", q, k = 5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+      assert(withTail == direct && direct.map(_._1) == Set(0L, 1L, 2L))
       // a single-TERM query reads only that term's bucket (a whole doc's
       // vector touches most buckets at numBuckets = 4 — the pruning win
       // scales with term selectivity, exactly like the BM25 index)
@@ -337,6 +342,47 @@ class SparseKnnSpec extends SparkSpec {
     // self-similarity ranks first at cos 1.0
     val self = topk.where(col("rn") === 1).collect()
     self.foreach(r => assert(r.getLong(1) == r.getLong(0) && r.getDouble(2) == 1.0))
+  }
+
+  /** The file of each occurrence of `needle` in `sources`' code
+    * (comments stripped). */
+  private def sitesOf(needle: String, sources: Seq[(String, String)]): Seq[String] =
+    sources.flatMap { case (name, src) =>
+      val code = src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+      Seq.fill(java.util.regex.Pattern.quote(needle).r.findAllMatchIn(code).size)(name)
+    }
+
+  test("one sparse read path: each scoring step is written once under src/main") {
+    // the old shape is caught: topK built both postings sides and ranked inline
+    val old =
+      """    val cPost = corpus
+        |      .select(col(idCol), sparseNorm(col("indices"), col("values")).as("__cn"),
+        |        explode(arrays_zip(col("indices"), col("values"))).as("__p"))
+        |    val qPost = broadcast(queries
+        |      .select(col(queryIdCol), sparseNorm(col("indices"), col("values")).as("__qn"),
+        |        explode(arrays_zip(col("indices"), col("values"))).as("__q"))
+        |    scored.withColumn("rn", row_number().over(w))
+        |      .where(col("rn") <= k)""".stripMargin
+    assert(sitesOf("""arrays_zip(col("indices"), col("values"))""",
+      Seq("SparseKnn.scala" -> old)) == Seq("SparseKnn.scala", "SparseKnn.scala"))
+    assert(sitesOf("""col("rn") <= k""", Seq("SparseKnn.scala" -> old)) == Seq("SparseKnn.scala"))
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"run from the repository root (no ${root.getAbsolutePath})")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val sources = scalaFiles(root).map(f =>
+      f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    Seq(
+      """arrays_zip(col("indices"), col("values"))""" -> "SparseKnn.scala", // postings
+      """sum(col("__v") * col("__qv"))""" -> "SparseKnn.scala",             // cosine score
+      """sum(col("__v") * col("__qw"))""" -> "SparseKnn.scala",             // candidate leg
+      """col("rn") <= k""" -> "Knn.scala",                                   // per-query top-k
+      """(col("__tf") * (k1 + 1))""" -> "TextSearch.scala",                  // BM25 tail
+      "__compact_retired" -> "Compaction.scala"                              // whole-dir swap
+    ).foreach { case (needle, home) =>
+      assert(sitesOf(needle, sources) == Seq(home), s"$needle: ${sitesOf(needle, sources)}")
+    }
   }
 
   test("query-side SPLADE expansion retrieves docs sharing ZERO surface terms") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, TextSearch}
 
@@ -35,7 +37,7 @@ class TextSearchSpec extends SparkSpec {
     import spark.implicits._
     val a = Seq((10L, 5.0), (11L, 3.0)).toDF("id", "sa")   // ranks: 10→1, 11→2
     val b = Seq((11L, 9.0), (12L, 1.0)).toDF("id", "sb")   // ranks: 11→1, 12→2
-    val got = TextSearch.rrfFuse(a, b, "id", "sa", "sb", k = 60)
+    val got = TextSearch.rrfFuseN(Seq((a, "sa"), (b, "sb")), "id", k = 60)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(got(10L) == r6(1.0 / 61))
@@ -77,12 +79,31 @@ class TextSearchSpec extends SparkSpec {
     assert(Dedup.crossContamination(test, train, threshold = 0.1, dfCap = 0).count() == 0)
   }
 
+  /** The removed two-list `TextSearch.rrfFuse`, kept as the reference
+    * the N-way fusion must reproduce. */
+  private def rrfFuse(a: DataFrame, b: DataFrame, idCol: String,
+                      scoreColA: String, scoreColB: String,
+                      k: Int = 60, topN: Int = 1000, scale: Int = 6): DataFrame = {
+    def ranked(df: DataFrame, scoreCol: String, out: String): DataFrame =
+      df.select(col(idCol), col(scoreCol))
+        .orderBy(col(scoreCol).desc, col(idCol)).limit(topN)
+        .withColumn(out, row_number().over(
+          Window.orderBy(col(scoreCol).desc, col(idCol))).cast("double"))
+        .select(col(idCol), col(out))
+    val ra = ranked(a, scoreColA, "__ra")
+    val rb = ranked(b, scoreColB, "__rb")
+    ra.join(rb, Seq(idCol), "full_outer")
+      .select(col(idCol),
+        round(coalesce(lit(1.0) / (lit(k) + col("__ra")), lit(0.0)) +
+              coalesce(lit(1.0) / (lit(k) + col("__rb")), lit(0.0)), scale).as("rrf"))
+  }
+
   test("rrfFuseN: two lists reproduce rrfFuse exactly; third list shifts the fusion") {
     import spark.implicits._
     val a = Seq((1L, 9.0), (2L, 7.0), (3L, 5.0)).toDF("doc_id", "sa")
     val b = Seq((2L, 4.0), (3L, 6.0), (4L, 2.0)).toDF("doc_id", "sb")
     val c = Seq((4L, 1.0), (1L, 0.5)).toDF("doc_id", "sc")
-    val two = TextSearch.rrfFuse(a, b, "doc_id", "sa", "sb")
+    val two = rrfFuse(a, b, "doc_id", "sa", "sb")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val twoN = TextSearch.rrfFuseN(Seq((a, "sa"), (b, "sb")), "doc_id")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
