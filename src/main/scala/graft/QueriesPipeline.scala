@@ -1211,8 +1211,8 @@ object QueriesPipeline {
     // pairs is exactly 1 and the exhaustive DuckDB oracle stays hash-exact.
     // The 0.9999 threshold admits only those pairs (random 64-d vectors
     // never reach cos 0.9999 naturally).
-    // Near-dup CLUSTERING: min-label-propagation connected components
-    // over the LSH pair graph (id, component=min id of the cluster) —
+    // Near-dup CLUSTERING: connected components (union-find on the
+    // driver for a pair set this small) over the LSH pair graph (id, component=min id of the cluster) —
     // the canonical-group step after pairwise dedup. Oracle = recursive
     // transitive closure + min.
     "q_dedup_components" -> QueryDef(

@@ -24,9 +24,11 @@ import graft.functions.VectorFunctions
   *    path, documented as such; production uses partial probe and
   *    inherits IVF recall semantics like every blocked generator here.
   *  - degrees are one groupBy over the (bounded) eps-pair list;
-  *  - clusters are [[Dedup.components]] min-label propagation over
-  *    CORE-CORE edges only — the paper's density-connectivity
-  *    restricted to cores, which border points never bridge.
+  *  - clusters are [[Dedup.components]] over CORE-CORE edges only
+  *    (union-find on the driver for an edge list within its bound,
+  *    min-label propagation above it) — the paper's
+  *    density-connectivity restricted to cores, which border points
+  *    never bridge.
   *
   * Everything is deterministic: distances round to `scale` BEFORE the
   * eps compare (the oracle-parity convention of [[Dedup.embeddingNearDup]]),

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 
@@ -27,6 +31,10 @@ object Dedup {
   private val MaxBucket = 1000
   /** Decimal places of a reported Jaccard. */
   private val JaccardScale = 4
+  /** Most pairs [[components]] labels on the driver. Its labels (at most
+    * two ids a pair) come back as a local relation, which is shipped with
+    * the tasks that read it: the order of `maxPushdownIds`' 100 000 ids. */
+  private val DriverEdges = 50000
 
   /** Exact dedup: group by content fingerprint, keep the smallest id as
     * canonical. Map-side partial aggregation makes this one shuffle of
@@ -213,38 +221,117 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
-  /** Near-dup CLUSTERING: connected components over a pair graph via
-    * iterative min-label propagation — pairwise dedup only says "a~b";
-    * downstream curation needs canonical groups ("keep one per
-    * component"). Every node starts labeled with its own id and adopts
-    * the minimum label in its neighborhood each round; the fixed point
-    * (component-minimum everywhere) is unique, so the result is
-    * deterministic regardless of execution order. Converges in
-    * O(graph diameter) rounds — near-dup clusters are dense (LSH emits
-    * most intra-cluster pairs), so diameters are tiny; each round is two
-    * bounded shuffles over the edge list (label join + min groupBy),
-    * nothing corpus-sized beyond the edges themselves.
+  /** Near-dup CLUSTERING: connected components over a pair graph —
+    * pairwise dedup only says "a~b"; downstream curation needs canonical
+    * groups ("keep one per component").
     *
     * Returns (id, component) for every id appearing in `pairs`;
-    * `component` = min id of the cluster (so component == id marks the
-    * canonical survivor). Throws if not converged within `maxIters` —
-    * a silently unconverged labeling would split clusters. */
+    * `component` = min id of the cluster under Spark's `min` for the id
+    * type (a string compares by its UTF-8 bytes), so component == id
+    * marks the canonical survivor. A null endpoint adds no edge.
+    *
+    * `pairs` is projected to (id1, id2) and materialized once
+    * (localCheckpoint — `pairs` is typically a whole lazy near-dup plan,
+    * and every reference to it would plan and run it again). Both paths
+    * read that frame:
+    *  - driver path: with integral or string ids (both of one type), at most
+    *    `DriverEdges + 1` pairs are collected (one job); if they fit,
+    *    union-find labels them on the driver and the labels come back as
+    *    a local relation. Near-dup edge sets are far smaller than the
+    *    corpus, so this is the usual path: no propagation rounds.
+    *  - distributed path (more pairs, or another id type): min-label
+    *    propagation, every node adopting the minimum label of its
+    *    neighborhood each round. Throws if not converged within
+    *    `maxIters` rounds — a silently unconverged labeling would split
+    *    clusters. `maxIters` bounds this path only. */
   def components(pairs: DataFrame, maxIters: Int = 50,
-                 id1Col: String = "id1", id2Col: String = "id2"): DataFrame = {
-    // Symmetric edges PLUS a self-loop per node, built from ONE read of
-    // `pairs`: each pair row yields (a,b), (b,a), (a,a), (b,b). `pairs`
-    // is typically a whole lazy near-dup plan, and every reference to it
-    // is planned and run again. The edges are hash-partitioned by dst
-    // and materialized once. The checkpointed frame does NOT keep that
-    // partitioning under adaptive execution (it reads back as
-    // UnknownPartitioning), so a round whose label join is shuffled
-    // exchanges the edges on dst again; the checkpoint saves recomputing
-    // the edges, not that exchange. The self-loops fold the old
-    // "least(own label, neighborhood min)" left join into the single
-    // min() aggregate (a node always sees its own label among its
-    // neighbors), and carry the previous label through the round for
-    // the convergence check. distinct() after repartition(dst) adds no
-    // exchange: hash(dst) already co-locates equal (src, dst) rows.
+                 id1Col: String = "id1", id2Col: String = "id2"): DataFrame =
+    components(pairs, maxIters, id1Col, id2Col, DriverEdges)
+
+  /** [[components]] with the driver path's pair bound given; a bound of
+    * 0 always runs the distributed path. */
+  private[graft] def components(pairs: DataFrame, maxIters: Int, id1Col: String, id2Col: String,
+                                driverEdges: Int): DataFrame = {
+    val ends = pairs.select(col(id1Col).as("id1"), col(id2Col).as("id2")).localCheckpoint(true)
+    val Seq(t1, t2) = ends.schema.map(_.dataType)
+    val order = if (t1 == t2) idOrder(t1) else None
+    // coalesce(1): one task reads the materialized blocks in turn and
+    // stops at the bound, so the probe is one job at any partitioning
+    val fetched = if (driverEdges <= 0 || order.isEmpty) None
+      else Some(ends.coalesce(1).limit(driverEdges + 1).collect()).filter(_.length <= driverEdges)
+    fetched.fold(propagated(ends, maxIters)) { rows =>
+      // the propagation path's schema (nullability included), read off
+      // an analyzed plan: no job runs
+      val schema = symmetric(ends).groupBy(col("src").as("id"))
+        .agg(min(col("dst")).as("component")).schema
+      ends.sparkSession.createDataFrame(unionFind(rows, order.get).asJava, schema)
+    }
+  }
+
+  /** Spark's `min` order for an id type the driver path labels: numeric
+    * for integral ids, UTF-8 bytes (not UTF-16 units) for strings. */
+  private def idOrder(dt: DataType): Option[Ordering[Any]] = dt match {
+    case ByteType | ShortType | IntegerType | LongType =>
+      Some(Ordering.by((_: Any).asInstanceOf[Number].longValue))
+    case StringType => Some(Ordering.by((v: Any) => UTF8String.fromString(v.asInstanceOf[String])))
+    case _ => None
+  }
+
+  /** (id, component) rows of collected (id1, id2) pairs: union-find with
+    * path halving over the ids sorted by `order`, where the smaller
+    * index always becomes the root, so a root is its component's
+    * minimum. A pair with one null endpoint adds no edge; as in
+    * propagation, the null id itself is labelled with the least
+    * component among its non-null partners. */
+  private def unionFind(pairs: Array[Row], order: Ordering[Any]): Seq[Row] = {
+    val ends = pairs.map(r => (Option(r.get(0)), Option(r.get(1))))
+    val ids = ends.flatMap { case (a, b) => a ++ b }.distinct.sorted(order)
+    val index = ids.zipWithIndex.toMap
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    ends.foreach {
+      case (Some(a), Some(b)) =>
+        val (ra, rb) = (find(index(a)), find(index(b)))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      case _ =>
+    }
+    val nullPartners = ends.collect {
+      case (Some(a), None) => find(index(a))
+      case (None, Some(b)) => find(index(b))
+    }
+    ids.indices.map(i => Row(ids(i), ids(find(i)))) ++
+      nullPartners.minOption.map(c => Row(null, ids(c)))
+  }
+
+  /** Symmetric edges PLUS a self-loop per node, from one read of the
+    * (id1, id2) frame: each pair row yields (a,b), (b,a), (a,a), (b,b). */
+  private def symmetric(ends: DataFrame): DataFrame = {
+    def edge(src: String, dst: String): Column = struct(col(src).as("src"), col(dst).as("dst"))
+    ends.select(inline(array(edge("id1", "id2"), edge("id2", "id1"),
+      edge("id1", "id1"), edge("id2", "id2"))))
+  }
+
+  /** The distributed path of [[components]]: iterative min-label
+    * propagation over the materialized (id1, id2) frame. Converges in
+    * O(log graph diameter) rounds with pointer jumping; each round is
+    * two bounded shuffles over the edge list (label join + min groupBy)
+    * plus a convergence probe. */
+  private def propagated(ends: DataFrame, maxIters: Int): DataFrame = {
+    // The edges are hash-partitioned by dst and materialized once. The
+    // checkpointed frame does NOT keep that partitioning under adaptive
+    // execution (it reads back as UnknownPartitioning), so a round whose
+    // label join is shuffled exchanges the edges on dst again; the
+    // checkpoint saves recomputing the edges, not that exchange. The
+    // self-loops fold the old "least(own label, neighborhood min)" left
+    // join into the single min() aggregate (a node always sees its own
+    // label among its neighbors), and carry the previous label through
+    // the round for the convergence check. distinct() after
+    // repartition(dst) adds no exchange: hash(dst) already co-locates
+    // equal (src, dst) rows.
     //
     // each round is MATERIALIZED with its lineage truncated
     // (localCheckpoint): labels feeds itself, so without truncation the
@@ -253,10 +340,7 @@ object Dedup {
     // fault-tolerance for speed; set a reliable checkpoint dir and swap
     // to .checkpoint() on clusters where executor loss mid-algorithm
     // matters.
-    def edge(src: String, dst: String): Column = struct(col(src).as("src"), col(dst).as("dst"))
-    val edges = pairs
-      .select(inline(array(edge(id1Col, id2Col), edge(id2Col, id1Col),
-        edge(id1Col, id1Col), edge(id2Col, id2Col))))
+    val edges = symmetric(ends)
       .repartition(col("dst"))
       .distinct()
       .localCheckpoint(true)

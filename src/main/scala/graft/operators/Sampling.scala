@@ -76,8 +76,10 @@ object Sampling {
     * label through the same md5 hash gate; unclustered docs represent
     * themselves. Adds a `split` column ('train'/'test') — filter, or
     * feed a writer partitioned by it. Cost on top of the pair pass is
-    * the component propagation (edge-sized rounds) + one broadcast-able
-    * join (components ≤ docs with a near-dup, usually ≪ corpus). */
+    * the components labelling (for a near-dup-sized pair set, two jobs
+    * and union-find on the driver; propagation rounds above its bound)
+    * + one broadcast-able join (components ≤ docs with a near-dup,
+    * usually ≪ corpus). */
   def leakFreeSplit(docs: DataFrame, pairs: DataFrame, testPercent: Int,
                     idCol: String = "doc_id", salt: String = "leak-split"): DataFrame = {
     require(testPercent >= 0 && testPercent <= 100,

@@ -41,16 +41,19 @@ object TextSearch {
   }
 
   /** The BM25 tail over query-term hits `(idCol, __t, __tf, __len)` and
-    * the 1-row corpus stats `(__n, __avgdl)`: df per term over the hits,
-    * then Σ idf · saturated tf per doc, rounded to `scale`. Corpus-pass
-    * hits carry no `__len`: `lens` joins it on AFTER the df join, so df
-    * counts the bare hits and the per-doc length is computed once per doc
-    * (a length computed beside the token explode runs once per hit). */
+    * the 1-row corpus stats `(__n, __avgdl)`: df per term as a window
+    * count over the hits (one hit row per (doc, term)), then
+    * Σ idf · saturated tf per doc, rounded to `scale`. The window reads
+    * the hits frame itself: a separate df aggregate joined back is
+    * planned as a second explode of the corpus. Corpus-pass hits carry
+    * no `__len`: `lens` joins it on AFTER the df window, so the per-doc
+    * length is computed once per doc (a length computed beside the
+    * token explode runs once per hit). */
   private def bm25Score(hits: DataFrame, stats: DataFrame, idCol: String,
                         k1: Double, b: Double, scale: Int,
                         lens: Option[DataFrame] = None): DataFrame = {
-    val df = hits.groupBy(col("__t")).agg(count(lit(1)).cast("double").as("__df"))
-    val withDf = hits.join(broadcast(df), "__t")
+    val withDf = hits.withColumn("__df",
+      count(lit(1)).over(Window.partitionBy(col("__t"))).cast("double"))
     lens.fold(withDf)(withDf.join(_, idCol))
       .crossJoin(broadcast(stats))
       .select(col(idCol),

@@ -1,15 +1,7 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.functions.TextFunctions.wordShingles
 import graft.operators.Dedup
 
@@ -104,11 +96,16 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 7L -> 7L, 8L -> 7L))
     // long path needs multiple propagation rounds; tight maxIters throws
+    // on the distributed path (driver bound 0)
     val path = (0L until 9L).map(i => (i, i + 1)).toDF("id1", "id2")
     val full = Dedup.components(path, maxIters = 12)
       .collect().map(r => r.getLong(1)).distinct
     assert(full.toSeq == Seq(0L))
-    intercept[IllegalStateException] { Dedup.components(path, maxIters = 2) }
+    intercept[IllegalStateException] { Dedup.components(path, 2, "id1", "id2", 0) }
+    // maxIters bounds only the distributed path: these ten pairs are
+    // labelled on the driver
+    val driver = Dedup.components(path, maxIters = 2).collect()
+    assert(driver.length == 10 && driver.forall(_.getLong(1) == 0L))
   }
 
   test("lsh parameter validation fails fast at plan/analysis time") {
@@ -321,49 +318,28 @@ class DedupSpec extends SparkSpec {
     assert(scaledCeil(0.55, 100) == 55 && math.ceil(0.55 * 100).toLong == 56)
   }
 
-  /** File scans under `path` that the queries `body` runs executed:
-    * the final (adaptive) plan of every query is walked, a reused
-    * exchange counts as no scan. Queries arrive through the listener
-    * bus in order, so a marker query run after `body` drains it. */
-  private def fileScans(path: String)(body: => Unit): Int = {
-    val marker = s"__drained_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val plans = new ConcurrentLinkedQueue[SparkPlan]
-    val drained = new CountDownLatch(1)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == marker)) drained.countDown()
-        else plans.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      spark.range(1).select(lit(1).as(marker)).collect()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-    } finally spark.listenerManager.unregister(listener)
-    def scans(p: SparkPlan): Int = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case _: ReusedExchangeExec => 0
-      case f: FileSourceScanExec =>
-        if (f.relation.location.rootPaths.exists(_.toString.contains(path))) 1 else 0
-      case other => (other.children ++ other.subqueries).map(scans).sum
-    }
-    plans.asScala.toSeq.map(scans).sum
-  }
-
   test("components reads its pair frame once: one scan of a parquet-backed input") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-comp-pairs").toString
     Seq((3L, 5L), (3L, 9L), (7L, 8L), (9L, 11L)).toDF("id1", "id2")
       .write.mode("overwrite").parquet(s"$dir/pairs")
-    var got = Map.empty[Long, Long]
-    val n = fileScans(s"$dir/pairs") {
-      got = Dedup.components(spark.read.parquet(s"$dir/pairs"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the public call labels on the driver, bound 0 propagates
+    for ((path, label) <- Seq[(String, DataFrame => DataFrame)](
+        "driver" -> (Dedup.components(_)),
+        "distributed" -> (Dedup.components(_, 50, "id1", "id2", 0)))) {
+      var got = Map.empty[Long, Long]
+      val n = fileScans(s"$dir/pairs") {
+        got = label(spark.read.parquet(s"$dir/pairs"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      assert(got == Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 11L -> 3L, 7L -> 7L, 8L -> 7L), path)
+      assert(n == 1, s"$path: pair input scanned $n times")
     }
-    assert(got == Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 11L -> 3L, 7L -> 7L, 8L -> 7L))
-    assert(n == 1, s"pair input scanned $n times")
+    // the driver path: one job materializes the pairs, one collects them;
+    // the labels are a local relation, read without a job
+    val pairs = spark.read.parquet(s"$dir/pairs")
+    val jobs = sparkJobs { Dedup.components(pairs).collect() }
+    assert(jobs.size <= 2, s"driver path ran ${jobs.size} jobs: $jobs")
   }
 
   test("minhashLsh and prefixJaccardJoin shingle each doc once: one scan of a parquet-backed corpus") {
@@ -505,5 +481,38 @@ class DedupSpec extends SparkSpec {
     val longPairs = Seq((3L, 5L), (5L, 3L), (3L, 9L), (3L, 9L), (7L, 7L), (7L, 8L), (12L, 12L))
       .toDF("id1", "id2")
     assertSameRows(Dedup.components(longPairs), Reference.components(longPairs), "components longs")
+  }
+
+  test("components: the driver path, the distributed path and propagation label alike") {
+    import spark.implicits._
+    def same(pairs: DataFrame, what: String): Unit = {
+      val want = Reference.components(pairs)
+      assertSameRows(Dedup.components(pairs), want, s"$what: driver")
+      assertSameRows(Dedup.components(pairs, 50, "id1", "id2", 0), want, s"$what: distributed")
+    }
+    // a 70-node chain, written in shuffled order; a star; disjoint pieces
+    val chain = new scala.util.Random(7L).shuffle((0L until 69L).map(i => (i + 100, i + 101)))
+    val star = (1L to 20L).map(i => (500L, 500L + i))
+    val pieces = Seq((900L, 901L), (903L, 902L), (950L, 950L))
+    // duplicate, reversed and self pairs
+    val noisy = Seq((3L, 5L), (5L, 3L), (3L, 5L), (5L, 5L), (9L, 3L), (12L, 12L))
+    val longs = chain ++ star ++ pieces ++ noisy
+    same(longs.toDF("id1", "id2"), "longs")
+    same(longs.map { case (a, b) => (a.toInt, b.toInt) }.toDF("id1", "id2"), "ints")
+    same(longs.map { case (a, b) => (s"s$a", s"s$b") }.toDF("id1", "id2"), "strings")
+    // UTF-16 puts U+1F600 (a surrogate pair) before U+FF5E; UTF-8 bytes,
+    // which Spark's min compares, put it after
+    assert("\uD83D\uDE00" < "\uFF5E")
+    same(Seq(("\uD83D\uDE00", "\uFF5E"), ("\uFF5E", "z"), ("b", "\uD83D\uDE00")).toDF("id1", "id2"),
+      "non-ASCII strings")
+    // a null endpoint adds no edge: 1-2 and 3-4 stay apart
+    same(Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (Some(3L), Some(4L)),
+      (Some(2L), None), (None, Some(4L)), (None, None)).toDF("id1", "id2"), "null endpoints")
+    same(Seq[(String, String)](("b", "a"), ("c", null)).toDF("id1", "id2"), "null string endpoint")
+    same(Seq.empty[(Long, Long)].toDF("id1", "id2"), "no pairs")
+    same(Seq((1, 2L), (2, 3L), (7, 7L)).toDF("id1", "id2"), "int and long ends")
+    // other column names
+    val named = Dedup.components(Seq((2L, 1L)).toDF("x", "y"), id1Col = "x", id2Col = "y")
+    assert(named.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(1L -> 1L, 2L -> 1L))
   }
 }

@@ -66,6 +66,16 @@ class TextSearchSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS t_bm25_idx")
   }
 
+  test("bm25 scans the corpus at most three times: hits, lengths, stats") {
+    var rows = 0
+    val n = fileScans(s"$sfDir/documents.parquet") {
+      rows = TextSearch.bm25(Tables.documents(spark, sfDir), Seq("spark", "table", "scan"))
+        .collect().length
+    }
+    assert(rows > 0)
+    assert(n <= 3, s"documents scanned $n times")
+  }
+
   test("contamination finds a planted test/train near-dup and respects the df cap") {
     import spark.implicits._
     val train = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
